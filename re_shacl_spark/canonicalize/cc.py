@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from re_shacl_spark.model.triples import local_frame
+
 MAX_ROUNDS = 60  # 2^60 nodes — pure safety rail; converges in O(log n) rounds
 
 
@@ -142,7 +144,7 @@ def connected_components(
         head = e.limit(driver_threshold + 1).collect()
         if len(head) <= driver_threshold:
             pairs = _driver_union_find([(r.u, r.v) for r in head])
-            return spark.createDataFrame(pairs or [], "member string, rep string")
+            return local_frame(spark, pairs, ["member", "rep"])
 
     e = e.localCheckpoint(eager=True)
 

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from re_shacl_spark.model.triples import vocab
+from re_shacl_spark.model.triples import local_frame, vocab
 
 # rows above which the rep map is NOT broadcast: ~2M (member, rep) IRI pairs is
 # roughly 200-400 MB serialized — at web scale a sameAs closure can reach
@@ -91,7 +91,7 @@ def apply_static_map(
     if not pairs:
         return triples
     spark = triples.sparkSession
-    m = spark.createDataFrame(pairs, ["member", "rep"])
+    m = local_frame(spark, pairs, ["member", "rep"])
     out = triples
     for c in cols:
         if c == "o":

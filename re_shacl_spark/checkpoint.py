@@ -28,6 +28,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from re_shacl_spark.model.triples import local_frame
+
 
 class CheckpointStore:
     def __init__(self, spark: SparkSession, base_dir: str):
@@ -130,8 +132,8 @@ class CheckpointStore:
             if os.path.exists(f"{root}/{d}/_SUCCESS")
         ] if os.path.exists(root) else []
         if not dirs:
-            return self.spark.createDataFrame(
-                [], "stage string, partition_id int, rows long, meta map<string,string>"
+            return local_frame(
+                self.spark, [], "stage string, partition_id int, rows long, meta map<string,string>"
             )
         return self.spark.read.parquet(*dirs)
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from re_shacl_spark.model.triples import vocab
+from re_shacl_spark.model.triples import local_frame, vocab
 
 KG = "http://kg.example.org/ns#"
 MENTIONS_P = KG + "mentions"
@@ -99,7 +99,7 @@ def emit_triples(
     if entity_classes:
         spark = pages_with_mentions.sparkSession
         cls_map = F.broadcast(
-            spark.createDataFrame(sorted(entity_classes.items()), ["entity", "cls"])
+            local_frame(spark, sorted(entity_classes.items()), ["entity", "cls"])
         )
         typed = (
             m.select("entity", "url")

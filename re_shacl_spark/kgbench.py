@@ -28,7 +28,7 @@ from re_shacl_spark.canonicalize.rewrite import apply_static_map
 from re_shacl_spark.extract.html import extract_text
 from re_shacl_spark.extract.mentions import detect_mentions, mention_pairs
 from re_shacl_spark.extract.emit import emit_triples
-from re_shacl_spark.model.triples import O_LIT_TYPE, iri_triple, triples_df, vocab
+from re_shacl_spark.model.triples import O_LIT_TYPE, iri_triple, local_frame, triples_df, vocab
 from re_shacl_spark.ops import dedup as D
 from re_shacl_spark.ops import similarity as S
 from re_shacl_spark.ops import textstats as TS
@@ -2067,7 +2067,8 @@ def q_stream_window(spark, sf_dir):
     run_window_increment(spark, ev_dir + "/*", out_dir, ckpt)
     import datetime
 
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(-1, datetime.datetime(2024, 3, 1), -1, "sentinel", 0.0, "")],
         "event_id long, ts timestamp_ntz, user_id long, event_type string, "
         "value double, props string",
@@ -2125,7 +2126,8 @@ def q_stream_enrich(spark, sf_dir):
     os.symlink(
         os.path.join(sf_dir, "events.parquet"), f"{base}/ev/events.parquet"
     )
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         _EVENT_SEVERITY, "event_type string, weight int, severity string"
     )
     stream = spark.readStream.schema(EVENT_SCHEMA).parquet(f"{base}/ev")
@@ -3472,7 +3474,8 @@ def q_bgp_ask(spark, sf_dir):
     t = rel_triples(spark, sf_dir)
     yes = ask(t, [("?c", TYPE, "kg:Customer"), ("?c", "kg:inNation", "n:1")])
     no = ask(t, [("?x", TYPE, "kg:Region")])  # no region typings in the KG
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [("has_customer_in_n1", yes), ("has_region_type", no)],
         "q string, answer boolean",
     )

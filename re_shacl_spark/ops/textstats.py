@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from re_shacl_spark.model.triples import local_frame
+
 # tiny deterministic stopword profiles for heuristic language ID
 LANG_PROFILES: dict[str, list[str]] = {
     "en": ["the", "and", "of", "to", "a", "in", "is"],
@@ -314,7 +316,8 @@ def tfidf_topk(
     else:
         spark = df.sparkSession
         dfs = [r[0] for r in dfreq.select("dfreq").distinct().collect()]
-        idf = spark.createDataFrame(
+        idf = local_frame(
+            spark,
             [(int(d), math.log(n_docs / d)) for d in dfs], "dfreq long, idf double"
         )
         scored = tf.join(dfreq, "term").join(F.broadcast(idf), "dfreq").withColumn(

@@ -34,7 +34,7 @@ from re_shacl_spark.canonicalize.rewrite import (
     apply_static_map,
     canonicalize_triples,
 )
-from re_shacl_spark.model.triples import dedup_triples, vocab
+from re_shacl_spark.model.triples import dedup_triples, iri_triple, local_frame, triples_df, vocab
 from re_shacl_spark.reasoning.checks import run_all_checks
 from re_shacl_spark.reasoning.rules import RuleEngine, Scope
 from re_shacl_spark.reasoning.tbox import TBoxIndex, build_tbox_index, extract_tbox
@@ -142,14 +142,7 @@ def fuse(
         + [(a, vocab.SUBPROP, b) for a, b in tbox.subprop_closure_pairs()]
     ) if first_full else []
     if closure_rows:
-        closure_df = spark.createDataFrame(closure_rows, ["s", "p", "o"]).select(
-            "s",
-            "p",
-            "o",
-            F.lit(None).cast("struct<lex:string,dtype:string,lang:string>").alias("o_lit"),
-            F.lit(False).alias("is_lit"),
-            F.lit(None).cast("string").alias("src_url"),
-        )
+        closure_df = triples_df(spark, [iri_triple(*r) for r in closure_rows])
         if assume_distinct:
             # closure rows are TBox-sized: anti-join them against the (already
             # distinct) input instead of re-shuffling the whole graph
@@ -238,7 +231,7 @@ def fuse(
                 triples=base.triples,
                 rep_map=base.rep_map
                 if base.rep_map is not None
-                else spark.createDataFrame([], "member string, rep string"),
+                else local_frame(spark, [], ["member", "rep"]),
                 tbox=tbox, rounds=0, check_counts=counts,
             )
     merged_last = False
@@ -395,7 +388,7 @@ def fuse(
         delta = new
 
     if rep_map is None:
-        rep_map = spark.createDataFrame([], "member string, rep string")
+        rep_map = local_frame(spark, [], ["member", "rep"])
 
     if emit_sameas_provenance and not rep_map.isEmpty():
         prov = rep_map.select(
@@ -533,12 +526,7 @@ def fuse_expand(
             ]
         if closure_rows:
             derived = derived.unionByName(
-                spark.createDataFrame(closure_rows, ["s", "p", "o"]).select(
-                    "s", "p", "o",
-                    F.lit(None).cast("struct<lex:string,dtype:string,lang:string>").alias("o_lit"),
-                    F.lit(False).alias("is_lit"),
-                    F.lit(None).cast("string").alias("src_url"),
-                )
+                triples_df(spark, [iri_triple(*r) for r in closure_rows])
             )
 
         edges = engine.derive_sameas(cur)
@@ -568,7 +556,7 @@ def fuse_expand(
         cur = cur.unionByName(new)
 
     if rep_map is None:
-        rep_map = spark.createDataFrame([], "member string, rep string")
+        rep_map = local_frame(spark, [], ["member", "rep"])
     return FusionResult(triples=cur, rep_map=rep_map, tbox=tbox, rounds=rounds, check_counts={})
 
 
@@ -594,7 +582,7 @@ def _resource_typing(triples: DataFrame) -> DataFrame:
     rdf_type, resource, prop = (
         vocab.TYPE, vocab.RDFS + "Resource", vocab.RDF + "Property"
     )
-    fixed = spark.createDataFrame([(rdf_type,), (resource,), (prop,)], ["t"])
+    fixed = local_frame(spark, [(rdf_type,), (resource,), (prop,)], ["t"])
     terms = (
         triples.select(F.col("s").alias("t"))
         .unionByName(triples.filter(~F.col("is_lit")).select(F.col("o").alias("t")))

@@ -29,6 +29,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from re_shacl_spark.model.triples import local_frame
+
 Pattern = tuple[str, str, str]  # or (s, p, o, g): a quad with a GRAPH slot
 
 
@@ -389,9 +391,7 @@ def _apply_values(out: DataFrame, values: tuple[list[str], list[tuple]]) -> Data
                 parts.append(out)
             continue
         cols = [names[i] for i in mask]
-        vdf = spark.createDataFrame(
-            [tuple(r[i] for i in mask) for r in group], schema=cols
-        )
+        vdf = local_frame(spark, [tuple(r[i] for i in mask) for r in group], cols)
         parts.append(out.join(F.broadcast(vdf), cols))
     joined = parts[0]
     for p_ in parts[1:]:

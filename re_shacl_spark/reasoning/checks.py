@@ -14,23 +14,16 @@ scanned once, filters pushed down.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from re_shacl_spark.model.triples import vocab
+from re_shacl_spark.model.triples import local_frame, vocab
 from re_shacl_spark.reasoning.tbox import TBoxIndex
 
 
 class FusionError(RuntimeError):
     """Raised when an OWL consistency axiom is violated during fusion
     (reference: ReSHACL/errors.py:1-13)."""
-
-
-def _pairs(spark: SparkSession, pairs: set[tuple[str, str]], a: str, b: str) -> DataFrame:
-    rows = sorted(pairs)
-    if not rows:
-        return spark.createDataFrame([], f"{a} string, {b} string")
-    return spark.createDataFrame(rows, [a, b])
 
 
 def check_irreflexive(triples: DataFrame, tbox: TBoxIndex) -> DataFrame:
@@ -61,8 +54,8 @@ def check_disjoint_classes(triples: DataFrame, tbox: TBoxIndex) -> DataFrame:
     if not pairs:
         # short-circuit: without axioms the TYPES self-join below would still
         # shuffle the whole graph before the empty broadcast kills it
-        return spark.createDataFrame([], "inst string, c1 string, c2 string")
-    m = F.broadcast(_pairs(spark, pairs, "c1", "c2"))
+        return local_frame(spark, [], ["inst", "c1", "c2"])
+    m = F.broadcast(local_frame(spark, sorted(pairs), ["c1", "c2"]))
     # the axiom classes are driver-known: pre-filter TYPES down to instances of
     # *those* classes before the (inst) self-join — otherwise an instance with
     # k types yields k² join rows over the whole graph before the pair filter
@@ -84,8 +77,8 @@ def check_disjoint_properties(triples: DataFrame, tbox: TBoxIndex) -> DataFrame:
     """(x p1 y) ∧ (x p2 y) with p1 propertyDisjointWith p2."""
     spark = triples.sparkSession
     if not tbox.disjoint_props:
-        return spark.createDataFrame([], "s string, p1 string, p2 string, o string")
-    m = F.broadcast(_pairs(spark, tbox.disjoint_props, "p1", "p2"))
+        return local_frame(spark, [], ["s", "p1", "p2", "o"])
+    m = F.broadcast(local_frame(spark, sorted(tbox.disjoint_props), ["p1", "p2"]))
     # pre-filter to the (driver-known) disjoint predicates before the (s,o)
     # self-join — the unfiltered version shuffles the ENTIRE graph on (s,o)
     # whenever any propertyDisjointWith axiom exists

@@ -25,7 +25,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from re_shacl_spark.model.triples import vocab
+from re_shacl_spark.model.triples import local_frame, vocab
 from re_shacl_spark.reasoning.tbox import TBoxIndex
 
 _EMPTY_HINT = "_re_shacl_empty"
@@ -48,12 +48,6 @@ class Scope:
         return Scope()
 
 
-def _pairs_df(spark: SparkSession, pairs: list[tuple[str, str]], a: str, b: str) -> DataFrame:
-    if not pairs:
-        return spark.createDataFrame([], f"{a} string, {b} string")
-    return spark.createDataFrame(pairs, [a, b])
-
-
 @dataclass
 class RuleEngine:
     spark: SparkSession
@@ -72,16 +66,19 @@ class RuleEngine:
     def _keep_prop(self, p: str) -> bool:
         return self.scope.properties is None or p in self.scope.properties
 
-    # -- broadcast map frames ---------------------------------------------------
+    # -- TBox map frames --------------------------------------------------------
     def _map(self, pairs: list[tuple[str, str]], a: str, b: str) -> DataFrame:
-        """Broadcast TBox-map frame, cached per (contents, colnames): the same
-        maps are re-joined every fixpoint round."""
+        """TBox-map frame, cached per (contents, colnames): the same maps are
+        re-joined every fixpoint round.  A local_frame LocalRelation carries its
+        size, so the join plans as a broadcast (the hint covers maps past
+        LOCAL_FRAME_MAX_CELLS), and an empty map prunes its rule's join at plan
+        time."""
         if not hasattr(self, "_map_cache"):
             self._map_cache: dict = {}
         key = (tuple(pairs), a, b)
         hit = self._map_cache.get(key)
         if hit is None:
-            hit = F.broadcast(_pairs_df(self.spark, pairs, a, b))
+            hit = F.broadcast(local_frame(self.spark, pairs, [a, b]))
             self._map_cache[key] = hit
         return hit
 
@@ -243,7 +240,7 @@ class RuleEngine:
             if closed is not None:
                 if not closed:
                     return triples.limit(0)
-                df = self.spark.createDataFrame(closed, ["s", "p", "o"])
+                df = local_frame(self.spark, closed, ["s", "p", "o"])
                 return df.select(
                     "s",
                     "p",
@@ -283,7 +280,7 @@ class RuleEngine:
         subjects.  IRI objects only (literal 'sameAs' is a consistency matter)."""
         props = [p for p in self.tbox.functional if self._keep_prop(p)]
         if not props:
-            return self.spark.createDataFrame([], "a string, b string")
+            return local_frame(self.spark, [], ["a", "b"])
         t = triples.filter(F.col("p").isin(props) & ~F.col("is_lit")).select("s", "p", "o")
         return (
             t.alias("a")
@@ -299,7 +296,7 @@ class RuleEngine:
         the session, and downstream CC is salted regardless."""
         props = [p for p in self.tbox.inverse_functional if self._keep_prop(p)]
         if not props:
-            return self.spark.createDataFrame([], "a string, b string")
+            return local_frame(self.spark, [], ["a", "b"])
         t = triples.filter(F.col("p").isin(props) & ~F.col("is_lit")).select("s", "p", "o")
         return (
             t.alias("a")
@@ -344,7 +341,7 @@ class RuleEngine:
 
     def derive_sameas(self, triples: DataFrame) -> DataFrame:
         if self.profile == "rdfs":  # owl:sameAs is uninterpreted under RDFS
-            return self.spark.createDataFrame([], "a string, b string")
+            return local_frame(self.spark, [], ["a", "b"])
         return (
             self.explicit_sameas(triples)
             .union(self.sameas_functional(triples))

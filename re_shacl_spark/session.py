@@ -3,9 +3,13 @@
 Defaults chosen for a 1000-executor / 100 TB deployment and scaled down for
 local[] testing:
   - AQE on (runtime coalescing + skew-join splitting),
-  - explicit shuffle-partition count from SPARK_GRAFT_CPUS (cluster: 2-3x cores),
+  - explicit shuffle-partition count from SPARK_GRAFT_CPUS (default: the
+    machine's CPU count; cluster: 2-3x cores),
+  - driver heap from SPARK_DRIVER_MEM, else 40% of physical RAM capped at 16g,
   - Arrow enabled for every pandas/Arrow UDF path,
-  - broadcast threshold left at default; TBox/alias maps are broadcast explicitly.
+  - broadcast threshold left at default; TBox/alias maps are local_frame
+    LocalRelations, which carry their size, so joins against them plan as
+    broadcasts (the explicit hints cover maps past LOCAL_FRAME_MAX_CELLS).
 """
 
 from __future__ import annotations
@@ -15,13 +19,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """40% of physical RAM, capped at 16g: a fixed 16g heap on a 15 GB
+    machine gets the JVM OOM-killed once the heap grows under a long run."""
+    try:
+        ram_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    except (AttributeError, OSError, ValueError):  # no sysconf: not Linux/macOS
+        return "16g"
+    return f"{max(1024, min(16 * 1024, ram_mb * 2 // 5))}m"
+
+
 def get_spark(
     app_name: str = "re_shacl_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # local: one shuffle partition per core; cluster: set 2-3x total cores.
@@ -38,7 +52,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory()
+        )
         # iterative fixpoints localCheckpoint() per round; replication not needed locally
         .config("spark.checkpoint.compress", "true")
         # NOT set: spark.rdd.compress / io.compression.codec=zstd — measured

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from re_shacl_spark.model.triples import vocab
+from re_shacl_spark.model.triples import local_frame, vocab
 from re_shacl_spark.query import Path as PathExpr
 from re_shacl_spark.query import eval_path
 from re_shacl_spark.reasoning.tbox import TBoxIndex
@@ -179,16 +179,16 @@ def _targets(
         F.col("s").alias("focus"), F.col("o").alias("cls")
     )
     cls_map = F.broadcast(
-        spark.createDataFrame(cls_rows or [], "cls string, shape_id string")
+        local_frame(spark, cls_rows, ["cls", "shape_id"])
     )
     by_class = types.join(cls_map, "cls").select("shape_id", "focus")
-    by_node = spark.createDataFrame(node_rows or [], "shape_id string, focus string")
+    by_node = local_frame(spark, node_rows, ["shape_id", "focus"])
     out = by_class.unionByName(by_node)
     # sh:targetSubjectsOf / targetObjectsOf: one broadcast predicate-map join
     # each — the predicate filter pushes into the scan
     for rows2, col in ((subj_rows, "s"), (obj_rows, "o")):
         if rows2:
-            pm = F.broadcast(spark.createDataFrame(rows2, "p string, shape_id string"))
+            pm = F.broadcast(local_frame(spark, rows2, ["p", "shape_id"]))
             out = out.unionByName(
                 triples.join(pm, "p").select("shape_id", F.col(col).alias("focus"))
             )
@@ -306,7 +306,7 @@ def validate(
         schema = "focus string, shape string, path string, constraint string, value string"
         if with_details:
             schema += ", severity string, message string"
-        empty = spark.createDataFrame([], schema)
+        empty = local_frame(spark, [], schema)
         if not _has_sparql(shapes):
             return ValidationReport(empty, True, 0)
         # shapes carrying ONLY sh:sparql constraints: no grid to build —
@@ -317,7 +317,7 @@ def validate(
         _LAST_PLAN_FRAME = violations
         violations = violations.localCheckpoint(eager=True)
         return ValidationReport(violations, violations.isEmpty(), len(shapes))
-    pcs = F.broadcast(spark.createDataFrame(pc_rows, _PC_SCHEMA))
+    pcs = F.broadcast(local_frame(spark, pc_rows, _PC_SCHEMA))
     base_pcs = pcs.filter(F.col("branch_idx").isNull())
 
     targets = _targets(spark, triples, shapes, tbox)
@@ -590,7 +590,8 @@ def _pair_violations(
                     ))
     if not rows:
         return None
-    prs = spark.createDataFrame(
+    prs = local_frame(
+        spark,
         rows,
         "pair_id long, shape_id string, path string, other string, kind string, "
         "inverse boolean, severity string, message string",
@@ -598,7 +599,7 @@ def _pair_violations(
     scoped = targets.join(F.broadcast(prs), "shape_id")  # focus × pair grid
 
     def side(pm_rows: list[tuple], focus_col: str, val_col: str, out: str) -> DataFrame:
-        pm = F.broadcast(spark.createDataFrame(pm_rows, "pair_id long, p string"))
+        pm = F.broadcast(local_frame(spark, pm_rows, "pair_id long, p string"))
         return triples.join(pm, "p").select(
             "pair_id", F.col(focus_col).alias("focus"), F.col(val_col).alias(out)
         ).distinct()
@@ -700,7 +701,7 @@ def _closed_violations(
         allowed_rows += [(ns.shape_id, p) for p in sorted(ps)]
     if not closed_ids:
         return None
-    allowed = F.broadcast(spark.createDataFrame(allowed_rows, "shape_id string, p string"))
+    allowed = F.broadcast(local_frame(spark, allowed_rows, ["shape_id", "p"]))
     foci = targets.filter(F.col("shape_id").isin(closed_ids))
     edges = foci.join(
         triples.select(F.col("s").alias("focus"), "p", "o"), "focus"
@@ -714,7 +715,7 @@ def _closed_violations(
             if ns.closed
         ]
         sev = F.broadcast(
-            spark.createDataFrame(sev_rows, "shape_id string, severity string, message string")
+            local_frame(spark, sev_rows, ["shape_id", "severity", "message"])
         )
         bad = bad.join(sev, "shape_id")
         detail_cols = [F.col("severity"), F.col("message")]
@@ -921,7 +922,7 @@ def _ref_value_sets(
     out: dict[str, DataFrame] = {}
     if pairs:
         pm = F.broadcast(
-            spark.createDataFrame(sorted(pairs), "p string, _ref string, _inv boolean")
+            local_frame(spark, sorted(pairs), "p string, _ref string, _inv boolean")
         )
         joined = triples.join(pm, "p")
         vals = (
@@ -1103,7 +1104,5 @@ def validate_fail_fast(
             return ValidationReport(viol, False, i + first + 1)
         i += size
         size *= 2
-    empty = spark.createDataFrame(
-        [], "focus string, shape string, path string, constraint string, value string"
-    )
+    empty = local_frame(spark, [], ["focus", "shape", "path", "constraint", "value"])
     return ValidationReport(empty, True, len(shapes))

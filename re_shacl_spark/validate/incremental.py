@@ -148,14 +148,17 @@ def validate_delta(
     ``validate(spark, base ∪ delta, shapes)`` row for row.
     """
     full = base.unionByName(delta)
-    # sh:sparql constraints join arbitrary patterns — a delta edge can flip a
-    # solution whose focus the reverse-path widening below cannot see, so
-    # they have no local affected set either; validate fully
+    # sh:sparql constraints and SHACL-AF sh:target queries join arbitrary
+    # patterns — a delta edge can flip a solution (or pull in a focus) that
+    # the reverse-path widening below cannot see, so they have no local
+    # affected set either; validate fully
     from re_shacl_spark.validate.engine import _has_sparql
 
-    complex_paths = any(
-        isinstance(pc.path, PathExpr) for ns in shapes for pc in _all_pcs(ns)
-    ) or _has_sparql(shapes)
+    complex_paths = (
+        any(isinstance(pc.path, PathExpr) for ns in shapes for pc in _all_pcs(ns))
+        or _has_sparql(shapes)
+        or any(ns.sparql_targets for ns in shapes)
+    )
     # a sequence/closure path can carry an edge insertion to arbitrarily
     # distant foci, and a subclass-axiom delta re-scopes targets globally —
     # neither has a local affected set; validate fully (mirrors fuse_delta's

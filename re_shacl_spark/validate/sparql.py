@@ -130,7 +130,7 @@ _TOK = re.compile(
     | (?P<dcaret>\^\^)
     | (?P<langtag>@[A-Za-z][A-Za-z0-9-]*)
     | (?P<op>&&|\|\||!=|<=|>=|[=<>!(){}.,*+/^|?])
-    | (?P<pname>[A-Za-z_][\w-]*)?:(?P<local>[\w.-]*)
+    | (?P<pname>[A-Za-z_][\w-]*)?:(?P<local>(?:[\w-]|\.+(?=[\w-]))*)
     | (?P<word>[A-Za-z_][A-Za-z0-9_]*)
     """,
     re.VERBOSE,
@@ -543,12 +543,11 @@ def parse_select(
                     p.next()
                     arg = "*"
                 else:
-                    _, av = p.next()
+                    av = p.expect("var")
                     arg = "this" if av[1:] == "this" else av[1:]
                 p.expect("op", ")")
                 p.expect("word", "AS")
-                _, alias_v = p.next()
-                alias = alias_v[1:]
+                alias = p.expect("var")[1:]
                 p.expect("op", ")")
                 if fn == "COUNT" and distinct_arg:
                     aggs[alias] = ("count_distinct", arg)
@@ -595,7 +594,7 @@ def parse_select(
                 elif k == "word" and v.upper() in ("ASC", "DESC"):
                     p.next()
                     p.expect("op", "(")
-                    _, vv = p.next()
+                    vv = p.expect("var")
                     p.expect("op", ")")
                     order.append((vv[1:], v.lower()))
                 else:
@@ -617,6 +616,9 @@ def parse_select(
             raise ValueError("sh:sparql: empty WHERE block")
         if require_this and not any("?this" in pat for pat in g.patterns):
             raise ValueError("sh:sparql: WHERE must mention $this")
+    if require_this and not star and "this" not in sel:
+        # SHACL §5.3.1: each solution's $this is the focus node it reports on
+        raise ValueError("sh:sparql: SELECT must project $this")
     if aggs:
         bad = [v for v in sel if v not in aggs and v not in group_by]
         if bad:

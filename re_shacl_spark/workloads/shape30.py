@@ -33,7 +33,7 @@ import functools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from re_shacl_spark.model.triples import O_LIT_TYPE, vocab
+from re_shacl_spark.model.triples import O_LIT_TYPE, local_frame, vocab
 from re_shacl_spark.model.ttl import parse_ttl_file
 from re_shacl_spark.validate.engine import validate
 from re_shacl_spark.validate.shapes import NodeShape, compile_shapes
@@ -131,7 +131,8 @@ def shape30_abox(spark: SparkSession, n_ent: int = N_ENT_DEFAULT) -> DataFrame:
         for si, s in enumerate(shapes)
     ]
 
-    spec_df = spark.createDataFrame(
+    spec_df = local_frame(
+        spark,
         [
             (r["pcid"], r["si"], r["path"], r["good_is_lit"], r["good_o"],
              r["good_dtype"], r["good_lang"])
@@ -162,9 +163,10 @@ def shape30_abox(spark: SparkSession, n_ent: int = N_ENT_DEFAULT) -> DataFrame:
     )
 
     extra = [
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(iri, vocab.TYPE, cls) for cls, iri in sorted(extra_types.items())],
-            "s string, p string, o string",
+            ["s", "p", "o"],
         ).select(
             "s", "p", "o",
             F.lit(None).cast(O_LIT_TYPE).alias("o_lit"),

@@ -59,6 +59,33 @@ def test_parse_select_undeclared_prefix_passes_through():
     assert q.patterns[0][1] == "kg:bal"
 
 
+def test_parse_select_pname_does_not_swallow_statement_dot():
+    # a local name cannot end in '.': the dot terminates the triple
+    q = parse_select("SELECT $this WHERE { $this a kg:Foo. $this kg:p ?v }")
+    assert q.patterns == [("?this", vocab.TYPE, "kg:Foo"), ("?this", "kg:p", "?v")]
+    q = parse_select("SELECT $this WHERE { $this kg:p kg:a.b. }")
+    assert q.patterns == [("?this", "kg:p", "kg:a.b")]
+
+
+@pytest.mark.parametrize("text", [
+    "SELECT $this (COUNT(foo) AS ?c) WHERE { $this kg:p ?v } GROUP BY $this",
+    "SELECT $this (COUNT(?v) AS c) WHERE { $this kg:p ?v } GROUP BY $this",
+    "SELECT $this ?v WHERE { $this kg:p ?v } ORDER BY DESC(v)",
+])
+def test_parse_select_aggregate_and_order_keys_must_be_vars(text):
+    with pytest.raises(ValueError, match="expected var"):
+        parse_select(text)
+
+
+def test_parse_select_constraint_must_project_this():
+    with pytest.raises(ValueError, match=r"project \$this"):
+        parse_select("SELECT ?value WHERE { $this kg:p ?value }")
+    # free-standing queries have no focus node to project
+    assert parse_select(
+        "SELECT ?value WHERE { ?s kg:p ?value }", require_this=False
+    ).select_vars == ["value"]
+
+
 def test_parse_select_rejects_missing_this_and_empty():
     with pytest.raises(ValueError, match="mention"):
         parse_select("SELECT ?v WHERE { ?x <http://p> ?v . }")
@@ -266,6 +293,30 @@ def test_validate_delta_sparql_falls_back_to_full(spark):
             for r in validate(spark, base.unionByName(delta), shapes).violations.collect()}
     got = {(r.focus, r.constraint, r.value) for r in inc.violations.collect()}
     assert got == want == {(EX + "c2", "sparql", "-9")}
+
+
+def test_validate_delta_two_hop_sparql_target_falls_back_to_full(spark):
+    """A SHACL-AF sh:target query can pull a focus in through a delta edge two
+    hops away, outside any affected-focus widening: validate_delta must fall
+    back to full validation, not drop the new focus's violation."""
+    from re_shacl_spark.validate.incremental import validate_delta
+    from re_shacl_spark.validate.shapes import PropertyConstraint
+
+    base = triples_df(spark, [
+        iri_triple("kg:c1", "kg:a", "kg:x1"),
+        iri_triple("kg:c2", "kg:a", "kg:x2"),
+        iri_triple("kg:x2", "kg:b", "kg:y2"),
+        iri_triple("kg:c2", "kg:p", "kg:v2"),
+    ])
+    delta = triples_df(spark, [iri_triple("kg:x1", "kg:b", "kg:y1")])  # second hop
+    tgt = SparqlConstraint(select="SELECT ?this WHERE { ?this kg:a ?x . ?x kg:b ?y }")
+    shapes = [NodeShape("S", sparql_targets=[tgt],
+                        properties=[PropertyConstraint(path="kg:p", min_count=1)])]
+    base_rep = validate(spark, base, shapes)
+    assert base_rep.conforms
+    inc = validate_delta(spark, base, delta, shapes, base_rep)
+    got = {(r.focus, r.constraint) for r in inc.violations.collect()}
+    assert got == {("kg:c1", "minCount")}
 
 
 # ---------------------------------------------------------------------------
