@@ -27,4 +27,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return dict(kgbench.ORACLES)
+    """Every registered oracle.  A fixture-derived oracle whose fixture file
+    is absent is left out; its row's query raises the FileNotFoundError."""
+    out = dict(kgbench.ORACLES)
+    for name, build in kgbench.FIXTURE_ORACLES.items():
+        try:
+            out[name] = build()
+        except FileNotFoundError:
+            pass
+    return out

@@ -15,7 +15,8 @@ Architecture (Spark-first, NOT a port):
 
 Everything is DataFrame-declarative so Catalyst handles pushdown/pruning/broadcast
 selection; the only driver-side loops are the reasoning fixpoints (Catalyst cannot
-loop) which use semi-naive deltas + localCheckpoint to truncate lineage.
+loop) which use semi-naive deltas + model.triples.materialize (an eager local
+checkpoint that also observes the next round's counts) to truncate lineage.
 """
 
 __version__ = "0.1.0"

@@ -13,8 +13,9 @@ Representative election is deterministic: the component minimum (lexicographic
 IRI), replacing the reference's iteration-order-dependent choice
 (re_shacl.py:694,710; see SURVEY §2.6).
 
-Each round ``localCheckpoint(eager=True)``s the edge frame: Catalyst cannot
-express loops, so lineage must be truncated or the plan grows without bound.
+Each round ``materialize``s the edge frame: Catalyst cannot express loops, so
+lineage must be truncated or the plan grows without bound.  The same
+checkpoint job observes the round's convergence fingerprint.
 """
 
 from __future__ import annotations
@@ -22,23 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from re_shacl_spark.model.triples import local_frame
+from re_shacl_spark.model.triples import local_frame, materialize
 
 MAX_ROUNDS = 60  # 2^60 nodes — pure safety rail; converges in O(log n) rounds
-
-
-def _fingerprint(edges: DataFrame) -> tuple[int, int, int]:
-    """Cheap set-equality proxy: count + two independent hash sums.
-
-    Avoids an exceptAll (two extra shuffles) per convergence probe; collision
-    probability over 64-bit sums is negligible for a convergence check.
-    """
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64("u", "v")).alias("h1"),
-        F.bit_xor(F.xxhash64("v", "u", F.lit(7))).alias("h2"),
-    ).collect()[0]
-    return (row.n or 0, row.h1 or 0, row.h2 or 0)
 
 
 def _salted_min_join(edges: DataFrame, mins: DataFrame, n_salts: int) -> DataFrame:
@@ -146,13 +133,20 @@ def connected_components(
             pairs = _driver_union_find([(r.u, r.v) for r in head])
             return local_frame(spark, pairs, ["member", "rep"])
 
-    e = e.localCheckpoint(eager=True)
+    e, _ = materialize(e)
 
     prev = None
     for _ in range(max_rounds):
-        e2 = _small_star(_large_star(e, n_salts), n_salts).localCheckpoint(eager=True)
-        fp = _fingerprint(e2)
-        e = e2
+        # convergence fingerprint, observed by the round's checkpoint job: a
+        # cheap set-equality proxy (count + two independent hash sums) instead
+        # of an exceptAll (two extra shuffles); collision probability over
+        # 64-bit sums is negligible for a convergence check
+        e, c = materialize(
+            _small_star(_large_star(e, n_salts), n_salts),
+            h1=F.bit_xor(F.xxhash64("u", "v")),
+            h2=F.bit_xor(F.xxhash64("v", "u", F.lit(7))),
+        )
+        fp = (c["rows"], c["h1"], c["h2"])
         if fp == prev:
             break
         prev = fp

@@ -106,9 +106,13 @@ class CheckpointStore:
         )
         pq.write_table(table, os.path.join(ldir, "part-00000.parquet"))
         open(os.path.join(ldir, "_SUCCESS"), "w").close()
-        # manifest written LAST: a stage is resumable only once lineage exists too
+        # manifest written LAST: a stage is resumable only once lineage exists
+        # too.  It carries the footer total, so callers read the stage's row
+        # count without a counting job (``rows``).
         with open(self._manifest(stage), "w") as f:
-            json.dump({"stage": stage, "meta": meta, "fingerprint": fingerprint}, f)
+            json.dump(
+                {"stage": stage, "meta": meta, "fingerprint": fingerprint, "rows": sum(nrows)}, f
+            )
         return persisted
 
     def load(self, stage: str, fingerprint: str | None = None) -> DataFrame | None:
@@ -121,6 +125,14 @@ class CheckpointStore:
             return None
         with open(self._manifest(stage)) as f:
             return json.load(f)["meta"]
+
+    def rows(self, stage: str) -> int | None:
+        """The stage's committed row count, from its manifest; None when the
+        stage has no manifest or one written before counts were recorded."""
+        if not os.path.exists(self._manifest(stage)):
+            return None
+        with open(self._manifest(stage)) as f:
+            return json.load(f).get("rows")
 
     def lineage(self, stage: str | None = None) -> DataFrame:
         """All lineage rows (or one stage's)."""

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from re_shacl_spark.model.triples import local_frame, vocab
+from re_shacl_spark.model.triples import local_frame, materialize, vocab
 
 KG = "http://kg.example.org/ns#"
 MENTIONS_P = KG + "mentions"
@@ -38,7 +38,7 @@ def emit_triples(
     entity_classes: dict[str, str] | None = None,
     stream_safe: bool = False,
 ) -> DataFrame:
-    """stream_safe skips the localCheckpoint and the global dropDuplicates —
+    """stream_safe skips the materialization and the global dropDuplicates —
     neither is legal on a streaming frame; per-page dedup still happens via
     the array_distinct below, and the downstream batch fusion dedups globally."""
     # distinct (alias, entity) per page BEFORE exploding: a page mentioning one
@@ -61,7 +61,7 @@ def emit_triples(
         # the four output branches below each re-scan m; materialize it once
         # (small: one row per detected mention) instead of recomputing the
         # explode+projection per branch
-        m = m.localCheckpoint(eager=True)
+        m, _ = materialize(m)
     page_iri = F.concat(F.lit("http://kg.example.org/page/"), F.sha2(F.col("url"), 256))
 
     null_lit = F.lit(None).cast("struct<lex:string,dtype:string,lang:string>")

@@ -175,14 +175,20 @@ def construct_kg(
 
     conformant = run("s5_conformant", build_conformant)
 
-    n_conf = conformant.count()
+    def n_rows(stage: str, df: DataFrame) -> int:
+        # a stored stage's manifest holds its row count (parquet footers):
+        # count only what no store committed
+        n = store.rows(stage) if store is not None else None
+        return df.count() if n is None else n
+
+    n_conf = n_rows("s5_conformant", conformant)
     wall = time.time() - t0
     metrics.update(
         {
             "wall_sec": round(wall, 2),
-            "fused_triples": fused_triples.count(),
+            "fused_triples": n_rows("s4_fused", fused_triples),
             "conformant_triples": n_conf,
-            "violations": violations.count(),
+            "violations": n_rows("s5_violations", violations),
             "fixpoint_rounds": rounds,
             "triples_per_sec": round(n_conf / wall, 1),
             "stage_sec": stage_sec,

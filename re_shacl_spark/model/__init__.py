@@ -4,6 +4,7 @@ from re_shacl_spark.model.triples import (  # noqa: F401
     iri_triple,
     lit_triple,
     local_frame,
+    materialize,
     triples_df,
     vocab,
 )

@@ -25,7 +25,7 @@ import math
 from types import SimpleNamespace
 from typing import Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -276,6 +276,32 @@ def local_frame(
     )
     names = ", ".join(f"c{i}" for i in range(len(fields)))
     return spark.sql(f"SELECT {cols} FROM VALUES {body} AS t({names}){where}")
+
+
+def materialize(df: DataFrame, **flags: Column) -> tuple[DataFrame, dict[str, int]]:
+    """The one way to truncate lineage: ``df`` checkpointed locally and
+    eagerly, plus counts observed by the checkpoint's own job, so a fixpoint
+    round needs no separate ``isEmpty``/``count`` probe after it.
+
+    ``counts["rows"]`` is the row count.  Each keyword adds one count: a
+    boolean Column counts the rows where it holds, an aggregate Column (e.g.
+    ``F.bit_xor(...)``) is observed as given.  A plan the optimizer proves
+    empty (``limit(0)``, an empty ``local_frame``, a join against one) runs no
+    job: ``df`` comes back as is, with every count 0."""
+    if "rows" in flags:
+        raise ValueError("materialize: 'rows' is the row count, not a flag name")
+    metrics = [F.count(F.lit(1)).alias("rows")]
+    for name, c in flags.items():
+        if isinstance(df.select(c).schema[0].dataType, BooleanType):
+            c = F.count(F.when(c, 1))
+        metrics.append(c.alias(name))
+    obs = Observation()
+    observed = df.observe(obs, *metrics)
+    max_rows = observed._jdf.queryExecution().optimizedPlan().maxRows()
+    if max_rows.isDefined() and max_rows.get() == 0:
+        return df, {m: 0 for m in ["rows", *flags]}
+    out = observed.localCheckpoint(eager=True)
+    return out, {k: v or 0 for k, v in obs.get.items()}
 
 
 def triples_df(spark: SparkSession, rows: Iterable[tuple], n_partitions: int | None = None) -> DataFrame:

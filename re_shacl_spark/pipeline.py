@@ -15,17 +15,21 @@ transforms:
   converged when (2) and (4) produce nothing new.
 
 Convergence uses emptiness of delta frames — sound, unlike raw count-stability.
-Each round ends in localCheckpoint(eager) so the logical plan stays O(1) across
-rounds.  The reference's convergence needed a *snapshot repeated twice*
-(closure_engine.py:69-78) because its rules interleave destructive mutation;
-pure dataflow needs exactly one empty delta.
+Each round's frames end in ``materialize`` (model/triples.py), an eager local
+checkpoint that keeps the logical plan O(1) across rounds and observes, in the
+checkpoint's own job, the counts the next decision reads: rows (emptiness),
+owl:sameAs rows (does CC need to run) and transitive-predicate rows (does the
+closure need to re-run) — no separate probe job per round.  The reference's
+convergence needed a *snapshot repeated twice* (closure_engine.py:69-78)
+because its rules interleave destructive mutation; pure dataflow needs exactly
+one empty delta.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from re_shacl_spark.canonicalize.cc import connected_components
@@ -34,7 +38,14 @@ from re_shacl_spark.canonicalize.rewrite import (
     apply_static_map,
     canonicalize_triples,
 )
-from re_shacl_spark.model.triples import dedup_triples, iri_triple, local_frame, triples_df, vocab
+from re_shacl_spark.model.triples import (
+    dedup_triples,
+    iri_triple,
+    local_frame,
+    materialize,
+    triples_df,
+    vocab,
+)
 from re_shacl_spark.reasoning.checks import run_all_checks
 from re_shacl_spark.reasoning.rules import RuleEngine, Scope
 from re_shacl_spark.reasoning.tbox import TBoxIndex, build_tbox_index, extract_tbox
@@ -150,7 +161,7 @@ def fuse(
         cur = cur.unionByName(closure_df)
     if first_full and not assume_distinct:
         # unknown provenance: one global dedup, materialized once
-        cur = dedup_triples(cur).localCheckpoint(eager=True)
+        cur, _ = materialize(dedup_triples(cur))
     # assume_distinct: leave cur as parquet-backed union — re-materializing the
     # whole input here would double the I/O for nothing
 
@@ -162,7 +173,13 @@ def fuse(
     # merges can join chains / equate join keys — so they re-run gated on
     # "a merge happened last round" (or new edges arrived).
     rep_map: DataFrame | None = None
+    n_rep_map = 0
     rounds = 0
+    trans_props = sorted(tbox.transitive)
+
+    def is_trans() -> Column:
+        return F.col("p").isin(trans_props) if trans_props else F.lit(False)
+
     if first_full:
         # Close the LINEAR rules to fixpoint BEFORE the first transitive
         # closure.  Linear rules feed transitive predicates (subPropertyOf
@@ -190,8 +207,8 @@ def fuse(
                 preclosed = True
                 break
             nd = derived.dropDuplicates(["s", "p", "o"])
-            nd = nd.join(cur, ["s", "p", "o"], "left_anti").localCheckpoint(eager=True)
-            empty = nd.isEmpty()
+            nd, nc = materialize(nd.join(cur, ["s", "p", "o"], "left_anti"))
+            empty = nc["rows"] == 0
             _trace(_it, f"pre-closure iter {_i} empty={empty}")
             if empty:
                 preclosed = True
@@ -208,23 +225,33 @@ def fuse(
         # the per-round variant re-shuffled the whole base every round
         d = dedup_triples(triples)
         rep_map = base.rep_map
-        if rep_map is not None and not rep_map.isEmpty():
-            n_rep = rep_map.count()
-            d = canonicalize_triples(d, rep_map, broadcast=n_rep <= BROADCAST_REP_MAP_MAX_ROWS)
-        acc = d.localCheckpoint(eager=True)
+        if rep_map is not None:
+            rep_map, rc = materialize(rep_map)
+            n_rep_map = rc["rows"]
+            if n_rep_map:
+                d = canonicalize_triples(
+                    d, rep_map, broadcast=n_rep_map <= BROADCAST_REP_MAP_MAX_ROWS
+                )
+        acc, _ = materialize(d)
         step = acc
         preclosed = False
         for _ in range(LINEAR_PRECLOSE_BUDGET):  # composition depth is tiny (≤4)
             nd = engine.derive_linear(step).dropDuplicates(["s", "p", "o"])
-            nd = nd.join(acc, ["s", "p", "o"], "left_anti").localCheckpoint(eager=True)
-            if nd.isEmpty():
+            nd, nc = materialize(nd.join(acc, ["s", "p", "o"], "left_anti"))
+            if not nc["rows"]:
                 preclosed = True
                 break
             acc = acc.unionByName(nd)
             step = nd
-        delta = acc.join(base.triples, ["s", "p", "o"], "left_anti").localCheckpoint(eager=True)
+        # the delta's own sameAs / transitive-predicate rows seed round 1's
+        # triggers; the checkpoint's job counts them
+        delta, delta_counts = materialize(
+            acc.join(base.triples, ["s", "p", "o"], "left_anti"),
+            sameas=F.col("p") == vocab.SAMEAS,
+            trans=is_trans(),
+        )
         cur = base.triples.unionByName(delta)
-        if delta.isEmpty():
+        if not delta_counts["rows"]:
             # nothing new: the base is already the fixpoint
             counts = run_all_checks(base.triples, tbox) if run_checks else {}
             return FusionResult(
@@ -235,7 +262,6 @@ def fuse(
                 tbox=tbox, rounds=0, check_counts=counts,
             )
     merged_last = False
-    trans_props = sorted(tbox.transitive)
     # purely-linear rule sets: a merge cannot enable anything new (linear rules
     # commute with the rewrite; only J7/J9/J10 join on columns a merge can
     # equate), so merge-triggered re-derivation rounds are skipped outright
@@ -247,9 +273,7 @@ def fuse(
     tbox_terms = sorted({t for row in tbox_rows for t in row})
     # linear rules emitted a trans-pred edge last round; the incremental path
     # seeds it from the delta itself (a delta trans-edge must trigger closure)
-    lin_made_trans = bool(trans_props) and not first_full and (
-        not delta.filter(F.col("p").isin(trans_props)).isEmpty()
-    )
+    lin_made_trans = not first_full and delta_counts["trans"] > 0
     for rounds in range(1, max_rounds + 1):
         progressed = False
         _rt = _trace_t()
@@ -273,27 +297,38 @@ def fuse(
         include_trans = trans_props and (
             (first_full and rounds == 1) or merged_last or lin_made_trans
         )
-        if trans_props:
-            # cheap delta-fed probe on the linear frame BEFORE the closure is
-            # unioned in — decides next round's trigger.  Round 1's linear
-            # frame is empty by construction (pre-closed), so its trans-pred
-            # edges are already inside the closure running this round.
-            lin_made_trans = not derived.filter(F.col("p").isin(trans_props)).isEmpty()
+        # next round's closure trigger: a NEW trans-pred row the LINEAR rules
+        # emitted, counted on this round's checkpoint.  The closure's own
+        # output rows are tagged out — they cannot extend it.  Round 1's
+        # linear frame is empty by construction (pre-closed), so its
+        # trans-pred edges are already inside the closure running this round.
+        lin_trans = is_trans()
         if include_trans:
-            derived = derived.unionByName(engine.rule_transitive(cur))
+            derived = derived.withColumn("_lin", F.lit(True)).unionByName(
+                engine.rule_transitive(cur).withColumn("_lin", F.lit(False))
+            )
+            lin_trans = lin_trans & F.col("_lin")
         # For linear-only confirmation rounds, probe derived BEFORE the
         # anti-join: its right side is the whole graph (cannot be broadcast),
         # so an empty derived frame would still pay a full-graph shuffle.  The
         # probe re-evaluates the derive plan, which is cheap ONLY for the
         # delta-fed linear rules — never probe when the transitive closure is
-        # in the union (it would run the closure twice per round).
+        # in the union (it would run the closure twice per round).  A
+        # pre-closed round 1 is empty by plan and costs no job at all.
         if not include_trans and derived.isEmpty():
-            new = derived.limit(0).localCheckpoint(eager=True)
-            has_new = False
+            new = derived.limit(0)
+            nc = {"rows": 0, "sameas": 0, "trans": 0}
         else:
             derived = derived.dropDuplicates(["s", "p", "o"])
-            new = derived.join(cur, ["s", "p", "o"], "left_anti").localCheckpoint(eager=True)
-            has_new = not new.isEmpty()
+            new, nc = materialize(
+                derived.join(cur, ["s", "p", "o"], "left_anti"),
+                sameas=F.col("p") == vocab.SAMEAS,
+                trans=lin_trans,
+            )
+            if include_trans:
+                new = new.drop("_lin")
+        has_new = nc["rows"] > 0
+        lin_made_trans = nc["trans"] > 0
         _trace(_rt, f"r{rounds} derive+anti trans={bool(include_trans)} has_new={has_new}")
         _rt = _trace_t()
         if has_new:
@@ -310,51 +345,42 @@ def fuse(
         ):
             # without functional/inverse-functional axioms the only edge
             # source is explicit owl:sameAs rows, and past rounds already
-            # processed everything outside this round's delta — one limit-1
-            # probe on the checkpointed delta replaces the full CC machinery
-            # (derive_sameas scan + dedup + component probe jobs) on rounds
-            # that cannot merge anything
+            # processed everything outside this round's delta — the sameAs
+            # count observed on this round's checkpoint replaces the full CC
+            # machinery (derive_sameas scan + dedup + component probe jobs)
+            # on rounds that cannot merge anything.
             # incremental round 1: the delta's OWN rows are in `delta`, not in
-            # the derived `new` frame — probe both for explicit sameAs edges
-            probe = new if has_new else new.limit(0)
+            # the derived `new` frame — count both
+            n_sameas = nc["sameas"]
             if not first_full and rounds == 1:
-                probe = probe.unionByName(delta)
-            need_sameas = not probe.filter(F.col("p") == vocab.SAMEAS).isEmpty()
+                n_sameas += delta_counts["sameas"]
+            need_sameas = n_sameas > 0
         merged_last = False
         if need_sameas:
-            # connected_components handles empty edge frames itself; one
-            # count() on the checkpointed map replaces three separate probe
-            # jobs (edges.isEmpty, reps.isEmpty, broadcast-gate limit+count) —
-            # at toy scale the fixpoint is job-barrier-bound, so every probe
-            # action per round is wall-clock
+            # connected_components handles empty edge frames itself; the
+            # map's checkpoint job also yields the row count (broadcast size
+            # gate) and the TBox-rename hit count (stale-map rebuild trigger)
+            # — at toy scale the fixpoint is job-barrier-bound, so every
+            # probe action per round is wall-clock
             edges = engine.derive_sameas(cur)
-            new_reps = connected_components(edges, n_salts=cc_salts)
-            new_reps = new_reps.localCheckpoint(eager=True)
-            # ONE aggregate job yields both the row count (broadcast size gate)
-            # and the TBox-rename hit count (stale-map rebuild trigger) — the
-            # round-2 version paid a second probe job per merge round for the
-            # latter, a pure job-barrier tax at toy scale (VERDICT r2 #3)
             touches_tbox = (
                 F.col("member").isin(tbox_terms) | F.col("rep").isin(tbox_terms)
                 if tbox_terms
                 else F.lit(False)
             )
-            stats = new_reps.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count(F.when(touches_tbox, 1)).alias("tbox_hits"),
-            ).first()
-            n_reps, tbox_hits = stats["n"], stats["tbox_hits"]
+            new_reps, rc = materialize(
+                connected_components(edges, n_salts=cc_salts), tbox_hits=touches_tbox
+            )
+            n_reps, tbox_hits = rc["rows"], rc["tbox_hits"]
             if n_reps:
                 # size-gate ONCE per round on the checkpointed map, pass the
                 # decision through (SURVEY §2.3 J13: broadcast small maps,
                 # sort-merge web-scale ones)
                 bcast = n_reps <= BROADCAST_REP_MAP_MAX_ROWS
-                cur = canonicalize_triples(
-                    cur, new_reps, broadcast=bcast
-                ).localCheckpoint(eager=True)
+                cur, _ = materialize(canonicalize_triples(cur, new_reps, broadcast=bcast))
                 new = canonicalize_triples(new, new_reps, broadcast=bcast) if has_new else new
-                rep_map = _compose_rep_maps(rep_map, new_reps)
-                rep_map = rep_map.localCheckpoint(eager=True)
+                rep_map, rc = materialize(_compose_rep_maps(rep_map, new_reps))
+                n_rep_map = rc["rows"]
                 progressed = True
                 merged_last = merge_retriggers()
                 if tbox_hits:
@@ -375,7 +401,7 @@ def fuse(
                     # equivalences — collapse them like the initial pass
                     static = tbox.class_rep_pairs() + tbox.prop_rep_pairs()
                     if static:
-                        cur = apply_static_map(cur, static).localCheckpoint(eager=True)
+                        cur, _ = materialize(apply_static_map(cur, static))
                     new = cur  # next round re-derives over the full graph
                     merged_last = True  # rebuild must force the next round
             _trace(_rt, f"r{rounds} sameas+cc reps={n_reps if need_sameas else 0}")
@@ -390,7 +416,7 @@ def fuse(
     if rep_map is None:
         rep_map = local_frame(spark, [], ["member", "rep"])
 
-    if emit_sameas_provenance and not rep_map.isEmpty():
+    if emit_sameas_provenance and n_rep_map:
         prov = rep_map.select(
             F.col("rep").alias("s"),
             F.lit(vocab.SAMEAS).alias("p"),
@@ -494,7 +520,7 @@ def fuse_expand(
     the engine derives no sameAs edges, so the component copy-through below
     is structurally dead and the loop is a pure linear-rule expansion."""
     ensure_fixpoint_confs(spark)
-    cur = dedup_triples(triples).localCheckpoint(eager=True)
+    cur, _ = materialize(dedup_triples(triples))
     rep_map: DataFrame | None = None
     tbox = None
     rounds = 0
@@ -530,28 +556,25 @@ def fuse_expand(
             )
 
         edges = engine.derive_sameas(cur)
-        if not edges.isEmpty():
-            reps = connected_components(edges, n_salts=cc_salts)
-            if not reps.isEmpty():
-                rep_map = reps.localCheckpoint(eager=True)
-                pairs = _sameas_member_pairs(rep_map)
-                # the complete sameAs graph on each component (incl. diagonal)
-                sameas_rows = pairs.select(
-                    F.col("m").alias("s"),
-                    F.lit(vocab.SAMEAS).alias("p"),
-                    F.col("w").alias("o"),
-                    F.lit(None).cast("struct<lex:string,dtype:string,lang:string>").alias("o_lit"),
-                    F.lit(False).alias("is_lit"),
-                    F.lit(None).cast("string").alias("src_url"),
-                )
-                derived = derived.unionByName(expand_sameas(cur, rep_map)).unionByName(sameas_rows)
+        reps, rc = materialize(connected_components(edges, n_salts=cc_salts))
+        if rc["rows"]:
+            rep_map = reps
+            pairs = _sameas_member_pairs(rep_map)
+            # the complete sameAs graph on each component (incl. diagonal)
+            sameas_rows = pairs.select(
+                F.col("m").alias("s"),
+                F.lit(vocab.SAMEAS).alias("p"),
+                F.col("w").alias("o"),
+                F.lit(None).cast("struct<lex:string,dtype:string,lang:string>").alias("o_lit"),
+                F.lit(False).alias("is_lit"),
+                F.lit(None).cast("string").alias("src_url"),
+            )
+            derived = derived.unionByName(expand_sameas(cur, rep_map)).unionByName(sameas_rows)
 
-        new = (
-            derived.dropDuplicates(["s", "p", "o"])
-            .join(cur, ["s", "p", "o"], "left_anti")
-            .localCheckpoint(eager=True)
+        new, nc = materialize(
+            derived.dropDuplicates(["s", "p", "o"]).join(cur, ["s", "p", "o"], "left_anti")
         )
-        if new.isEmpty():
+        if not nc["rows"]:
             break
         cur = cur.unionByName(new)
 

@@ -29,7 +29,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from re_shacl_spark.model.triples import local_frame
+from re_shacl_spark.model.triples import local_frame, materialize
 
 Pattern = tuple[str, str, str]  # or (s, p, o, g): a quad with a GRAPH slot
 
@@ -505,7 +505,7 @@ def describe(triples: DataFrame, nodes: list[str] | DataFrame) -> DataFrame:
 #   e1/e2      hash join on the shared endpoint (one shuffle per step)
 #   e1|e2      union
 #   e+         iterative-doubling closure: O(log path-length) rounds of
-#              self-join + anti-join novelty gate, localCheckpoint truncating
+#              self-join + anti-join novelty gate, materialize truncating
 #              lineage — the same scale shape as reasoning/rules.rule_transitive
 #              (the reference evaluates paths via rdflib's per-node generators,
 #              /root/reference/ReSHACL/re_shacl.py transitive walks; here the
@@ -650,7 +650,7 @@ def _path_closure(edges: DataFrame) -> DataFrame:
     from re_shacl_spark.session import ensure_fixpoint_confs
 
     ensure_fixpoint_confs(edges.sparkSession)
-    closure = edges.select(*_META).distinct().localCheckpoint(eager=True)
+    closure, _ = materialize(edges.select(*_META).distinct())
     for _ in range(32):
         nxt = (
             closure.alias("x")
@@ -688,10 +688,10 @@ def _path_closure(edges: DataFrame) -> DataFrame:
             .drop("_at", "_bt")
             .distinct()
         )
-        new = new.localCheckpoint(eager=True)
-        if new.isEmpty():
+        new, c = materialize(new)
+        if not c["rows"]:
             break
-        closure = closure.union(new).localCheckpoint(eager=True)
+        closure, _ = materialize(closure.union(new))
     return closure
 
 

@@ -25,7 +25,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from re_shacl_spark.model.triples import local_frame, vocab
+from re_shacl_spark.model.triples import local_frame, materialize, vocab
 from re_shacl_spark.reasoning.tbox import TBoxIndex
 
 _EMPTY_HINT = "_re_shacl_empty"
@@ -220,8 +220,9 @@ class RuleEngine:
         driver — per-source BFS, one collect — because each distributed
         doubling round costs two shuffles + a convergence probe regardless of
         size.  Larger relations use the doubling self-join (closure ⋈ closure,
-        O(log path-length) rounds, localCheckpoint truncating lineage), with a
-        driver bail-back if a collected closure explodes past the cap."""
+        O(log path-length) rounds, ``materialize`` truncating lineage and
+        counting each round's novelty), with a driver bail-back if a collected
+        closure explodes past the cap."""
         props = [p for p in self.tbox.transitive if self._keep_prop(p)]
         if not props:
             return triples.limit(0)
@@ -232,8 +233,9 @@ class RuleEngine:
             triples.filter(F.col("p").isin(props) & ~F.col("is_lit"))
             .select("s", "p", "o")
             .distinct()
-            .localCheckpoint(eager=True)
         )
+        # probe BEFORE checkpointing (as canonicalize.cc does): the driver
+        # path costs one job; only the distributed path materializes
         head = e.limit(self.TRANSITIVE_DRIVER_EDGE_CAP + 1).collect()
         if len(head) <= self.TRANSITIVE_DRIVER_EDGE_CAP:
             closed = self._driver_transitive_closure(head)
@@ -249,7 +251,7 @@ class RuleEngine:
                     F.lit(False).alias("is_lit"),
                     F.lit(None).cast("string").alias("src_url"),
                 )
-        closure = e
+        closure, _ = materialize(e)
         for _ in range(32):
             nxt = (
                 closure.alias("a")
@@ -259,11 +261,10 @@ class RuleEngine:
                 )
                 .select(F.col("a.s").alias("s"), F.col("a.p").alias("p"), F.col("b.o").alias("o"))
             )
-            new = nxt.join(closure, ["s", "p", "o"], "left_anti").distinct()
-            new = new.localCheckpoint(eager=True)
-            if new.isEmpty():
+            new, c = materialize(nxt.join(closure, ["s", "p", "o"], "left_anti").distinct())
+            if not c["rows"]:
                 break
-            closure = closure.union(new).localCheckpoint(eager=True)
+            closure, _ = materialize(closure.union(new))
         return closure.select(
             "s",
             "p",

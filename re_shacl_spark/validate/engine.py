@@ -9,11 +9,13 @@ Here the same reduced-validation contract is a *flat dataflow*:
      down, pre-materialized by fusion),
   3. one shuffle join values-to-focus,
   4. one groupBy(shape, property-constraint, focus) computing EVERY aggregate
-     constraint (minCount/maxCount/hasValue + bad-value counts) in a single
-     pass — the per-shape early-termination strategy: a focus node's value
-     conformance is a short-circuiting boolean expression and all aggregates
-     share one shuffle,
-  5. violation rows = filters over the aggregate frame (+ per-value rows).
+     constraint (minCount/maxCount/hasValue + the non-conforming values) in a
+     single pass — the per-shape early-termination strategy: a focus node's
+     value conformance is a short-circuiting boolean expression and all
+     aggregates share one shuffle,
+  5. violation rows = ONE projection over the aggregate frame: every kind's
+     condition builds an array of (constraint, value) structs, the per-value
+     rows ride along as an array, and one explode emits them all.
 
 #shuffles is O(1) in the number of shapes (Shape_30 has 641 shapes — per-shape
 jobs would be 641 scans; this is 1).
@@ -31,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from re_shacl_spark.model.triples import local_frame, vocab
+from re_shacl_spark.model.triples import local_frame, materialize, vocab
 from re_shacl_spark.query import Path as PathExpr
 from re_shacl_spark.query import eval_path
 from re_shacl_spark.reasoning.tbox import TBoxIndex
@@ -315,8 +317,8 @@ def validate(
         sv = _sparql_violations(spark, triples, targets, shapes, with_details)
         violations = empty.unionByName(sv) if sv is not None else empty
         _LAST_PLAN_FRAME = violations
-        violations = violations.localCheckpoint(eager=True)
-        return ValidationReport(violations, violations.isEmpty(), len(shapes))
+        violations, c = materialize(violations)
+        return ValidationReport(violations, not c["rows"], len(shapes))
     pcs = F.broadcast(local_frame(spark, pc_rows, _PC_SCHEMA))
     base_pcs = pcs.filter(F.col("branch_idx").isNull())
 
@@ -455,10 +457,12 @@ def validate(
         ).otherwise(F.col("_xone_n") == 1),
     )
 
-    # single-pass per-focus aggregation: every count/exists constraint at once
+    # single-pass per-focus aggregation: every count/exists constraint at
+    # once, plus the non-conforming values themselves (one list entry per
+    # collapsed value row, so two bad values sharing a lexical form stay two)
     agg = collapsed.groupBy("pc_id", "shape_id", "focus").agg(
         F.count("o").alias("cnt"),
-        F.sum(F.when(~F.col("_vconf"), 1).otherwise(0)).alias("bad_vals"),
+        F.collect_list(F.when(~F.col("_vconf"), F.col("o"))).alias("bad"),
         F.max(
             F.when(F.col("has_value").isNotNull() & (F.col("o") == F.col("has_value")), True)
         ).alias("has_v"),
@@ -487,52 +491,49 @@ def validate(
         if with_details
         else []
     )
-    mk = lambda cond, constraint, value: agg.filter(cond).select(  # noqa: E731
-        F.col("focus"),
-        F.col("shape_id").alias("shape"),
-        F.col("path"),
-        F.lit(constraint).alias("constraint"),
-        value.cast("string").alias("value"),
-        *detail_cols,
-    )
-    v_min = mk(pos & F.col("min_count").isNotNull() & (F.col("cnt") < F.col("min_count")), "minCount", F.col("cnt"))
-    v_max = mk(pos & F.col("max_count").isNotNull() & (F.col("cnt") > F.col("max_count")), "maxCount", F.col("cnt"))
-    v_hv = mk(pos & F.col("has_value").isNotNull() & (~F.coalesce(F.col("has_v"), F.lit(False))), "hasValue", F.col("has_value"))
-    # sh:qualifiedMinCount/MaxCount: bounds on the count of values conforming
-    # to the qualified value shape (q_cnt aggregated from the 'qual' rows)
-    v_qmin = mk(pos & F.col("q_min").isNotNull() & (F.col("q_cnt") < F.col("q_min")), "qualifiedMinCount", F.col("q_cnt"))
-    v_qmax = mk(pos & F.col("q_max").isNotNull() & (F.col("q_cnt") > F.col("q_max")), "qualifiedMaxCount", F.col("q_cnt"))
-    v_ulang = mk(
-        pos & F.coalesce(F.col("unique_lang"), F.lit(False))
-        & (F.col("n_lang") > F.col("n_lang_distinct")),
-        "uniqueLang", F.col("n_lang") - F.col("n_lang_distinct"),
-    )
+    # every violation kind from ONE projection over the aggregate frame (not
+    # one filter + union branch per kind, each re-reading the grid): a kind
+    # whose condition holds contributes a (constraint, value) struct, the
+    # per-value rows ride along from the aggregation, one explode emits all
+    def kind(cond, constraint, value):
+        return F.when(
+            cond,
+            F.struct(F.lit(constraint).alias("constraint"), value.cast("string").alias("value")),
+        )
+
     # node-level sh:not: violation iff the inner property shape CONFORMS —
     # count bounds satisfied, every value conforms, hasValue present
     inner_ok = (
         (F.col("min_count").isNull() | (F.col("cnt") >= F.col("min_count")))
         & (F.col("max_count").isNull() | (F.col("cnt") <= F.col("max_count")))
-        & (F.col("bad_vals") == 0)
+        & (F.size("bad") == 0)
         & (F.col("has_value").isNull() | F.coalesce(F.col("has_v"), F.lit(False)))
     )
-    v_not = mk(~pos & inner_ok, "not", F.col("cnt"))
-    v_vals = (
-        collapsed.filter(~F.col("_vconf"))
-        .join(base_pcs.select("pc_id", "path", "is_not", "severity", "message"), "pc_id")
-        .filter(~F.coalesce(F.col("is_not"), F.lit(False)))
-        .select(
-            "focus",
-            F.col("shape_id").alias("shape"),
-            "path",
-            F.lit("value").alias("constraint"),
-            F.col("o").cast("string").alias("value"),
-            *detail_cols,
-        )
+    kinds = F.array_compact(F.array(
+        kind(pos & F.col("min_count").isNotNull() & (F.col("cnt") < F.col("min_count")), "minCount", F.col("cnt")),
+        kind(pos & F.col("max_count").isNotNull() & (F.col("cnt") > F.col("max_count")), "maxCount", F.col("cnt")),
+        kind(pos & F.col("has_value").isNotNull() & (~F.coalesce(F.col("has_v"), F.lit(False))), "hasValue", F.col("has_value")),
+        # sh:qualifiedMinCount/MaxCount: bounds on the count of values
+        # conforming to the qualified value shape (q_cnt from the 'qual' rows)
+        kind(pos & F.col("q_min").isNotNull() & (F.col("q_cnt") < F.col("q_min")), "qualifiedMinCount", F.col("q_cnt")),
+        kind(pos & F.col("q_max").isNotNull() & (F.col("q_cnt") > F.col("q_max")), "qualifiedMaxCount", F.col("q_cnt")),
+        kind(
+            pos & F.coalesce(F.col("unique_lang"), F.lit(False))
+            & (F.col("n_lang") > F.col("n_lang_distinct")),
+            "uniqueLang", F.col("n_lang") - F.col("n_lang_distinct"),
+        ),
+        kind(~pos & inner_ok, "not", F.col("cnt")),
+    ))
+    values = F.transform(
+        F.when(pos, F.col("bad")).otherwise(F.array().cast("array<string>")),
+        lambda v: F.struct(F.lit("value").alias("constraint"), v.alias("value")),
     )
-    violations = (
-        v_min.unionByName(v_max).unionByName(v_hv)
-        .unionByName(v_qmin).unionByName(v_qmax).unionByName(v_ulang)
-        .unionByName(v_not).unionByName(v_vals)
+    violations = agg.select(
+        "focus",
+        F.col("shape_id").alias("shape"),
+        "path",
+        F.inline(F.concat(kinds, values)),
+        *detail_cols,
     )
     for extra in (
         _pair_violations(spark, val_triples, targets, shapes, with_details),
@@ -545,8 +546,8 @@ def validate(
     # frame around so scripts/plan_audit.py can audit the REAL dataflow
     # (global declared at function top — the sparql-only fast path sets it too)
     _LAST_PLAN_FRAME = violations
-    violations = violations.localCheckpoint(eager=True)
-    return ValidationReport(violations, violations.isEmpty(), len(shapes))
+    violations, c = materialize(violations)
+    return ValidationReport(violations, not c["rows"], len(shapes))
 
 
 # pre-checkpoint violations frame of the most recent validate() call
@@ -925,14 +926,13 @@ def _ref_value_sets(
             local_frame(spark, sorted(pairs), "p string, _ref string, _inv boolean")
         )
         joined = triples.join(pm, "p")
-        vals = (
+        vals, _ = materialize(  # one scan, reused by every per-ref filter
             joined.filter(~F.col("_inv") & ~F.col("is_lit"))
             .select("_ref", F.col("o").alias("node"))
             .unionByName(
                 joined.filter(F.col("_inv")).select("_ref", F.col("s").alias("node"))
             )
             .distinct()
-            .localCheckpoint(eager=True)  # one scan, reused by every per-ref filter
         )
         for ref in sorted({r for _, r, _i in pairs}):
             out[ref] = vals.filter(F.col("_ref") == ref).select("node")
@@ -1000,7 +1000,7 @@ def _resolve_node_refs(
             )
             if sid in ref_vals:
                 evaluated = evaluated.unionByName(ref_vals[sid]).distinct()
-            out[sid] = evaluated.join(bad, "node", "left_anti").localCheckpoint(eager=True)
+            out[sid], _ = materialize(evaluated.join(bad, "node", "left_anti"))
         return out
 
     # acyclic (the committed workloads): resolve in dependency order, each

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from re_shacl_spark.model.triples import materialize, vocab
 from re_shacl_spark.query import Path as PathExpr
 from re_shacl_spark.reasoning.tbox import TBoxIndex
 from re_shacl_spark.validate.engine import ValidationReport, _all_pcs, _sub_pcs, validate
@@ -124,11 +125,12 @@ def _affected_foci(
         widened = steps[0]
         for s_ in steps[1:]:
             widened = widened.unionByName(s_)
-        new = widened.distinct().join(affected, "node", "left_anti")
-        if new.isEmpty():
+        new, c = materialize(widened.distinct().join(affected, "node", "left_anti"))
+        if not c["rows"]:
             break
         affected = affected.unionByName(new).distinct()
-    return affected.localCheckpoint(eager=True)
+    affected, _ = materialize(affected)
+    return affected
 
 
 def validate_delta(
@@ -146,7 +148,14 @@ def validate_delta(
     ``base_report`` must be the report of ``validate(spark, base, shapes)``
     (same shapes, same detail mode).  The result equals a full
     ``validate(spark, base ∪ delta, shapes)`` row for row.
+
+    ``delta`` is |delta|-sized by contract but may arrive as a lazy plan over
+    the whole graph (e.g. an anti-join of the fused graph against the base),
+    so it is materialized once, at entry: every use below — the subClassOf
+    count, the affected-foci seeds and every branch of the re-validation —
+    reads the checkpoint, and that one job also counts the subClassOf rows.
     """
+    delta, delta_counts = materialize(delta, subclass=F.col("p") == vocab.SUBCLASS)
     full = base.unionByName(delta)
     # sh:sparql constraints and SHACL-AF sh:target queries join arbitrary
     # patterns — a delta edge can flip a solution (or pull in a focus) that
@@ -163,9 +172,7 @@ def validate_delta(
     # distant foci, and a subclass-axiom delta re-scopes targets globally —
     # neither has a local affected set; validate fully (mirrors fuse_delta's
     # TBox fallback)
-    tbox_delta = not delta.filter(
-        F.col("p") == "http://www.w3.org/2000/01/rdf-schema#subClassOf"
-    ).isEmpty()
+    tbox_delta = delta_counts["subclass"] > 0
     if complex_paths or tbox_delta:
         return validate(spark, full, shapes, tbox, with_details=with_details)
     affected = _affected_foci(full, delta, shapes)
@@ -175,5 +182,5 @@ def validate_delta(
     kept = base_report.violations.join(
         affected.withColumnRenamed("node", "focus"), "focus", "left_anti"
     )
-    merged = kept.unionByName(fresh.violations).localCheckpoint(eager=True)
-    return ValidationReport(merged, merged.isEmpty(), len(shapes))
+    merged, c = materialize(kept.unionByName(fresh.violations))
+    return ValidationReport(merged, not c["rows"], len(shapes))

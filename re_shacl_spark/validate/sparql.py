@@ -66,7 +66,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from re_shacl_spark.model.triples import vocab
+from re_shacl_spark.model.triples import materialize, vocab
 
 
 @dataclass(frozen=True)
@@ -924,7 +924,7 @@ def apply_rules(
     ``this`` ($this pre-binding, SHACL-AF §5), the template fan-out is
     column-select-only (query._instantiate, meta — literal objects keep full
     term identity), and novelty is a hash anti-join on (s, p, o, term-tag)
-    against the accumulated graph.  Per-round localCheckpoint keeps lineage
+    against the accumulated graph.  Per-round ``materialize`` keeps lineage
     O(1), same as pipeline.fuse.  sh:order/sh:condition are not implemented
     (documented restriction — rounds apply all rules simultaneously, which
     subsumes ordering for monotone rule sets); ``max_rounds`` bounds cyclic
@@ -962,7 +962,12 @@ def apply_rules(
             _term_tag(F.col("is_lit"), F.col("o_lit")).alias("_otag"),
         )
         fresh = new.join(cur_keyed, ["s", "p", "o", "_otag"], "left_anti")
-        if fresh.isEmpty():
+        if checkpoint:
+            fresh, c = materialize(fresh)
+            done = not c["rows"]
+        else:
+            done = fresh.isEmpty()
+        if done:
             return cur
         cur = cur.unionByName(
             fresh.select(
@@ -973,7 +978,7 @@ def apply_rules(
         # per-round lineage truncation (O(1) plans across rounds);
         # checkpoint=False keeps the dataflow visible for plan audits
         if checkpoint:
-            cur = cur.localCheckpoint(eager=True)
+            cur, _ = materialize(cur)
     raise RuntimeError(
         f"sh:rule fixpoint did not converge in {max_rounds} rounds"
     )

@@ -594,3 +594,116 @@ def test_validate_delta_fallbacks(spark):
     assert {tuple(r) for r in inc.violations.collect()} == \
         {tuple(r) for r in full.violations.collect()}
     assert inc.conforms  # a reaches b,c after the delta
+
+
+def _every_kind_graph(spark):
+    rows = [
+        iri_triple(EX + "p1", vocab.TYPE, EX + "Person"),
+        iri_triple(EX + "p2", vocab.TYPE, EX + "Person"),
+        iri_triple(EX + "p3", vocab.TYPE, EX + "Person"),
+        iri_triple(EX + "p1", EX + "knows", EX + "p2"),
+        iri_triple(EX + "p1", EX + "knows", EX + "p3"),
+        lit_triple(EX + "p1", EX + "age", "42", XSD_INT),
+        # two bad values sharing one lexical form: two report rows, same text
+        lit_triple(EX + "p2", EX + "age", "7", XSD_STR),
+        lit_triple(EX + "p2", EX + "age", "7", vocab.XSD + "decimal"),
+        lit_triple(EX + "p1", EX + "status", "active", XSD_STR),
+        lit_triple(EX + "p2", EX + "status", "retired", XSD_STR),
+        lit_triple(EX + "p1", EX + "label", "a", lang="en"),
+        lit_triple(EX + "p1", EX + "label", "b", lang="en"),
+    ]
+    return triples_df(spark, rows)
+
+
+def _every_kind_shapes():
+    return [NodeShape(
+        "S", target_classes=[EX + "Person"],
+        properties=[
+            # two kinds from one aggregate row each (count + qualified count)
+            PropertyConstraint(path=EX + "knows", min_count=1, max_count=1,
+                               qualified=PropertyConstraint(clazz=EX + "Person"),
+                               q_min_count=1, q_max_count=1),
+            # a count kind and per-value rows from the same aggregate row
+            PropertyConstraint(path=EX + "age", datatype=XSD_INT, max_count=1,
+                               severity=vocab.SH + "Info", message="age"),
+            PropertyConstraint(path=EX + "status", has_value="active"),
+            PropertyConstraint(path=EX + "label", unique_lang=True),
+        ],
+        not_properties=[
+            # violated where the inner shape conforms
+            PropertyConstraint(path=EX + "status", min_count=1),
+            # inner bad values are NOT reported as 'value' rows; p3 has no
+            # status, so the inner shape conforms vacuously there
+            PropertyConstraint(path=EX + "status", datatype=XSD_INT),
+        ],
+    )]
+
+
+def test_validate_every_kind_as_multiset(spark):
+    """Row multiplicity of the one-pass report: every aggregate kind, sh:not,
+    and per-value rows, including two distinct bad values that print alike."""
+    from collections import Counter
+
+    k, a, st, lb = EX + "knows", EX + "age", EX + "status", EX + "label"
+    want = Counter([
+        (EX + "p1", "S", k, "maxCount", "2"),
+        (EX + "p1", "S", k, "qualifiedMaxCount", "2"),
+        (EX + "p2", "S", k, "minCount", "0"),
+        (EX + "p2", "S", k, "qualifiedMinCount", "0"),
+        (EX + "p3", "S", k, "minCount", "0"),
+        (EX + "p3", "S", k, "qualifiedMinCount", "0"),
+        (EX + "p2", "S", a, "maxCount", "2"),
+        (EX + "p2", "S", a, "value", "7"),
+        (EX + "p2", "S", a, "value", "7"),
+        (EX + "p2", "S", st, "hasValue", "active"),
+        (EX + "p3", "S", st, "hasValue", "active"),
+        (EX + "p1", "S", lb, "uniqueLang", "1"),
+        (EX + "p1", "S", st, "not", "1"),
+        (EX + "p2", "S", st, "not", "1"),
+        (EX + "p3", "S", st, "not", "0"),
+    ])
+    g, shapes = _every_kind_graph(spark), _every_kind_shapes()
+    rep = validate(spark, g, shapes)
+    assert Counter(tuple(r) for r in rep.violations.collect()) == want
+    assert not rep.conforms
+
+    def details(row):
+        return (vocab.SH + "Info", "age") if row[2] == a else (vocab.SH + "Violation", None)
+
+    rep = validate(spark, g, shapes, with_details=True)
+    assert rep.violations.columns == [
+        "focus", "shape", "path", "constraint", "value", "severity", "message"
+    ]
+    assert Counter(tuple(r) for r in rep.violations.collect()) == Counter(
+        {row + details(row): n for row, n in want.items()}
+    )
+
+
+def test_validate_delta_evaluates_lazy_delta_once(spark):
+    """A lazy delta plan runs once, at validate_delta's entry: a counting UDF
+    in the delta's plan ticks once per delta row, however many branches of
+    the re-validation read the delta."""
+    from pyspark.sql import functions as F
+
+    from re_shacl_spark.validate.incremental import validate_delta
+
+    base = _every_kind_graph(spark)
+    shapes = _every_kind_shapes()
+    base_rep = validate(spark, base, shapes)
+    rows = [
+        iri_triple(EX + "p2", EX + "knows", EX + "p1"),
+        iri_triple(EX + "p4", vocab.TYPE, EX + "Person"),
+        lit_triple(EX + "p3", EX + "status", "active", XSD_STR),
+    ]
+    ticks = spark.sparkContext.accumulator(0)
+
+    def tick(s):
+        ticks.add(1)
+        return s
+
+    delta = triples_df(spark, rows).withColumn("s", F.udf(tick, "string")("s"))
+    inc = validate_delta(spark, base, delta, shapes, base_rep)
+    got = sorted(tuple(r) for r in inc.violations.collect())
+    assert ticks.value == len(rows)
+    full = validate(spark, base.unionByName(triples_df(spark, rows)), shapes)
+    assert got == sorted(tuple(r) for r in full.violations.collect())
