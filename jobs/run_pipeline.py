@@ -1,11 +1,13 @@
 """spark-submit entry for the full KG-construction DAG (north_rule).
 
-  spark-submit --master local[32] --py-files re_shacl_spark.zip \
+  spark-submit --master local[4] --py-files re_shacl_spark.zip \
       jobs/run_pipeline.py --pages 100000 --checkpoint /tmp/kg_ckpt
 
-Also runnable as plain `python jobs/run_pipeline.py` (builds its own session
-from SPARK_GRAFT_CPUS).  Prints ONE JSON metrics line; with --checkpoint, a
-second run resumes from the last complete stage (delete the dir to rerun).
+Also runnable as plain `python jobs/run_pipeline.py`: it builds its own
+session on local[--cpus] when given, else get_spark's default
+(SPARK_GRAFT_CPUS, or the CPU count).  Prints ONE JSON metrics line; with
+--checkpoint, a second run resumes from the last complete stage (delete the
+dir to rerun).
 """
 
 from __future__ import annotations
@@ -36,9 +38,10 @@ def main() -> None:
     else:
         from re_shacl_spark.session import get_spark
 
-        cpus = args.cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
         spark = get_spark(
-            "kg_construct", master=f"local[{cpus}]", shuffle_partitions=cpus,
+            "kg_construct",
+            master=f"local[{args.cpus}]" if args.cpus else None,
+            shuffle_partitions=args.cpus,
             # web pages are WIDE rows (tens of KB of text): the default 10k-row
             # Arrow batch is ~300MB, and one such batch in flight per core
             # thrashes memory at high parallelism.  2048 rows ≈ 60MB bounds

@@ -3,8 +3,8 @@
 pandas UDF (Arrow batches) per BASELINE.json input_hint — the alias dictionary
 (FIXTURES.md §5: alias → [(entity_id, prior)]) is broadcast once per executor;
 the combined alternation regex is compiled lazily per interpreter and reused
-across batches.  Link scoring is deterministic: score = prior (extension point
-for embedding-similarity scoring — see ops/similarity.py for the vector side).
+across batches.  Link scoring is deterministic: score = prior (embedding
+coherence re-ranking lives in extract/linking.py).
 
 Output column ``mentions``: array<struct<alias string, entity string,
 score double, pos int>> — exploded downstream by the triple emitter.

@@ -22,7 +22,6 @@ downstream batch fusion dedups globally — same final graph.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from re_shacl_spark.corpus import PAGE_SCHEMA
 from re_shacl_spark.extract.emit import emit_triples
@@ -83,17 +82,3 @@ def run_incremental(
     )
     q.awaitTermination()
     return sink_rows() - before
-
-
-def enrich_stream(
-    events: DataFrame, dim: DataFrame, on: str = "event_type"
-) -> DataFrame:
-    """Stream-static broadcast enrichment: join each micro-batch of an
-    unbounded stream against a bounded dimension table — the standard
-    dimension-lookup shape (Spark re-broadcasts the static side per
-    micro-batch, so a dim refresh between drains is picked up).  Stateless:
-    valid in append mode with no watermark, no state store; the stream side
-    never shuffles."""
-    from pyspark.sql import functions as F2
-
-    return events.join(F2.broadcast(dim), on)

@@ -37,13 +37,10 @@ AUDITED = [
     "emb_near_dups",
     "sim_ivf_topk",
     # round 3: property-pair constraints must be per-focus equi-joins (never
-    # all-pairs), closed shapes one broadcast anti-join, URL ops map-side +
-    # single-shuffle shapes
+    # all-pairs), closed shapes one broadcast anti-join
     "v_qualified",
     "v_pairs",
     "v_closed",
-    "url_dedup_latest",
-    "url_domain_stats",
     # BGP queries: every pattern join must be a hash equi-join on shared vars
     "bgp_star_join",
     # round 3 (late): property paths / MINUS / CONSTRUCT / complex sh:path —
@@ -85,11 +82,9 @@ AUDITED = [
     "emb_quantize",
     "bgp_aggregate",
     "kg_fuse_rdfs_expand",
-    # round 4 (late): PageRank must be hash equi-joins + partial+final sums
-    # (never a nested loop); dup-span stats is explode -> keyed count ->
+    # round 4 (late): dup-span stats is explode -> keyed count ->
     # equi-join-back -> per-doc regroup; the term-accessor BGP is ordinary
     # pattern scans with the accessors as scan-stage column algebra
-    "kg_pagerank",
     "corpus_dup_spans",
     "bgp_term_funcs",
     # bigram LM: model tables are keyed counts, the model join is an
@@ -97,12 +92,10 @@ AUDITED = [
     "text_lm_score",
     # round 5: LSH-topk is a bucket equi-join (signatures are scan-stage
     # column math over literal planes); the builtin BGPs are pattern scans
-    # with the functions as scan-stage algebra; pagerank_n5 is the same
-    # join/agg chain as kg_pagerank, 2.5× deeper
+    # with the functions as scan-stage algebra
     "sim_lsh_topk",
     "bgp_string_funcs",
     "bgp_numeric_funcs",
-    "kg_pagerank_n5",
     # round 5 (late): the subselect join must broadcast the aggregate-sized
     # inner arm; Update's delete/insert are hash anti-joins on term identity;
     # GRAPH quads are ordinary pattern scans with src_url as a join key;
@@ -139,10 +132,10 @@ NO_NESTED_LOOP = {
     "corpus_hash_sample", "corpus_stratified", "corpus_pack",
     "corpus_mixture", "corpus_decontaminate", "corpus_quality_calibration",
     "dedup_ngram_jaccard", "dedup_exact", "sim_ivf_kmeans",
-    "sim_lsh_topk", "bgp_string_funcs", "bgp_numeric_funcs", "kg_pagerank_n5",
+    "sim_lsh_topk", "bgp_string_funcs", "bgp_numeric_funcs",
     "corpus_chunk", "corpus_vocab", "corpus_boilerplate",
     "emb_quantize", "bgp_aggregate",
-    "kg_pagerank", "corpus_dup_spans", "bgp_term_funcs", "text_lm_score",
+    "corpus_dup_spans", "bgp_term_funcs", "text_lm_score",
     "bgp_subselect", "kg_update_delete_insert", "bgp_graph_comention",
     "kg_graph_mgmt", "kg_dataset_from",
     "bgp_hash_funcs", "text_tfidf", "v_sparql_constraint",
@@ -181,15 +174,8 @@ def main() -> None:
     from re_shacl_spark.validate import engine as vengine
 
     for name in AUDITED:
-        if name == "kg_pagerank":
-            # the production path checkpoints every round (opaque plan);
-            # audit the same dataflow with lineage kept visible
-            from re_shacl_spark.ops.graph import pagerank
-
-            df = pagerank(kgbench.rel_triples(spark, SF), iterations=2,
-                          checkpoint=False)
-        elif name == "kg_shacl_rules":
-            # same story: apply_rules checkpoints per round — audit one
+        if name == "kg_shacl_rules":
+            # apply_rules checkpoints per round (opaque plan) — audit one
             # visible round of the identical dataflow (rule plan + novelty
             # anti-join); the registry query's oracle covers the values
             from re_shacl_spark.model.ttl import parse_ttl

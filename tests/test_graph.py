@@ -1,110 +1,10 @@
-"""Graph analytics (ops/graph.py): deterministic integer PageRank —
-hand-computable fixtures plus the bit-determinism contract."""
+"""Integer fixed-point arithmetic of the text-statistics operators:
+parts-per-million ratios take a decimal intermediate so the multiply cannot
+overflow bigint."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
-
-from re_shacl_spark.ops.graph import SCALE, entity_edges, pagerank
-
-
-def _triples(spark, rows):
-    """(s, p, o) IRI rows in the engine's triple schema."""
-    return spark.createDataFrame(
-        [(s, p, o, None, False, None) for s, p, o in rows],
-        "s string, p string, o string, "
-        "o_lit struct<lex:string,dtype:string,lang:string>, "
-        "is_lit boolean, src_url string",
-    )
-
-
-def test_entity_edges_drops_literals_and_predicates(spark):
-    t = _triples(spark, [("a", "p", "b"), ("a", "q", "b"), ("b", "p", "c")])
-    lit = spark.createDataFrame(
-        [("a", "kg:name", "b", ("b", None, None), True, None)], t.schema
-    )
-    edges = entity_edges(t.unionByName(lit))
-    got = {(r.src, r.dst) for r in edges.collect()}
-    assert got == {("a", "b"), ("b", "c")}  # predicates collapsed, literal out
-
-
-def test_pagerank_two_node_chain_exact(spark):
-    # a -> b, one iteration: deg(a)=1; b gets 150000 + 850000*1000000 div 1e6
-    # = 1000000; a has no in-edges -> 150000
-    r1 = {
-        r.node: r.rank_ppm
-        for r in pagerank(_triples(spark, [("a", "p", "b")]), iterations=1).collect()
-    }
-    assert r1 == {"a": 150_000, "b": 1_000_000}
-    # second iteration: b receives a's new rank 150000 -> 150000 + 127500
-    r2 = {
-        r.node: r.rank_ppm
-        for r in pagerank(_triples(spark, [("a", "p", "b")]), iterations=2).collect()
-    }
-    assert r2 == {"a": 150_000, "b": 277_500}
-
-
-def test_pagerank_split_contributions_truncate(spark):
-    # a -> {b, c}: contribution is 1000000 div 2 = 500000 each;
-    # ranks: 150000 + (850000*500000) div 1e6 = 150000 + 425000
-    r = {
-        r.node: r.rank_ppm
-        for r in pagerank(
-            _triples(spark, [("a", "p", "b"), ("a", "p", "c")]), iterations=1
-        ).collect()
-    }
-    assert r == {"a": 150_000, "b": 575_000, "c": 575_000}
-
-
-def test_pagerank_cycle_conserves_mass(spark):
-    # a -> b -> a: every node keeps rank SCALE at every iteration
-    # (deg 1, full rank forwarded: 150000 + 850000 = 1000000)
-    t = _triples(spark, [("a", "p", "b"), ("b", "p", "a")])
-    r = {r.node: r.rank_ppm for r in pagerank(t, iterations=3).collect()}
-    assert r == {"a": SCALE, "b": SCALE}
-
-
-def test_pagerank_bit_identical_across_parallelism(spark):
-    rows = [(f"n{i}", "p", f"n{(i * 7 + 3) % 40}") for i in range(200)] + [
-        (f"n{i}", "q", "hub") for i in range(60)
-    ]
-    t = _triples(spark, rows)
-    a = pagerank(t.repartition(1), iterations=3).collect()
-    b = pagerank(t.repartition(13), iterations=3).collect()
-    assert sorted((r.node, r.rank_ppm) for r in a) == sorted(
-        (r.node, r.rank_ppm) for r in b
-    )
-    assert all(isinstance(r.rank_ppm, int) for r in a)
-
-
-def test_pagerank_rejects_zero_iterations(spark):
-    with pytest.raises(ValueError, match="iterations"):
-        pagerank(_triples(spark, [("a", "p", "b")]), iterations=0)
-
-
-def test_pagerank_hub_mass_beyond_bigint_multiply(spark):
-    """(damping * m) in bigint overflows once a hub's summed in-contributions
-    m pass ~1.08e13 ppm (~10^7 nodes' mass); the decimal(38,0) intermediate
-    must stay exact there.  Evaluated on the rank-update expression itself —
-    materializing 10^7 edges in a unit test is not the point."""
-    big_m = 20_000_000_000_000  # 2e13 ppm: 850000 * m = 1.7e19 > 2^63-1
-    row = spark.createDataFrame([(big_m,)], "m long")
-    got = row.select(
-        F.expr(
-            "cast(150000 as long) + (cast(coalesce(m, 0L) as decimal(38,0)) * 850000) div 1000000"
-        ).alias("rank_ppm")
-    ).collect()[0].rank_ppm
-    assert got == 150_000 + (850_000 * big_m) // 1_000_000
-    # and the column type stays long (the oracle-comparison boundary)
-    dt = dict(
-        row.select(
-            F.expr(
-                "cast(150000 as long) + (cast(coalesce(m, 0L) as decimal(38,0)) * 850000) div 1000000"
-            ).alias("rank_ppm")
-        ).dtypes
-    )
-    assert dt["rank_ppm"] == "bigint"
 
 
 def test_lm_ppm_beyond_bigint_multiply(spark):

@@ -1,4 +1,4 @@
-"""Property-based cross-checks for the round-4 integer operators: PageRank,
+"""Property-based cross-checks for the round-4 integer operators:
 duplicate-span stats and the bigram LM score, each verified against a naive
 pure-Python reference over randomized small inputs (the same role the DuckDB
 oracles play at sf scale, but with hypothesis-chosen shapes).  Example counts
@@ -19,45 +19,10 @@ SETTINGS = settings(
 
 SCALE = 1_000_000
 
-edges_strat = st.lists(
-    st.tuples(st.integers(0, 12), st.integers(0, 12)),
-    min_size=1, max_size=40,
-)
-
 texts_strat = st.lists(
     st.lists(st.sampled_from("abcde"), min_size=0, max_size=12).map(" ".join),
     min_size=1, max_size=12,
 )
-
-
-def _naive_pagerank(pairs, iterations):
-    edges = sorted({(f"n{a}", f"n{b}") for a, b in pairs})
-    nodes = sorted({x for e in edges for x in e})
-    deg = {}
-    for s, _ in edges:
-        deg[s] = deg.get(s, 0) + 1
-    rank = {n: SCALE for n in nodes}
-    for _ in range(iterations):
-        inbox = {n: 0 for n in nodes}
-        for s, o in edges:
-            inbox[o] += rank[s] // deg[s]
-        rank = {n: 150_000 + (850_000 * inbox[n]) // SCALE for n in nodes}
-    return rank
-
-
-@SETTINGS
-@given(pairs=edges_strat, iterations=st.integers(1, 3))
-def test_pagerank_matches_naive_reference(spark, pairs, iterations):
-    from re_shacl_spark.ops.graph import pagerank
-
-    t = spark.createDataFrame(
-        [(f"n{a}", "p", f"n{b}", None, False, None) for a, b in pairs],
-        "s string, p string, o string, "
-        "o_lit struct<lex:string,dtype:string,lang:string>, "
-        "is_lit boolean, src_url string",
-    )
-    got = {r.node: r.rank_ppm for r in pagerank(t, iterations=iterations).collect()}
-    assert got == _naive_pagerank(pairs, iterations)
 
 
 def _naive_dup_spans(texts, window):

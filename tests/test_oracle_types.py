@@ -9,9 +9,9 @@ even when every cell agrees — the exact failure mode of the r4
 This test runs every registered oracle in DuckDB at sf0.001 (cheap — no
 Spark) and asserts no result column carries a type Spark cannot emit:
 HUGEINT/UHUGEINT (int128), DECIMAL, or unsigned ints.  INTEGER is allowed
-only because the matching Spark queries emit int32 there too (mm_*,
-corpus_shards, …) — the invariant is Spark/DuckDB dtype AGREEMENT, which
-scripts/check_oracle.py now also verifies side-by-side.
+because a Spark query may emit int32 there too — the invariant is
+Spark/DuckDB dtype AGREEMENT, which scripts/check_oracle.py also verifies
+side-by-side.
 """
 
 from __future__ import annotations
@@ -48,3 +48,12 @@ def test_no_wide_or_exotic_oracle_types(con):
         if bad:
             offenders[name] = bad
     assert not offenders, f"oracle columns off the comparison boundary: {offenders}"
+
+
+def test_every_query_has_exactly_one_oracle():
+    """A registry row and its oracle leave (or arrive) together: every query
+    has a plain or fixture-built oracle, and no oracle names a missing query."""
+    from re_shacl_spark import kgbench
+
+    assert not set(kgbench.ORACLES) & set(kgbench.FIXTURE_ORACLES)
+    assert set(entry_mod.queries()) == set(kgbench.ORACLES) | set(kgbench.FIXTURE_ORACLES)

@@ -49,147 +49,3 @@ def test_incremental_exactly_once_and_batch_parity(spark, tmp_path):
         corpus.ENTITY_CLASSES,
     ).select("s", "p", "o").distinct()
     assert streamed.exceptAll(batch).isEmpty() and batch.exceptAll(streamed).isEmpty()
-
-
-import pytest
-
-
-@pytest.mark.parametrize(
-    "provider",
-    [
-        None,  # default HDFSBackedStateStoreProvider (in-heap)
-        # the 100 TB provider: state on local disk, not executor heap — the
-        # exact-dedup state grows one flag per distinct fingerprint forever
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    ],
-    ids=["hdfs-backed", "rocksdb"],
-)
-def test_stateful_dedup_across_batches(spark, tmp_path, provider):
-    """applyInPandasWithState cross-batch dedup: each content fingerprint is
-    emitted exactly once over the stream's LIFETIME — the second increment
-    must drop docs whose content arrived in the first, with state restored
-    from the streaming checkpoint between separate queries.  Runs on both
-    state store providers (VERDICT r2 #10): RocksDB is the only viable store
-    once distinct-fingerprint state outgrows executor heap."""
-    import os
-
-    from re_shacl_spark.streaming.stateful import run_dedup_increment
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    if provider:
-        spark.conf.set(key, provider)
-    try:
-        docs_dir = str(tmp_path / "docs")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        os.makedirs(docs_dir)
-
-        b1 = [(1, "alpha beta"), (2, "ALPHA   beta"), (3, "gamma")]
-        spark.createDataFrame(b1, "doc_id long, text string").write.parquet(
-            f"{docs_dir}/b1", mode="overwrite"
-        )
-        n1 = run_dedup_increment(spark, docs_dir + "/*", out_dir, ckpt)
-        # 1 and 2 normalize to the same fingerprint → min doc_id 1 survives
-        assert n1 == 2
-        got1 = {(r.doc_id) for r in spark.read.parquet(out_dir).collect()}
-        assert got1 == {1, 3}
-
-        b2 = [(10, "alpha beta"), (11, "delta"), (12, "gamma")]
-        spark.createDataFrame(b2, "doc_id long, text string").write.parquet(
-            f"{docs_dir}/b2", mode="overwrite"
-        )
-        n2 = run_dedup_increment(spark, docs_dir + "/*", out_dir, ckpt)
-        # only 'delta' is new content; 10 and 12 duplicate batch-1 fingerprints
-        assert n2 == 1
-        got2 = {r.doc_id for r in spark.read.parquet(out_dir).collect()}
-        assert got2 == {1, 3, 11}
-    finally:
-        if provider:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-
-
-def test_windowed_agg_late_data_semantics(spark, tmp_path):
-    """Watermarked hourly windows across three drains: in-watermark late rows
-    fold into their (still-open) old window, months-late rows are dropped,
-    already-emitted windows never re-emit, the sentinel flushes the rest."""
-    import datetime as dt
-
-    from re_shacl_spark.streaming.windows import run_window_increment, windowed_counts
-
-    T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    H = dt.timedelta(hours=1)
-    schema = ("event_id long, ts timestamp_ntz, user_id long, "
-              "event_type string, value double, props string")
-
-    def write(rows, name):
-        spark.createDataFrame(rows, schema).write.parquet(f"{tmp_path}/ev/{name}")
-
-    ev_dir, out, ck = f"{tmp_path}/ev/*", f"{tmp_path}/out", f"{tmp_path}/ck"
-    # batch 1: one event in hours 0..6 → watermark lands at 4:00 (6:00 - 2h),
-    # finalizing hours 0..3; hours 4..6 stay open
-    write([(i, T0 + i * H, 1, "a", 1.0, "") for i in range(7)], "b1")
-    n1 = run_window_increment(spark, ev_dir, out, ck)
-    assert n1 == 4
-    got1 = {r.win_start: r.n_events for r in spark.read.parquet(out).collect()}
-    epoch = lambda t: int((t - dt.datetime(1970, 1, 1)).total_seconds())  # noqa: E731
-    assert len(got1) == 4 and max(got1) == epoch(T0 + 3 * H)  # hours 0..3 emitted
-    # batch 2: an in-watermark late row into still-open hour 5 (ts 5:30 >= wm
-    # 4:00), a months-late row (dropped), and fresh rows advancing to 9:00
-    write([(100, T0 + 5 * H + dt.timedelta(minutes=30), 1, "a", 1.0, ""),
-           (101, T0 - dt.timedelta(days=60), 1, "a", 1.0, ""),
-           (102, T0 + 8 * H, 1, "a", 1.0, ""),
-           (103, T0 + 9 * H, 1, "a", 1.0, "")], "b2")
-    n2 = run_window_increment(spark, ev_dir, out, ck)
-    got2 = {r.win_start: r.n_events for r in spark.read.parquet(out).collect()}
-    h5 = epoch(T0 + 5 * H)
-    assert got2[h5] == 2            # late row folded into hour 5 before emission
-    assert n2 == 3                  # hours 4,5,6 closed (wm now 7:00); 8 and 9 open
-    assert all(v == 1 for k, v in got2.items() if k != h5)  # dropped row absent
-    # batch 3: far-future sentinel flushes hours 8+9; its own window never emits
-    write([(999, T0 + dt.timedelta(days=90), 1, "z", 0.0, "")], "b3")
-    n3 = run_window_increment(spark, ev_dir, out, ck)
-    assert n3 == 2
-    final = spark.read.parquet(out)
-    assert final.filter(final.event_type == "z").count() == 0
-    # batch analog over the surviving rows matches the streamed sink
-    survivors = spark.read.parquet(f"{tmp_path}/ev/b1").unionByName(
-        spark.read.parquet(f"{tmp_path}/ev/b2").filter("event_id != 101"))
-    batch = windowed_counts(survivors)
-    assert sorted(map(tuple, batch.collect())) == sorted(
-        map(tuple, final.collect()))
-
-
-def test_stream_enrich_dim_refresh_between_drains(spark, tmp_path):
-    """Stream-static broadcast join: each drain re-reads the file-backed
-    dimension, so rows ingested after a dim update carry the new attributes
-    while earlier sink rows keep the ones they were enriched with."""
-    from re_shacl_spark.streaming.incremental import enrich_stream
-
-    ev_schema = "event_id long, event_type string"
-    dim_dir = f"{tmp_path}/dim"
-    ev_dir, out, ck = f"{tmp_path}/ev", f"{tmp_path}/out", f"{tmp_path}/ck"
-
-    def drain():
-        stream = spark.readStream.schema(ev_schema).parquet(ev_dir + "/*")
-        dim = spark.read.parquet(dim_dir)
-        q = (enrich_stream(stream, dim)
-             .writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ck).outputMode("append")
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
-    spark.createDataFrame([("a", 1)], "event_type string, weight int") \
-        .write.parquet(dim_dir, mode="overwrite")
-    spark.createDataFrame([(1, "a")], ev_schema).write.parquet(f"{ev_dir}/b1")
-    drain()
-    # dim update: weight 1 -> 9; only the new increment sees it
-    spark.createDataFrame([("a", 9)], "event_type string, weight int") \
-        .write.parquet(dim_dir, mode="overwrite")
-    spark.createDataFrame([(2, "a")], ev_schema).write.parquet(f"{ev_dir}/b2")
-    drain()
-    got = {(r.event_id, r.weight) for r in spark.read.parquet(out).collect()}
-    assert got == {(1, 1), (2, 9)}
