@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from re_shacl_spark.model.triples import local_frame, materialize
 
-MAX_ROUNDS = 60  # 2^60 nodes — pure safety rail; converges in O(log n) rounds
+MAX_ROUNDS = 60  # 2^60 nodes — safety rail, raises past it; converges in O(log n) rounds
 
 
 def _salted_min_join(edges: DataFrame, mins: DataFrame, n_salts: int) -> DataFrame:
@@ -96,7 +96,6 @@ def _driver_union_find(rows: list) -> list[tuple[str, str]]:
 def connected_components(
     edges: DataFrame,
     n_salts: int = 8,
-    max_rounds: int = MAX_ROUNDS,
     driver_threshold: int = 100_000,
 ) -> DataFrame:
     """edges: DataFrame with two string columns (any names) = undirected pairs.
@@ -136,7 +135,7 @@ def connected_components(
     e, _ = materialize(e)
 
     prev = None
-    for _ in range(max_rounds):
+    for _ in range(MAX_ROUNDS):
         # convergence fingerprint, observed by the round's checkpoint job: a
         # cheap set-equality proxy (count + two independent hash sums) instead
         # of an exceptAll (two extra shuffles); collision probability over
@@ -150,4 +149,6 @@ def connected_components(
         if fp == prev:
             break
         prev = fp
+    else:
+        raise RuntimeError(f"connected components did not converge in {MAX_ROUNDS} rounds")
     return e.select(F.col("u").alias("member"), F.col("v").alias("rep"))

@@ -1990,95 +1990,6 @@ QUERIES["corpus_filter"] = q_corpus_filter
 ORACLES["corpus_filter"] = _sql_corpus_filter()
 
 
-# ---------------------------------------------------------------------------
-# Deterministic sampling + sequence packing (ops/sampling.py): the corpus-
-# assembly tail of a pretraining pipeline — md5-keyed so every subset is
-# bit-reproducible across runs, cluster sizes, and the DuckDB oracle
-# ---------------------------------------------------------------------------
-
-_HASH64 = "('0x'||substring(md5({key}),1,15))::BIGINT"
-
-
-def q_corpus_hash_sample(spark, sf_dir):
-    """Deterministic 10% Bernoulli sample of documents — a pure hash filter
-    evaluated inside the scan (no shuffle, no RNG state)."""
-    from re_shacl_spark.ops import sampling as SMP
-
-    d = _read(spark, sf_dir, "documents")
-    return SMP.hash_sample(d, 0.1).select("doc_id", "source", "n_chars")
-
-
-SQL_CORPUS_HASH_SAMPLE = f"""SELECT doc_id, source, n_chars FROM documents
-WHERE {_HASH64.format(key="doc_id::varchar")} < {int(0.1 * 16**15)}"""
-
-
-def q_corpus_stratified(spark, sf_dir):
-    """Exactly 5 hash-minimal docs per source (per-domain quota sampling) —
-    the broadcast keep-fraction pre-filter bounds the exact row_number window
-    to ~overselect*quota rows per stratum (ops/sampling.stratified_sample)."""
-    from re_shacl_spark.ops import sampling as SMP
-
-    d = _read(spark, sf_dir, "documents")
-    return SMP.stratified_sample(d, quota=5).select("doc_id", "source")
-
-
-SQL_CORPUS_STRATIFIED = f"""WITH r AS (
-  SELECT doc_id, source,
-         row_number() OVER (
-           PARTITION BY source
-           ORDER BY {_HASH64.format(key="doc_id::varchar")}, doc_id
-         ) rn
-  FROM documents)
-SELECT doc_id, source FROM r WHERE rn <= 5"""
-
-
-def q_corpus_pack(spark, sf_dir):
-    """GPT-style sequence packing: documents in deterministic (hash, doc_id)
-    order fill 512-token sequences; each doc reports its start sequence and
-    intra-sequence offset.  The global prefix sum is range-partitioned local
-    cumsums + broadcast partition offsets — never a one-reducer window
-    (ops/sampling.pack_sequences)."""
-    from re_shacl_spark.ops import sampling as SMP
-
-    d = TS.tokens(_read(spark, sf_dir, "documents"))
-    return SMP.pack_sequences(d, budget=512)
-
-
-SQL_CORPUS_PACK = f"""WITH t AS (
-  SELECT doc_id,
-         len(regexp_extract_all(coalesce(text,''), '[A-Za-z]+|[0-9]+|[^A-Za-z0-9{TS.WS_CHARS}]'))::BIGINT bpe_tokens,
-         {_HASH64.format(key="doc_id::varchar")} h
-  FROM documents),
-c AS (
-  SELECT doc_id, bpe_tokens,
-         sum(bpe_tokens) OVER (ORDER BY h, doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - bpe_tokens AS strt
-  FROM t)
-SELECT doc_id, bpe_tokens, (strt // 512)::BIGINT AS seq_id,
-       (strt % 512)::BIGINT AS seq_off FROM c"""
-
-
-def q_corpus_mixture(spark, sf_dir):
-    """Temperature-0.5 domain mixing by character mass: per-source keep rates
-    ∝ mass^(T-1) normalized to the most-boosted source, realized by the same
-    zero-state hash filter as corpus_hash_sample riding one broadcast join
-    (ops/sampling.mixture_sample)."""
-    from re_shacl_spark.ops import sampling as SMP
-
-    d = _read(spark, sf_dir, "documents")
-    return SMP.mixture_sample(
-        d, temperature=0.5, weight_col="n_chars"
-    ).select("doc_id", "source")
-
-
-SQL_CORPUS_MIXTURE = f"""WITH m AS (
-  SELECT source, sum(n_chars)::DOUBLE AS mass FROM documents GROUP BY source),
-r AS (
-  SELECT source, pow(mass, -0.5) / max(pow(mass, -0.5)) OVER () AS rate FROM m)
-SELECT d.doc_id, d.source FROM documents d JOIN r USING (source)
-WHERE {_HASH64.format(key="d.doc_id::varchar")} < (r.rate * {16**15})::BIGINT"""
-
-
 def q_corpus_decontaminate(spark, sf_dir):
     """Train/test decontamination: distinct 3-gram overlap of each corpus doc
     with a benchmark slice (every 50th doc) — broadcast benchmark-shingle
@@ -2104,10 +2015,6 @@ FROM sh JOIN bsh USING (sh)
 GROUP BY sh.doc_id"""
 
 
-QUERIES["corpus_hash_sample"] = q_corpus_hash_sample
-QUERIES["corpus_stratified"] = q_corpus_stratified
-QUERIES["corpus_pack"] = q_corpus_pack
-QUERIES["corpus_mixture"] = q_corpus_mixture
 def q_corpus_quality_calibration(spark, sf_dir):
     """Per-source quality-threshold calibration: EXACT p10/p50/p90 of the
     quality score per source (F.percentile — bit-parity with DuckDB
@@ -2184,10 +2091,6 @@ QUERIES["corpus_quality_sketch_gate"] = q_corpus_quality_sketch_gate
 ORACLES["corpus_decontaminate"] = SQL_CORPUS_DECON
 ORACLES["corpus_quality_calibration"] = SQL_CORPUS_QUALITY_CAL
 ORACLES["corpus_quality_sketch_gate"] = SQL_CORPUS_SKETCH_GATE
-ORACLES["corpus_hash_sample"] = SQL_CORPUS_HASH_SAMPLE
-ORACLES["corpus_stratified"] = SQL_CORPUS_STRATIFIED
-ORACLES["corpus_pack"] = SQL_CORPUS_PACK
-ORACLES["corpus_mixture"] = SQL_CORPUS_MIXTURE
 
 
 # ---------------------------------------------------------------------------
@@ -3850,178 +3753,6 @@ ORACLES["v_severity"] = SQL_V_SEVERITY
 
 
 # ---------------------------------------------------------------------------
-# Corpus-prep operators (ops/corpusprep.py): chunking, vocabulary, n-grams,
-# deterministic training shards, line-level boilerplate removal — the steps
-# between "cleaned documents" and "token shards" in a pretraining pipeline.
-# All pure column algebra / keyed aggregation; every hash is md5-derived so
-# the DuckDB mirrors are bit-exact.
-# ---------------------------------------------------------------------------
-
-def q_corpus_chunk(spark, sf_dir):
-    """chunk_documents (corpusprep.py): 32-token windows with 8-token overlap
-    (stride 24) — built entirely with array higher-order functions inside the
-    scan stage, zero shuffles."""
-    from re_shacl_spark.ops import corpusprep as C
-
-    docs = _read(spark, sf_dir, "documents")
-    return C.chunk_documents(docs, chunk_tokens=32, overlap=8)
-
-
-SQL_CORPUS_CHUNK = f"""WITH w AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '{SQL_WSP}') AS words
-  FROM documents WHERE length(trim(text)) > 0),
-c AS (SELECT doc_id, words, len(words) AS n,
-      ceil(greatest(len(words) - 8, 1) / 24.0)::BIGINT AS nc FROM w),
-e AS (SELECT doc_id, words, n, unnest(generate_series(0, nc-1)) AS i FROM c)
-SELECT doc_id, i AS chunk_id,
-(least(24*i + 32, n) - 24*i)::BIGINT AS n_tokens,
-array_to_string(words[(24*i+1):least(24*i+32, n)::INT], ' ') AS chunk_text
-FROM e"""
-
-
-def q_corpus_vocab(spark, sf_dir):
-    """vocab_topk (corpusprep.py): 50 most frequent lowercased tokens with
-    term + document frequency; TakeOrderedAndProject keeps per-task heaps, no
-    global sort; the (tf desc, word) tie-break makes the cut deterministic."""
-    from re_shacl_spark.ops import corpusprep as C
-
-    return C.vocab_topk(_read(spark, sf_dir, "documents"), k=50)
-
-
-SQL_CORPUS_VOCAB = f"""WITH occ AS (
-  SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '{SQL_WSP}')) AS word
-  FROM documents)
-SELECT word, count(*)::BIGINT AS tf, count(DISTINCT doc_id)::BIGINT AS df
-FROM occ WHERE word <> '' GROUP BY 1 ORDER BY tf DESC, word LIMIT 50"""
-
-
-def q_corpus_ngrams(spark, sf_dir):
-    """ngram_counts (corpusprep.py): corpus-wide word trigram table, grams
-    under 5 occurrences dropped — windows built per row (no shuffle), one
-    partial-aggregated count."""
-    from re_shacl_spark.ops import corpusprep as C
-
-    return C.ngram_counts(_read(spark, sf_dir, "documents"), n=3, min_count=5)
-
-
-SQL_CORPUS_NGRAMS = f"""WITH w AS (
-  SELECT regexp_split_to_array(lower(trim(text)), '{SQL_WSP}') AS words FROM documents),
-e AS (SELECT words, unnest(generate_series(1, len(words)-2)) AS i
-      FROM w WHERE len(words) >= 3),
-g AS (SELECT array_to_string(words[i:(i+2)::INT], ' ') AS ngram FROM e)
-SELECT ngram, count(*)::BIGINT AS n_occurrences
-FROM g GROUP BY 1 HAVING count(*) >= 5"""
-
-
-def q_corpus_shards(spark, sf_dir):
-    """training_shards (corpusprep.py): md5-deterministic (shard,
-    pos_in_shard) addresses — shard membership and intra-shard order use
-    independent salts; one shuffle on shard, per-shard window sort only
-    (never a global row_number)."""
-    from re_shacl_spark.ops import corpusprep as C
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "source")
-    return C.training_shards(docs, n_shards=7, seed="r4")
-
-
-SQL_CORPUS_SHARDS = """WITH h AS (
-  SELECT doc_id, source,
-    (('0x'||substring(md5('r4|shard'||doc_id::varchar),1,15))::BIGINT % 7)::INT AS shard,
-    ('0x'||substring(md5('r4|order'||doc_id::varchar),1,15))::BIGINT AS ord
-  FROM documents)
-SELECT doc_id, source, shard,
-row_number() OVER (PARTITION BY shard ORDER BY ord, doc_id)::BIGINT AS pos_in_shard
-FROM h"""
-
-
-def q_corpus_boilerplate(spark, sf_dir):
-    """strip_boilerplate (corpusprep.py): CCNet-style line-level template
-    removal — per-source header/footer lines synthesized onto every document
-    are detected (≥3 distinct docs share them) and stripped, the unique body
-    survives.  Explode → (group, line) count → verdict join → reassemble:
-    three shuffles, keys bounded by distinct content."""
-    from re_shacl_spark.ops import corpusprep as C
-
-    docs = _read(spark, sf_dir, "documents")
-    multi = docs.select(
-        "doc_id", "source",
-        F.concat(
-            F.lit("HEADER "), F.col("source"), F.lit("\n"), F.col("text"),
-            F.lit("\nFOOTER "), F.col("source"),
-        ).alias("text"),
-    )
-    return C.strip_boilerplate(multi, min_docs=3)
-
-
-SQL_CORPUS_BOILERPLATE = """WITH m AS (
-  SELECT doc_id, source,
-    'HEADER '||source||chr(10)||text||chr(10)||'FOOTER '||source AS text
-  FROM documents),
-l0 AS (SELECT doc_id, source, string_split(text, chr(10)) AS lines FROM m),
-l AS (SELECT doc_id, source, generate_subscripts(lines, 1) AS pos,
-      trim(unnest(lines)) AS line FROM l0),
-b AS (SELECT source, line FROM l WHERE line <> ''
-      GROUP BY 1, 2 HAVING count(DISTINCT doc_id) >= 3),
-k AS (SELECT l.doc_id, l.source, l.pos, l.line, (b.line IS NOT NULL) AS is_b
-      FROM l LEFT JOIN b ON b.source = l.source AND b.line = l.line)
-SELECT doc_id, source,
-coalesce(string_agg(CASE WHEN NOT is_b AND line <> '' THEN line END,
-                    chr(10) ORDER BY pos), '') AS text,
-count(*) FILTER (WHERE NOT is_b AND line <> '')::BIGINT AS n_kept,
-count(*) FILTER (WHERE is_b OR line = '')::BIGINT AS n_dropped
-FROM k GROUP BY 1, 2"""
-
-
-QUERIES["corpus_chunk"] = q_corpus_chunk
-QUERIES["corpus_vocab"] = q_corpus_vocab
-QUERIES["corpus_ngrams"] = q_corpus_ngrams
-QUERIES["corpus_shards"] = q_corpus_shards
-QUERIES["corpus_boilerplate"] = q_corpus_boilerplate
-ORACLES["corpus_chunk"] = SQL_CORPUS_CHUNK
-ORACLES["corpus_vocab"] = SQL_CORPUS_VOCAB
-ORACLES["corpus_ngrams"] = SQL_CORPUS_NGRAMS
-ORACLES["corpus_shards"] = SQL_CORPUS_SHARDS
-ORACLES["corpus_boilerplate"] = SQL_CORPUS_BOILERPLATE
-
-
-# ---------------------------------------------------------------------------
-# Substring-level dedup diagnostic (ops/corpusprep.py::duplicate_span_stats):
-# Lee-et-al-style duplicated-span coverage per document — the exact-substring
-# companion to the document-level MinHash/SimHash family.
-# ---------------------------------------------------------------------------
-
-def q_corpus_dup_spans(spark, sf_dir):
-    """Per-document duplicated-span coverage at window=8: fraction (ppm,
-    exact integer DIV — no float) of each document's 8-token windows whose
-    text also occurs in another document.  Spans collapse to 16-hex md5 keys
-    before the exchange, so the shuffle carries fixed-width keys."""
-    from re_shacl_spark.ops import corpusprep as C
-
-    return C.duplicate_span_stats(_read(spark, sf_dir, "documents"), window=8)
-
-
-SQL_CORPUS_DUP_SPANS = f"""WITH w AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '{SQL_WSP}') AS words
-  FROM documents),
-e AS (SELECT doc_id, words, unnest(generate_series(1, len(words)-7)) AS i
-      FROM w WHERE len(words) >= 8),
-occ AS (SELECT doc_id,
-        substring(md5(array_to_string(words[i:(i+7)::INT], ' ')), 1, 16) AS k
-        FROM e),
-dup AS (SELECT k FROM occ GROUP BY k HAVING count(DISTINCT doc_id) >= 2),
-j AS (SELECT occ.doc_id, (dup.k IS NOT NULL) AS is_dup
-      FROM occ LEFT JOIN dup ON dup.k = occ.k)
-SELECT doc_id, count(*)::BIGINT AS n_windows,
-count(*) FILTER (WHERE is_dup)::BIGINT AS n_dup_windows,
-((count(*) FILTER (WHERE is_dup)) * 1000000) // count(*) AS dup_ppm
-FROM j GROUP BY 1"""
-
-
-QUERIES["corpus_dup_spans"] = q_corpus_dup_spans
-ORACLES["corpus_dup_spans"] = SQL_CORPUS_DUP_SPANS
-
-
-# ---------------------------------------------------------------------------
 # SPARQL term-accessor builtins (query.py: term_lang / term_datatype /
 # term_is_iri / term_is_literal): LANG(), DATATYPE(), isIRI() usable inside
 # bgp(..., where=/bind=) while the hidden term-identity companions are in
@@ -4279,188 +4010,3 @@ FROM r WHERE rn <= 5"""
 
 QUERIES["text_tfidf"] = q_text_tfidf
 ORACLES["text_tfidf"] = SQL_TEXT_TFIDF
-
-
-# ---------------------------------------------------------------------------
-# Driver evidence ordering.  The grading driver records correctness rows for
-# roughly the first 50 registry entries per round (CORRECTNESS_r01/r02 both
-# truncate at exactly 50, in registry order).  Queries WITHOUT a prior
-# driver-recorded row therefore go first; the long-recorded round-1 block
-# (green in both r01 and r02) absorbs any truncation.  Pure reorder — every
-# query keeps its name, callable, and oracle.
-# ---------------------------------------------------------------------------
-
-_EVIDENCE_PRIORITY = [
-    # ---- the ~50-query driver window, round 5 rotation (VERDICT r4 next
-    # #2): reds-now-fixed first, then every query whose implementation
-    # changed since its last green driver row — the r4 BGP/term-identity
-    # machinery rewrite (45ba034, df05ef0) left these on r03 evidence, and
-    # b518fda moved the shared rule engine under the r02-vintage rows ----
-    # r4 reds: HUGEINT oracle dtype, cast ::BIGINT this round
-    "corpus_pack",
-    "text_lm_score",
-    # rows-only in r4; full LSH oracle (literal hyperplanes) this round
-    "sim_lsh_topk",
-    # new in round 5: SPARQL builtin + subquery coverage (no prior driver row)
-    "bgp_string_funcs",
-    "bgp_numeric_funcs",
-    "bgp_subselect",
-    "kg_update_delete_insert",
-    "bgp_graph_comention",
-    "kg_graph_mgmt",
-    "kg_dataset_from",
-    "kg_serialize_nquads",
-    # new in this session: remaining §17.4 builtin families, tf-idf,
-    # sh:sparql SPARQL-based constraints
-    "bgp_hash_funcs",
-    "text_tfidf",
-    "v_sparql_constraint",
-    "v_sparql_target",
-    "kg_shacl_rules",
-    "bgp_text_query",
-    "bgp_text_aggregate",
-    # text property paths (v_mincount slides just past the cap: its grid
-    # machinery is evidenced in-window by v_sparql_target, itself a minCount
-    # over the same single-pass aggregation)
-    "bgp_text_path",
-    # flagships changed in r5 (whitespace class / decimal intermediates /
-    # pre-closure convergence) — kept ABOVE
-    # the BGP/rule families so the session-2 insertions don't push them past
-    # the ~50-row driver window
-    "kg_fuse",
-    "kg_fuse_delta",
-    # BGP family: join machinery changed in r4, last driver-checked on r3 code
-    "bgp_star_join",
-    "bgp_optional",
-    "bgp_path_closure",
-    "bgp_path_inv_alt",
-    "bgp_path_nps",
-    "bgp_minus_filter",
-    "bgp_union",
-    "bgp_values",
-    "bgp_ask",
-    "describe_node",
-    "construct_region_member",
-    "kg_link_disambiguate",
-    # r02-vintage rule/check rows: shared engine moved in b518fda (r4)
-    "j1_domain",
-    "j1_domain_scoped",
-    "j2_range",
-    "j3_subproperty",
-    "j4_subclass",
-    "j5_inverse",
-    "j6_symmetric",
-    "j7_transitive",
-    "j9_functional_sameas",
-    "j10_inverse_functional_sameas",
-    "j11_class_equivalence",
-    "j12_property_equivalence",
-    "j13_connected_components",
-    "chk_disjoint_classes",
-    "chk_disjoint_properties",
-    "chk_same_different",
-    "v_mincount",
-    # ---- below the ~50-cap.  Demoted to make room for the session-2
-    # queries (which have NO driver row at all): chk_asymmetric /
-    # chk_irreflexive share reasoning/checks.py machinery with the three
-    # in-window chk_ rows; v_maxcount shares the single-pass grid with
-    # v_mincount; the extract/emit/tokens rows are r4-green with
-    # output-preserving r5 deltas — check_oracle re-proves all of them ----
-    "chk_asymmetric",
-    "chk_irreflexive",
-    "v_maxcount",
-    "kg_extract_text",
-    "kg_mentions",
-    "kg_emit_triples",
-    "text_tokens",
-    # the rest of the r5 whitespace-touched family
-    # (the dedup_* rows are r4-green and their r5 deltas are
-    # output-preserving — the WS class equals Java \s and the long-count
-    # emit never crosses int32 at test sf; check_oracle re-proves them) ----
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_exact",
-    # j2_range_scoped: same rule function + Scope machinery as the in-window
-    # j1_domain_scoped/j2_range pair — indirectly re-evidenced
-    "j2_range_scoped",
-    # (r4-green; re-verified by scripts/check_oracle.py == ALL OK on final
-    # r5 code and the hostile-whitespace parity pytest), then the long-green
-    # remainder ----
-    "text_quality",
-    "text_fingerprint",
-    "text_repetition",
-    "text_langid",
-    "text_pii_scrub",
-    "corpus_filter",
-    "corpus_chunk",
-    "corpus_vocab",
-    "corpus_ngrams",
-    "corpus_shards",
-    "corpus_boilerplate",
-    "corpus_dup_spans",
-    "dedup_clusters",
-    "dedup_minhash_signatures",
-    "stream_fuse",
-    "stream_validate",
-    "kg_fuse_full",
-    "kg_fuse_rdfs",
-    "kg_fuse_expand",
-    "kg_fuse_rdfs_expand",
-    "kg_pipeline_e2e",
-    "corpus_decontaminate",
-    "emb_near_dups",
-    "v_delta_incremental",
-    "p3_subject_objects",
-    "p5_membership",
-    "so1_union_distinct",
-    "so2_difference",
-    "a1_graph_size",
-    "v_class",
-    "v_datatype",
-    "v_nodekind",
-    "v_shape30_report",
-    "v_lubm_schema1",
-    "v_lubm_schema2",
-    "v_lubm_schema3",
-    "sim_lsh_recall",
-    "sim_ivf_topk",
-    "sim_ivf_kmeans",
-    "sim_topk_bruteforce",
-    "emb_quantize",
-    "rel_q1",
-    "rel_events_hourly",
-    "corpus_quality_sketch_gate",
-    "corpus_quality_calibration",
-    "corpus_hash_sample",
-    "corpus_stratified",
-    "corpus_mixture",
-    "kg_degree_topk",
-    "kg_serialize_roundtrip",
-    "bgp_aggregate",
-    "bgp_group_concat",
-    "bgp_order_limit",
-    "bgp_bind_exists",
-    "bgp_term_funcs",
-    "v_not",
-    "v_or",
-    "v_node",
-    "v_pattern",
-    "v_length",
-    "v_in",
-    "v_hasvalue",
-    "v_logic",
-    "v_qualified",
-    "v_range",
-    "v_lang",
-    "v_pairs",
-    "v_closed",
-    "v_target_of",
-    "v_inverse_path",
-    "v_severity",
-    "v_complex_path",
-]
-
-QUERIES = {n: QUERIES[n] for n in _EVIDENCE_PRIORITY if n in QUERIES} | {
-    n: f for n, f in QUERIES.items() if n not in _EVIDENCE_PRIORITY
-}

@@ -221,8 +221,7 @@ def kmeans_centroids(
     Bit-deterministic at ANY parallelism, which ordinary float k-means is not:
 
     - seeds are the ``k`` rows with the smallest ``(md5(id), id)`` — a
-      deterministic pseudo-random draw with no RNG state, the same trick the
-      sampling operators use;
+      deterministic pseudo-random draw with no RNG state;
     - assignment is per-row JVM column math against literal centroids
       (cosine, ties to the smaller centroid id) — no cross-row float order;
     - each centroid update sums components as ``decimal(38,15)`` — exact and

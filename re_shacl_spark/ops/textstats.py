@@ -36,9 +36,9 @@ BPE_ISH = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9" + WS_CHARS + "]"
 def tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Whitespace + BPE-ish token counts per document.
 
-    Counts are emitted as ``long``: every downstream consumer (the packing
-    prefix sum in ops/sampling.pack_sequences, decontamination joins, the
-    DuckDB oracles' ``::BIGINT``) operates in 64-bit, and a 10^12-doc corpus
+    Counts are emitted as ``long``: every downstream consumer
+    (decontamination joins, the DuckDB oracles' ``::BIGINT``) operates in
+    64-bit, and a 10^12-doc corpus
     sums past int32 long before it sums past int64.  Keeping the narrow int
     here put an int32 on the oracle-comparison boundary (the r3
     ``corpus_pack`` hash mismatch)."""

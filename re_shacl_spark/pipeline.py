@@ -51,29 +51,11 @@ from re_shacl_spark.reasoning.rules import RuleEngine, Scope
 from re_shacl_spark.reasoning.tbox import TBoxIndex, build_tbox_index, extract_tbox
 from re_shacl_spark.session import ensure_fixpoint_confs
 
-MAX_ROUNDS = 25  # reference caps at 25_000 (closure_engine.py:39) — log-round CC
+MAX_ROUNDS = 25  # reference caps at 25_000 (closure_engine.py:39); past it fuse raises
 # linear pre-closure iteration budget: composition depth is tiny in practice
 # (≤4); if the budget runs out unconverged, round 1 of the main fixpoint
 # falls back to deriving (see `preclosed`) instead of dropping derivations
 LINEAR_PRECLOSE_BUDGET = 32
-#                  plus closed TBox maps converge in a handful of rounds.
-
-
-def _trace_t() -> float:
-    import time
-
-    return time.time()
-
-
-def _trace(t0: float, msg: str) -> None:
-    """Opt-in fixpoint phase timing (SPARK_GRAFT_TRACE=1): one stderr line per
-    round phase — the tool that localizes job-barrier cost at toy scale."""
-    import os
-    import sys
-    import time
-
-    if os.environ.get("SPARK_GRAFT_TRACE"):
-        print(f"[fuse] {msg}: {time.time() - t0:.2f}s", file=sys.stderr)
 
 
 @dataclass
@@ -107,9 +89,6 @@ def fuse(
     triples: DataFrame,
     scope: Scope | None = None,
     emit_sameas_provenance: bool = True,
-    run_checks: bool = True,
-    max_rounds: int = MAX_ROUNDS,
-    cc_salts: int = 8,
     assume_distinct: bool = False,
     profile: str = "owl",
     base: FusionResult | None = None,
@@ -191,31 +170,25 @@ def fuse(
         # the most expensive phase at 10^12 triples — then runs exactly once
         # over the linear-closed graph (same inner loop the incremental init
         # below already uses on its delta).
-        _pt = _trace_t()
         step = cur
         preclosed = False  # True only when the loop PROVED an empty delta
-        for _i in range(LINEAR_PRECLOSE_BUDGET):
-            _it = _trace_t()
+        for i in range(LINEAR_PRECLOSE_BUDGET):
             derived = engine.derive_linear(step)
             # delta-fed rounds (iter ≥ 1): probe the derive BEFORE the
             # full-graph anti-join — the usual termination round derives
             # nothing, and the probe re-evaluates only broadcast joins over
             # the previous delta, vs a whole-graph shuffle.  Never probe
             # iter 0: its derive scans the entire graph.
-            if _i > 0 and derived.isEmpty():
-                _trace(_it, f"pre-closure iter {_i} empty probe hit")
+            if i > 0 and derived.isEmpty():
                 preclosed = True
                 break
             nd = derived.dropDuplicates(["s", "p", "o"])
             nd, nc = materialize(nd.join(cur, ["s", "p", "o"], "left_anti"))
-            empty = nc["rows"] == 0
-            _trace(_it, f"pre-closure iter {_i} empty={empty}")
-            if empty:
+            if not nc["rows"]:
                 preclosed = True
                 break
             cur = cur.unionByName(nd)
             step = nd
-        _trace(_pt, "linear pre-closure")
         delta = cur
     else:
         # incremental init: canonicalize the delta into the base's id space,
@@ -253,13 +226,12 @@ def fuse(
         cur = base.triples.unionByName(delta)
         if not delta_counts["rows"]:
             # nothing new: the base is already the fixpoint
-            counts = run_all_checks(base.triples, tbox) if run_checks else {}
             return FusionResult(
                 triples=base.triples,
                 rep_map=base.rep_map
                 if base.rep_map is not None
                 else local_frame(spark, [], ["member", "rep"]),
-                tbox=tbox, rounds=0, check_counts=counts,
+                tbox=tbox, rounds=0, check_counts=run_all_checks(base.triples, tbox),
             )
     merged_last = False
     # purely-linear rule sets: a merge cannot enable anything new (linear rules
@@ -274,9 +246,8 @@ def fuse(
     # linear rules emitted a trans-pred edge last round; the incremental path
     # seeds it from the delta itself (a delta trans-edge must trigger closure)
     lin_made_trans = not first_full and delta_counts["trans"] > 0
-    for rounds in range(1, max_rounds + 1):
+    for rounds in range(1, MAX_ROUNDS + 1):
         progressed = False
-        _rt = _trace_t()
 
         # round 1's graph is already linearly closed (the pre-closure above,
         # both the full and the incremental path) — skip the re-derivation
@@ -329,8 +300,6 @@ def fuse(
                 new = new.drop("_lin")
         has_new = nc["rows"] > 0
         lin_made_trans = nc["trans"] > 0
-        _trace(_rt, f"r{rounds} derive+anti trans={bool(include_trans)} has_new={has_new}")
-        _rt = _trace_t()
         if has_new:
             progressed = True
             # both children are materialized — a plain union keeps lineage O(1)
@@ -369,7 +338,7 @@ def fuse(
                 else F.lit(False)
             )
             new_reps, rc = materialize(
-                connected_components(edges, n_salts=cc_salts), tbox_hits=touches_tbox
+                connected_components(edges), tbox_hits=touches_tbox
             )
             n_reps, tbox_hits = rc["rows"], rc["tbox_hits"]
             if n_reps:
@@ -404,7 +373,6 @@ def fuse(
                         cur, _ = materialize(apply_static_map(cur, static))
                     new = cur  # next round re-derives over the full graph
                     merged_last = True  # rebuild must force the next round
-            _trace(_rt, f"r{rounds} sameas+cc reps={n_reps if need_sameas else 0}")
         if not progressed:
             break
         if not has_new and not merged_last:
@@ -412,6 +380,8 @@ def fuse(
             # closure is already complete — skip the confirmation round
             break
         delta = new
+    else:
+        raise RuntimeError(f"fuse fixpoint did not converge in {MAX_ROUNDS} rounds")
 
     if rep_map is None:
         rep_map = local_frame(spark, [], ["member", "rep"])
@@ -433,7 +403,7 @@ def fuse(
         merged = dedup_triples(sameas_slice.unionByName(prov))
         cur = rest.unionByName(merged)
 
-    counts = run_all_checks(cur, tbox) if run_checks else {}
+    counts = run_all_checks(cur, tbox)
     return FusionResult(triples=cur, rep_map=rep_map, tbox=tbox, rounds=rounds, check_counts=counts)
 
 
@@ -504,8 +474,6 @@ def expand_sameas(triples: DataFrame, rep_map: DataFrame) -> DataFrame:
 def fuse_expand(
     spark: SparkSession,
     triples: DataFrame,
-    max_rounds: int = MAX_ROUNDS,
-    cc_salts: int = 8,
     profile: str = "owl",
 ) -> FusionResult:
     """Expansion-semantics fixpoint: rules + sameAs materialization + component
@@ -524,7 +492,7 @@ def fuse_expand(
     rep_map: DataFrame | None = None
     tbox = None
     rounds = 0
-    for rounds in range(1, max_rounds + 1):
+    for rounds in range(1, MAX_ROUNDS + 1):
         # rebuild per round: expansion copies axioms onto new terms
         tbox_rows = extract_tbox(cur)
         tbox = build_tbox_index(
@@ -556,7 +524,7 @@ def fuse_expand(
             )
 
         edges = engine.derive_sameas(cur)
-        reps, rc = materialize(connected_components(edges, n_salts=cc_salts))
+        reps, rc = materialize(connected_components(edges))
         if rc["rows"]:
             rep_map = reps
             pairs = _sameas_member_pairs(rep_map)
@@ -577,6 +545,8 @@ def fuse_expand(
         if not nc["rows"]:
             break
         cur = cur.unionByName(new)
+    else:
+        raise RuntimeError(f"fuse_expand fixpoint did not converge in {MAX_ROUNDS} rounds")
 
     if rep_map is None:
         rep_map = local_frame(spark, [], ["member", "rep"])
@@ -631,12 +601,7 @@ def _resource_typing(triples: DataFrame) -> DataFrame:
     )
 
 
-def fuse_full(
-    spark: SparkSession,
-    triples: DataFrame,
-    max_rounds: int = MAX_ROUNDS,
-    cc_salts: int = 8,
-) -> FusionResult:
+def fuse_full(spark: SparkSession, triples: DataFrame) -> FusionResult:
     """Full unscoped materialization: the expansion-semantics fixpoint (all
     rules, sameAs copy-through, no merge — ``fuse_expand``) PLUS the
     axiomatic resource/property typing layer (rdfs4a/4b, rdf1) that owlrl's
@@ -653,7 +618,7 @@ def fuse_full(
     Size ordering on any sameAs-bearing input: |fuse| < |fuse_expand| <
     |fuse_full| — the ablation triple the reference reports via
     ``inter_graph`` vs Re-SHACL (BENCH.md §ablation)."""
-    res = fuse_expand(spark, triples, max_rounds=max_rounds, cc_salts=cc_salts)
+    res = fuse_expand(spark, triples)
     cur = res.triples
     typing = _resource_typing(cur).join(cur, ["s", "p", "o"], "left_anti")
     return FusionResult(

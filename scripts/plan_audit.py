@@ -53,14 +53,10 @@ AUDITED = [
     "construct_region_member",
     "v_complex_path",
     # round 3 (late): UNION must be a narrow concat of branch join trees;
-    # VALUES groups broadcast joins; sampling ops are scan-filters / bounded
-    # windows / a one-shuffle prefix sum — never a nested loop
+    # VALUES groups broadcast joins; decontamination is a broadcast semi-join
+    # and calibration a keyed aggregate — never a nested loop
     "bgp_union",
     "bgp_values",
-    "corpus_hash_sample",
-    "corpus_stratified",
-    "corpus_pack",
-    "corpus_mixture",
     "corpus_decontaminate",
     "corpus_quality_calibration",
     # round 4: the ngram-Jaccard DEFAULT must ride LSH band equi-joins (no
@@ -71,21 +67,14 @@ AUDITED = [
     # round 4 (late): trained-quantizer IVF — assignment must stay literal
     # column math (no shuffle before the cell equi-join), like sim_ivf_topk
     "sim_ivf_kmeans",
-    # round 4: corpus-prep + SPARQL-aggregate + quantization surfaces —
-    # chunk/quantize must ride the scan stage (zero or one exchange, no
-    # join at all); vocab is a TakeOrdered heap, not a global sort;
-    # boilerplate is explode -> keyed count -> equi-join-back; the SPARQL
+    # round 4: SPARQL-aggregate + quantization surfaces — quantize must ride
+    # the scan stage (zero or one exchange, no join at all); the SPARQL
     # aggregate is a partial+final hash agg over one pattern join tree
-    "corpus_chunk",
-    "corpus_vocab",
-    "corpus_boilerplate",
     "emb_quantize",
     "bgp_aggregate",
     "kg_fuse_rdfs_expand",
-    # round 4 (late): dup-span stats is explode -> keyed count ->
-    # equi-join-back -> per-doc regroup; the term-accessor BGP is ordinary
-    # pattern scans with the accessors as scan-stage column algebra
-    "corpus_dup_spans",
+    # round 4 (late): the term-accessor BGP is ordinary pattern scans with
+    # the accessors as scan-stage column algebra
     "bgp_term_funcs",
     # bigram LM: model tables are keyed counts, the model join is an
     # equi-join on the bigram, per-doc regroup is a hash agg — no NLJ
@@ -129,13 +118,11 @@ NO_NESTED_LOOP = {
     "bgp_path_closure", "bgp_path_inv_alt", "bgp_path_nps",
     "bgp_minus_filter", "construct_region_member", "v_complex_path",
     "bgp_union", "bgp_values",
-    "corpus_hash_sample", "corpus_stratified", "corpus_pack",
-    "corpus_mixture", "corpus_decontaminate", "corpus_quality_calibration",
+    "corpus_decontaminate", "corpus_quality_calibration",
     "dedup_ngram_jaccard", "dedup_exact", "sim_ivf_kmeans",
     "sim_lsh_topk", "bgp_string_funcs", "bgp_numeric_funcs",
-    "corpus_chunk", "corpus_vocab", "corpus_boilerplate",
     "emb_quantize", "bgp_aggregate",
-    "corpus_dup_spans", "bgp_term_funcs", "text_lm_score",
+    "bgp_term_funcs", "text_lm_score",
     "bgp_subselect", "kg_update_delete_insert", "bgp_graph_comention",
     "kg_graph_mgmt", "kg_dataset_from",
     "bgp_hash_funcs", "text_tfidf", "v_sparql_constraint",

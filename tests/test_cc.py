@@ -55,3 +55,20 @@ def test_deterministic_across_parallelism(spark):
 
 def test_empty(spark):
     assert _reps(spark, [("a", "a")]) == {}
+
+
+def test_star_rounds_raise_at_round_cap(spark, monkeypatch):
+    """The distributed path proves convergence by seeing one fingerprint
+    twice; a path that has not converged when the round cap is hit raises."""
+    import pytest
+
+    import re_shacl_spark.canonicalize.cc as cc
+
+    edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(64)]
+    got = _reps(spark, edges)
+    assert len(got) == 64 and set(got.values()) == {"n000"}
+
+    monkeypatch.setattr(cc, "MAX_ROUNDS", 1)
+    df = spark.createDataFrame(edges, ["a", "b"])
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(df, driver_threshold=0)

@@ -1,7 +1,6 @@
-"""Property-based cross-checks for the round-4 integer operators:
-duplicate-span stats and the bigram LM score, each verified against a naive
-pure-Python reference over randomized small inputs (the same role the DuckDB
-oracles play at sf scale, but with hypothesis-chosen shapes).  Example counts
+"""Property-based cross-check for the round-4 bigram LM score, verified
+against a naive pure-Python reference over randomized small inputs (the same
+role the DuckDB oracles play at sf scale, but with hypothesis-chosen shapes).  Example counts
 are kept low — every example runs Spark jobs.
 """
 
@@ -23,37 +22,6 @@ texts_strat = st.lists(
     st.lists(st.sampled_from("abcde"), min_size=0, max_size=12).map(" ".join),
     min_size=1, max_size=12,
 )
-
-
-def _naive_dup_spans(texts, window):
-    spans = {}
-    for i, text in enumerate(texts):
-        words = text.lower().split()
-        for j in range(len(words) - window + 1):
-            spans.setdefault(" ".join(words[j:j + window]), set()).add(i)
-    out = {}
-    for i, text in enumerate(texts):
-        words = text.lower().split()
-        n = len(words) - window + 1
-        if n < 1:
-            continue
-        dup = sum(
-            1 for j in range(n)
-            if len(spans[" ".join(words[j:j + window])]) >= 2
-        )
-        out[i] = (n, dup, dup * SCALE // n)
-    return out
-
-
-@SETTINGS
-@given(texts=texts_strat, window=st.integers(1, 4))
-def test_dup_spans_match_naive_reference(spark, texts, window):
-    from re_shacl_spark.ops import corpusprep as C
-
-    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
-    got = {r.doc_id: (r.n_windows, r.n_dup_windows, r.dup_ppm)
-           for r in C.duplicate_span_stats(docs, window=window).collect()}
-    assert got == _naive_dup_spans(texts, window)
 
 
 def _naive_lm_score(texts):

@@ -50,11 +50,6 @@ DOC_ONLY_QUERIES = [
     "text_fingerprint",
     "text_repetition",
     "text_lm_score",
-    "corpus_chunk",
-    "corpus_vocab",
-    "corpus_ngrams",
-    "corpus_dup_spans",
-    "corpus_pack",
     "dedup_exact",
     "kg_extract_text",
     "kg_mentions",

@@ -288,75 +288,6 @@ def test_pii_scrub_counts_and_redaction(spark):
     assert rows[3].text_clean == ""
 
 
-def test_hash_sample_deterministic_and_bounded(spark):
-    import pytest
-
-    from re_shacl_spark.ops import sampling as SMP
-
-    d = spark.createDataFrame([(i, f"t{i}") for i in range(400)], ["doc_id", "text"])
-    a = {r.doc_id for r in SMP.hash_sample(d, 0.25).collect()}
-    b = {r.doc_id for r in SMP.hash_sample(d.repartition(7), 0.25).collect()}
-    assert a == b and 0 < len(a) < 400          # partitioning-independent
-    assert SMP.hash_sample(d, 0.0).count() == 0
-    assert SMP.hash_sample(d, 1.0).count() == 400
-    salted = {r.doc_id for r in SMP.hash_sample(d, 0.25, salt="v2").collect()}
-    assert salted != a                          # independent subset per salt
-    with pytest.raises(ValueError):
-        SMP.hash_sample(d, 1.5)
-
-
-def test_stratified_sample_quota_and_fallback(spark):
-    from re_shacl_spark.ops import sampling as SMP
-
-    rows = [(i, f"s{i % 3}") for i in range(90)] + [(1000, "tiny")]
-    d = spark.createDataFrame(rows, ["doc_id", "source"])
-    got = SMP.stratified_sample(d, quota=4).groupBy("source").count().collect()
-    per = {r.source: r["count"] for r in got}
-    assert per == {"s0": 4, "s1": 4, "s2": 4, "tiny": 1}  # small stratum keeps all
-    # overselect so tight the pre-filter underfills -> shortfall re-run branch;
-    # result must still be the exact hash-minimal quota per stratum
-    exact = {tuple(r) for r in SMP.stratified_sample(d, quota=4).collect()}
-    forced = {tuple(r) for r in
-              SMP.stratified_sample(d, quota=4, overselect=1.0001).collect()}
-    assert forced == exact
-
-
-def test_pack_sequences_parallelism_invariant(spark):
-    from re_shacl_spark.ops import sampling as SMP
-
-    d = spark.createDataFrame(
-        [(i, 100 + (i * 37) % 173) for i in range(200)], ["doc_id", "bpe_tokens"]
-    )
-    a = sorted(tuple(r) for r in SMP.pack_sequences(d, 512).collect())
-    b = sorted(tuple(r) for r in
-               SMP.pack_sequences(d.repartition(13), 512).collect())
-    assert a == b                               # boundary/parallelism invariant
-    # offsets are consistent: every start = seq_id*512 + seq_off, and the
-    # global token order is gapless (sum of tokens == final start + last tok)
-    total = sum(t for _, t in [(r[0], r[1]) for r in a])
-    ends = [r[2] * 512 + r[3] + r[1] for r in a]
-    assert max(ends) == total
-    assert all(0 <= r[3] < 512 for r in a)
-
-
-def test_mixture_sample_flattens_toward_uniform(spark):
-    from re_shacl_spark.ops import sampling as SMP
-
-    # source a: 300 rows, source b: 30 rows — T=0 targets a uniform mix
-    rows = [(i, "a") for i in range(300)] + [(1000 + i, "b") for i in range(30)]
-    d = spark.createDataFrame(rows, ["doc_id", "source"])
-    out = SMP.mixture_sample(d, temperature=0.0)
-    per = {r.source: r["count"] for r in out.groupBy("source").count().collect()}
-    assert per["b"] == 30                      # most-boosted stratum keeps all
-    assert 15 <= per["a"] <= 45                # ~30 expected (rate 0.1), hash noise
-    # T=1 keeps the natural mix: every row survives
-    assert SMP.mixture_sample(d, temperature=1.0).count() == 330
-    # deterministic and partitioning-invariant
-    a = {r.doc_id for r in out.collect()}
-    b = {r.doc_id for r in SMP.mixture_sample(d.repartition(9), 0.0).collect()}
-    assert a == b
-
-
 def test_decontamination(spark):
     from re_shacl_spark.ops import dedup as D2
 

@@ -437,3 +437,25 @@ def test_linear_preclosure_budget_exhaustion_falls_back(spark, monkeypatch):
     got = {(r.s, r.p, r.o) for r in res.triples.collect()}
     assert {("a", "p2", "b"), ("a", "p3", "b"), ("a", "p4", "b"),
             ("b", vocab.TYPE, "C")} <= got
+
+
+def test_fuse_raises_when_round_cap_is_hit(spark, monkeypatch):
+    """A fixpoint that runs out of rounds must raise, not return a graph with
+    merges still pending.  ``f`` is functional and two f-chains hang off one
+    subject: merging level k's objects makes them one subject, which lets
+    level k+1's objects merge one round later, so this 3-level cascade needs
+    more than 2 rounds."""
+    import re_shacl_spark.pipeline as P
+    from re_shacl_spark.model.triples import iri_triple
+
+    rows = [iri_triple("f", vocab.TYPE, vocab.FUNCTIONAL),
+            iri_triple("r", "f", "x1"), iri_triple("r", "f", "y1"),
+            iri_triple("x1", "f", "x2"), iri_triple("y1", "f", "y2"),
+            iri_triple("x2", "f", "x3"), iri_triple("y2", "f", "y3")]
+    res = fuse(spark, triples_df(spark, rows))
+    reps = {r.member: r.rep for r in res.rep_map.collect()}
+    assert reps == {"y1": "x1", "y2": "x2", "y3": "x3"}
+
+    monkeypatch.setattr(P, "MAX_ROUNDS", 2)
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        fuse(spark, triples_df(spark, rows))
