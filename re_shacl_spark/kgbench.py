@@ -869,7 +869,6 @@ h AS (SELECT doc_id, md5({_SQL_NORM}) fp FROM docs),
 g AS (SELECT fp, min(doc_id) keep_id, count(*) n FROM h GROUP BY fp)
 SELECT g.keep_id, h.doc_id AS dup_id FROM g JOIN h USING(fp) WHERE g.n > 1 AND h.doc_id != g.keep_id"""
 
-_P31 = D.P31
 _SQL_H31 = "((('0x'||substring(md5(sh),1,15))::BIGINT) % 2147483647)"
 
 # shingle set (n=3 words) per doc, mirroring ops.dedup._shingles

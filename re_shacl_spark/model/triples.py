@@ -318,10 +318,16 @@ def dedup_triples(df: DataFrame) -> DataFrame:
     return df.dropDuplicates(["s", "p", "o"])
 
 
-def only_iri_objects(df: DataFrame) -> DataFrame:
-    return df.filter(~F.col("is_lit"))
-
-
-def types_of(df: DataFrame) -> DataFrame:
-    """TYPES projection: (inst, cls). Predicate-selective scan (pushdown-friendly)."""
-    return df.filter(F.col("p") == vocab.TYPE).select(F.col("s").alias("inst"), F.col("o").alias("cls"))
+def iri_rows(
+    df: DataFrame, s: Column, p: Column, o: Column, src_url: Column | None = None
+) -> DataFrame:
+    """``df`` projected onto the triple columns as (s p o) rows with an IRI
+    object; ``src_url`` is null unless given."""
+    return df.select(
+        s.alias("s"),
+        p.alias("p"),
+        o.alias("o"),
+        F.lit(None).cast(O_LIT_TYPE).alias("o_lit"),
+        F.lit(False).alias("is_lit"),
+        (F.lit(None).cast("string") if src_url is None else src_url).alias("src_url"),
+    )

@@ -5,14 +5,22 @@ Reimplements the reference's outer closure loop
 ReSHACL/re_shacl.py:701-723) as a driver-side fixpoint over pure DataFrame
 transforms:
 
+  init: close the input under the single-atom rules J1-J6      — one derive
   round k:
-    1. derive rule consequences (broadcast joins, §rules)         — one ABox scan
-    2. new = derived ∖ existing (left_anti)                        — semi-naive gate
-    3. sameAs edges (explicit + functional/inverse-functional)     — self-joins
-    4. connected components (large-star/small-star, salted)        — O(log n)
-    5. representative rewrite of s/p/o + dedup                     — 3 coalesce joins
-    6. consistency checks (abort on violation)
-  converged when (2) and (4) produce nothing new.
+    1. transitive closure + ITS linear closure (when a merge or
+       a new transitive-predicate edge can extend it)          — §rules
+    2. new = derived ∖ existing (left_anti)                     — semi-naive gate
+    3. sameAs edges (explicit + functional/inverse-functional)  — self-joins
+    4. connected components (large-star/small-star, salted)     — O(log n)
+    5. representative rewrite of s/p/o + dedup                 — 3 coalesce joins
+  converged when (2) and (4) produce nothing new; then consistency checks
+  (abort on violation).
+
+Invariant: every row that enters the graph is already linearly closed —
+``RuleEngine.derive_linear`` composes J1-J6 on the driver and returns a
+frame's whole linear closure in one broadcast join, and the rewrite (5)
+commutes with those rules.  So no round re-derives them over old rows; the
+only full-graph re-derive follows a merge that renames a TBox term.
 
 Convergence uses emptiness of delta frames — sound, unlike raw count-stability.
 Each round's frames end in ``materialize`` (model/triples.py), an eager local
@@ -40,6 +48,7 @@ from re_shacl_spark.canonicalize.rewrite import (
 )
 from re_shacl_spark.model.triples import (
     dedup_triples,
+    iri_rows,
     iri_triple,
     local_frame,
     materialize,
@@ -52,10 +61,6 @@ from re_shacl_spark.reasoning.tbox import TBoxIndex, build_tbox_index, extract_t
 from re_shacl_spark.session import ensure_fixpoint_confs
 
 MAX_ROUNDS = 25  # reference caps at 25_000 (closure_engine.py:39); past it fuse raises
-# linear pre-closure iteration budget: composition depth is tiny in practice
-# (≤4); if the budget runs out unconverged, round 1 of the main fixpoint
-# falls back to deriving (see `preclosed`) instead of dropping derivations
-LINEAR_PRECLOSE_BUDGET = 32
 
 
 @dataclass
@@ -100,13 +105,22 @@ def fuse(
     provenance triples (rep, owl:sameAs, member) are re-emitted like the
     reference does at re_shacl.py:734-737.
 
+    Rounds: the input is closed under the linear rules J1-J6 once, up
+    front; each round then runs the transitive closure (when something can
+    extend it) together with the closure's own linear consequences, then
+    sameAs components and the representative rewrite.  Every row that enters
+    the graph is linearly closed on entry, and the rewrite keeps it so (the
+    rules commute with it), so no round re-derives linear consequences of old
+    rows — except after a merge renames a TBox term, which rebuilds the rule
+    maps and re-closes the whole graph once.
+
     With ``base`` set (use :func:`fuse_delta`), ``triples`` is an ABox-only
     DELTA extending an already-closed fusion result: incoming ids are routed
-    through the established rep map, linear rules feed on the delta only
-    (they commute with the rewrite, so the closed base stays closed), and the
-    transitive/sameAs stages run only when the delta can actually trigger
-    them — the crawl-increment case (no new sameAs, no transitive edges)
-    costs O(|delta|) rule joins plus one anti-join, never a base re-closure.
+    through the established rep map, the delta is linearly closed in one
+    derive (the closed base stays closed), and the transitive/sameAs stages
+    run only when the delta can actually trigger them — the crawl-increment
+    case (no new sameAs, no transitive edges) costs three checkpoints (rep
+    map, canonicalized delta, novelty anti-join), never a base re-closure.
     """
     ensure_fixpoint_confs(spark)
     rdfs = profile == "rdfs"
@@ -144,13 +158,12 @@ def fuse(
     # assume_distinct: leave cur as parquet-backed union — re-materializing the
     # whole input here would double the I/O for nothing
 
-    # Semi-naive fixpoint.  Single-atom rules (J1-J6) commute with the
-    # representative rewrite σ (rule(σ(G)) = σ(rule(G))), so once the graph is
-    # closed under them it stays closed across merges — rounds > 1 feed them
-    # only the previous round's delta.  The two-atom rules (transitive J7,
-    # functional/inverse-functional J9/J10) do NOT commute with merging —
-    # merges can join chains / equate join keys — so they re-run gated on
-    # "a merge happened last round" (or new edges arrived).
+    # Invariant: every row that enters ``cur`` is already closed under J1-J6
+    # (σ commutes with them while it renames no TBox term), so rounds derive
+    # linear consequences only of rows they just produced.  The two-atom rules
+    # (transitive J7, functional/inverse-functional J9/J10) do NOT commute
+    # with merging — merges can join chains / equate join keys — so they
+    # re-run gated on "a merge happened last round" (or new edges arrived).
     rep_map: DataFrame | None = None
     n_rep_map = 0
     rounds = 0
@@ -159,43 +172,22 @@ def fuse(
     def is_trans() -> Column:
         return F.col("p").isin(trans_props) if trans_props else F.lit(False)
 
+    def linear_novelty(frame: DataFrame) -> DataFrame:
+        """Rows of ``frame``'s linear closure that ``frame`` lacks."""
+        derived = engine.derive_linear(frame).dropDuplicates(["s", "p", "o"])
+        return derived.join(frame, ["s", "p", "o"], "left_anti")
+
     if first_full:
-        # Close the LINEAR rules to fixpoint BEFORE the first transitive
-        # closure.  Linear rules feed transitive predicates (subPropertyOf
-        # into a TransitiveProperty is the canonical case), so interleaving
-        # them with the closure runs the closure TWICE: once over the raw
-        # graph, once after the linear round lands its trans-pred edges.
-        # Pre-closing costs one cheap broadcast-join derive + anti-join per
-        # composition level (depth ≤4), and the iterative-doubling closure —
-        # the most expensive phase at 10^12 triples — then runs exactly once
-        # over the linear-closed graph (same inner loop the incremental init
-        # below already uses on its delta).
-        step = cur
-        preclosed = False  # True only when the loop PROVED an empty delta
-        for i in range(LINEAR_PRECLOSE_BUDGET):
-            derived = engine.derive_linear(step)
-            # delta-fed rounds (iter ≥ 1): probe the derive BEFORE the
-            # full-graph anti-join — the usual termination round derives
-            # nothing, and the probe re-evaluates only broadcast joins over
-            # the previous delta, vs a whole-graph shuffle.  Never probe
-            # iter 0: its derive scans the entire graph.
-            if i > 0 and derived.isEmpty():
-                preclosed = True
-                break
-            nd = derived.dropDuplicates(["s", "p", "o"])
-            nd, nc = materialize(nd.join(cur, ["s", "p", "o"], "left_anti"))
-            if not nc["rows"]:
-                preclosed = True
-                break
-            cur = cur.unionByName(nd)
-            step = nd
-        delta = cur
+        # close the input once, BEFORE the first transitive closure: linear
+        # rules feed transitive predicates (subPropertyOf into a
+        # TransitiveProperty is the canonical case), so the closure then runs
+        # once over the linear-closed graph instead of twice
+        lin, _ = materialize(linear_novelty(cur))
+        cur = cur.unionByName(lin)
     else:
         # incremental init: canonicalize the delta into the base's id space,
-        # pre-close it under the LINEAR rules against small frames only (the
-        # rules are broadcast joins, so closing a 10k-row delta is 10k-row
-        # work), then pay the full-graph novelty anti-join exactly ONCE —
-        # the per-round variant re-shuffled the whole base every round
+        # close it under the linear rules (broadcast joins over delta-sized
+        # frames), then pay the full-graph novelty anti-join exactly once
         d = dedup_triples(triples)
         rep_map = base.rep_map
         if rep_map is not None:
@@ -205,21 +197,11 @@ def fuse(
                 d = canonicalize_triples(
                     d, rep_map, broadcast=n_rep_map <= BROADCAST_REP_MAP_MAX_ROWS
                 )
-        acc, _ = materialize(d)
-        step = acc
-        preclosed = False
-        for _ in range(LINEAR_PRECLOSE_BUDGET):  # composition depth is tiny (≤4)
-            nd = engine.derive_linear(step).dropDuplicates(["s", "p", "o"])
-            nd, nc = materialize(nd.join(acc, ["s", "p", "o"], "left_anti"))
-            if not nc["rows"]:
-                preclosed = True
-                break
-            acc = acc.unionByName(nd)
-            step = nd
+        d, _ = materialize(d)
         # the delta's own sameAs / transitive-predicate rows seed round 1's
         # triggers; the checkpoint's job counts them
         delta, delta_counts = materialize(
-            acc.join(base.triples, ["s", "p", "o"], "left_anti"),
+            d.unionByName(linear_novelty(d)).join(base.triples, ["s", "p", "o"], "left_anti"),
             sameas=F.col("p") == vocab.SAMEAS,
             trans=is_trans(),
         )
@@ -243,68 +225,40 @@ def fuse(
     # these, the driver-closed maps go stale and must be rebuilt from the
     # rewritten graph (classes/properties CAN be sameAs-merged — eq-rep-p)
     tbox_terms = sorted({t for row in tbox_rows for t in row})
-    # linear rules emitted a trans-pred edge last round; the incremental path
-    # seeds it from the delta itself (a delta trans-edge must trigger closure)
+    # the linear closure emitted a new trans-pred edge last round; the
+    # incremental path seeds it from the delta itself (a delta trans-edge must
+    # trigger closure)
     lin_made_trans = not first_full and delta_counts["trans"] > 0
     for rounds in range(1, MAX_ROUNDS + 1):
         progressed = False
-
-        # round 1's graph is already linearly closed (the pre-closure above,
-        # both the full and the incremental path) — skip the re-derivation
-        # AND its full-graph anti-join.  If the 32-iteration pre-closure
-        # budget ran out without proving an empty delta (a >32-level linear
-        # composition), fall back to deriving here instead of silently
-        # dropping derivations.
-        if rounds == 1 and preclosed:
-            derived = delta.limit(0)
-        else:
-            derived = engine.derive_linear(delta)
         # Re-run the transitive closure only when something can EXTEND it: a
         # merge (equated nodes join chains) or a trans-pred edge emitted by the
-        # LINEAR rules last round (e.g. subPropertyOf into a transitive
+        # linear closure last round (e.g. subPropertyOf into a transitive
         # property).  The closure's own output rows do NOT re-trigger —
-        # closure(closure(G)) = closure(G) — which previously cost one full
-        # closure + full-graph anti-join per confirmation round.
-        include_trans = trans_props and (
-            (first_full and rounds == 1) or merged_last or lin_made_trans
-        )
-        # next round's closure trigger: a NEW trans-pred row the LINEAR rules
-        # emitted, counted on this round's checkpoint.  The closure's own
-        # output rows are tagged out — they cannot extend it.  Round 1's
-        # linear frame is empty by construction (pre-closed), so its
-        # trans-pred edges are already inside the closure running this round.
-        lin_trans = is_trans()
-        if include_trans:
-            derived = derived.withColumn("_lin", F.lit(True)).unionByName(
-                engine.rule_transitive(cur).withColumn("_lin", F.lit(False))
+        # closure(closure(G)) = closure(G).
+        has_new = False
+        nc = {"rows": 0, "sameas": 0, "trans": 0}
+        if trans_props and ((first_full and rounds == 1) or merged_last or lin_made_trans):
+            closure = engine.rule_transitive(cur)
+            # the closure's linear consequences, tagged: a trans-pred edge
+            # among them (and not in the closure itself) is next round's
+            # trigger, counted on this round's checkpoint
+            lin = linear_novelty(closure)
+            derived = closure.withColumn("_lin", F.lit(False)).unionByName(
+                lin.withColumn("_lin", F.lit(True))
             )
-            lin_trans = lin_trans & F.col("_lin")
-        # For linear-only confirmation rounds, probe derived BEFORE the
-        # anti-join: its right side is the whole graph (cannot be broadcast),
-        # so an empty derived frame would still pay a full-graph shuffle.  The
-        # probe re-evaluates the derive plan, which is cheap ONLY for the
-        # delta-fed linear rules — never probe when the transitive closure is
-        # in the union (it would run the closure twice per round).  A
-        # pre-closed round 1 is empty by plan and costs no job at all.
-        if not include_trans and derived.isEmpty():
-            new = derived.limit(0)
-            nc = {"rows": 0, "sameas": 0, "trans": 0}
-        else:
-            derived = derived.dropDuplicates(["s", "p", "o"])
             new, nc = materialize(
-                derived.join(cur, ["s", "p", "o"], "left_anti"),
+                derived.dropDuplicates(["s", "p", "o"]).join(cur, ["s", "p", "o"], "left_anti"),
                 sameas=F.col("p") == vocab.SAMEAS,
-                trans=lin_trans,
+                trans=is_trans() & F.col("_lin"),
             )
-            if include_trans:
-                new = new.drop("_lin")
-        has_new = nc["rows"] > 0
+            has_new = nc["rows"] > 0
+            if has_new:
+                progressed = True
+                # both children are materialized — a plain union keeps lineage
+                # O(1) per round without re-writing the whole graph each round
+                cur = cur.unionByName(new.drop("_lin"))
         lin_made_trans = nc["trans"] > 0
-        if has_new:
-            progressed = True
-            # both children are materialized — a plain union keeps lineage O(1)
-            # per round without re-writing the whole graph each round
-            cur = cur.unionByName(new)
 
         # sameAs closure + canonical rewrite: needed on round 1, after new
         # facts, or after a merge (merging can enable J9/J10 anew)
@@ -314,12 +268,12 @@ def fuse(
         ):
             # without functional/inverse-functional axioms the only edge
             # source is explicit owl:sameAs rows, and past rounds already
-            # processed everything outside this round's delta — the sameAs
+            # processed everything outside this round's new rows — the sameAs
             # count observed on this round's checkpoint replaces the full CC
             # machinery (derive_sameas scan + dedup + component probe jobs)
             # on rounds that cannot merge anything.
             # incremental round 1: the delta's OWN rows are in `delta`, not in
-            # the derived `new` frame — count both
+            # this round's `new` frame — count both
             n_sameas = nc["sameas"]
             if not first_full and rounds == 1:
                 n_sameas += delta_counts["sameas"]
@@ -347,7 +301,6 @@ def fuse(
                 # sort-merge web-scale ones)
                 bcast = n_reps <= BROADCAST_REP_MAP_MAX_ROWS
                 cur, _ = materialize(canonicalize_triples(cur, new_reps, broadcast=bcast))
-                new = canonicalize_triples(new, new_reps, broadcast=bcast) if has_new else new
                 rep_map, rc = materialize(_compose_rep_maps(rep_map, new_reps))
                 n_rep_map = rc["rows"]
                 progressed = True
@@ -355,12 +308,10 @@ def fuse(
                 if tbox_hits:
                     # member side: a TBox term was renamed → closed maps are
                     # stale.  rep side: a non-TBox IRI merged INTO a TBox
-                    # term — the rewrite lands rows on that term only in
-                    # `cur`, never in the delta, so delta-fed linear rules
-                    # would silently miss them; re-derive over the full
-                    # graph (new = cur below).
-                    # a merge renamed a TBox term: rebuild the closed maps
-                    # from the rewritten graph and re-derive from scratch
+                    # term, landing rows on it that the old maps never saw.
+                    # Either way σ no longer commutes with the old rules:
+                    # rebuild the maps from the rewritten graph and re-close
+                    # the whole graph under them.
                     tbox_rows = extract_tbox(cur)
                     tbox = build_tbox_index(tbox_rows, rdfs_mode=rdfs)
                     engine = RuleEngine(spark, tbox, scope or Scope.unrestricted(), profile=profile)
@@ -371,7 +322,8 @@ def fuse(
                     static = tbox.class_rep_pairs() + tbox.prop_rep_pairs()
                     if static:
                         cur, _ = materialize(apply_static_map(cur, static))
-                    new = cur  # next round re-derives over the full graph
+                    lin, _ = materialize(linear_novelty(cur))
+                    cur = cur.unionByName(lin)
                     merged_last = True  # rebuild must force the next round
         if not progressed:
             break
@@ -379,7 +331,6 @@ def fuse(
             # merge under a purely-linear rule set: commutation says the
             # closure is already complete — skip the confirmation round
             break
-        delta = new
     else:
         raise RuntimeError(f"fuse fixpoint did not converge in {MAX_ROUNDS} rounds")
 
@@ -387,14 +338,7 @@ def fuse(
         rep_map = local_frame(spark, [], ["member", "rep"])
 
     if emit_sameas_provenance and n_rep_map:
-        prov = rep_map.select(
-            F.col("rep").alias("s"),
-            F.lit(vocab.SAMEAS).alias("p"),
-            F.col("member").alias("o"),
-            F.lit(None).cast("struct<lex:string,dtype:string,lang:string>").alias("o_lit"),
-            F.lit(False).alias("is_lit"),
-            F.lit(None).cast("string").alias("src_url"),
-        )
+        prov = iri_rows(rep_map, F.col("rep"), F.lit(vocab.SAMEAS), F.col("member"))
         # canonicalization turned every merged sameAs row into a dropped
         # self-loop, so only the (small) sameAs slice can collide with the
         # provenance rows — dedup that slice, not the whole graph
@@ -529,14 +473,7 @@ def fuse_expand(
             rep_map = reps
             pairs = _sameas_member_pairs(rep_map)
             # the complete sameAs graph on each component (incl. diagonal)
-            sameas_rows = pairs.select(
-                F.col("m").alias("s"),
-                F.lit(vocab.SAMEAS).alias("p"),
-                F.col("w").alias("o"),
-                F.lit(None).cast("struct<lex:string,dtype:string,lang:string>").alias("o_lit"),
-                F.lit(False).alias("is_lit"),
-                F.lit(None).cast("string").alias("src_url"),
-            )
+            sameas_rows = iri_rows(pairs, F.col("m"), F.lit(vocab.SAMEAS), F.col("w"))
             derived = derived.unionByName(expand_sameas(cur, rep_map)).unionByName(sameas_rows)
 
         new, nc = materialize(
@@ -588,16 +525,8 @@ def _resource_typing(triples: DataFrame) -> DataFrame:
         .unionByName(fixed.filter(F.col("t") == rdf_type))
         .distinct()
     )
-    rows = terms.select(
-        F.col("t").alias("s"), F.lit(rdf_type).alias("p"), F.lit(resource).alias("o")
-    ).unionByName(
-        preds.select(F.col("t").alias("s"), F.lit(rdf_type).alias("p"), F.lit(prop).alias("o"))
-    )
-    return rows.select(
-        "s", "p", "o",
-        F.lit(None).cast("struct<lex:string,dtype:string,lang:string>").alias("o_lit"),
-        F.lit(False).alias("is_lit"),
-        F.lit(None).cast("string").alias("src_url"),
+    return iri_rows(terms, F.col("t"), F.lit(rdf_type), F.lit(resource)).unionByName(
+        iri_rows(preds, F.col("t"), F.lit(rdf_type), F.lit(prop))
     )
 
 

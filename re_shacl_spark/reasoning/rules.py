@@ -6,6 +6,12 @@ shuffles the big side.  The two genuinely shuffling rules are the self-joins for
 functional / inverse-functional sameAs derivation (prp-fp / prp-ifp) and the
 iterative transitive-property closure; those are where skew handling lives.
 
+The single-atom rules J1-J6 read one triple plus the TBox, so a triple's
+closure under them depends only on the TBox (WebPIE's rule-ordering argument,
+Urbani et al., ISWC 2009): ``derive_linear`` composes them on the driver and
+reaches the linear fixpoint in ONE broadcast join, with the same scope
+semantics as iterating the single ``rule_*`` steps.
+
 Rule → reference-site map (semantics studied, not ported):
   J1 domain   prp-dom/rdfs2   /root/reference/ReSHACL/re_shacl.py:128-135
   J2 range    prp-rng/rdfs3   re_shacl.py:137-143
@@ -20,15 +26,15 @@ Rule → reference-site map (semantics studied, not ported):
 
 from __future__ import annotations
 
+from collections import defaultdict
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from re_shacl_spark.model.triples import local_frame, materialize, vocab
+from re_shacl_spark.model.triples import iri_rows, local_frame, materialize, vocab
 from re_shacl_spark.reasoning.tbox import TBoxIndex
-
-_EMPTY_HINT = "_re_shacl_empty"
 
 
 @dataclass
@@ -66,124 +72,82 @@ class RuleEngine:
     def _keep_prop(self, p: str) -> bool:
         return self.scope.properties is None or p in self.scope.properties
 
+    @cached_property
+    def _pairs(self) -> dict[str, list]:
+        """Each single-atom rule's TBox map after its scope OUTPUT filter — the
+        ``rule_*`` steps and the composed closure read the same maps."""
+        t = self.tbox
+        return {
+            "domain": [(p, c) for p, c in t.domain_pairs() if self._keep_cls(c)],
+            "range": [(p, c) for p, c in t.range_pairs() if self._keep_cls(c)],
+            "subprop": [(p, q) for p, q in t.subprop_closure_pairs() if self._keep_prop(q)],
+            "subclass": [(c, d) for c, d in t.subclass_closure_pairs() if self._keep_cls(d)],
+            "inverse": [
+                (p, q) for p, q in t.inverse_pairs() if self._keep_prop(p) or self._keep_prop(q)
+            ],
+            "symmetric": sorted(p for p in t.symmetric if self._keep_prop(p)),
+        }
+
     # -- TBox map frames --------------------------------------------------------
-    def _map(self, pairs: list[tuple[str, str]], a: str, b: str) -> DataFrame:
-        """TBox-map frame, cached per (contents, colnames): the same maps are
+    def _map(self, rows: list[tuple], schema: str | list[str]) -> DataFrame:
+        """TBox-map frame, cached per (contents, schema): the same maps are
         re-joined every fixpoint round.  A local_frame LocalRelation carries its
         size, so the join plans as a broadcast (the hint covers maps past
         LOCAL_FRAME_MAX_CELLS), and an empty map prunes its rule's join at plan
         time."""
         if not hasattr(self, "_map_cache"):
             self._map_cache: dict = {}
-        key = (tuple(pairs), a, b)
+        key = (tuple(rows), str(schema))
         hit = self._map_cache.get(key)
         if hit is None:
-            hit = F.broadcast(local_frame(self.spark, pairs, [a, b]))
+            hit = F.broadcast(local_frame(self.spark, rows, schema))
             self._map_cache[key] = hit
         return hit
 
     # -- rules: each returns newly derivable triples (may overlap existing) -----
     def rule_domain(self, triples: DataFrame) -> DataFrame:
         """J1: (p rdfs:domain c) ∧ (x p y) ⇒ (x rdf:type c)."""
-        pairs = [(p, c) for p, c in self.tbox.domain_pairs() if self._keep_cls(c)]
-        m = self._map(pairs, "p", "_cls")
-        return (
-            triples.join(m, "p")
-            .select(
-                F.col("s"),
-                F.lit(vocab.TYPE).alias("p"),
-                F.col("_cls").alias("o"),
-                F.lit(None).cast("struct<lex:string,dtype:string,lang:string>").alias("o_lit"),
-                F.lit(False).alias("is_lit"),
-                F.col("src_url"),
-            )
-        )
+        m = self._map(self._pairs["domain"], ["p", "_cls"])
+        t = triples.join(m, "p")
+        return iri_rows(t, F.col("s"), F.lit(vocab.TYPE), F.col("_cls"), F.col("src_url"))
 
     def rule_range(self, triples: DataFrame) -> DataFrame:
         """J2: (p rdfs:range c) ∧ (x p y) ⇒ (y rdf:type c); literal objects excluded."""
-        pairs = [(p, c) for p, c in self.tbox.range_pairs() if self._keep_cls(c)]
-        m = self._map(pairs, "p", "_cls")
-        return (
-            triples.filter(~F.col("is_lit"))
-            .join(m, "p")
-            .select(
-                F.col("o").alias("s"),
-                F.lit(vocab.TYPE).alias("p"),
-                F.col("_cls").alias("o"),
-                F.lit(None).cast("struct<lex:string,dtype:string,lang:string>").alias("o_lit"),
-                F.lit(False).alias("is_lit"),
-                F.col("src_url"),
-            )
-        )
+        m = self._map(self._pairs["range"], ["p", "_cls"])
+        t = triples.filter(~F.col("is_lit")).join(m, "p")
+        return iri_rows(t, F.col("o"), F.lit(vocab.TYPE), F.col("_cls"), F.col("src_url"))
 
     def rule_subproperty(self, triples: DataFrame) -> DataFrame:
         """J3: (p ⊑* q) ∧ (x p y) ⇒ (x q y) — joined against the transitively
         closed map, so one pass materializes all levels."""
-        pairs = [(p, q) for p, q in self.tbox.subprop_closure_pairs() if self._keep_prop(q)]
-        m = self._map(pairs, "p", "_super")
+        m = self._map(self._pairs["subprop"], ["p", "_super"])
         return (
             triples.filter(F.col("p") != vocab.TYPE)
             .join(m, "p")
-            .select(
-                "s",
-                F.col("_super").alias("p"),
-                "o",
-                "o_lit",
-                "is_lit",
-                "src_url",
-            )
+            .select("s", F.col("_super").alias("p"), "o", "o_lit", "is_lit", "src_url")
         )
 
     def rule_subclass(self, triples: DataFrame) -> DataFrame:
         """J4: (x type c) ∧ (c ⊑* d) ⇒ (x type d)."""
-        pairs = [(c, d) for c, d in self.tbox.subclass_closure_pairs() if self._keep_cls(d)]
-        m = self._map(pairs, "_cls", "_super")
-        return (
-            triples.filter(F.col("p") == vocab.TYPE)
-            .join(m, triples["o"] == F.col("_cls"))
-            .select(
-                "s",
-                F.lit(vocab.TYPE).alias("p"),
-                F.col("_super").alias("o"),
-                F.lit(None).cast("struct<lex:string,dtype:string,lang:string>").alias("o_lit"),
-                F.lit(False).alias("is_lit"),
-                "src_url",
-            )
-        )
+        m = self._map(self._pairs["subclass"], ["_cls", "_super"])
+        t = triples.filter(F.col("p") == vocab.TYPE).join(m, triples["o"] == F.col("_cls"))
+        return iri_rows(t, F.col("s"), F.lit(vocab.TYPE), F.col("_super"), F.col("src_url"))
 
     def rule_inverse(self, triples: DataFrame) -> DataFrame:
         """J5: (p owl:inverseOf q) ∧ (x p y) ⇒ (y q x), both directions
         (inverse_pairs is already symmetric)."""
-        pairs = [(p, q) for p, q in self.tbox.inverse_pairs() if self._keep_prop(p) or self._keep_prop(q)]
-        m = self._map(pairs, "p", "_inv")
-        return (
-            triples.filter(~F.col("is_lit"))
-            .join(m, "p")
-            .select(
-                F.col("o").alias("s"),
-                F.col("_inv").alias("p"),
-                F.col("s").alias("o"),
-                F.lit(None).cast("struct<lex:string,dtype:string,lang:string>").alias("o_lit"),
-                F.lit(False).alias("is_lit"),
-                "src_url",
-            )
-        )
+        m = self._map(self._pairs["inverse"], ["p", "_inv"])
+        t = triples.filter(~F.col("is_lit")).join(m, "p")
+        return iri_rows(t, F.col("o"), F.col("_inv"), F.col("s"), F.col("src_url"))
 
     def rule_symmetric(self, triples: DataFrame) -> DataFrame:
         """J6: p symmetric ∧ (x p y) ⇒ (y p x)."""
-        props = [p for p in self.tbox.symmetric if self._keep_prop(p)]
+        props = self._pairs["symmetric"]
         if not props:
             return triples.limit(0)
         return (
             triples.filter(F.col("p").isin(props) & ~F.col("is_lit"))
-            .select(
-                F.col("o").alias("s"),
-                "p",
-                F.col("s").alias("o"),
-                "o_lit",
-                "is_lit",
-                "src_url",
-            )
+            .select(F.col("o").alias("s"), "p", F.col("s").alias("o"), "o_lit", "is_lit", "src_url")
         )
 
     TRANSITIVE_DRIVER_EDGE_CAP = 300_000   # collect threshold (rows)
@@ -243,14 +207,7 @@ class RuleEngine:
                 if not closed:
                     return triples.limit(0)
                 df = local_frame(self.spark, closed, ["s", "p", "o"])
-                return df.select(
-                    "s",
-                    "p",
-                    "o",
-                    F.lit(None).cast("struct<lex:string,dtype:string,lang:string>").alias("o_lit"),
-                    F.lit(False).alias("is_lit"),
-                    F.lit(None).cast("string").alias("src_url"),
-                )
+                return iri_rows(df, F.col("s"), F.col("p"), F.col("o"))
         closure, _ = materialize(e)
         for _ in range(32):
             nxt = (
@@ -265,14 +222,7 @@ class RuleEngine:
             if not c["rows"]:
                 break
             closure, _ = materialize(closure.union(new))
-        return closure.select(
-            "s",
-            "p",
-            "o",
-            F.lit(None).cast("struct<lex:string,dtype:string,lang:string>").alias("o_lit"),
-            F.lit(False).alias("is_lit"),
-            F.lit(None).cast("string").alias("src_url"),
-        )
+        return iri_rows(closure, F.col("s"), F.col("p"), F.col("o"))
 
     # -- sameAs-deriving rules ---------------------------------------------------
     def sameas_functional(self, triples: DataFrame) -> DataFrame:
@@ -314,30 +264,140 @@ class RuleEngine:
             .distinct()
         )
 
+    @cached_property
+    def _linear_templates(self) -> tuple[list[tuple], list[str], list[str]]:
+        """J1-J6 composed on the driver: (template rows, predicates keyed on
+        the subject's class view, predicates keyed on the object's).
+
+        A worklist closes the abstract triple (X p Y), literal or IRI object,
+        under the single steps, each through its scope-filtered map.  Only J4
+        reads a term's value (its class, in rdf:type's object slot); when p's
+        closure puts X or Y there (p = rdf:type, or axioms on rdf:type), p's
+        templates are enumerated per class view of that term: a subclass-map
+        key, or "" for any other value.  Each row is (p, is_lit, subject
+        view, object view; output s as variable 0/1 or constant, output p,
+        output o likewise, output is_lit)."""
+        X, Y = 0, 1  # the input triple's subject and object
+        pairs = self._pairs
+        dom, rng, sub, sco, inv = (defaultdict(list) for _ in range(5))
+        for m, k in ((dom, "domain"), (rng, "range"), (sub, "subprop"), (sco, "subclass")):
+            for a, b in pairs[k]:
+                m[a].append(b)
+        sym: set[str] = set()
+        if self.profile != "rdfs":  # J5/J6 are OWL-only
+            for a, b in pairs["inverse"]:
+                inv[a].append(b)
+            sym = set(pairs["symmetric"])
+
+        def close(p: str, lit: bool, view: dict) -> tuple[set, set]:
+            """(derived abstract triples, variables whose class view J4 read)."""
+            start = (X, p, Y, lit)
+            seen, todo, asked = {start}, [start], set()
+
+            def add(t):
+                if t not in seen:
+                    seen.add(t)
+                    todo.append(t)
+
+            while todo:
+                s, q, o, lit_o = todo.pop()
+                for c in dom.get(q, ()):
+                    add((s, vocab.TYPE, c, False))                      # J1
+                if q == vocab.TYPE:
+                    if isinstance(o, int) and sco:
+                        asked.add(o)
+                    for d in sco.get(view[o] if isinstance(o, int) else o, ()):
+                        add((s, vocab.TYPE, d, False))                  # J4
+                else:
+                    for r in sub.get(q, ()):
+                        add((s, r, o, lit_o))                           # J3
+                if not lit_o:
+                    for c in rng.get(q, ()):
+                        add((o, vocab.TYPE, c, False))                  # J2
+                    for r in inv.get(q, ()):
+                        add((o, r, s, False))                           # J5
+                    if q in sym:
+                        add((o, q, s, False))                           # J6
+            seen.discard(start)
+            return seen, asked
+
+        def split(term) -> tuple:  # (variable, constant) template columns
+            return (term, None) if isinstance(term, int) else (None, term)
+
+        classes = [None] + sorted(sco)
+        rows: list[tuple] = []
+        need_s: list[str] = []
+        need_o: list[str] = []
+        for p in sorted({*dom, *rng, *sub, *inv, *sym, vocab.TYPE}):
+            need: set = set()
+            while True:  # grow the views this p's closure reads until stable
+                runs = {
+                    (lit, vx, vy): close(p, lit, {X: vx, Y: vy})
+                    for lit in (False, True)
+                    for vx in (classes if X in need else [None])
+                    for vy in (classes if Y in need else [None])
+                }
+                asked = set().union(*(a for _, a in runs.values()))
+                if asked <= need:
+                    break
+                need |= asked
+            need_s += [p] * (X in need)
+            need_o += [p] * (Y in need)
+            for (lit, vx, vy), (out, _) in runs.items():
+                rows += [
+                    (p, lit, vx or "", vy or "", *split(s), q, *split(o), lit_o)
+                    for s, q, o, lit_o in out
+                ]
+        return rows, need_s, need_o
+
     def derive_linear(self, triples: DataFrame) -> DataFrame:
-        """Union of the SINGLE-ATOM rules (J1-J6).  These commute with
-        representative rewriting (rule(σ(G)) = σ(rule(G))), so a semi-naive
-        fixpoint may feed them only the per-round delta — the reference's
-        incremental idea (src/core/merging/class_merging.py:134-142),
-        generalized to every linear rule."""
-        parts = [
-            self.rule_domain(triples),
-            self.rule_range(triples),
-            self.rule_subproperty(triples),
-            self.rule_subclass(triples),
-        ]
-        if self.profile != "rdfs":
-            parts += [
-                self.rule_inverse(triples),
-                self.rule_symmetric(triples),
-            ]
-        out = parts[0]
-        for x in parts[1:]:
-            out = out.unionByName(x)
-        return out
+        """The full closure of ``triples`` under the SINGLE-ATOM rules (J1-J6)
+        in one pass: a broadcast join against the composed template map fans
+        each row out to every triple its rule chains reach (rows may overlap
+        the input; callers anti-join).  Each rule filters its own output by
+        the scope, so a chain stops at an out-of-scope class or property.
+
+        These rules commute with representative rewriting (rule(σ(G)) =
+        σ(rule(G))), so a graph closed under them stays closed across merges —
+        the reference's incremental idea (src/core/merging/class_merging.py:
+        134-142), generalized to every linear rule."""
+        rows, need_s, need_o = self._linear_templates
+        classes = sorted({c for c, _ in self._pairs["subclass"]})
+
+        def view(col: str, preds: list[str]):
+            if not preds:
+                return F.lit("")
+            hit = F.col("p").isin(preds) & F.col(col).isin(classes)
+            return F.when(hit, F.col(col)).otherwise(F.lit(""))
+
+        def term(var: str, const: str):  # variable 0/1 = the input's s/o
+            return (
+                F.when(F.col(var) == 0, F.col("s"))
+                .when(F.col(var) == 1, F.col("o"))
+                .otherwise(F.col(const))
+            )
+
+        schema = (
+            "p string, is_lit boolean, _sk string, _ok string,"
+            " _sv int, _sc string, _q string, _ov int, _oc string, _ol boolean"
+        )
+
+        return (
+            triples.withColumn("_sk", view("s", need_s))
+            .withColumn("_ok", view("o", need_o))
+            .join(self._map(rows, schema), ["p", "is_lit", "_sk", "_ok"])
+            .select(
+                term("_sv", "_sc").alias("s"),
+                F.col("_q").alias("p"),
+                term("_ov", "_oc").alias("o"),
+                F.when(F.col("_ol"), F.col("o_lit")).alias("o_lit"),
+                F.col("_ol").alias("is_lit"),
+                "src_url",
+            )
+        )
 
     def derive_all(self, triples: DataFrame) -> DataFrame:
-        """One full reasoning pass: linear rules + transitive closure."""
+        """One full reasoning pass: the linear closure + transitive closure."""
         return self.derive_linear(triples).unionByName(self.rule_transitive(triples))
 
     def derive_sameas(self, triples: DataFrame) -> DataFrame:

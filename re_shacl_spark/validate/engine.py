@@ -301,7 +301,6 @@ def validate(
     _extra_focus: dict[str, DataFrame] | None = None,
     _focus_subset: DataFrame | None = None,
 ) -> ValidationReport:
-    global _LAST_PLAN_FRAME
     shapes = [s for s in shapes if not s.deactivated]  # sh:deactivated true
     pc_rows = _pc_rows(shapes)
     if not pc_rows:
@@ -316,7 +315,6 @@ def validate(
         targets = _targets(spark, triples, shapes, tbox)
         sv = _sparql_violations(spark, triples, targets, shapes, with_details)
         violations = empty.unionByName(sv) if sv is not None else empty
-        _LAST_PLAN_FRAME = violations
         violations, c = materialize(violations)
         return ValidationReport(violations, not c["rows"], len(shapes))
     pcs = F.broadcast(local_frame(spark, pc_rows, _PC_SCHEMA))
@@ -542,17 +540,8 @@ def validate(
     ):
         if extra is not None:
             violations = violations.unionByName(extra)
-    # the checkpoint makes the returned frame's plan opaque; keep the logical
-    # frame around so scripts/plan_audit.py can audit the REAL dataflow
-    # (global declared at function top — the sparql-only fast path sets it too)
-    _LAST_PLAN_FRAME = violations
     violations, c = materialize(violations)
     return ValidationReport(violations, not c["rows"], len(shapes))
-
-
-# pre-checkpoint violations frame of the most recent validate() call
-# (plan-audit introspection only — never used for results)
-_LAST_PLAN_FRAME: DataFrame | None = None
 
 
 def _pair_violations(

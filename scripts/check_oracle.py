@@ -52,11 +52,11 @@ def main():
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             failures.append(name)
-            print(f"FAIL {name}: spark error: {e}")
+            print(f"FAIL {name}: spark error: {e}", flush=True)
             continue
         sql = oracles.get(name)
         if sql is None:
-            print(f"SKIP {name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s)")
+            print(f"SKIP {name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s)", flush=True)
             continue
         try:
             rel = con.sql(sql)
@@ -65,7 +65,7 @@ def main():
             drows = rel.fetchall()
         except Exception as e:
             failures.append(name)
-            print(f"FAIL {name}: duckdb error: {e}")
+            print(f"FAIL {name}: duckdb error: {e}", flush=True)
             continue
         ok = True
         # dtype parity: the driver hash is dtype-sensitive (r4 HUGEINT reds),
@@ -80,13 +80,13 @@ def main():
             spark_ok = _DTYPE_MAP.get(dt)
             if spark_ok is None or (c in stypes and stypes[c] not in spark_ok):
                 ok = False
-                print(f"FAIL {name}: dtype {c}: duck={dt} spark={stypes.get(c)}")
+                print(f"FAIL {name}: dtype {c}: duck={dt} spark={stypes.get(c)}", flush=True)
         if sorted(scols) != sorted(dcols):
             ok = False
-            print(f"FAIL {name}: columns spark={scols} duck={dcols}")
+            print(f"FAIL {name}: columns spark={scols} duck={dcols}", flush=True)
         elif len(srows) != len(drows):
             ok = False
-            print(f"FAIL {name}: rowcount spark={len(srows)} duck={len(drows)}")
+            print(f"FAIL {name}: rowcount spark={len(srows)} duck={len(drows)}", flush=True)
         else:
             a = norm_rows(scols, srows)
             b = norm_rows(dcols, drows)
@@ -94,9 +94,9 @@ def main():
                 ok = False
                 diff_a = [r for r in a if r not in set(b)][:3]
                 diff_b = [r for r in b if r not in set(a)][:3]
-                print(f"FAIL {name}: values differ; spark-only={diff_a} duck-only={diff_b}")
+                print(f"FAIL {name}: values differ; spark-only={diff_a} duck-only={diff_b}", flush=True)
         if ok:
-            print(f"OK   {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
+            print(f"OK   {name}: {len(srows)} rows ({time.time()-t0:.1f}s)", flush=True)
         else:
             failures.append(name)
     print("\n==", "ALL OK" if not failures else f"FAILURES: {failures}")

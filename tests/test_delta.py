@@ -102,3 +102,41 @@ def test_delta_can_raise_consistency_error(spark):
     base = fuse(spark, triples_df(spark, base_rows))
     with pytest.raises(FusionError):
         fuse_delta(spark, base, triples_df(spark, delta_rows))
+
+
+def test_delta_closes_linear_rules_in_one_pass(spark, monkeypatch):
+    """The delta's linear closure (J1-J6) is one derive: fuse_delta checkpoints
+    the rep map, the canonicalized delta and the novelty anti-join — three
+    ``materialize`` calls — however deep the TBox chain (here knows → type P
+    and knownBy → type Q, R takes three rule levels)."""
+    import re_shacl_spark.pipeline as P
+
+    knows, known_by = X + "knows", X + "knownBy"
+    tbox = [
+        iri_triple(knows, vocab.DOMAIN, X + "P"),
+        iri_triple(knows, vocab.RANGE, X + "P"),
+        iri_triple(knows, vocab.INVERSEOF, known_by),
+        iri_triple(X + "P", vocab.SUBCLASS, X + "Q"),
+        iri_triple(X + "Q", vocab.SUBCLASS, X + "R"),
+    ]
+    base_rows = tbox + [
+        iri_triple(X + "a", knows, X + "b"),
+        iri_triple(X + "a2", vocab.SAMEAS, X + "a"),
+    ]
+    delta_rows = [iri_triple(X + "b", knows, X + "c"), iri_triple(X + "a2", knows, X + "d")]
+    full = fuse(spark, triples_df(spark, base_rows + delta_rows))
+    base = fuse(spark, triples_df(spark, base_rows))
+
+    calls = []
+    real = P.materialize
+
+    def counting(df, **flags):
+        calls.append(sorted(flags))
+        return real(df, **flags)
+
+    monkeypatch.setattr(P, "materialize", counting)
+    inc = fuse_delta(spark, base, triples_df(spark, delta_rows))
+    monkeypatch.undo()
+    assert _tset(inc.triples) == _tset(full.triples)
+    assert (X + "d", vocab.TYPE, X + "R", False) in _tset(inc.triples)
+    assert len(calls) <= 3, calls

@@ -418,27 +418,6 @@ def test_linear_preclosure_depth_four_chain(spark):
             ("b", vocab.TYPE, "C")} <= got
 
 
-def test_linear_preclosure_budget_exhaustion_falls_back(spark, monkeypatch):
-    """If the pre-closure iteration budget runs out before convergence, round
-    1 of the main fixpoint must derive (not skip via the preclosed fast
-    path): a depth-4 chain under a 2-iteration budget still closes fully."""
-    import re_shacl_spark.pipeline as P
-    from re_shacl_spark.model.triples import iri_triple
-
-    monkeypatch.setattr(P, "LINEAR_PRECLOSE_BUDGET", 2)
-    rows = [
-        iri_triple("p1", vocab.SUBPROP, "p2"),
-        iri_triple("p2", vocab.SUBPROP, "p3"),
-        iri_triple("p3", vocab.SUBPROP, "p4"),
-        iri_triple("p4", vocab.RANGE, "C"),
-        iri_triple("a", "p1", "b"),
-    ]
-    res = fuse(spark, triples_df(spark, rows))
-    got = {(r.s, r.p, r.o) for r in res.triples.collect()}
-    assert {("a", "p2", "b"), ("a", "p3", "b"), ("a", "p4", "b"),
-            ("b", vocab.TYPE, "C")} <= got
-
-
 def test_fuse_raises_when_round_cap_is_hit(spark, monkeypatch):
     """A fixpoint that runs out of rounds must raise, not return a graph with
     merges still pending.  ``f`` is functional and two f-chains hang off one
