@@ -42,62 +42,35 @@ def drop_degenerate_axioms(df: DataFrame) -> DataFrame:
 
 
 def _rewrite_col(df: DataFrame, col: str, rep_map: DataFrame, broadcast: bool) -> DataFrame:
-    m = rep_map.select(
-        F.col("member").alias(f"_{col}_member"), F.col("rep").alias(f"_{col}_rep")
-    )
+    member, rep = f"_{col}_member", f"_{col}_rep"
+    m = rep_map.select(F.col("member").alias(member), F.col("rep").alias(rep))
     if broadcast:
         m = F.broadcast(m)
-    out = df.join(m, df[col] == m[f"_{col}_member"], "left")
-    return out.withColumn(col, F.coalesce(f"_{col}_rep", col)).drop(
-        f"_{col}_member", f"_{col}_rep"
-    )
+    cond = df[col] == m[member]
+    if col == "o":
+        cond = cond & ~df["is_lit"]  # literal objects keep their lexical form
+    out = df.join(m, cond, "left")
+    return out.withColumn(col, F.coalesce(rep, col)).drop(member, rep)
 
 
-def canonicalize_triples(
-    triples: DataFrame,
-    rep_map: DataFrame,
-    broadcast: bool | None = None,
-    rewrite_predicates: bool = True,
-) -> DataFrame:
-    """Rewrite s, o (and p) through rep_map[member, rep]; dedup the collapsed set.
+def canonicalize_triples(triples: DataFrame, rep_map: DataFrame, broadcast: bool) -> DataFrame:
+    """Rewrite s, o and p through rep_map[member, rep]; dedup the collapsed set.
 
-    broadcast=None auto-selects by SIZE-GATE: broadcast iff the map has at most
-    ``BROADCAST_REP_MAP_MAX_ROWS`` rows (cheap limit+count probe — the map is
-    checkpointed by every caller on the fuse path), else leave the join to
-    Catalyst/AQE (sort-merge).  Literal objects are never rewritten.
+    ``broadcast`` ships the map to every task; callers on the fuse path decide
+    it from the checkpointed map's row count against
+    ``BROADCAST_REP_MAP_MAX_ROWS``.  Otherwise Catalyst/AQE plans the join
+    (sort-merge).  Literal objects are never rewritten.
     """
-    if broadcast is None:
-        n = rep_map.limit(BROADCAST_REP_MAP_MAX_ROWS + 1).count()
-        broadcast = n <= BROADCAST_REP_MAP_MAX_ROWS
-    out = _rewrite_col(triples, "s", rep_map, broadcast)
-    # object rewrite only for IRI objects — literals keep their lexical form
-    m = rep_map.select(F.col("member").alias("_o_member"), F.col("rep").alias("_o_rep"))
-    if broadcast:
-        m = F.broadcast(m)
-    out = out.join(m, (out["o"] == m["_o_member"]) & (~out["is_lit"]), "left")
-    out = out.withColumn("o", F.coalesce("_o_rep", "o")).drop("_o_member", "_o_rep")
-    if rewrite_predicates:
-        out = _rewrite_col(out, "p", rep_map, broadcast)
+    out = triples
+    for c in ("s", "o", "p"):
+        out = _rewrite_col(out, c, rep_map, broadcast)
     return drop_degenerate_axioms(out).dropDuplicates(["s", "p", "o"])
 
 
-def apply_static_map(
-    triples: DataFrame,
-    pairs: list[tuple[str, str]],
-    cols: tuple[str, ...] = ("s", "o", "p"),
-) -> DataFrame:
+def apply_static_map(triples: DataFrame, pairs: list[tuple[str, str]]) -> DataFrame:
     """Rewrite through a small driver-side map (class/property equivalence reps
     from the TBox) — always broadcast."""
     if not pairs:
         return triples
-    spark = triples.sparkSession
-    m = local_frame(spark, pairs, ["member", "rep"])
-    out = triples
-    for c in cols:
-        if c == "o":
-            mm = F.broadcast(m.select(F.col("member").alias("_om"), F.col("rep").alias("_or")))
-            out = out.join(mm, (out["o"] == mm["_om"]) & (~out["is_lit"]), "left")
-            out = out.withColumn("o", F.coalesce("_or", "o")).drop("_om", "_or")
-        else:
-            out = _rewrite_col(out, c, m, broadcast=True)
-    return drop_degenerate_axioms(out).dropDuplicates(["s", "p", "o"])
+    m = local_frame(triples.sparkSession, pairs, ["member", "rep"])
+    return canonicalize_triples(triples, m, broadcast=True)

@@ -36,11 +36,7 @@ def _mention_iri(alias_col, entity_col):
 def emit_triples(
     pages_with_mentions: DataFrame,
     entity_classes: dict[str, str] | None = None,
-    stream_safe: bool = False,
 ) -> DataFrame:
-    """stream_safe skips the materialization and the global dropDuplicates —
-    neither is legal on a streaming frame; per-page dedup still happens via
-    the array_distinct below, and the downstream batch fusion dedups globally."""
     # distinct (alias, entity) per page BEFORE exploding: a page mentioning one
     # entity 100 times contributes 100 array elements but only one triple set,
     # and array_distinct runs inside codegen — map-side reduction ahead of any
@@ -57,11 +53,10 @@ def emit_triples(
         F.col("mn.entity").alias("entity"),
     )
     m = m.withColumn("mention_iri", _mention_iri(F.col("alias"), F.col("entity")))
-    if not stream_safe:
-        # the four output branches below each re-scan m; materialize it once
-        # (small: one row per detected mention) instead of recomputing the
-        # explode+projection per branch
-        m, _ = materialize(m)
+    # the four output branches below each re-scan m; materialize it once
+    # (small: one row per detected mention) instead of recomputing the
+    # explode+projection per branch
+    m, _ = materialize(m)
     page_iri = F.concat(F.lit("http://kg.example.org/page/"), F.sha2(F.col("url"), 256))
 
     null_lit = F.lit(None).cast("struct<lex:string,dtype:string,lang:string>")
@@ -114,6 +109,4 @@ def emit_triples(
             )
         )
         out = out.unionByName(typed)
-    if stream_safe:
-        return out  # global dedup deferred to the batch fusion stage
     return out.dropDuplicates(["s", "p", "o"])

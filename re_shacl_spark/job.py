@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from re_shacl_spark import corpus
 from re_shacl_spark.checkpoint import CheckpointStore, input_fingerprint
-from re_shacl_spark.extract.emit import KG, MENTIONS_P, SURFACE_P, emit_triples
+from re_shacl_spark.extract.emit import MENTIONS_P, SURFACE_P, emit_triples
 from re_shacl_spark.extract.html import extract_text
 from re_shacl_spark.extract.mentions import detect_mentions
 from re_shacl_spark.model.triples import iri_triple, triples_df, vocab

@@ -5,8 +5,8 @@ The relational tables (customer/orders/nation/region/supplier) are mapped to a
 deterministic KG (the `rel_triples` construction below, mirrored 1:1 by
 REL_TRIPLES_CTE) so each reasoning operator — rules J1-J17, connected
 components J13, the consistency checks, the SHACL validation aggregates — has
-an exact ANSI-SQL oracle.  Text/dedup/similarity operators run on the
-documents/embeddings tables directly.
+an exact ANSI-SQL oracle.  The text-statistics operators (ops/textstats) run
+on the documents table directly.
 
 Determinism rules that make the value-hash comparison possible:
   - all hashes are md5-derived (hex→int) — reproducible in DuckDB;
@@ -20,7 +20,7 @@ canonicalize/cc, validate/engine) — this module only wires them to the data.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from re_shacl_spark.canonicalize.cc import connected_components
@@ -29,8 +29,6 @@ from re_shacl_spark.extract.html import extract_text
 from re_shacl_spark.extract.mentions import detect_mentions, mention_pairs
 from re_shacl_spark.extract.emit import emit_triples
 from re_shacl_spark.model.triples import O_LIT_TYPE, iri_triple, local_frame, triples_df, vocab
-from re_shacl_spark.ops import dedup as D
-from re_shacl_spark.ops import similarity as S
 from re_shacl_spark.ops import textstats as TS
 from re_shacl_spark.pipeline import fuse
 from re_shacl_spark.reasoning import checks as CK
@@ -501,52 +499,6 @@ SQL_A1 = f"""WITH {REL_TRIPLES_CTE.strip()}
 SELECT count(*)::BIGINT AS n_triples FROM (SELECT DISTINCT s, p, o FROM base) d"""
 
 
-def q_kg_degree_topk(spark, sf_dir):
-    """Hub-degree top-20: out/in/total degree per node with a deterministic
-    node-id tiebreak — the skew diagnosis an operator runs before picking
-    salting thresholds (canonicalize/cc.py) and AQE skew-join settings.
-    Two partial-agg shuffles (out by s, in by o resources) + a full outer
-    merge + one rank window over the already-aggregated node set."""
-    t = _spo(rel_triples(spark, sf_dir))
-    out_d = t.groupBy(F.col("s").alias("node")).agg(
-        F.count(F.lit(1)).alias("out_deg")
-    )
-    in_d = (
-        t.filter(~F.col("o").rlike("^[0-9]"))  # resources only in this KG
-        .groupBy(F.col("o").alias("node"))
-        .agg(F.count(F.lit(1)).alias("in_deg"))
-    )
-    deg = (
-        out_d.join(in_d, "node", "full_outer")
-        .select(
-            "node",
-            F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
-            F.coalesce("in_deg", F.lit(0)).alias("in_deg"),
-        )
-        .withColumn("total_deg", F.col("out_deg") + F.col("in_deg"))
-    )
-    # top-k via orderBy+limit (TakeOrdered — per-partition heaps, no global
-    # single-partition window over the node set); rank the 20 survivors only
-    top = deg.orderBy(F.desc("total_deg"), F.asc("node")).limit(20)
-    w = Window.orderBy(F.desc("total_deg"), F.asc("node"))
-    return top.withColumn("rank", F.row_number().over(w).cast("long"))
-
-
-SQL_KG_DEGREE = f"""WITH {REL_TRIPLES_CTE.strip()},
-d AS (SELECT DISTINCT s, p, o FROM base),
-outd AS (SELECT s AS node, count(*)::BIGINT out_deg FROM d GROUP BY s),
-ind AS (SELECT o AS node, count(*)::BIGINT in_deg FROM d
-        WHERE NOT regexp_matches(o, '^[0-9]') GROUP BY o),
-deg AS (
-  SELECT coalesce(outd.node, ind.node) AS node,
-         coalesce(out_deg, 0)::BIGINT AS out_deg,
-         coalesce(in_deg, 0)::BIGINT AS in_deg,
-         (coalesce(out_deg, 0) + coalesce(in_deg, 0))::BIGINT AS total_deg
-  FROM outd FULL OUTER JOIN ind ON outd.node = ind.node),
-r AS (SELECT *, row_number() OVER (ORDER BY total_deg DESC, node) AS rank FROM deg)
-SELECT node, out_deg, in_deg, total_deg, rank::BIGINT AS rank FROM r WHERE rank <= 20"""
-
-
 # ---------------------------------------------------------------------------
 # consistency checks (J14-J17)
 # ---------------------------------------------------------------------------
@@ -829,258 +781,10 @@ SELECT DISTINCT s, p, o FROM (
 
 
 # ---------------------------------------------------------------------------
-# dedup / text / similarity operators over documents + embeddings
+# text operators over documents
 # ---------------------------------------------------------------------------
 
-def _docs_with_dups(spark, sf_dir):
-    """documents + injected exact dups (+1M ids) and 80%-prefix near-dups
-    (+2M ids) so the dedup operators have deterministic positives."""
-    d = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    exact = d.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-    )
-    words = F.split(F.trim(F.coalesce(F.col("text"), F.lit(""))), TS.TOKEN_SPLIT)
-    prefix_len = F.greatest(F.floor(F.size(words) * 0.8).cast("int"), F.lit(1))
-    near = d.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 2000000).alias("doc_id"),
-        F.array_join(F.slice(words, 1, prefix_len), " ").alias("text"),
-    )
-    return d.unionByName(exact).unionByName(near)
-
-
-SQL_DOCS_CTE = f"""docs(doc_id, text) AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 10 = 0
-  UNION ALL SELECT doc_id + 2000000,
-    array_to_string(w[1:greatest(floor(len(w)*0.8)::int, 1)], ' ')
-  FROM (SELECT doc_id, string_split_regex(trim(coalesce(text,'')), '{SQL_WSP}') w FROM documents)
-  WHERE doc_id % 7 = 0
-)"""
-
 _SQL_NORM = f"regexp_replace(lower(trim(coalesce(text,''))), '{SQL_WSP}', ' ', 'g')"
-
-
-def q_dedup_exact(spark, sf_dir):
-    return D.exact_dedup(_docs_with_dups(spark, sf_dir))
-
-
-SQL_DEDUP_EXACT = f"""WITH {SQL_DOCS_CTE},
-h AS (SELECT doc_id, md5({_SQL_NORM}) fp FROM docs),
-g AS (SELECT fp, min(doc_id) keep_id, count(*) n FROM h GROUP BY fp)
-SELECT g.keep_id, h.doc_id AS dup_id FROM g JOIN h USING(fp) WHERE g.n > 1 AND h.doc_id != g.keep_id"""
-
-_SQL_H31 = "((('0x'||substring(md5(sh),1,15))::BIGINT) % 2147483647)"
-
-# shingle set (n=3 words) per doc, mirroring ops.dedup._shingles
-_SQL_SHINGLES = f"""norm AS (SELECT doc_id, {_SQL_NORM} t FROM docs),
-w AS (SELECT doc_id, string_split(t, ' ') w FROM norm),
-ix AS (SELECT doc_id, w, unnest(generate_series(0, greatest(len(w)-3, 0))) i FROM w),
-sh0 AS (SELECT doc_id, array_to_string(w[i+1:i+3], ' ') sh FROM ix),
-sh AS (SELECT DISTINCT doc_id, sh FROM sh0 WHERE len(sh) > 0),
-hh AS (SELECT doc_id, {_SQL_H31} h FROM sh)"""
-
-
-def _sql_minhash_aggs() -> str:
-    cols = []
-    for i, (a, b) in enumerate(D.MINHASH_PARAMS):
-        cols.append(f"coalesce(min((h*{a} + {b}) % 2147483647), 2147483647) AS mh{i}")
-    return ", ".join(cols)
-
-
-def q_dedup_minhash_signatures(spark, sf_dir):
-    return D.minhash_signatures(_docs_with_dups(spark, sf_dir))
-
-
-SQL_DEDUP_MINHASH = f"""WITH {SQL_DOCS_CTE},
-{_SQL_SHINGLES}
-SELECT d.doc_id, {_sql_minhash_aggs()}
-FROM docs d LEFT JOIN hh ON d.doc_id = hh.doc_id GROUP BY d.doc_id"""
-
-
-def q_dedup_minhash_lsh(spark, sf_dir):
-    return D.minhash_lsh_candidates(_docs_with_dups(spark, sf_dir))
-
-
-def _sql_lsh() -> str:
-    bands, rows_per = 4, 2
-    band_joins = []
-    for b in range(bands):
-        cols = [f"mh{b * rows_per + r}" for r in range(rows_per)]
-        cond = " AND ".join(f"a.{c} = b.{c}" for c in cols)
-        band_joins.append(
-            f"SELECT a.doc_id id_a, b.doc_id id_b FROM sig a JOIN sig b ON {cond} AND a.doc_id < b.doc_id"
-        )
-    cands = " UNION ".join(band_joins)
-    match = " + ".join(f"CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END" for i in range(8))
-    return f"""cands AS ({cands})
-SELECT c.id_a, c.id_b, ({match})::BIGINT AS matching_hashes
-FROM cands c JOIN sig a ON c.id_a = a.doc_id JOIN sig b ON c.id_b = b.doc_id"""
-
-
-SQL_DEDUP_LSH = f"""WITH {SQL_DOCS_CTE},
-{_SQL_SHINGLES},
-sig AS (SELECT d.doc_id, {_sql_minhash_aggs()}
-        FROM docs d LEFT JOIN hh ON d.doc_id = hh.doc_id GROUP BY d.doc_id),
-{_sql_lsh()}"""
-
-
-def q_dedup_simhash(spark, sf_dir):
-    return D.simhash(_docs_with_dups(spark, sf_dir))
-
-
-def _sql_simhash() -> str:
-    bit_sums = ", ".join(
-        f"sum(CASE WHEN (h >> {i}) % 2 = 1 THEN 1 ELSE -1 END) s{i}" for i in range(32)
-    )
-    sig = " + ".join(f"CASE WHEN s{i} > 0 THEN {2**i}::BIGINT ELSE 0::BIGINT END" for i in range(32))
-    return f"""norm AS (SELECT doc_id, {_SQL_NORM} t FROM docs),
-tok0 AS (SELECT doc_id, unnest(list_distinct(string_split(t, ' '))) w FROM norm),
-tok AS (SELECT doc_id, ('0x'||substring(md5(w),1,15))::BIGINT h FROM tok0 WHERE len(coalesce(w,'')) > 0),
-bits AS (SELECT doc_id, {bit_sums} FROM tok GROUP BY doc_id)
-SELECT doc_id, ({sig}) AS simhash FROM bits"""
-
-
-SQL_DEDUP_SIMHASH = f"WITH {SQL_DOCS_CTE},\n{_sql_simhash()}"
-
-
-def q_dedup_ngram_jaccard(spark, sf_dir):
-    # DEFAULT path (VERDICT r3 #4): exact Jaccard computed only over the
-    # banded-minhash candidate pairs — join rows bounded by LSH bucket
-    # collisions, so a hot shingle can never go quadratic.  The inverted-index
-    # path survives behind candidates='index' (pytest-covered).
-    return D.ngram_jaccard_pairs(_docs_with_dups(spark, sf_dir), threshold=0.6)
-
-
-# oracle mirrors the composition exactly: the SAME banded-minhash candidate
-# join as SQL_DEDUP_LSH (green since r1), then exact Jaccard on those pairs
-# via the inverted index (fine in DuckDB at oracle scale).
-SQL_DEDUP_JACCARD = f"""WITH {SQL_DOCS_CTE},
-{_SQL_SHINGLES},
-sig AS (SELECT d.doc_id, {_sql_minhash_aggs()}
-        FROM docs d LEFT JOIN hh ON d.doc_id = hh.doc_id GROUP BY d.doc_id),
-cands AS (
-  SELECT a.doc_id id_a, b.doc_id id_b FROM sig a JOIN sig b ON a.mh0 = b.mh0 AND a.mh1 = b.mh1 AND a.doc_id < b.doc_id
-  UNION
-  SELECT a.doc_id, b.doc_id FROM sig a JOIN sig b ON a.mh2 = b.mh2 AND a.mh3 = b.mh3 AND a.doc_id < b.doc_id
-  UNION
-  SELECT a.doc_id, b.doc_id FROM sig a JOIN sig b ON a.mh4 = b.mh4 AND a.mh5 = b.mh5 AND a.doc_id < b.doc_id
-  UNION
-  SELECT a.doc_id, b.doc_id FROM sig a JOIN sig b ON a.mh6 = b.mh6 AND a.mh7 = b.mh7 AND a.doc_id < b.doc_id
-),
-sizes AS (SELECT doc_id, count(*) sz FROM sh GROUP BY doc_id),
-common AS (
-  SELECT a.doc_id id_a, b.doc_id id_b, count(*) common
-  FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT c.id_a, c.id_b, round(cm.common / (sa.sz + sb.sz - cm.common), 6) AS jaccard
-FROM cands c
-JOIN common cm ON c.id_a = cm.id_a AND c.id_b = cm.id_b
-JOIN sizes sa ON c.id_a = sa.doc_id JOIN sizes sb ON c.id_b = sb.doc_id
-WHERE round(cm.common / (sa.sz + sb.sz - cm.common), 6) >= 0.6"""
-
-
-def q_sim_topk(spark, sf_dir):
-    emb = _read(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    out = S.brute_force_topk(emb, queries, k=5)
-    return out.select("q_id", "nn_id", "cosine", F.col("rank").cast("long").alias("rank"))
-
-
-SQL_SIM_TOPK = """WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-q AS (SELECT vec_id q_id, v qv FROM e WHERE vec_id < 8),
-s AS (SELECT q_id, e.vec_id nn_id, round(list_cosine_similarity(qv, v), 6) cosine
-      FROM q CROSS JOIN e WHERE e.vec_id != q.q_id),
-r AS (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, nn_id) rank FROM s)
-SELECT q_id, nn_id, cosine, rank FROM r WHERE rank <= 5"""
-
-
-def q_emb_near_dups(spark, sf_dir):
-    """Embedding near-dup pairs through the BUCKETED default path (VERDICT r2
-    next #4: no all-pairs join in the default route).  The committed embeddings
-    are near-random (max pairwise cosine ≈ 0.6), so the near-dup regime is
-    staged deterministically: every vec_id < 60 gets a perturbed copy at
-    id+100000 (x_i += 0.004·((7i + id) mod 11 − 5), cosine ≈ 0.995 to its
-    original).  The oracle mirrors the perturbation and checks the EXACT
-    all-pairs answer at τ=0.95 — so the LSH candidate generation must reach
-    full recall on every planted pair to stay green."""
-    emb = _read(spark, sf_dir, "embeddings")
-    v = F.col("embedding").cast("array<double>")
-    perturbed = F.transform(
-        v, lambda x, i: x + F.lit(0.004) * ((i * 7 + F.col("vec_id")) % 11 - 5)
-    )
-    # perturb BEFORE renaming the id: Spark 4 lateral column aliasing would
-    # otherwise bind the lambda's vec_id to the shifted alias (+100000),
-    # changing the mod-11 pattern (DuckDB has the same shadowing hazard)
-    copies = (
-        emb.filter(F.col("vec_id") < 60)
-        .select("vec_id", perturbed.alias("embedding"))
-        .select((F.col("vec_id") + 100000).alias("vec_id"), "embedding")
-    )
-    allv = emb.select("vec_id", v.alias("embedding")).unionByName(copies)
-    return D.embedding_near_dups(allv, threshold=0.95, dim=64)
-
-
-SQL_EMB_NEAR_DUPS = """WITH base AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-cp AS (SELECT vec_id + 100000 AS vec_id, pv AS v FROM (
-         SELECT vec_id,
-                list_transform(v, (x, i) -> x + 0.004 * (((i - 1) * 7 + vec_id) % 11 - 5)) pv
-         FROM base WHERE vec_id < 60)),
-e AS (SELECT * FROM base UNION ALL SELECT * FROM cp)
-SELECT a.vec_id id_a, b.vec_id id_b, round(list_cosine_similarity(a.v, b.v), 6) AS cosine
-FROM e a JOIN e b ON a.vec_id < b.vec_id
-WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.95"""
-
-
-def q_sim_lsh_topk(spark, sf_dir):
-    """LSH-bucketed ANN: the hyperplanes are deterministic integer arithmetic
-    (ops/similarity.py _hyperplane), so the oracle embeds the same 32 plane
-    vectors as literals and mirrors bucket assignment → candidate bucket join
-    → cosine top-k in SQL (bucket parity Spark↔DuckDB verified exact in
-    tests/test_ops.py::test_lsh_bucket_parity_duckdb)."""
-    emb = _read(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    out = S.lsh_topk(emb, queries, dim=64, k=5)
-    return out.select("q_id", "nn_id", "cosine", F.col("rank").cast("long").alias("rank"))
-
-
-def _sql_lsh_bucket(table: int, dim: int = 64, n_bits: int = 8) -> str:
-    """DuckDB expression for one table's sign-bucket over column ``v`` —
-    the literal-embedded twin of ops/similarity.lsh_signatures."""
-    terms = []
-    for b in range(n_bits):
-        plane = "[" + ",".join(repr(x) for x in S._hyperplane(table, b, dim)) + "]"
-        terms.append(f"CASE WHEN list_dot_product(v, {plane}) >= 0 THEN {2 ** b} ELSE 0 END")
-    return "(" + " + ".join(terms) + ")::BIGINT"
-
-
-def _sql_lsh_topk(n_tables: int = 4, k: int = 5) -> str:
-    sig = " UNION ALL ".join(
-        f"SELECT vec_id AS id, {t} AS tbl, {_sql_lsh_bucket(t)} AS bucket FROM e"
-        for t in range(n_tables)
-    )
-    qsig = " UNION ALL ".join(
-        f"SELECT q_id, {t} AS tbl, {_sql_lsh_bucket(t)} AS bucket FROM (SELECT q_id, qv AS v FROM q)"
-        for t in range(n_tables)
-    )
-    return f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-q AS (SELECT vec_id q_id, v qv FROM e WHERE vec_id < 8),
-sig AS ({sig}),
-qsig AS ({qsig}),
-cands AS (SELECT DISTINCT qs.q_id, s.id nn_id
-          FROM sig s JOIN qsig qs ON s.tbl = qs.tbl AND s.bucket = qs.bucket
-          WHERE s.id != qs.q_id),
-sc AS (SELECT c.q_id, c.nn_id, round(list_cosine_similarity(q.qv, e.v), 6) cosine
-       FROM cands c JOIN e ON e.vec_id = c.nn_id JOIN q ON q.q_id = c.q_id),
-r AS (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, nn_id) rank FROM sc)
-SELECT q_id, nn_id, cosine, rank FROM r WHERE rank <= {k}"""
-
-
-SQL_SIM_LSH_TOPK = _sql_lsh_topk()
 
 
 def q_text_tokens(spark, sf_dir):
@@ -1250,30 +954,6 @@ FROM ne"""
 
 
 # ---------------------------------------------------------------------------
-# relational aggregate (A4-style single-pass groupBy; integer-exact values)
-# ---------------------------------------------------------------------------
-
-def q_rel_q1(spark, sf_dir):
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
-            F.count(F.lit(1)).alias("count_order"),
-            (F.sum(F.col("l_quantity").cast("long")) / F.count(F.lit(1))).alias("avg_qty"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-SQL_REL_Q1 = """SELECT l_returnflag, l_linestatus,
-sum(l_quantity::BIGINT)::BIGINT AS sum_qty,
-count(*)::BIGINT AS count_order,
-sum(l_quantity::BIGINT) / count(*) AS avg_qty
-FROM lineitem GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus"""
-
-
-# ---------------------------------------------------------------------------
 # registry
 # ---------------------------------------------------------------------------
 
@@ -1311,19 +991,10 @@ QUERIES = {
     "kg_extract_text": q_kg_extract_text,
     "kg_mentions": q_kg_mentions,
     "kg_emit_triples": q_kg_emit_triples,
-    "dedup_exact": q_dedup_exact,
-    "dedup_minhash_signatures": q_dedup_minhash_signatures,
-    "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    "dedup_simhash": q_dedup_simhash,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "sim_topk_bruteforce": q_sim_topk,
-    "sim_lsh_topk": q_sim_lsh_topk,
-    "emb_near_dups": q_emb_near_dups,
     "text_tokens": q_text_tokens,
     "text_quality": q_text_quality,
     "text_langid": q_text_langid,
     "text_fingerprint": q_text_fingerprint,
-    "rel_q1": q_rel_q1,
 }
 
 ORACLES = {
@@ -1360,19 +1031,10 @@ ORACLES = {
     "kg_extract_text": SQL_KG_EXTRACT,
     "kg_mentions": SQL_KG_MENTIONS,
     "kg_emit_triples": SQL_KG_EMIT,
-    "dedup_exact": SQL_DEDUP_EXACT,
-    "dedup_minhash_signatures": SQL_DEDUP_MINHASH,
-    "dedup_minhash_lsh": SQL_DEDUP_LSH,
-    "dedup_simhash": SQL_DEDUP_SIMHASH,
-    "dedup_ngram_jaccard": SQL_DEDUP_JACCARD,
-    "sim_topk_bruteforce": SQL_SIM_TOPK,
-    "emb_near_dups": SQL_EMB_NEAR_DUPS,
     "text_tokens": SQL_TEXT_TOKENS,
     "text_quality": SQL_TEXT_QUALITY,
     "text_langid": SQL_TEXT_LANGID,
     "text_fingerprint": SQL_TEXT_FINGERPRINT,
-    "rel_q1": SQL_REL_Q1,
-    "sim_lsh_topk": SQL_SIM_LSH_TOPK,
 }
 
 # e2e pipeline config over the documents front door: every stage has a closed
@@ -1449,46 +1111,11 @@ SELECT DISTINCT s, p, o FROM fused WHERE s NOT IN (SELECT pid FROM viol)"""
 
 
 QUERIES["kg_pipeline_e2e"] = q_kg_pipeline_e2e
-QUERIES["kg_degree_topk"] = q_kg_degree_topk
-ORACLES["kg_degree_topk"] = SQL_KG_DEGREE
 ORACLES["kg_pipeline_e2e"] = SQL_KG_E2E
 QUERIES["text_repetition"] = q_text_repetition
 ORACLES["text_repetition"] = SQL_TEXT_REPETITION
 QUERIES["text_pii_scrub"] = q_text_pii_scrub
 ORACLES["text_pii_scrub"] = SQL_TEXT_PII
-
-
-def q_rel_events_hourly(spark, sf_dir):
-    """Hourly event rollup (the batch analog of a streaming windowed agg):
-    timestamp_ntz bucketing is timezone-independent; money summed in integer
-    cents so the aggregate is order-insensitive and oracle-exact."""
-    ev = _read(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
-    return (
-        ev.groupBy(
-            F.date_trunc("hour", "ts").cast("string").alias("hour"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(cents).alias("sum_cents"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-            F.count_distinct("user_id").alias("users"),
-        )
-    )
-
-
-SQL_REL_EVENTS = """SELECT date_trunc('hour', ts)::varchar AS hour, event_type,
-count(*)::BIGINT AS n_events,
-sum((round(value*100))::BIGINT)::BIGINT AS sum_cents,
-min(value) AS min_value, max(value) AS max_value,
-count(DISTINCT user_id)::BIGINT AS users
-FROM events GROUP BY 1, 2"""
-
-
-QUERIES["rel_events_hourly"] = q_rel_events_hourly
-ORACLES["rel_events_hourly"] = SQL_REL_EVENTS
 
 
 # ---------------------------------------------------------------------------
@@ -1829,51 +1456,6 @@ ORACLES["kg_fuse_full"] = SQL_KG_FUSE_FULL
 
 
 # ---------------------------------------------------------------------------
-# ANN recall gate (VERDICT r1 #10): recall@k of LSH vs brute force, both
-# computed in-plan — turns the rows-only sim_lsh_topk into a quantitative,
-# driver-visible check.  The query RAISES if recall < 0.9, so a silent recall
-# regression fails the driver run instead of passing rows-only.
-# ---------------------------------------------------------------------------
-
-def q_sim_lsh_recall(spark, sf_dir):
-    """Parameterization note: the synthetic embeddings are near-uniform, so
-    top-5 includes weakly-correlated neighbors no sublinear index separates —
-    hitting recall ≥0.9 here forces wide buckets (2 bits × 16 tables probes
-    most of the toy table).  On clustered production embeddings the same
-    machinery keeps recall with far fewer probes; the gate checks the
-    MECHANISM (signatures, bucket join, scoring) stays lossless."""
-    emb = _read(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 32).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    exact = S.brute_force_topk(emb, queries, k=5).select("q_id", "nn_id")
-    approx = S.lsh_topk(emb, queries, dim=64, k=5, n_tables=16, n_bits=2).select("q_id", "nn_id")
-    hit = exact.join(approx, ["q_id", "nn_id"], "left_semi")
-    out = (
-        exact.agg(F.count(F.lit(1)).alias("n_exact"))
-        .crossJoin(hit.agg(F.count(F.lit(1)).alias("n_hit")))
-        .select(
-            F.lit(32).alias("n_queries"),
-            F.lit(5).alias("k"),
-            (F.col("n_hit") / F.col("n_exact")).alias("recall"),
-        )
-    )
-    rows = out.collect()
-    if rows and rows[0]["recall"] is not None and rows[0]["recall"] < 0.9:
-        raise AssertionError(f"LSH recall regression: {rows[0]['recall']:.3f} < 0.9")
-    return out.select(
-        "n_queries", "k", (F.floor(F.col("recall") * 10) / 10 >= 0.9).alias("recall_ge_09")
-    )
-
-
-SQL_SIM_LSH_RECALL = "SELECT 32 AS n_queries, 5 AS k, true AS recall_ge_09"
-
-
-QUERIES["sim_lsh_recall"] = q_sim_lsh_recall
-ORACLES["sim_lsh_recall"] = SQL_SIM_LSH_RECALL
-
-
-# ---------------------------------------------------------------------------
 # S4 sink parity: serialize the KG to N-Triples (distributed writer) and read
 # it back through the distributed regex source — identity on (s,p,o)
 # ---------------------------------------------------------------------------
@@ -1897,121 +1479,9 @@ ORACLES["kg_serialize_roundtrip"] = SQL_KG_SERIALIZE
 
 
 # ---------------------------------------------------------------------------
-# near-dup cluster collapse: LSH pairs → connected components → min-id
-# survivor (ops/dedup.py::near_dup_clusters); the oracle closes the pair
-# graph with a recursive CTE and takes the component minimum
+# per-source quality calibration over the text_quality score: the exact
+# percentiles, and the percentile sketch gated against them
 # ---------------------------------------------------------------------------
-
-def _sql_lsh_cands() -> str:
-    """Just the LSH candidate-pair CTE (the band equi-join union), reusable
-    by the cluster oracle."""
-    bands, rows_per = 4, 2
-    band_joins = []
-    for b in range(bands):
-        cols = [f"mh{b * rows_per + r}" for r in range(rows_per)]
-        cond = " AND ".join(f"a.{c} = b.{c}" for c in cols)
-        band_joins.append(
-            f"SELECT a.doc_id id_a, b.doc_id id_b FROM sig a JOIN sig b ON {cond} AND a.doc_id < b.doc_id"
-        )
-    return "cands AS (" + " UNION ".join(band_joins) + ")"
-
-
-def q_dedup_clusters(spark, sf_dir):
-    return D.near_dup_clusters(_docs_with_dups(spark, sf_dir))
-
-
-SQL_DEDUP_CLUSTERS = f"""WITH RECURSIVE {SQL_DOCS_CTE},
-{_SQL_SHINGLES},
-sig AS (SELECT d.doc_id, {_sql_minhash_aggs()}
-        FROM docs d LEFT JOIN hh ON d.doc_id = hh.doc_id GROUP BY d.doc_id),
-{_sql_lsh_cands()},
-e(u, v) AS (
-  SELECT lpad(id_a::VARCHAR, 12, '0'), lpad(id_b::VARCHAR, 12, '0') FROM cands
-  UNION SELECT lpad(id_b::VARCHAR, 12, '0'), lpad(id_a::VARCHAR, 12, '0') FROM cands
-),
-reach(a, b) AS (
-  SELECT u, v FROM e
-  UNION SELECT r.a, e2.v FROM reach r JOIN e e2 ON r.b = e2.u
-)
-SELECT a::BIGINT AS doc_id, m::BIGINT AS keep_id FROM (
-  SELECT a, least(a, min(b)) AS m FROM reach GROUP BY a
-) t WHERE a <> m"""
-
-
-QUERIES["dedup_clusters"] = q_dedup_clusters
-ORACLES["dedup_clusters"] = SQL_DEDUP_CLUSTERS
-
-
-# ---------------------------------------------------------------------------
-# composite training-data pipeline: the filter a pretraining corpus build
-# actually runs — language gate ∧ quality gate ∧ exact-dedup survivor — as
-# ONE declarative plan (each stage is individually oracle-checked above; this
-# query checks their composition end-to-end)
-# ---------------------------------------------------------------------------
-
-def q_corpus_filter(spark, sf_dir):
-    d = _docs_with_dups(spark, sf_dir)
-    qual = TS.quality_score(d).select("doc_id", "quality")
-    lang = TS.lang_id(d).select("doc_id", "pred_lang")
-    toks = TS.tokens(d).select("doc_id", F.col("ws_tokens").cast("long").alias("ws_tokens"))
-    dup_ids = D.exact_dedup(d).select(F.col("dup_id").alias("doc_id"))
-    return (
-        d.select("doc_id")
-        .join(dup_ids, "doc_id", "left_anti")  # survivors only
-        .join(lang, "doc_id")
-        .join(qual, "doc_id")
-        .join(toks, "doc_id")
-        .filter((F.col("pred_lang") == "en") & (F.col("quality") >= 0.6))
-        .select("doc_id", "pred_lang", "quality", "ws_tokens")
-    )
-
-
-def _sql_corpus_filter() -> str:
-    langid_on_docs = _sql_langid().replace("FROM documents", "FROM docs")
-    quality_on_docs = SQL_TEXT_QUALITY.replace("FROM documents", "FROM docs")
-    return f"""WITH {SQL_DOCS_CTE},
-lid AS ({langid_on_docs}),
-qual AS ({quality_on_docs}),
-h AS (SELECT doc_id, md5({_SQL_NORM}) fp FROM docs),
-dups AS (
-  SELECT h.doc_id FROM h JOIN (SELECT fp, min(doc_id) k, count(*) n FROM h GROUP BY fp) g
-  USING (fp) WHERE g.n > 1 AND h.doc_id != g.k
-),
-tok AS (SELECT doc_id, len(string_split_regex(trim(coalesce(text,'')), '{SQL_WSP}'))::BIGINT ws_tokens FROM docs)
-SELECT d.doc_id, lid.pred_lang, qual.quality, tok.ws_tokens
-FROM docs d
-JOIN lid USING (doc_id) JOIN qual USING (doc_id) JOIN tok USING (doc_id)
-WHERE d.doc_id NOT IN (SELECT doc_id FROM dups)
-  AND lid.pred_lang = 'en' AND qual.quality >= 0.6"""
-
-
-QUERIES["corpus_filter"] = q_corpus_filter
-ORACLES["corpus_filter"] = _sql_corpus_filter()
-
-
-def q_corpus_decontaminate(spark, sf_dir):
-    """Train/test decontamination: distinct 3-gram overlap of each corpus doc
-    with a benchmark slice (every 50th doc) — broadcast benchmark-shingle
-    probe, map-side semi-join, the corpus never shuffles
-    (ops/dedup.contamination_hits)."""
-    d = _read(spark, sf_dir, "documents")
-    bench = d.filter(F.col("doc_id") % 50 == 0)
-    rest = d.filter(F.col("doc_id") % 50 != 0)
-    return D.contamination_hits(rest, bench, n=3)
-
-
-SQL_CORPUS_DECON = f"""WITH docs AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 50 != 0),
-{_SQL_SHINGLES},
-bdocs AS (SELECT doc_id, text FROM documents WHERE doc_id % 50 = 0),
-bnorm AS (SELECT doc_id, {_SQL_NORM} t FROM bdocs),
-bw AS (SELECT doc_id, string_split(t, ' ') w FROM bnorm),
-bix AS (SELECT doc_id, w, unnest(generate_series(0, greatest(len(w)-3, 0))) i FROM bw),
-bsh AS (SELECT DISTINCT array_to_string(w[i+1:i+3], ' ') sh FROM bix
-        WHERE len(array_to_string(w[i+1:i+3], ' ')) > 0)
-SELECT sh.doc_id, count(*)::BIGINT AS n_hits
-FROM sh JOIN bsh USING (sh)
-GROUP BY sh.doc_id"""
 
 
 def q_corpus_quality_calibration(spark, sf_dir):
@@ -2044,7 +1514,7 @@ GROUP BY d.source"""
 
 def q_corpus_quality_sketch_gate(spark, sf_dir):
     """The SKETCH path for percentile calibration, quantitatively gated
-    against the exact path (same pattern as sim_lsh_recall): at 100 TB the
+    against the exact path: at 100 TB the
     exact per-key sort is replaced by `percentile_approx` — Spark's
     Greenwald-Khanna-style mergeable summary, bounded memory per group,
     partial-aggregable — and this query asserts per-source |approx − exact|
@@ -2084,167 +1554,10 @@ FROM qual q JOIN documents d USING (doc_id)
 GROUP BY d.source"""
 
 
-QUERIES["corpus_decontaminate"] = q_corpus_decontaminate
 QUERIES["corpus_quality_calibration"] = q_corpus_quality_calibration
 QUERIES["corpus_quality_sketch_gate"] = q_corpus_quality_sketch_gate
-ORACLES["corpus_decontaminate"] = SQL_CORPUS_DECON
 ORACLES["corpus_quality_calibration"] = SQL_CORPUS_QUALITY_CAL
 ORACLES["corpus_quality_sketch_gate"] = SQL_CORPUS_SKETCH_GATE
-
-
-# ---------------------------------------------------------------------------
-# IVF-style ANN (the second scale path besides LSH): one coarse cell per data
-# vector, queries probe their 4 nearest of 16 deterministic centroids —
-# fully oracle-mirrorable because the centroids are data rows, not synthetic
-# hyperplanes (ops/similarity.py::ivf_topk)
-# ---------------------------------------------------------------------------
-
-def q_sim_ivf_topk(spark, sf_dir):
-    emb = _read(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    out = S.ivf_topk(emb, queries, n_centroids=16, n_probe=4, k=5)
-    return out.select("q_id", "nn_id", "cosine", F.col("rank").cast("long").alias("rank"))
-
-
-SQL_SIM_IVF = """WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-cent AS (SELECT vec_id cid, v cv FROM e WHERE vec_id < 16),
-ass AS (
-  SELECT e.vec_id, c.cid,
-    row_number() OVER (PARTITION BY e.vec_id
-      ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC, c.cid) rn
-  FROM e CROSS JOIN cent c
-),
-cells AS (SELECT vec_id, cid AS cell FROM ass WHERE rn = 1),
-q AS (SELECT vec_id q_id, v qv FROM e WHERE vec_id < 8),
-qass AS (
-  SELECT q.q_id, c.cid,
-    row_number() OVER (PARTITION BY q.q_id
-      ORDER BY round(list_cosine_similarity(q.qv, c.cv), 6) DESC, c.cid) rn
-  FROM q CROSS JOIN cent c
-),
-qcells AS (SELECT q_id, cid AS cell FROM qass WHERE rn <= 4),
-cands AS (SELECT DISTINCT qc.q_id, ce.vec_id nn_id
-          FROM qcells qc JOIN cells ce USING (cell) WHERE ce.vec_id != qc.q_id),
-s AS (SELECT cands.q_id, cands.nn_id, round(list_cosine_similarity(q.qv, e.v), 6) cosine
-      FROM cands JOIN e ON e.vec_id = cands.nn_id JOIN q ON q.q_id = cands.q_id),
-r AS (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, nn_id) rank FROM s)
-SELECT q_id, nn_id, cosine, rank FROM r WHERE rank <= 5"""
-
-
-QUERIES["sim_ivf_topk"] = q_sim_ivf_topk
-ORACLES["sim_ivf_topk"] = SQL_SIM_IVF
-
-
-def q_sim_ivf_kmeans(spark, sf_dir):
-    """IVF top-k with the TRAINED coarse quantizer (ops/similarity.py
-    kmeans_centroids): two distributed Lloyd iterations, md5-seeded,
-    decimal-exact centroid updates — bit-deterministic at any parallelism, so
-    the oracle below can unroll the same two iterations in SQL."""
-    emb = _read(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    cents = S.kmeans_centroids(emb, k=8, iters=2)
-    out = S.ivf_topk(emb, queries, n_probe=4, k=5, centroids=cents)
-    return out.select("q_id", "nn_id", "cosine", F.col("rank").cast("long").alias("rank"))
-
-
-def _sql_kmeans_iter(prev: str, cur: str) -> str:
-    """One unrolled Lloyd iteration: assign to nearest {prev} centroid
-    (cosine rounded to 6, ties to smaller cid — same as the Spark side), then
-    exact decimal component sums -> double means, empty cells keep {prev}."""
-    return f"""
-a_{cur} AS (
-  SELECT vec_id, v, cid AS cell FROM (
-    SELECT e.vec_id, e.v, c.cid,
-      row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC, c.cid) rn
-    FROM e CROSS JOIN {prev} c) WHERE rn = 1),
-u_{cur} AS (
-  SELECT cell, i AS pos, (SUM(v[i+1]::DECIMAL(38,15))::DOUBLE) / COUNT(*) AS m
-  FROM a_{cur}, range(64) t(i) GROUP BY cell, i),
-{cur} AS (
-  SELECT p.cid, coalesce(u.cv, p.cv) AS cv
-  FROM {prev} p LEFT JOIN
-    (SELECT cell, list(m ORDER BY pos) AS cv FROM u_{cur} GROUP BY cell) u
-    ON u.cell = p.cid)"""
-
-
-SQL_SIM_IVF_KMEANS = (
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-c0 AS (SELECT row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) - 1 AS cid, v AS cv
-       FROM e QUALIFY cid < 8),"""
-    + _sql_kmeans_iter("c0", "c1").lstrip("\n")
-    + ","
-    + _sql_kmeans_iter("c1", "c2")
-    + """,
-cells AS (SELECT vec_id, cid AS cell FROM (
-    SELECT e.vec_id, c.cid,
-      row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC, c.cid) rn
-    FROM e CROSS JOIN c2 c) WHERE rn = 1),
-q AS (SELECT vec_id q_id, v qv FROM e WHERE vec_id < 8),
-qcells AS (SELECT q_id, cid AS cell FROM (
-    SELECT q.q_id, c.cid,
-      row_number() OVER (PARTITION BY q.q_id
-        ORDER BY round(list_cosine_similarity(q.qv, c.cv), 6) DESC, c.cid) rn
-    FROM q CROSS JOIN c2 c) WHERE rn <= 4),
-cands AS (SELECT DISTINCT qc.q_id, ce.vec_id nn_id
-          FROM qcells qc JOIN cells ce USING (cell) WHERE ce.vec_id != qc.q_id),
-s AS (SELECT cands.q_id, cands.nn_id, round(list_cosine_similarity(q.qv, e.v), 6) cosine
-      FROM cands JOIN e ON e.vec_id = cands.nn_id JOIN q ON q.q_id = cands.q_id),
-r AS (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, nn_id) rank FROM s)
-SELECT q_id, nn_id, cosine, rank FROM r WHERE rank <= 5"""
-)
-
-
-QUERIES["sim_ivf_kmeans"] = q_sim_ivf_kmeans
-ORACLES["sim_ivf_kmeans"] = SQL_SIM_IVF_KMEANS
-
-
-def q_emb_quantize(spark, sf_dir):
-    """Symmetric int8 embedding quantization (ops/similarity.py
-    quantize_embeddings) — the 4x storage shrink for the lake's largest
-    column.  floor(x/scale + 0.5) instead of round() because IEEE floor is
-    bit-identical across engines; the oracle recomputes the same math over
-    DuckDB list lambdas.  Integer q_sum/q_min/q_max are exact hash material;
-    scale and max reconstruction error are rounded 6dp as the ulp guard.
-    Zero shuffles — everything rides the scan stage."""
-    emb = _read(spark, sf_dir, "embeddings")
-    q = S.quantize_embeddings(emb)
-    return q.select(
-        F.col("id").alias("vec_id"),
-        F.col("n_dims").cast("long").alias("n_dims"),
-        F.round("scale", 6).alias("scale_r6"),
-        F.array_min("q").cast("long").alias("q_min"),
-        F.array_max("q").cast("long").alias("q_max"),
-        F.aggregate("q", F.lit(0).cast("long"), lambda acc, x: acc + x).alias("q_sum"),
-        F.round("max_abs_err", 6).alias("max_err_r6"),
-    )
-
-
-SQL_EMB_QUANTIZE = """WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-m AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) maxabs FROM e),
-s AS (SELECT vec_id, v, CASE WHEN maxabs > 0 THEN maxabs / 127 ELSE 1.0 END scale FROM m),
-q AS (SELECT vec_id, v, scale,
-        list_transform(v, x -> greatest(-127.0, least(127.0, floor(x / scale + 0.5)))) qv
-      FROM s)
-SELECT vec_id,
-  len(v)::BIGINT AS n_dims,
-  round(scale, 6) AS scale_r6,
-  list_min(qv)::BIGINT AS q_min,
-  list_max(qv)::BIGINT AS q_max,
-  list_sum(qv)::BIGINT AS q_sum,
-  round(list_max(list_transform(v, x ->
-    abs(x - greatest(-127.0, least(127.0, floor(x / scale + 0.5))) * scale))), 6)
-    AS max_err_r6
-FROM q"""
-
-
-QUERIES["emb_quantize"] = q_emb_quantize
-ORACLES["emb_quantize"] = SQL_EMB_QUANTIZE
 
 
 # ---------------------------------------------------------------------------
@@ -2522,7 +1835,6 @@ QUERIES["bgp_text_path"] = q_bgp_text_path
 ORACLES["bgp_text_path"] = SQL_BGP_TEXT_PATH
 
 
-
 # ---------------------------------------------------------------------------
 # SHACL round-3 constraint kinds: logical combinators (sh:and / sh:xone),
 # qualified value-shape counts, numeric range facets, language facets,
@@ -2738,7 +2050,6 @@ ORACLES["v_pairs"] = SQL_V_PAIRS
 ORACLES["v_closed"] = SQL_V_CLOSED
 
 
-
 def q_v_target_of(spark, sf_dir):
     """sh:targetSubjectsOf / sh:targetObjectsOf (engine.py::_targets predicate
     maps): customers who placed >25 orders violate maxCount on the
@@ -2794,7 +2105,6 @@ QUERIES["v_target_of"] = q_v_target_of
 QUERIES["v_inverse_path"] = q_v_inverse_path
 ORACLES["v_target_of"] = SQL_V_TARGET_OF
 ORACLES["v_inverse_path"] = SQL_V_INVERSE
-
 
 
 # ---------------------------------------------------------------------------
@@ -3652,7 +2962,6 @@ QUERIES["kg_link_disambiguate"] = q_kg_link_disambiguate
 ORACLES["kg_link_disambiguate"] = SQL_KG_LINK_DISAMBIGUATE
 
 
-
 # ---------------------------------------------------------------------------
 # incremental fusion (pipeline.fuse_delta): the crawl-increment entry point —
 # close a base KG, then extend it with held-back ABox rows; the final state
@@ -3674,7 +2983,6 @@ def q_kg_fuse_delta(spark, sf_dir):
 
 QUERIES["kg_fuse_delta"] = q_kg_fuse_delta
 ORACLES["kg_fuse_delta"] = SQL_KG_FUSE
-
 
 
 # ---------------------------------------------------------------------------
@@ -3705,7 +3013,6 @@ def q_stream_fuse(spark, sf_dir):
 
 QUERIES["stream_fuse"] = q_stream_fuse
 ORACLES["stream_fuse"] = SQL_KG_FUSE
-
 
 
 # ---------------------------------------------------------------------------

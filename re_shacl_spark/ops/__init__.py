@@ -1,9 +1,6 @@
-"""Large-scale training-data pipeline operators over the documents/embeddings
-tables: deduplication (exact / MinHash-LSH / SimHash / n-gram Jaccard /
-embedding-cosine), similarity search (brute-force + LSH- and IVF-bucketed
-ANN, int8 quantization), text analysis (language-ID, quality, tokens,
-fingerprints, bigram-LM fluency, PII scrubbing) and train/test
-decontamination.
+"""Text statistics over the documents table (ops/textstats): tokens, quality,
+language-ID, fingerprints, repetition, PII scrubbing, bigram-LM fluency and
+TF-IDF top terms.
 
 All hot paths are built-in pyspark.sql.functions (JVM, whole-stage codegen);
 hashes are md5-derived so DuckDB oracles can reproduce them bit-for-bit.

@@ -1,11 +1,10 @@
 """Streaming KG maintenance: per-micro-batch incremental fusion.
 
-incremental.py streams the stateless FRONT END (extract → mentions → emit) and
-historically left the fusion fixpoint batch-only ("it is a whole-graph
-fixpoint").  pipeline.fuse_delta removes that constraint: each micro-batch of
-triples extends the closed KG via the delta-fed fixpoint, so the fused,
-canonicalized, validated graph is maintained continuously instead of being
-re-closed from scratch per ingest.
+A file stream of triple batches drives the delta pair: each micro-batch
+extends the closed KG through pipeline.fuse_delta (the delta-fed fixpoint)
+and, given shapes, its violations report through validate_delta, so the
+fused, canonicalized, validated graph is maintained continuously instead of
+being re-closed from scratch per ingest.
 
 Exactly-once without distributed transactions:
 

@@ -50,7 +50,6 @@ DOC_ONLY_QUERIES = [
     "text_fingerprint",
     "text_repetition",
     "text_lm_score",
-    "dedup_exact",
     "kg_extract_text",
     "kg_mentions",
 ]

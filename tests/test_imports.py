@@ -1,9 +1,11 @@
-"""Every ``re_shacl_spark`` import in the repository's Python files resolves.
+"""Every ``re_shacl_spark`` import in the repository's Python files resolves,
+and cutting code leaves no orphans behind.
 
 Function-local imports are included: the registry (``kgbench``) and the
 scripts import most of their modules inside the function that needs them, so
 an import of a deleted module would otherwise fail only when that one row or
-branch runs."""
+branch runs.  The orphan checks catch the other half of a cut: a helper,
+constant or import that only the deleted code used."""
 
 from __future__ import annotations
 
@@ -64,3 +66,67 @@ def test_every_package_import_resolves():
                 broken.append(f"{where}: {mod}" + (f".{name}" if name else ""))
     assert seen > 100, seen  # the walk found the imports at all
     assert not broken, "unresolvable imports:\n" + "\n".join(broken)
+
+
+# top-level package names that nothing loads yet, each with the reason it stays
+UNUSED_ALLOWED = {
+    # the merge-then-reason entry point rewrites the shapes through the rep
+    # maps with it (ROADMAP direction 1, Known defects)
+    "rewrite_shapes",
+}
+
+PACKAGE_MODULES = sorted((ROOT / "re_shacl_spark").rglob("*.py"))
+
+
+def _loaded_names(tree: ast.AST) -> set[str]:
+    """Names read anywhere in tree: bare names and attribute accesses."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.add(node.attr)
+    return out
+
+
+def _top_level_definitions(tree: ast.Module):
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            yield node.lineno, node.name
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store):
+                        yield node.lineno, n.id
+
+
+def test_every_package_definition_is_loaded_somewhere():
+    loaded = set()
+    for path in SOURCES:
+        loaded |= _loaded_names(ast.parse(path.read_text(), str(path)))
+    orphans = []
+    for path in PACKAGE_MODULES:
+        for lineno, name in _top_level_definitions(ast.parse(path.read_text(), str(path))):
+            if name.startswith("__") or name in loaded or name in UNUSED_ALLOWED:
+                continue
+            orphans.append(f"{path.relative_to(ROOT)}:{lineno}: {name}")
+    assert not orphans, "defined but never loaded:\n" + "\n".join(orphans)
+
+
+def test_every_module_import_is_used():
+    unused = []
+    for path in PACKAGE_MODULES:
+        if path.name == "__init__.py":
+            continue  # package re-exports
+        tree = ast.parse(path.read_text(), str(path))
+        loaded = _loaded_names(tree)
+        for node in tree.body:
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                for a in node.names:
+                    bound = a.asname or a.name.split(".")[0]
+                    if bound not in loaded:
+                        unused.append(f"{path.relative_to(ROOT)}:{node.lineno}: {bound}")
+    assert not unused, "imported but unused:\n" + "\n".join(unused)
