@@ -29,14 +29,22 @@ XSD_STRING = vocab.XSD + "string"
 
 def _mention_iri(alias_col, entity_col):
     # mention node id is deterministic in (alias): multiple aliases of the same
-    # entity yield distinct mention nodes whose sameAs edges meet at the entity
-    return F.concat(F.lit("http://kg.example.org/mention/"), F.regexp_replace(F.lower(alias_col), r"[^a-z0-9]+", "_"))
+    # entity yield distinct mention nodes whose sameAs edges meet at the entity.
+    # The alias is already lowercase (see emit_triples); Spark's lower() would
+    # run ICU case mapping per row for nothing.
+    return F.concat(F.lit("http://kg.example.org/mention/"), F.regexp_replace(alias_col, r"[^a-z0-9]+", "_"))
 
 
 def emit_triples(
     pages_with_mentions: DataFrame,
     entity_classes: dict[str, str] | None = None,
 ) -> DataFrame:
+    """Triples of ``pages_with_mentions`` (``url`` plus a ``mentions`` array of
+    ``alias``/``entity`` structs, as ``detect_mentions`` emits them).
+
+    Precondition: every ``alias`` is already lowercase — ``detect_mentions``
+    lowercases aliases in Python — since the mention IRI is built from the
+    alias as is."""
     # distinct (alias, entity) per page BEFORE exploding: a page mentioning one
     # entity 100 times contributes 100 array elements but only one triple set,
     # and array_distinct runs inside codegen — map-side reduction ahead of any

@@ -55,9 +55,14 @@ from re_shacl_spark.model.triples import (
     triples_df,
     vocab,
 )
-from re_shacl_spark.reasoning.checks import run_all_checks
+from re_shacl_spark.reasoning.checks import CHECKS, live_checks, run_all_checks
 from re_shacl_spark.reasoning.rules import RuleEngine, Scope
-from re_shacl_spark.reasoning.tbox import TBoxIndex, build_tbox_index, extract_tbox
+from re_shacl_spark.reasoning.tbox import (
+    TBoxIndex,
+    build_tbox_index,
+    extract_tbox,
+    is_tbox_row,
+)
 from re_shacl_spark.session import ensure_fixpoint_confs
 
 MAX_ROUNDS = 25  # reference caps at 25_000 (closure_engine.py:39); past it fuse raises
@@ -97,7 +102,6 @@ def fuse(
     assume_distinct: bool = False,
     profile: str = "owl",
     base: FusionResult | None = None,
-    _tbox_rows: list[tuple[str, str, str]] | None = None,
 ) -> FusionResult:
     """Scoped reasoning + sameAs canonicalization to fixpoint.
 
@@ -114,28 +118,29 @@ def fuse(
     rows — except after a merge renames a TBox term, which rebuilds the rule
     maps and re-closes the whole graph once.
 
-    With ``base`` set (use :func:`fuse_delta`), ``triples`` is an ABox-only
-    DELTA extending an already-closed fusion result: incoming ids are routed
-    through the established rep map, the delta is linearly closed in one
-    derive (the closed base stays closed), and the transitive/sameAs stages
-    run only when the delta can actually trigger them — the crawl-increment
-    case (no new sameAs, no transitive edges) costs three checkpoints (rep
-    map, canonicalized delta, novelty anti-join), never a base re-closure.
+    With ``base`` set (use :func:`fuse_delta`), ``triples`` is a DELTA
+    extending an already-closed, consistent fusion result, whose TBox is
+    ``base.tbox`` (never re-extracted from ``base.triples``): incoming ids
+    are routed through the base's class/property equivalence reps and its
+    rep map, the delta is linearly closed in one derive (the closed base
+    stays closed), and the transitive/sameAs stages and each consistency
+    check run only when the delta can trigger them.  The crawl-increment
+    case (no new sameAs, no transitive edges, no consistency axioms) costs
+    three checkpoints (rep map, canonicalized delta, novelty anti-join) and
+    no TBox or check scan.  A delta whose TBox rows change what the index
+    entails falls back to full re-fusion: a new axiom entails over the
+    entire base, which no delta-fed pass can deliver.
     """
     ensure_fixpoint_confs(spark)
     rdfs = profile == "rdfs"
     first_full = base is None
-    src_triples = triples if first_full else base.triples
-    # fuse_delta already scanned the base for its fallback check — reuse
-    tbox_rows = _tbox_rows if _tbox_rows is not None else extract_tbox(src_triples)
-    tbox = build_tbox_index(tbox_rows, rdfs_mode=rdfs)
+    tbox = build_tbox_index(extract_tbox(triples), rdfs_mode=rdfs) if first_full else base.tbox
     engine = RuleEngine(spark, tbox, scope or Scope.unrestricted(), profile=profile)
 
     # TBox-level equivalence collapse first (class + property reps) — the
     # reference's merge_target_classes / merge_same_property stages.  The
-    # incremental path skips it: the base is closed and the delta carries no
-    # TBox rows (fuse_delta falls back to full fusion otherwise).
-    static_pairs = (tbox.class_rep_pairs() + tbox.prop_rep_pairs()) if first_full else []
+    # base is already collapsed; a delta goes through the same reps below.
+    static_pairs = tbox.class_rep_pairs() + tbox.prop_rep_pairs()
     cur = apply_static_map(triples, static_pairs) if first_full else None
 
     # materialize the TBox transitive closures as triples (scm-sco / scm-spo) so
@@ -168,6 +173,11 @@ def fuse(
     n_rep_map = 0
     rounds = 0
     trans_props = sorted(tbox.transitive)
+    # sameAs / differentFrom rows added to the graph, and whether any round
+    # merged: over a consistent base, the sameAs ∧ differentFrom check can
+    # fire only if one of them is nonzero
+    n_eq_added = 0
+    merged_any = False
 
     def is_trans() -> Column:
         return F.col("p").isin(trans_props) if trans_props else F.lit(False)
@@ -185,10 +195,11 @@ def fuse(
         lin, _ = materialize(linear_novelty(cur))
         cur = cur.unionByName(lin)
     else:
-        # incremental init: canonicalize the delta into the base's id space,
+        # incremental init: canonicalize the delta into the base's id space
+        # (class/property reps first, like the full path, then node reps),
         # close it under the linear rules (broadcast joins over delta-sized
         # frames), then pay the full-graph novelty anti-join exactly once
-        d = dedup_triples(triples)
+        d = apply_static_map(triples, static_pairs) if static_pairs else dedup_triples(triples)
         rep_map = base.rep_map
         if rep_map is not None:
             rep_map, rc = materialize(rep_map)
@@ -197,24 +208,37 @@ def fuse(
                 d = canonicalize_triples(
                     d, rep_map, broadcast=n_rep_map <= BROADCAST_REP_MAP_MAX_ROWS
                 )
-        d, _ = materialize(d)
+        # the checkpoint's job counts the delta's TBox rows: they are
+        # collected only when there are some
+        d, dc = materialize(d, tbox=is_tbox_row())
+        if dc["tbox"] and build_tbox_index(tbox.rows + extract_tbox(d), rdfs_mode=rdfs) != tbox:
+            # the base's collapsed equivalence axioms are gone from its
+            # triples; the index still holds them
+            eq_rows = triples_df(spark, [iri_triple(*r) for r in tbox.equivalence_rows()])
+            return fuse(
+                spark, base.triples.unionByName(eq_rows).unionByName(d), scope=scope,
+                emit_sameas_provenance=emit_sameas_provenance,
+                assume_distinct=assume_distinct, profile=profile,
+            )
         # the delta's own sameAs / transitive-predicate rows seed round 1's
         # triggers; the checkpoint's job counts them
         delta, delta_counts = materialize(
             d.unionByName(linear_novelty(d)).join(base.triples, ["s", "p", "o"], "left_anti"),
             sameas=F.col("p") == vocab.SAMEAS,
+            different=F.col("p") == vocab.DIFFERENT,
             trans=is_trans(),
         )
         cur = base.triples.unionByName(delta)
         if not delta_counts["rows"]:
-            # nothing new: the base is already the fixpoint
+            # nothing new: the base is already the fixpoint, and consistent
             return FusionResult(
                 triples=base.triples,
                 rep_map=base.rep_map
                 if base.rep_map is not None
                 else local_frame(spark, [], ["member", "rep"]),
-                tbox=tbox, rounds=0, check_counts=run_all_checks(base.triples, tbox),
+                tbox=tbox, rounds=0, check_counts=dict.fromkeys(CHECKS, 0),
             )
+        n_eq_added = delta_counts["sameas"] + delta_counts["different"]
     merged_last = False
     # purely-linear rule sets: a merge cannot enable anything new (linear rules
     # commute with the rewrite; only J7/J9/J10 join on columns a merge can
@@ -224,7 +248,7 @@ def fuse(
     # every IRI the TBox index was built from: if a sameAs merge renames one of
     # these, the driver-closed maps go stale and must be rebuilt from the
     # rewritten graph (classes/properties CAN be sameAs-merged — eq-rep-p)
-    tbox_terms = sorted({t for row in tbox_rows for t in row})
+    tbox_terms = sorted({t for row in tbox.rows for t in row})
     # the linear closure emitted a new trans-pred edge last round; the
     # incremental path seeds it from the delta itself (a delta trans-edge must
     # trigger closure)
@@ -237,7 +261,7 @@ def fuse(
         # property).  The closure's own output rows do NOT re-trigger —
         # closure(closure(G)) = closure(G).
         has_new = False
-        nc = {"rows": 0, "sameas": 0, "trans": 0}
+        nc = {"rows": 0, "sameas": 0, "different": 0, "trans": 0}
         if trans_props and ((first_full and rounds == 1) or merged_last or lin_made_trans):
             closure = engine.rule_transitive(cur)
             # the closure's linear consequences, tagged: a trans-pred edge
@@ -250,8 +274,10 @@ def fuse(
             new, nc = materialize(
                 derived.dropDuplicates(["s", "p", "o"]).join(cur, ["s", "p", "o"], "left_anti"),
                 sameas=F.col("p") == vocab.SAMEAS,
+                different=F.col("p") == vocab.DIFFERENT,
                 trans=is_trans() & F.col("_lin"),
             )
+            n_eq_added += nc["sameas"] + nc["different"]
             has_new = nc["rows"] > 0
             if has_new:
                 progressed = True
@@ -305,21 +331,28 @@ def fuse(
                 n_rep_map = rc["rows"]
                 progressed = True
                 merged_last = merge_retriggers()
+                merged_any = True
                 if tbox_hits:
                     # member side: a TBox term was renamed → closed maps are
                     # stale.  rep side: a non-TBox IRI merged INTO a TBox
                     # term, landing rows on it that the old maps never saw.
                     # Either way σ no longer commutes with the old rules:
                     # rebuild the maps from the rewritten graph and re-close
-                    # the whole graph under them.
-                    tbox_rows = extract_tbox(cur)
-                    tbox = build_tbox_index(tbox_rows, rdfs_mode=rdfs)
+                    # the whole graph under them.  The collapsed equivalence
+                    # axioms left the graph with the initial pass; their rows
+                    # keep the reps in the rebuilt index (a later delta still
+                    # names the collapsed terms).
+                    old_static = set(static_pairs)
+                    tbox = build_tbox_index(
+                        extract_tbox(cur) + tbox.equivalence_rows(), rdfs_mode=rdfs
+                    )
                     engine = RuleEngine(spark, tbox, scope or Scope.unrestricted(), profile=profile)
                     trans_props = sorted(tbox.transitive)
-                    tbox_terms = sorted({t for row in tbox_rows for t in row})
+                    tbox_terms = sorted({t for row in tbox.rows for t in row})
                     # merges may have created fresh class/property
                     # equivalences — collapse them like the initial pass
-                    static = tbox.class_rep_pairs() + tbox.prop_rep_pairs()
+                    static_pairs = tbox.class_rep_pairs() + tbox.prop_rep_pairs()
+                    static = [pr for pr in static_pairs if pr not in old_static]
                     if static:
                         cur, _ = materialize(apply_static_map(cur, static))
                     lin, _ = materialize(linear_novelty(cur))
@@ -347,7 +380,10 @@ def fuse(
         merged = dedup_triples(sameas_slice.unionByName(prov))
         cur = rest.unionByName(merged)
 
-    counts = run_all_checks(cur, tbox)
+    # a consistent base stays consistent unless an added row completes a
+    # violation: only the checks that such a row can complete run
+    live = live_checks(tbox, same_different=first_full or n_eq_added > 0 or merged_any)
+    counts = run_all_checks(cur, tbox, checks=live) if live else dict.fromkeys(CHECKS, 0)
     return FusionResult(triples=cur, rep_map=rep_map, tbox=tbox, rounds=rounds, check_counts=counts)
 
 
@@ -361,17 +397,17 @@ def fuse_delta(
     triples — the crawl-increment entry point (daily WARC deltas at 10^12-page
     scale must not re-close the whole KG).
 
-    ABox-only deltas run the delta-fed fixpoint (see :func:`fuse` with
-    ``base``): linear rules join only the delta against broadcast TBox maps;
-    the transitive closure and sameAs machinery run only when the delta can
-    trigger them.  A delta carrying NEW TBox axioms falls back to full
-    re-fusion — a new axiom entails over the entire base, which no delta-fed
-    pass can deliver.  Equivalence ``fuse_delta(fuse(A), B) == fuse(A ∪ B)``
-    is pytest-asserted and oracle-gated (``kg_fuse_delta``)."""
-    base_tbox_rows = extract_tbox(base.triples)
-    if set(extract_tbox(delta)) - set(base_tbox_rows):
-        return fuse(spark, base.triples.unionByName(dedup_triples(delta)), **kwargs)
-    return fuse(spark, delta, base=base, _tbox_rows=base_tbox_rows, **kwargs)
+    The base's TBox is ``base.tbox``, the index its fusion returned; the
+    base's triples are not scanned for it.  ABox-only deltas run the
+    delta-fed fixpoint (see :func:`fuse` with ``base``): linear rules join
+    only the delta against broadcast TBox maps; the transitive closure,
+    sameAs machinery and consistency checks run only when the delta can
+    trigger them.  A delta whose TBox rows change what ``base.tbox`` entails
+    falls back to full re-fusion — a new axiom entails over the entire base,
+    which no delta-fed pass can deliver.  Equivalence
+    ``fuse_delta(fuse(A), B) == fuse(A ∪ B)`` is pytest-asserted and
+    oracle-gated (``kg_fuse_delta``)."""
+    return fuse(spark, delta, base=base, **kwargs)
 
 
 # ---------------------------------------------------------------------------

@@ -103,24 +103,50 @@ def check_same_different(triples: DataFrame) -> DataFrame:
     return same.join(diff, ["a", "b"], "left_semi")
 
 
-def run_all_checks(triples: DataFrame, tbox: TBoxIndex, raise_on_violation: bool = True) -> dict[str, int]:
-    """Evaluate every consistency frame; nonempty ⇒ FusionError (reference F5
-    short-circuit, re_shacl.py:83-86 etc.).  Returns per-check violation counts."""
-    frames = {
-        "irreflexive": check_irreflexive(triples, tbox),
-        "asymmetric": check_asymmetric(triples, tbox),
-        "disjoint_classes": check_disjoint_classes(triples, tbox),
-        "disjoint_properties": check_disjoint_properties(triples, tbox),
-        "same_different": check_same_different(triples),
+CHECKS = ("irreflexive", "asymmetric", "disjoint_classes", "disjoint_properties", "same_different")
+
+
+def live_checks(tbox: TBoxIndex, same_different: bool) -> list[str]:
+    """The checks that can fire: each axiom check needs its axiom kind in the
+    TBox.  ``same_different`` says whether sameAs ∧ differentFrom can: always
+    on a full graph, but over a consistent graph only if a sameAs or
+    differentFrom row was added or a merge renamed nodes."""
+    can_fire = {
+        "irreflexive": tbox.irreflexive,
+        "asymmetric": tbox.asymmetric,
+        "disjoint_classes": tbox.disjoint_classes or tbox.complement,
+        "disjoint_properties": tbox.disjoint_props,
+        "same_different": same_different,
     }
-    # ONE action for all five checks: tag each frame and count by tag (five
-    # separate .count() jobs would each pay a full scheduling round-trip)
+    return [k for k in CHECKS if can_fire[k]]
+
+
+def run_all_checks(
+    triples: DataFrame,
+    tbox: TBoxIndex,
+    raise_on_violation: bool = True,
+    checks: tuple[str, ...] | list[str] = CHECKS,
+) -> dict[str, int]:
+    """Evaluate the consistency frames named by ``checks``; nonempty ⇒
+    FusionError (reference F5 short-circuit, re_shacl.py:83-86 etc.).
+    Returns per-check violation counts, 0 for a check not run."""
+    build = {
+        "irreflexive": lambda: check_irreflexive(triples, tbox),
+        "asymmetric": lambda: check_asymmetric(triples, tbox),
+        "disjoint_classes": lambda: check_disjoint_classes(triples, tbox),
+        "disjoint_properties": lambda: check_disjoint_properties(triples, tbox),
+        "same_different": lambda: check_same_different(triples),
+    }
+    counts = dict.fromkeys(CHECKS, 0)
+    # ONE action for all checks: tag each frame and count by tag (separate
+    # .count() jobs would each pay a full scheduling round-trip)
     tagged = None
-    for k, v in frames.items():
-        part = v.select(F.lit(k).alias("_check"))
+    for k in checks:
+        part = build[k]().select(F.lit(k).alias("_check"))
         tagged = part if tagged is None else tagged.unionByName(part)
-    got = {r["_check"]: r["n"] for r in tagged.groupBy("_check").agg(F.count(F.lit(1)).alias("n")).collect()}
-    counts = {k: int(got.get(k, 0)) for k in frames}
+    if tagged is not None:
+        for r in tagged.groupBy("_check").agg(F.count(F.lit(1)).alias("n")).collect():
+            counts[r["_check"]] = int(r["n"])
     if raise_on_violation:
         bad = {k: n for k, n in counts.items() if n}
         if bad:

@@ -15,7 +15,7 @@ from __future__ import annotations
 from collections import defaultdict
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from re_shacl_spark.model.triples import (
@@ -101,6 +101,11 @@ class TBoxIndex:
     disjoint_classes: set[tuple[str, str]] = field(default_factory=set)  # sorted pairs
     disjoint_props: set[tuple[str, str]] = field(default_factory=set)
     complement: set[tuple[str, str]] = field(default_factory=set)
+    # the axiom rows the index was built from: an incremental fuse keeps the
+    # base's index instead of re-extracting it from the fused graph, where
+    # the collapsed equivalence axioms no longer appear; not part of equality,
+    # which compares what the rows entail
+    rows: list[tuple[str, str, str]] = field(default_factory=list, compare=False)
 
     # -- canonicalization helpers ---------------------------------------------
     def c(self, cls: str) -> str:
@@ -132,6 +137,14 @@ class TBoxIndex:
     def prop_rep_pairs(self) -> list[tuple[str, str]]:
         return [(p, r) for p, r in self.prop_rep.items() if p != r]
 
+    def equivalence_rows(self) -> list[tuple[str, str, str]]:
+        """One (member, owl:equivalentClass|equivalentProperty, rep) row per
+        collapsed term: rebuilding from these restores ``class_rep`` and
+        ``prop_rep`` after the graph itself lost the collapsed axioms."""
+        return [(c, vocab.EQCLASS, r) for c, r in self.class_rep_pairs()] + [
+            (p, vocab.EQPROP, r) for p, r in self.prop_rep_pairs()
+        ]
+
     def subclasses_of(self, cls: str) -> set[str]:
         """cls + everything below it (for sh:targetClass expansion)."""
         cls = self.c(cls)
@@ -142,15 +155,20 @@ class TBoxIndex:
         return down
 
 
+def is_tbox_row() -> Column:
+    """The rows ``extract_tbox`` collects: axioms and property characteristics."""
+    return ~F.col("is_lit") & (
+        F.col("p").isin(TBOX_PREDICATES)
+        | ((F.col("p") == vocab.TYPE) & F.col("o").isin(CHARACTERISTIC_CLASSES))
+    )
+
+
 def extract_tbox(triples: DataFrame) -> list[tuple[str, str, str]]:
     """Pull the (small) ontology subset out of the triple store.
 
     One predicate-selective scan — Catalyst pushes the isin() filter to parquet.
     """
-    cond = F.col("p").isin(TBOX_PREDICATES) | (
-        (F.col("p") == vocab.TYPE) & F.col("o").isin(CHARACTERISTIC_CLASSES)
-    )
-    rows = triples.filter(cond & ~F.col("is_lit")).select("s", "p", "o").distinct().collect()
+    rows = triples.filter(is_tbox_row()).select("s", "p", "o").distinct().collect()
     return [(r.s, r.p, r.o) for r in rows]
 
 
@@ -175,7 +193,7 @@ def build_tbox_index(
     subclass/subproperty edges instead of representative merging, and the OWL
     characteristic/inverse/disjoint axioms are left uninterpreted.
     """
-    idx = TBoxIndex()
+    idx = TBoxIndex(rows=list(tbox_triples))
 
     cls_uf, prop_uf = _UnionFind(), _UnionFind()
     sub_cls: dict[str, set[str]] = defaultdict(set)
@@ -185,7 +203,7 @@ def build_tbox_index(
     raw_inv: list[tuple[str, str]] = []
     char: dict[str, set[str]] = defaultdict(set)  # characteristic-class -> props
 
-    for s, p, o in tbox_triples:
+    for s, p, o in idx.rows:
         if p == vocab.EQCLASS:
             if rdfs_mode or eq_as_edges:  # scm-eqc as mutual subclass, no merging
                 if s != o:

@@ -9,7 +9,9 @@ local[] testing:
   - Arrow enabled for every pandas/Arrow UDF path,
   - broadcast threshold left at default; TBox/alias maps are local_frame
     LocalRelations, which carry their size, so joins against them plan as
-    broadcasts (the explicit hints cover maps past LOCAL_FRAME_MAX_CELLS).
+    broadcasts (the explicit hints cover maps past LOCAL_FRAME_MAX_CELLS),
+  - a generated-class cache larger than the engine's working set (see
+    CODEGEN_CACHE_ENTRIES).
 """
 
 from __future__ import annotations
@@ -17,6 +19,19 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Generated classes (whole-stage and expression code) are compiled by Janino,
+# ~10 ms each, and kept per JVM in an LRU of spark.sql.codegen.cache.maxEntries
+# entries, default 100.  One pass compiles more distinct classes than that:
+# with Spark's defaults on a 4-core VM (perfbench, seed 1), a crawl_increment
+# fold compiles 150-180 and a crawl_build run ~180, and every repeat of the
+# fold, e.g. each streaming micro-batch, recompiles about as many.  Under
+# AQE a stage's codegen id follows the order in which other stages finish,
+# and the id is part of the class name, so the same stage code also compiled
+# again under each new id; spark.sql.codegen.useIdInClassName=false leaves
+# it out of the name.  With both settings, three crawl_increment passes
+# compiled 141, 0 and 2 classes, and two crawl_build passes 160 and 5.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def _default_driver_memory() -> str:
@@ -66,6 +81,8 @@ def get_spark(
         # in Spark 4.1; constraint propagation buys nothing for checkpoint-
         # truncated iterative plans, so turn it off
         .config("spark.sql.constraintPropagation.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -28,6 +28,7 @@ dependency-free equivalent.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,8 +36,10 @@ from pyspark.sql import functions as F
 
 from re_shacl_spark.model.triples import TRIPLE_SCHEMA
 from re_shacl_spark.pipeline import FusionResult, fuse, fuse_delta
+from re_shacl_spark.reasoning.tbox import build_tbox_index
 
 _POINTER = "CURRENT"
+_TBOX = "tbox.json"  # the state's TBox axiom rows, next to triples/rep_map
 
 
 def _read_pointer(state_dir: str) -> str | None:
@@ -56,15 +59,18 @@ def _write_pointer(state_dir: str, version: str) -> None:
 
 
 def load_state(spark: SparkSession, state_dir: str) -> FusionResult | None:
-    """Current fused state (triples + rep map), or None before the first batch."""
+    """Current fused state (triples, rep map and TBox), or None before the
+    first batch."""
     v = _read_pointer(state_dir)
     if v is None:
         return None
     base = os.path.join(state_dir, v)
+    with open(os.path.join(base, _TBOX)) as f:
+        tbox_rows = [tuple(r) for r in json.load(f)]
     return FusionResult(
         triples=spark.read.parquet(os.path.join(base, "triples")),
         rep_map=spark.read.parquet(os.path.join(base, "rep_map")),
-        tbox=None,  # re-derived by fuse_delta from the triples
+        tbox=build_tbox_index(tbox_rows),
         rounds=0,
         check_counts={},
     )
@@ -108,11 +114,12 @@ def _maintained_report(spark, base, res, prev_violations, shapes):
 
 def _prune_versions(state_dir: str, retain: int = 2) -> None:
     """Drop superseded state versions (ADVICE r3): every batch writes a full
-    new v{batch_id} (triples + rep_map [+ violations]) and swaps the pointer,
-    so without pruning disk grows O(batches × |graph|) under continuous
-    maintenance.  Only the pointer target and the in-flight write are ever
-    needed for the idempotent-replay contract; ``retain`` keeps the newest 2
-    (current + immediate predecessor) as a cheap operator-error cushion."""
+    new v{batch_id} (triples + rep_map + TBox rows [+ violations]) and swaps
+    the pointer, so without pruning disk grows O(batches × |graph|) under
+    continuous maintenance.  Only the pointer target and the in-flight write
+    are ever needed for the idempotent-replay contract; ``retain`` keeps the
+    newest 2 (current + immediate predecessor) as a cheap operator-error
+    cushion."""
     import re
     import shutil
 
@@ -148,6 +155,8 @@ def _apply_batch(
     vdir = os.path.join(state_dir, f"v{batch_id}")
     res.triples.write.mode("overwrite").parquet(os.path.join(vdir, "triples"))
     res.rep_map.write.mode("overwrite").parquet(os.path.join(vdir, "rep_map"))
+    with open(os.path.join(vdir, _TBOX), "w") as f:
+        json.dump(res.tbox.rows, f)
     if shapes:
         report = _maintained_report(spark, base, res, prev_violations, shapes)
         report.write.mode("overwrite").parquet(os.path.join(vdir, "violations"))

@@ -47,9 +47,12 @@ from re_shacl_spark.validate.shapes import NodeShape
 
 
 def _affected_foci(
-    full: DataFrame, delta: DataFrame, shapes: list[NodeShape]
+    full: DataFrame, delta: DataFrame, shapes: list[NodeShape], typed: bool = True
 ) -> DataFrame:
-    """Nodes whose validation verdict the additive delta can change."""
+    """Nodes whose validation verdict the additive delta can change.
+
+    ``typed`` says whether the delta holds rdf:type rows; without them the
+    sh:class hop below finds nothing, so it is left out."""
     base_nodes = (
         delta.select(F.col("s").alias("node"))
         .unionByName(
@@ -66,15 +69,14 @@ def _affected_foci(
     # the widening up the reference DAG.  (Other value-facets — datatype,
     # nodeKind, pattern, range — are value-intrinsic: an additive delta can
     # only change them by adding an edge, which marks the focus directly.)
-    _RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
     class_paths = [
         (pc.path, pc.inverse)
         for ns in shapes
         for pc in _all_pcs(ns)
         if isinstance(pc.path, str) and any(x.clazz for x in _sub_pcs(pc))
     ]
-    if class_paths:
-        typed = delta.filter(F.col("p") == _RDF_TYPE).select(
+    if class_paths and typed:
+        typed_nodes = delta.filter(F.col("p") == vocab.TYPE).select(
             F.col("s").alias("node")
         ).distinct()
         hops = []
@@ -83,7 +85,7 @@ def _affected_foci(
             src, dst = ("o", "s") if not inverse else ("s", "o")
             hops.append(
                 e.join(
-                    typed.withColumnRenamed("node", src), src, "left_semi"
+                    typed_nodes.withColumnRenamed("node", src), src, "left_semi"
                 ).select(F.col(dst).alias("node"))
             )
         widened = hops[0]
@@ -153,9 +155,14 @@ def validate_delta(
     the whole graph (e.g. an anti-join of the fused graph against the base),
     so it is materialized once, at entry: every use below — the subClassOf
     count, the affected-foci seeds and every branch of the re-validation —
-    reads the checkpoint, and that one job also counts the subClassOf rows.
+    reads the checkpoint, and that one job also counts the subClassOf and
+    rdf:type rows.  With no rdf:type row in the delta, the sh:class hop of
+    the affected-foci derivation (a scan of every class-constrained path's
+    edges) is skipped: no value's types changed.
     """
-    delta, delta_counts = materialize(delta, subclass=F.col("p") == vocab.SUBCLASS)
+    delta, delta_counts = materialize(
+        delta, subclass=F.col("p") == vocab.SUBCLASS, typed=F.col("p") == vocab.TYPE
+    )
     full = base.unionByName(delta)
     # sh:sparql constraints and SHACL-AF sh:target queries join arbitrary
     # patterns — a delta edge can flip a solution (or pull in a focus) that
@@ -175,7 +182,7 @@ def validate_delta(
     tbox_delta = delta_counts["subclass"] > 0
     if complex_paths or tbox_delta:
         return validate(spark, full, shapes, tbox, with_details=with_details)
-    affected = _affected_foci(full, delta, shapes)
+    affected = _affected_foci(full, delta, shapes, typed=delta_counts["typed"] > 0)
     fresh = validate(
         spark, full, shapes, tbox, with_details=with_details, _focus_subset=affected
     )

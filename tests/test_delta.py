@@ -140,3 +140,210 @@ def test_delta_closes_linear_rules_in_one_pass(spark, monkeypatch):
     assert _tset(inc.triples) == _tset(full.triples)
     assert (X + "d", vocab.TYPE, X + "R", False) in _tset(inc.triples)
     assert len(calls) <= 3, calls
+
+
+def test_delta_routes_through_base_equivalence_reps(spark):
+    """A delta naming a non-representative class or property lands on the
+    base's equivalence reps, as full fusion over the union does."""
+    base_rows = [
+        iri_triple(X + "B", vocab.EQCLASS, X + "C"),
+        iri_triple(X + "q", vocab.EQPROP, X + "r"),
+        iri_triple(X + "a", vocab.TYPE, X + "B"),
+    ]
+    delta_rows = [iri_triple(X + "b", vocab.TYPE, X + "C"), iri_triple(X + "a", X + "r", X + "b")]
+    _, inc = _assert_incremental_matches_full(spark, base_rows, delta_rows)
+    got = _tset(inc.triples)
+    assert (X + "b", vocab.TYPE, X + "B", False) in got
+    assert (X + "a", X + "q", X + "b", False) in got
+
+
+def test_delta_keeps_equivalence_reps_across_tbox_rename(spark):
+    """A sameAs merge that renames a TBox term rebuilds the index from the
+    rewritten graph, which no longer holds the collapsed equivalence axioms;
+    the rebuilt index keeps their reps, so a later delta still lands on them."""
+    base_rows = [
+        iri_triple(X + "B", vocab.EQCLASS, X + "C"),
+        iri_triple(X + "A", vocab.SAMEAS, X + "B"),
+        iri_triple(X + "a", vocab.TYPE, X + "B"),
+    ]
+    base, inc = _assert_incremental_matches_full(
+        spark, base_rows, [iri_triple(X + "b", vocab.TYPE, X + "C")]
+    )
+    assert base.tbox.class_rep.get(X + "C") == X + "B"
+    assert (X + "b", vocab.TYPE, X + "A", False) in _tset(inc.triples)
+
+
+def test_delta_falls_back_keeping_equivalence_reps(spark):
+    """The new-axiom fallback re-fuses the base with its collapsed
+    equivalence axioms, so the delta's rows still land on their reps."""
+    base_rows = [
+        iri_triple(X + "B", vocab.EQCLASS, X + "C"),
+        iri_triple(X + "a", X + "p", X + "z"),
+    ]
+    delta_rows = [
+        iri_triple(X + "p", vocab.DOMAIN, X + "C"),
+        iri_triple(X + "b", vocab.TYPE, X + "C"),
+    ]
+    _, inc = _assert_incremental_matches_full(spark, base_rows, delta_rows)
+    got = _tset(inc.triples)
+    assert {(X + "a", vocab.TYPE, X + "B", False), (X + "b", vocab.TYPE, X + "B", False)} <= got
+    assert inc.tbox.class_rep.get(X + "C") == X + "B"
+
+
+def test_delta_entailed_tbox_rows_stay_incremental(spark, monkeypatch):
+    """Delta TBox rows the base's index already entails (a closure row, a
+    collapsed equivalence) take the incremental path, not the fallback."""
+    import re_shacl_spark.pipeline as P
+
+    base_rows = [
+        iri_triple(X + "P", vocab.SUBCLASS, X + "Q"),
+        iri_triple(X + "Q", vocab.SUBCLASS, X + "R"),
+        iri_triple(X + "B", vocab.EQCLASS, X + "C"),
+        iri_triple(X + "a", vocab.TYPE, X + "P"),
+    ]
+    delta_rows = [
+        iri_triple(X + "P", vocab.SUBCLASS, X + "R"),
+        iri_triple(X + "C", vocab.EQCLASS, X + "B"),
+        iri_triple(X + "b", vocab.TYPE, X + "C"),
+    ]
+    full = fuse(spark, triples_df(spark, base_rows + delta_rows))
+    base = fuse(spark, triples_df(spark, base_rows))
+    fused = []
+    real = P.fuse
+
+    def recording(spark, triples, *args, **kwargs):
+        fused.append(kwargs.get("base") is not None)
+        return real(spark, triples, *args, **kwargs)
+
+    monkeypatch.setattr(P, "fuse", recording)
+    inc = fuse_delta(spark, base, triples_df(spark, delta_rows))
+    monkeypatch.undo()
+    assert fused == [True]
+    assert _tset(inc.triples) == _tset(full.triples)
+
+
+def test_delta_abox_only_reads_tbox_from_base(spark, monkeypatch):
+    """An ABox-only delta takes the base's TBox from ``base.tbox``: no
+    ``extract_tbox`` call, so the base's triples are never scanned for it."""
+    import re_shacl_spark.pipeline as P
+
+    base_rows = [
+        iri_triple(X + "knows", vocab.DOMAIN, X + "P"),
+        iri_triple(X + "a", X + "knows", X + "b"),
+    ]
+    delta_rows = [iri_triple(X + "b", X + "knows", X + "c")]
+    full = fuse(spark, triples_df(spark, base_rows + delta_rows))
+    base = fuse(spark, triples_df(spark, base_rows))
+    scanned = []
+    real = P.extract_tbox
+
+    def recording(triples):
+        scanned.append(triples)
+        return real(triples)
+
+    monkeypatch.setattr(P, "extract_tbox", recording)
+    inc = fuse_delta(spark, base, triples_df(spark, delta_rows))
+    monkeypatch.undo()
+    assert scanned == []
+    assert _tset(inc.triples) == _tset(full.triples)
+
+
+def test_delta_checks_gated_on_what_the_delta_adds(spark, monkeypatch):
+    """Over a consistent base, ``run_all_checks`` runs only when an added row
+    can complete a violation: never without consistency axioms or added
+    sameAs/differentFrom rows; with a differentFrom or sameAs row, the
+    sameAs ∧ differentFrom check alone."""
+    import re_shacl_spark.pipeline as P
+
+    base_rows = [
+        iri_triple(X + "knows", vocab.DOMAIN, X + "P"),
+        iri_triple(X + "P", vocab.SUBCLASS, X + "Q"),
+        iri_triple(X + "a", X + "knows", X + "b"),
+    ]
+    base = fuse(spark, triples_df(spark, base_rows))
+    calls = []
+    real = P.run_all_checks
+
+    def recording(triples, tbox, *args, **kwargs):
+        calls.append(kwargs.get("checks"))
+        return real(triples, tbox, *args, **kwargs)
+
+    monkeypatch.setattr(P, "run_all_checks", recording)
+    fuse_delta(spark, base, triples_df(spark, [iri_triple(X + "b", X + "knows", X + "c")]))
+    assert calls == []
+    for p in (vocab.DIFFERENT, vocab.SAMEAS):
+        fuse_delta(spark, base, triples_df(spark, [iri_triple(X + "b", p, X + "c")]))
+    assert calls == [["same_different"], ["same_different"]]
+
+
+_FOLD_COMPILES = r"""
+from re_shacl_spark.model.triples import iri_triple, lit_triple, triples_df, vocab
+from re_shacl_spark.pipeline import fuse, fuse_delta
+from re_shacl_spark.session import get_spark
+from re_shacl_spark.validate.engine import validate
+from re_shacl_spark.validate.incremental import validate_delta
+from re_shacl_spark.validate.shapes import NodeShape, PropertyConstraint
+
+X = "http://x.org/"
+knows, known_by, age, name = X + "knows", X + "knownBy", X + "age", X + "name"
+P, Q, R = X + "P", X + "Q", X + "R"
+n = 40
+node = [X + f"n{i}" for i in range(n)]
+edges = [iri_triple(node[i], knows, node[(i * 7 + 3) % n]) for i in range(n)]
+base_rows = [
+    iri_triple(knows, vocab.DOMAIN, P),
+    iri_triple(knows, vocab.RANGE, P),
+    iri_triple(knows, vocab.INVERSEOF, known_by),
+    iri_triple(P, vocab.SUBCLASS, Q),
+    iri_triple(Q, vocab.SUBCLASS, R),
+    iri_triple(X + "alias0", vocab.SAMEAS, node[0]),
+] + [e for i, e in enumerate(edges) if i % 8] + [
+    lit_triple(node[i], age, str(i), vocab.XSD + "integer") for i in range(0, n, 5)
+] + [lit_triple(node[i], name, f"N{i}") for i in range(0, n, 3)]
+shapes = [NodeShape(X + "S", target_classes=[R], properties=[
+    PropertyConstraint(path=knows, min_count=1, max_count=1, clazz=P),
+    PropertyConstraint(path=known_by, min_count=1),
+    PropertyConstraint(path=age, max_count=1, datatype=vocab.XSD + "integer"),
+    PropertyConstraint(path=name, min_length=2, pattern="^N"),
+])]
+spark = get_spark("fold-compiles", master="local[2]")
+base = fuse(spark, triples_df(spark, base_rows))
+base_report = validate(spark, base.triples, shapes)
+delta = triples_df(spark, [e for i, e in enumerate(edges) if not i % 8])
+metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+
+def compiled_by_fold():
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    inc = fuse_delta(spark, base, delta)
+    closed = inc.triples.join(base.triples, ["s", "p", "o"], "left_anti")
+    validate_delta(spark, base.triples, closed, shapes, base_report).violations.count()
+    return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+
+print("FOLDS", compiled_by_fold(), compiled_by_fold())
+spark.stop()
+"""
+
+
+def test_repeated_fold_reuses_compiled_classes():
+    """A second identical fuse_delta + validate_delta fold compiles under a
+    tenth of the generated classes the first one did.  A fold's classes
+    outnumber Spark's default codegen cache (100 entries: there the second
+    fold recompiles about as many as the first); the session's cache keeps
+    them.  Runs in a fresh session, so that no earlier test has compiled
+    the fold's classes already."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root, SPARK_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _FOLD_COMPILES], cwd=root, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    first, second = map(int, out.stdout.split("FOLDS")[1].split())
+    print(f"compiled classes: first fold {first}, second fold {second}")
+    assert second < first / 10, (first, second)

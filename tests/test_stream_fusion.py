@@ -127,3 +127,25 @@ def test_stream_maintained_violations(spark, tmp_path):
     want3 = {tuple(r) for r in
              validate(spark, res3.triples, shapes).violations.collect()}
     assert got3 == want3
+
+
+def test_stream_state_keeps_equivalence_reps(spark, tmp_path):
+    """The state's TBox is persisted with it: batch 1's owl:equivalentClass
+    is collapsed out of the fused triples, yet batch 2's node typed with the
+    non-representative class lands on the representative."""
+    sdir = str(tmp_path / "s")
+    import os
+
+    os.makedirs(sdir, exist_ok=True)
+    b1 = [
+        iri_triple(X + "B", vocab.OWL + "equivalentClass", X + "C"),
+        iri_triple(X + "a", vocab.TYPE, X + "B"),
+    ]
+    b2 = [iri_triple(X + "b", vocab.TYPE, X + "C")]
+    _apply_batch(spark, sdir, triples_df(spark, b1), 0)
+    state = load_state(spark, sdir)
+    assert state.tbox.class_rep.get(X + "C") == X + "B"
+    _apply_batch(spark, sdir, triples_df(spark, b2), 1)
+    got = _tset(load_state(spark, sdir).triples)
+    assert got == _tset(fuse(spark, triples_df(spark, b1 + b2)).triples)
+    assert (X + "b", vocab.TYPE, X + "B") in got
