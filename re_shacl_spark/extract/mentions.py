@@ -31,7 +31,10 @@ MENTION_TYPE = T.ArrayType(
     )
 )
 
-_CACHE: dict[int, tuple[re.Pattern, dict[str, list[tuple[str, float]]], list]] = {}
+# one compiled dictionary per worker, keyed by the broadcast value's id; the
+# entry holds that value, so a later broadcast cannot reuse the id while the
+# entry lives and be served another dictionary's tables
+_CACHE: dict[int, tuple[list, re.Pattern, dict[str, list[tuple[str, float]]], list]] = {}
 
 # ASCII word chars (re's \b set restricted to ASCII); non-ASCII boundary chars
 # route through the \w probe below so Unicode \b semantics are preserved
@@ -46,8 +49,8 @@ def _is_word(c: str) -> bool:
 def _compile(alias_rows: list[tuple[str, str, float]]):
     key = id(alias_rows)
     hit = _CACHE.get(key)
-    if hit:
-        return hit
+    if hit and hit[0] is alias_rows:
+        return hit[1:]
     table: dict[str, list[tuple[str, float]]] = {}
     for alias, ent, prior in alias_rows:
         table.setdefault(alias.lower(), []).append((ent, prior))
@@ -66,7 +69,7 @@ def _compile(alias_rows: list[tuple[str, str, float]]):
         (a, len(a), _is_word(a[0]), _is_word(a[-1]), table[a]) for a in sorted(table)
     ]
     _CACHE.clear()
-    _CACHE[key] = (pat, table, meta)
+    _CACHE[key] = (alias_rows, pat, table, meta)
     return pat, table, meta
 
 

@@ -60,8 +60,6 @@ TRIPLE_SCHEMA = StructType(
     ]
 )
 
-TRIPLE_FIELDS = ["s", "p", "o", "o_lit", "is_lit", "src_url"]
-
 # --- vocabulary -----------------------------------------------------------------
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDFS = "http://www.w3.org/2000/01/rdf-schema#"

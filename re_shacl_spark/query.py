@@ -832,31 +832,26 @@ def construct(
 
 
 def _instantiate(bound: DataFrame, template: list[Pattern], meta: bool) -> DataFrame:
-    """Instantiate triple templates from a binding frame — the shared fan-out
-    step of CONSTRUCT and DELETE/INSERT (one column-select-only projection per
-    template pattern over the SAME match, unioned; no extra joins).
+    """Instantiate triple templates from a binding frame — the fan-out step
+    of CONSTRUCT and of sh:rule inference (one column-select-only projection
+    per template pattern over the SAME match, unioned; no extra joins).
 
     ``meta=False`` yields the CONSTRUCT relation (s, p, o string forms).
     ``meta=True`` additionally reconstructs full term identity for the object
     slot from the binding's hidden ``__t`` companion — ``o_lit`` struct,
-    ``is_lit`` flag and the ``_otag`` join key — so graph mutation can match
-    and mint literal-valued triples exactly (requires a ``bgp(...,
-    _keep_tags=True)`` frame; a plain-string template constant is an IRI and
-    a ``Lit(...)`` constant mints that exact literal, same rule as pattern
-    constants).  Update templates (``meta=True`` only — CONSTRUCT
-    emits triples per spec) may be quads: the fourth slot rides along as
-    ``_g`` (the target named graph; null for triple templates = the default
-    graph)."""
+    ``is_lit`` flag and the ``_otag`` join key — so inferred triples can be
+    matched against the graph and literal-valued triples minted exactly
+    (requires a ``bgp(..., _keep_tags=True)`` frame; a plain-string template
+    constant is an IRI and a ``Lit(...)`` constant mints that exact literal,
+    same rule as pattern constants).  Templates are triples: a 4-slot (GRAPH)
+    template raises."""
     if not template:
         raise ValueError("empty template")
     parts: list[DataFrame] = []
     for pat in template:
-        if len(pat) == 4:
-            if not meta:
-                raise ValueError("CONSTRUCT templates are triples; GRAPH slots are update-only")
-            s, p, o, g = pat
-        else:
-            (s, p, o), g = pat, None
+        if len(pat) != 3:
+            raise ValueError("templates are triples; GRAPH slots are not supported")
+        s, p, o = pat
         if isinstance(p, Path):
             raise ValueError("template predicates must be constants or variables")
         cols = []
@@ -881,15 +876,6 @@ def _instantiate(bound: DataFrame, template: list[Pattern], meta: bool) -> DataF
                 tag = F.lit("I")
             cols.append(tag.alias("_otag"))
             cols.append(tag.startswith("L|").alias("is_lit"))
-            if g is None:
-                gc = F.lit(None).cast("string")
-            elif _is_var(g):
-                if g[1:] not in bound.columns:
-                    raise ValueError(f"template graph variable ?{g[1:]} not bound")
-                gc = F.col(g[1:])
-            else:
-                gc = F.lit(g)
-            cols.append(gc.alias("_g"))
         parts.append(bound.select(*cols))
     out = parts[0]
     for p_ in parts[1:]:
@@ -908,185 +894,6 @@ def _instantiate(bound: DataFrame, template: list[Pattern], meta: bool) -> DataF
             ),
         )
     return out
-
-
-def update(
-    triples: DataFrame,
-    patterns: list[Pattern],
-    delete: list[Pattern] | None = None,
-    insert: list[Pattern] | None = None,
-    where: Column | None = None,
-    allow_cross: bool = False,
-) -> DataFrame:
-    """SPARQL 1.1 Update ``DELETE {…} INSERT {…} WHERE {…}`` (§3.1.3) as a
-    pure graph→graph transform: evaluate the WHERE pattern ONCE against the
-    input graph, instantiate both template sets from the same binding
-    multiset, and return ``(G ∖ D) ∪ I`` with full triple-store schema
-    (rdflib users mutate via ``graph.update(...)``; the reference's add/remove
-    loops in re_shacl.py:120-180 are exactly delete/insert instantiations).
-
-    Deletions and insertions match on FULL term identity — the binding's
-    hidden term companion travels into the templates, so deleting ``?s ?p ?v``
-    where ``?v`` matched a typed literal removes only that literal triple,
-    never an IRI with the same lexical form; inserted literal bindings mint
-    literal triples with their datatype/lang intact.  Per the spec both
-    templates instantiate against the PRE-update graph state, and the result
-    is a set (an insert of an existing triple is a no-op).
-
-    Templates may be QUADS (§3.1.3's QuadPattern, ``GRAPH g {…}`` inside
-    DELETE/INSERT): the fourth slot names the target graph (constant IRI or a
-    variable bound by the WHERE — e.g. a quad WHERE pattern's ?g).  A quad
-    DELETE removes the triple only from that named graph; a quad INSERT mints
-    ``src_url = g``.  TRIPLE templates keep the store's lineage pragmatics:
-    a triple DELETE removes the matched triple from EVERY graph (the fused
-    store is a set of triples with provenance, and callers deleting
-    ``?s kg:next ?m`` mean the fact, not one page's copy), and a triple
-    INSERT lands in the default graph (``src_url`` null — mutation has no
-    source page).  Insert set-semantics are per graph (a dataset may hold the
-    same triple in two graphs).
-
-    Scale shape: one BGP evaluation; the delete is a hash anti-join on
-    ``(s, p, o, term)`` — Catalyst broadcasts it when the instantiated delete
-    set is small; the insert is the same-keyed anti-join plus a union.  No
-    driver-side materialization anywhere, so a 10^12-triple graph updates in
-    three exchanges end-to-end."""
-    from re_shacl_spark.model.triples import TRIPLE_FIELDS
-
-    if not delete and not insert:
-        raise ValueError("update: need at least one of delete/insert")
-    bound = bgp(
-        triples, patterns, where=where, allow_cross=allow_cross, _keep_tags=True
-    )
-    otag = _term_tag(F.col("is_lit"), F.col("o_lit"))
-    # graph-key sentinel: '' stands for the default graph so the equi-join
-    # keys stay null-free ('' is never a valid graph IRI)
-    gkey = F.coalesce(F.col("src_url"), F.lit("")).alias("_gkey")
-    base = triples.select(*TRIPLE_FIELDS).withColumn("_otag", otag)
-    if delete:
-        tri = [t for t in delete if len(t) == 3]
-        quads = [t for t in delete if len(t) == 4]
-        if tri:
-            d = _instantiate(bound, tri, meta=True).select("s", "p", "o", "_otag")
-            base = base.join(d.distinct(), ["s", "p", "o", "_otag"], "left_anti")
-        if quads:
-            d = _instantiate(bound, quads, meta=True).select(
-                "s", "p", "o", "_otag", F.coalesce(F.col("_g"), F.lit("")).alias("_gkey")
-            )
-            base = (
-                base.withColumn("_gkey", gkey)
-                .join(d.distinct(), ["s", "p", "o", "_otag", "_gkey"], "left_anti")
-                .drop("_gkey")
-            )
-    if insert:
-        ins = (
-            _instantiate(bound, insert, meta=True)
-            .withColumn("src_url", F.col("_g"))
-            .drop("_g")
-            .withColumn("_gkey", gkey)
-            .dropDuplicates(["s", "p", "o", "_otag", "_gkey"])
-        )
-        new = ins.join(
-            base.withColumn("_gkey", gkey),
-            ["s", "p", "o", "_otag", "_gkey"],
-            "left_anti",
-        ).drop("_gkey")
-        base = base.unionByName(new.select(*base.columns))
-    return base.drop("_otag")
-
-
-def _graph_pred(graph: str | None) -> Column:
-    """Membership predicate for one graph slot (None = the default graph)."""
-    if graph is None:
-        return F.col("src_url").isNull()
-    # eqNullSafe: the complement (~) must KEEP default-graph (null) rows
-    return F.col("src_url").eqNullSafe(F.lit(graph))
-
-
-def dataset(
-    triples: DataFrame,
-    default_graphs: list[str] | None = None,
-    named_graphs: list[str] | None = None,
-) -> DataFrame:
-    """SPARQL 1.1 ``FROM`` / ``FROM NAMED`` dataset construction (§13.2):
-    build the query's active dataset from the store.  ``default_graphs``
-    (FROM) are merged into the query's default graph — their triples are
-    re-stamped ``src_url = null``, so plain triple patterns see their union
-    and GRAPH patterns do NOT see them; ``named_graphs`` (FROM NAMED) stay
-    addressable via GRAPH patterns.  With either list given the dataset is
-    exactly what the clauses name (the spec's fresh-dataset semantics: the
-    store's own default graph is excluded unless re-included via FROM is
-    impossible — it has no IRI — so only named graphs can be listed).  With
-    both ``None`` the store itself is the dataset (no-op).  Triple patterns
-    over the result follow the engine's union-default-graph pragmatics
-    (rdflib ConjunctiveGraph / Jena unionDefaultGraph): they scan the whole
-    dataset, named graphs included; GRAPH patterns see only the named part.
-    Pushed-down ``src_url IN (…)`` filters + a projection — no shuffle."""
-    if default_graphs is None and named_graphs is None:
-        return triples
-    parts: list[DataFrame] = []
-    if default_graphs:
-        parts.append(
-            triples.filter(F.col("src_url").isin(default_graphs)).withColumn(
-                "src_url", F.lit(None).cast("string")
-            )
-        )
-    if named_graphs:
-        parts.append(triples.filter(F.col("src_url").isin(named_graphs)))
-    if not parts:
-        return triples.limit(0)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    # FROM-merge is a graph UNION (set semantics): two sources asserting the
-    # same triple yield one default-graph row (dedup on full term identity;
-    # dropDuplicates is null-tolerant, unlike join keys)
-    if default_graphs:
-        out = out.dropDuplicates(["s", "p", "o", "is_lit", "o_lit", "src_url"])
-    return out
-
-
-def clear_graph(triples: DataFrame, graph: str | None = None) -> DataFrame:
-    """SPARQL 1.1 Update ``CLEAR GRAPH <g>`` / ``CLEAR DEFAULT`` (§3.2.2) as
-    a graph→graph transform: drop every triple in the named graph (``None`` =
-    the default graph, i.e. null ``src_url``).  One pushed-down filter — no
-    shuffle at any scale."""
-    return triples.filter(~_graph_pred(graph))
-
-
-def copy_graph(
-    triples: DataFrame, src: str | None, dst: str | None, keep_dst: bool = False
-) -> DataFrame:
-    """SPARQL 1.1 Update ``COPY <src> TO <dst>`` (§3.2.5): the destination
-    graph is cleared, then receives every triple of the source graph
-    (re-stamped ``src_url = dst``); the source is untouched.  ``keep_dst``
-    switches to ``ADD`` semantics (§3.2.7: destination retained, source
-    triples unioned in, per-graph set semantics).  Filters + one distinct —
-    the distinct only scans the two graphs' rows, not the store."""
-    if src == dst:
-        return triples
-    moved = triples.filter(_graph_pred(src)).withColumn(
-        "src_url", F.lit(dst).cast("string")
-    )
-    if not keep_dst:
-        return clear_graph(triples, dst).unionByName(moved)
-    tag = _term_tag(F.col("is_lit"), F.col("o_lit"))
-    kept = triples.filter(_graph_pred(dst)).select(
-        "s", "p", "o", tag.alias("_otag")
-    )
-    fresh = (
-        moved.withColumn("_otag", tag)
-        .join(kept.distinct(), ["s", "p", "o", "_otag"], "left_anti")
-        .drop("_otag")
-    )
-    return triples.unionByName(fresh.select(*triples.columns))
-
-
-def move_graph(triples: DataFrame, src: str | None, dst: str | None) -> DataFrame:
-    """SPARQL 1.1 Update ``MOVE <src> TO <dst>`` (§3.2.6): COPY then DROP the
-    source graph."""
-    if src == dst:
-        return triples
-    return clear_graph(copy_graph(triples, src, dst), src)
 
 
 # ---------------------------------------------------------------------------

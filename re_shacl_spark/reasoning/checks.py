@@ -93,14 +93,23 @@ def check_disjoint_properties(triples: DataFrame, tbox: TBoxIndex) -> DataFrame:
 
 
 def check_same_different(triples: DataFrame) -> DataFrame:
-    """sameAs(a,b) ∧ differentFrom(a,b) in either orientation."""
+    """sameAs(a,b) ∧ differentFrom(a,b) in either orientation, and
+    differentFrom(a,a) (eq-diff1 with eq-ref).  The reflexive case is what
+    is left after a merge: canonicalization rewrites (a differentFrom b) to
+    (rep differentFrom rep), while the provenance row (rep sameAs member)
+    keeps two distinct ends.  The join is driven from the differentFrom side,
+    so a graph without differentFrom rows still short-circuits to empty."""
     same = triples.filter(F.col("p") == vocab.SAMEAS).select(
-        F.least("s", "o").alias("a"), F.greatest("s", "o").alias("b")
+        F.least("s", "o").alias("a"), F.greatest("s", "o").alias("b"), F.lit(True).alias("_same")
     )
     diff = triples.filter(F.col("p") == vocab.DIFFERENT).select(
         F.least("s", "o").alias("a"), F.greatest("s", "o").alias("b")
     )
-    return same.join(diff, ["a", "b"], "left_semi")
+    return (
+        diff.join(same, ["a", "b"], "left")
+        .filter(F.col("_same") | (F.col("a") == F.col("b")))
+        .select("a", "b")
+    )
 
 
 CHECKS = ("irreflexive", "asymmetric", "disjoint_classes", "disjoint_properties", "same_different")

@@ -906,14 +906,11 @@ def evaluate(triples: DataFrame, parsed: ParsedSelect) -> DataFrame:
     return sol
 
 
-def apply_rules(
-    spark,
-    triples: DataFrame,
-    shapes,
-    tbox=None,
-    max_rounds: int = 32,
-    checkpoint: bool = True,
-) -> DataFrame:
+# sh:rule fixpoint round cap: a cyclic rule graph raises past it
+MAX_RULE_ROUNDS = 32
+
+
+def apply_rules(spark, triples: DataFrame, shapes, tbox=None) -> DataFrame:
     """SHACL-AF §8 SPARQLRule inference: apply every shape's sh:construct
     rule to its target focus nodes, add the minted triples to the graph, and
     iterate to fixpoint (a rule may entail new targets or new matches for
@@ -927,8 +924,9 @@ def apply_rules(
     against the accumulated graph.  Per-round ``materialize`` keeps lineage
     O(1), same as pipeline.fuse.  sh:order/sh:condition are not implemented
     (documented restriction — rounds apply all rules simultaneously, which
-    subsumes ordering for monotone rule sets); ``max_rounds`` bounds cyclic
-    rule graphs and raises on non-convergence rather than silently stopping.
+    subsumes ordering for monotone rule sets); ``MAX_RULE_ROUNDS`` bounds
+    cyclic rule graphs and raises on non-convergence rather than silently
+    stopping.
     """
     from re_shacl_spark.query import _instantiate, _term_tag
     from re_shacl_spark.validate.engine import _targets
@@ -941,7 +939,7 @@ def apply_rules(
     if not rules:
         return triples
     cur = triples
-    for _ in range(max_rounds):
+    for _ in range(MAX_RULE_ROUNDS):
         targets = _targets(spark, cur, shapes, tbox)
         parts = []
         for ns, pc in rules:
@@ -961,13 +959,8 @@ def apply_rules(
             "s", "p", "o",
             _term_tag(F.col("is_lit"), F.col("o_lit")).alias("_otag"),
         )
-        fresh = new.join(cur_keyed, ["s", "p", "o", "_otag"], "left_anti")
-        if checkpoint:
-            fresh, c = materialize(fresh)
-            done = not c["rows"]
-        else:
-            done = fresh.isEmpty()
-        if done:
+        fresh, c = materialize(new.join(cur_keyed, ["s", "p", "o", "_otag"], "left_anti"))
+        if not c["rows"]:
             return cur
         cur = cur.unionByName(
             fresh.select(
@@ -975,10 +968,8 @@ def apply_rules(
                 F.lit(None).cast("string").alias("src_url"),
             )
         )
-        # per-round lineage truncation (O(1) plans across rounds);
-        # checkpoint=False keeps the dataflow visible for plan audits
-        if checkpoint:
-            cur, _ = materialize(cur)
+        # per-round lineage truncation (O(1) plans across rounds)
+        cur, _ = materialize(cur)
     raise RuntimeError(
-        f"sh:rule fixpoint did not converge in {max_rounds} rounds"
+        f"sh:rule fixpoint did not converge in {MAX_RULE_ROUNDS} rounds"
     )

@@ -104,6 +104,18 @@ def test_delta_can_raise_consistency_error(spark):
         fuse_delta(spark, base, triples_df(spark, delta_rows))
 
 
+@pytest.mark.parametrize("base_p, delta_p", [
+    (vocab.SAMEAS, vocab.DIFFERENT), (vocab.DIFFERENT, vocab.SAMEAS),
+], ids=["sameas_base", "differentfrom_base"])
+def test_delta_same_different_raises_after_merge(spark, base_p, delta_p):
+    """sameAs and differentFrom on the same pair, split across base and
+    delta either way round: the merge rewrites the differentFrom row to
+    (a differentFrom a), which eq-diff1 makes inconsistent."""
+    base = fuse(spark, triples_df(spark, [iri_triple(X + "a", base_p, X + "b")]))
+    with pytest.raises(FusionError, match="same_different"):
+        fuse_delta(spark, base, triples_df(spark, [iri_triple(X + "a", delta_p, X + "b")]))
+
+
 def test_delta_closes_linear_rules_in_one_pass(spark, monkeypatch):
     """The delta's linear closure (J1-J6) is one derive: fuse_delta checkpoints
     the rep map, the canonicalized delta and the novelty anti-join — three

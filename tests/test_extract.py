@@ -108,6 +108,21 @@ def test_detect_mentions_all_candidates(spark):
     assert {(r.entity, r.score) for r in both} == {("e1", 0.9), ("e2", 0.7)}
 
 
+def test_compiled_aliases_follow_the_dictionary_not_its_address():
+    """A reused Python worker compiles each job's broadcast alias list; once
+    an old list is freed, a new one can take its address.  The compiled
+    tables must still be the new list's (a stale hit silently drops the new
+    dictionary's mentions)."""
+    from re_shacl_spark.extract.mentions import _compile
+
+    old = [("acme", "e1", 1.0)]
+    _compile(old)
+    del old
+    new = [("zeta", "e2", 1.0)]
+    _, table, _ = _compile(new)
+    assert table == {"zeta": [("e2", 1.0)]}
+
+
 def test_mentions_scan_matches_regex():
     """The str.find scan matcher must reproduce the longest-first alternation
     regex exactly: same spans, same greedy non-overlap resolution, same

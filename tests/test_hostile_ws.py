@@ -4,9 +4,9 @@ VERDICT r4 What's-wrong #2: Java's ``\\s`` is ``[ \\t\\n\\x0B\\f\\r]`` while
 RE2's excludes ``\\x0B`` (vertical tab), so any oracle written with a bare
 ``\\s`` silently diverges from the Spark side the first time a document
 contains a VT — a hash-mismatch lottery on real web text.  The fix is one
-explicit shared class (ops/textstats.WS_CHARS, kgbench.SQL_WSP/SQL_PY_WSP);
-this test pins it by running the document-only queries on a corpus built
-from hostile whitespace and comparing Spark vs oracle cell-for-cell.
+explicit shared class (kgbench.SQL_PY_WSP); this test pins it by running the
+document-only extraction queries on a corpus built from hostile whitespace
+and comparing Spark vs oracle cell-for-cell.
 
 Also pins the SQL_PY_WSP class (the RE2 mirror of Python ``str.split``'s
 whitespace set used by the extract/html.py twins) exhaustively over the BMP.
@@ -33,7 +33,7 @@ HOSTILE_TEXTS = [
     "file\x1cgroup\x1drecord\x1eunit\x1f seps",
     "  leading and trailing\x0B ",
     "ideographic　space and thin space",
-    "the and of to a in is spark table",  # stopwords for quality/langid
+    "the and of to a in is spark table",  # stopwords around an alias
     "spark window value customer table",  # mention aliases
     "",
     None,
@@ -43,16 +43,7 @@ HOSTILE_TEXTS = [
 
 # queries that read ONLY the documents table (so the hostile corpus can stand
 # in for it) and exercise a whitespace split/normalize somewhere
-DOC_ONLY_QUERIES = [
-    "text_tokens",
-    "text_quality",
-    "text_langid",
-    "text_fingerprint",
-    "text_repetition",
-    "text_lm_score",
-    "kg_extract_text",
-    "kg_mentions",
-]
+DOC_ONLY_QUERIES = ["kg_extract_text", "kg_mentions"]
 
 
 @pytest.fixture(scope="module")

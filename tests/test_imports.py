@@ -5,7 +5,8 @@ Function-local imports are included: the registry (``kgbench``) and the
 scripts import most of their modules inside the function that needs them, so
 an import of a deleted module would otherwise fail only when that one row or
 branch runs.  The orphan checks catch the other half of a cut: a helper,
-constant or import that only the deleted code used."""
+constant or import that only the deleted code used, and a function or class
+that only tests still load."""
 
 from __future__ import annotations
 
@@ -112,6 +113,40 @@ def test_every_package_definition_is_loaded_somewhere():
                 continue
             orphans.append(f"{path.relative_to(ROOT)}:{lineno}: {name}")
     assert not orphans, "defined but never loaded:\n" + "\n".join(orphans)
+
+
+# top-level package functions and classes that only tests load, each with the
+# reason it stays; the next cut starts from this list
+TEST_ONLY_ALLOWED = {
+    # the north star's per-shape early termination (BASELINE.json)
+    "validate_fail_fast",
+    # the merge-then-reason entry point rewrites the shapes with it
+    # (ROADMAP direction 1)
+    "rewrite_shapes",
+    # the reference isomorphism contract the tests compare graphs against
+    "graphs_equivalent",
+}
+
+NON_TEST_SOURCES = [p for p in SOURCES if p.relative_to(ROOT).parts[0] != "tests"]
+
+
+def test_every_package_function_and_class_is_loaded_by_non_test_code():
+    loaded = set()
+    for path in NON_TEST_SOURCES:
+        loaded |= _loaded_names(ast.parse(path.read_text(), str(path)))
+    test_only, defined = [], set()
+    for path in PACKAGE_MODULES:
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            defined.add(node.name)
+            if node.name.startswith("__") or node.name in loaded:
+                continue
+            if node.name not in TEST_ONLY_ALLOWED:
+                test_only.append(f"{path.relative_to(ROOT)}:{node.lineno}: {node.name}")
+    assert not test_only, "loaded only by tests (or not at all):\n" + "\n".join(test_only)
+    stale = sorted(n for n in TEST_ONLY_ALLOWED if n not in defined or n in loaded)
+    assert not stale, f"TEST_ONLY_ALLOWED entries now gone or loaded by non-test code: {stale}"
 
 
 def test_every_module_import_is_used():

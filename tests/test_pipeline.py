@@ -119,6 +119,21 @@ def test_disjoint_violation_raises(spark):
         fuse(spark, df)
 
 
+def test_same_different_violation_raises_after_merge(spark):
+    """eq-diff1: a sameAs b ∧ a differentFrom b is inconsistent.  The check
+    runs after canonicalization, which has rewritten the differentFrom row
+    to (a differentFrom a)."""
+    ttl = """
+    @prefix : <http://x.org/> .
+    @prefix owl: <http://www.w3.org/2002/07/owl#> .
+    :a owl:differentFrom :b .
+    :a owl:sameAs :b .
+    """
+    df = triples_df(spark, parse_ttl(ttl))
+    with pytest.raises(FusionError, match="same_different"):
+        fuse(spark, df)
+
+
 def test_sameas_merges_through_equivalent_classes(spark):
     """sameAs chain + class equivalence interact: merged node keeps union of types."""
     ttl = """

@@ -246,6 +246,9 @@ def test_construct(spark):
     # unbound template variable raises
     with pytest.raises(ValueError, match="not bound"):
         construct(g, [("?x", EX + "knows", "?y")], [("?z", EX + "p", "?x")])
+    # templates are triples: a GRAPH (quad) template raises
+    with pytest.raises(ValueError, match="GRAPH"):
+        construct(g, [("?x", EX + "knows", "?y")], [("?x", EX + "p", "?y", "http://g1")])
 
 
 def test_path_negated_property_set(spark):
@@ -450,64 +453,10 @@ def test_join_solutions_term_identity_and_cross_guard(spark):
     )
 
 
-def test_update_delete_insert_where(spark):
-    """SPARQL 1.1 Update: one WHERE evaluation feeds both templates; the
-    result is (G \\ D) ∪ I with untouched triples intact."""
-    from re_shacl_spark.query import update
-
-    g = _g(spark)
-    out = update(
-        g,
-        [("?x", EX + "knows", "?y")],
-        delete=[("?x", EX + "knows", "?y")],
-        insert=[("?x", EX + "contacted", "?y")],
-    )
-    rows = {(r["s"], r["p"], r["o"]) for r in out.collect()}
-    assert not any(p == EX + "knows" for _, p, _ in rows)
-    assert (EX + "a", EX + "contacted", EX + "b") in rows
-    assert (EX + "c", EX + "contacted", EX + "a") in rows
-    assert (EX + "a", EX + "name", "Alice") in rows  # untouched
-    assert out.count() == g.count()  # 3 deleted, 3 inserted
-
-    with pytest.raises(ValueError, match="delete/insert"):
-        update(g, [("?x", EX + "knows", "?y")])
-
-
-def test_update_literal_term_fidelity(spark):
-    """Deleted/inserted triples match and mint FULL term identity: a typed
-    literal rides into the insert template with datatype intact, and an IRI
-    sharing its lexical form is never collateral damage; inserting an
-    already-present triple is a set-semantics no-op."""
-    from re_shacl_spark.query import update
-
-    rows = [
-        lit_triple(EX + "a", EX + "age", "30", dtype=vocab.XSD + "integer"),
-        iri_triple(EX + "b", EX + "likes", "30"),  # IRI <30> puns the lexical form
-    ]
-    g = triples_df(spark, rows)
-    out = update(
-        g,
-        [("?s", EX + "age", "?v")],
-        delete=[("?s", EX + "age", "?v")],
-        insert=[("?s", EX + "ageYears", "?v")],
-    )
-    got = out.collect()
-    assert len(got) == 2
-    new = next(r for r in got if r["p"] == EX + "ageYears")
-    assert new["is_lit"] and new["o"] == "30"
-    assert new["o_lit"]["dtype"] == vocab.XSD + "integer"
-    assert new["src_url"] is None
-    assert any(r["p"] == EX + "likes" and not r["is_lit"] for r in got)
-    # insert-only of an existing triple: graph unchanged
-    same = update(g, [("?s", EX + "likes", "?o")], insert=[("?s", EX + "likes", "?o")])
-    assert same.count() == 2
-
-
 def test_constant_terms_are_term_strict(spark):
     """A plain-string constant is an IRI and never matches a literal pun; a
-    Lit constant matches the exact literal (dtype/lang included) and can be
-    minted by an update template."""
-    from re_shacl_spark.query import Lit, update
+    Lit constant matches the exact literal (dtype/lang included)."""
+    from re_shacl_spark.query import Lit
 
     rows = [
         iri_triple(EX + "a", EX + "p", "30"),  # IRI <30>
@@ -527,138 +476,6 @@ def test_constant_terms_are_term_strict(spark):
     }
     with pytest.raises(ValueError, match="subject/predicate"):
         bgp(g, [(Lit("30"), EX + "p", "?o")])
-    # Lit in an INSERT template mints the exact literal
-    out = update(
-        g,
-        [("?s", EX + "p", Lit("30"))],
-        insert=[("?s", EX + "tagged", Lit("yes", lang="en"))],
-    )
-    new = next(r for r in out.collect() if r["p"] == EX + "tagged")
-    assert new["s"] == EX + "c" and new["is_lit"] and new["o"] == "yes"
-    assert new["o_lit"]["lang"] == "en" and new["o_lit"]["dtype"] is None
-
-
-def test_update_quad_templates(spark):
-    """§3.1.3 QuadPattern: a quad DELETE removes the triple only from its
-    named graph; a quad INSERT mints src_url from the bound graph variable;
-    triple DELETE stays graph-agnostic."""
-    from re_shacl_spark.query import bgp, update
-
-    rows = [
-        iri_triple(EX + "a", EX + "p", EX + "b", src_url="http://g1"),
-        iri_triple(EX + "a", EX + "p", EX + "b", src_url="http://g2"),
-        iri_triple(EX + "x", EX + "q", EX + "y", src_url="http://g1"),
-    ]
-    g = triples_df(spark, rows)
-    # quad delete scoped to g1: the g2 copy survives
-    out = update(
-        g,
-        [("?s", EX + "p", "?o", "http://g1")],
-        delete=[("?s", EX + "p", "?o", "http://g1")],
-    )
-    got = {(r["s"], r["o"], r["src_url"]) for r in out.filter(F.col("p") == EX + "p").collect()}
-    assert got == {(EX + "a", EX + "b", "http://g2")}
-    # quad insert with a graph VARIABLE: derived triple lands in ?g
-    out2 = update(
-        g,
-        [("?s", EX + "p", "?o", "?gr")],
-        insert=[("?o", EX + "pInv", "?s", "?gr")],
-    )
-    inv = {(r["s"], r["o"], r["src_url"]) for r in out2.filter(F.col("p") == EX + "pInv").collect()}
-    assert inv == {
-        (EX + "b", EX + "a", "http://g1"),
-        (EX + "b", EX + "a", "http://g2"),
-    }
-    assert out2.count() == 5
-    # per-graph set semantics: re-inserting into the SAME graph is a no-op,
-    # into another graph adds a quad
-    same = update(
-        g,
-        [("?s", EX + "p", "?o", "?gr")],
-        insert=[("?s", EX + "p", "?o", "?gr")],
-    )
-    assert same.count() == 3
-    other = update(
-        g,
-        [("?s", EX + "q", "?o", "http://g1")],
-        insert=[("?s", EX + "q", "?o", "http://g9")],
-    )
-    assert other.count() == 4
-    # triple delete removes the fact from EVERY graph (lineage pragmatics)
-    wipe = update(g, [("?s", EX + "p", "?o")], delete=[("?s", EX + "p", "?o")])
-    assert wipe.count() == 1
-    # CONSTRUCT rejects quads
-    from re_shacl_spark.query import construct
-
-    with pytest.raises(ValueError, match="update-only"):
-        construct(g, [("?s", EX + "p", "?o")], [("?s", EX + "p", "?o", "http://g1")])
-
-
-def test_graph_management(spark):
-    """§3.2 CLEAR / COPY / MOVE / ADD over the src_url graph slot."""
-    from re_shacl_spark.query import clear_graph, copy_graph, move_graph
-
-    rows = [
-        iri_triple(EX + "a", EX + "p", EX + "b", src_url="http://g1"),
-        iri_triple(EX + "c", EX + "p", EX + "d", src_url="http://g2"),
-        iri_triple(EX + "e", EX + "p", EX + "f"),  # default graph
-    ]
-    g = triples_df(spark, rows)
-    assert clear_graph(g, "http://g1").count() == 2
-    assert clear_graph(g, None).count() == 2  # CLEAR DEFAULT
-    # COPY: dst cleared, src re-stamped into it; src untouched
-    cp = copy_graph(g, "http://g1", "http://g2")
-    got = {(r["s"], r["src_url"]) for r in cp.collect()}
-    assert got == {
-        (EX + "a", "http://g1"),
-        (EX + "a", "http://g2"),
-        (EX + "e", None),
-    }
-    # ADD: dst retained, union with per-term set semantics
-    ad = copy_graph(g, "http://g1", "http://g2", keep_dst=True)
-    assert ad.count() == 4
-    assert copy_graph(ad, "http://g1", "http://g2", keep_dst=True).count() == 4
-    # MOVE: src gone afterwards
-    mv = move_graph(g, "http://g1", "http://g2")
-    got = {(r["s"], r["src_url"]) for r in mv.collect()}
-    assert got == {(EX + "a", "http://g2"), (EX + "e", None)}
-    # COPY default graph into a named graph
-    cd = copy_graph(g, None, "http://g1")
-    assert {(r["s"], r["src_url"]) for r in cd.filter(F.col("src_url") == "http://g1").collect()} == {
-        (EX + "e", "http://g1")
-    }
-
-
-def test_dataset_from_and_from_named(spark):
-    """§13.2 FROM / FROM NAMED: FROM graphs merge into the default graph
-    (invisible to GRAPH patterns, set-semantics union); FROM NAMED graphs
-    stay addressable; everything unlisted drops out."""
-    from re_shacl_spark.query import bgp, dataset
-
-    rows = [
-        iri_triple(EX + "a", EX + "p", EX + "b", src_url="http://g1"),
-        iri_triple(EX + "a", EX + "p", EX + "b", src_url="http://g2"),  # same triple
-        iri_triple(EX + "c", EX + "p", EX + "d", src_url="http://g2"),
-        iri_triple(EX + "e", EX + "p", EX + "f", src_url="http://g3"),  # unlisted
-        iri_triple(EX + "x", EX + "p", EX + "y"),  # store default graph
-    ]
-    g = triples_df(spark, rows)
-    ds = dataset(g, default_graphs=["http://g1", "http://g2"], named_graphs=["http://g3"])
-    # FROM union deduped; store's own default graph excluded; g3 kept named
-    plain = {(r["s"], r["o"]) for r in bgp(ds, [("?s", EX + "p", "?o")]).collect()}
-    assert plain == {
-        (EX + "a", EX + "b"),
-        (EX + "c", EX + "d"),
-        (EX + "e", EX + "f"),  # named graphs are still in the dataset's union scan
-    }
-    assert ds.filter(F.col("src_url").isNull()).count() == 2  # deduped merge
-    named = {
-        (r["s"], r["gr"]) for r in bgp(ds, [("?s", EX + "p", "?o", "?gr")]).collect()
-    }
-    assert named == {(EX + "e", "http://g3")}
-    # no clauses: the store itself; empty lists: empty dataset
-    assert dataset(g).count() == 5
-    assert dataset(g, default_graphs=[]).count() == 0
 
 
 def test_graph_quad_patterns(spark):

@@ -281,78 +281,6 @@ def test_bgp_values_matches_naive(spark, case):
 
 
 @st.composite
-def update_case_st(draw):
-    """A WHERE case plus delete/insert template lists over its variables and
-    pool constants (IRI or Lit)."""
-    graph, pats = draw(case_st())
-    pvars = sorted({t for p in pats for t in p if t.startswith("?")})
-
-    def tmpl():
-        def term(allow_lit):
-            c = draw(st.integers(0, 3 if allow_lit else 2))
-            if c == 0:
-                return draw(st.sampled_from(pvars))
-            if c == 1 or c == 2:
-                return draw(st.sampled_from(NODES))
-            from re_shacl_spark.query import Lit
-
-            return Lit(draw(st.sampled_from(NODES)))
-
-        return (term(False), draw(st.sampled_from(PREDS)), term(True))
-
-    delete = [tmpl() for _ in range(draw(st.integers(0, 2)))]
-    insert = [tmpl() for _ in range(draw(st.integers(0, 2)))]
-    if not delete and not insert:
-        insert = [tmpl()]
-    return graph, pats, delete, insert
-
-
-@given(update_case_st())
-@SETTINGS
-def test_update_matches_naive_set_algebra(spark, case):
-    """DELETE/INSERT WHERE == (G \\ D) ∪ I on full term identity, both
-    templates instantiated against the PRE-update state."""
-    from re_shacl_spark.model.triples import vocab
-    from re_shacl_spark.query import Lit, update
-
-    graph, pats, delete, insert = case
-    df = triples_df(spark, _rows(graph))
-    out = update(df, pats, delete=delete or None, insert=insert or None)
-
-    def term_of(r):
-        if r["is_lit"]:
-            return ("L", r["o"], r["o_lit"]["dtype"], r["o_lit"]["lang"])
-        return ("I", r["o"])
-
-    got = {(r["s"], r["p"], term_of(r)) for r in out.collect()}
-
-    def inst(env, t):
-        if isinstance(t, Lit):
-            return ("L", t.lex, vocab.XSD + "string", None)
-        if t.startswith("?"):
-            return env[t]
-        return ("I", t)
-
-    envs = _naive_match(graph, pats)
-    d = {
-        (inst(e, s)[1], inst(e, p)[1], inst(e, o))
-        for e in envs
-        for s, p, o in delete
-    }
-    ins = {
-        (inst(e, s)[1], inst(e, p)[1], inst(e, o))
-        for e in envs
-        for s, p, o in insert
-    }
-    g0 = {
-        (s, p, o if o[0] == "L" else ("I", o[1]))
-        for s, p, o in graph
-    }
-    want = (g0 - d) | ins
-    assert got == want, f"pats={pats} delete={delete} insert={insert}"
-
-
-@st.composite
 def union_case_st(draw):
     graph = draw(graph_st)
     branches = []

@@ -369,9 +369,11 @@ def test_apply_rules_single_round(spark):
     assert derived == {(EX + "c1", EX + "inRegion", EX + "r1")}
 
 
-def test_apply_rules_fixpoint_chain(spark):
+def test_apply_rules_fixpoint_chain(spark, monkeypatch):
     """A rule whose output feeds its own next match (ancestor-style chain)
-    converges in depth rounds, not one."""
+    converges in depth rounds, not one; with fewer rounds than the chain
+    needs, apply_rules raises instead of returning a partial closure."""
+    import re_shacl_spark.validate.sparql as S
     from re_shacl_spark.validate.sparql import apply_rules
 
     rows = [
@@ -400,6 +402,10 @@ def test_apply_rules_fixpoint_chain(spark):
         (EX + "c", EX + "d"),
     }
 
+    monkeypatch.setattr(S, "MAX_RULE_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        apply_rules(spark, g, shapes)
+
 
 def test_apply_rules_literal_template(spark):
     """Lit template constants mint exact literals with full term identity."""
@@ -412,7 +418,7 @@ def test_apply_rules_literal_template(spark):
     g = triples_df(spark, rows)
     rule = SparqlConstraint(
         select='PREFIX ex: <http://x.org/> '
-               'CONSTRUCT { $this ex:risk "high" } '
+               'CONSTRUCT { $this ex:risk "high" . $this ex:note "risky"@en } '
                'WHERE { $this ex:bal ?v . FILTER (?v < 0) }',
     )
     shapes = [NodeShape("S", target_classes=[EX + "Customer"], rules=[rule])]
@@ -422,6 +428,10 @@ def test_apply_rules_literal_template(spark):
     r = new[0]
     assert (r.s, r.o, r.is_lit) == (EX + "c1", "high", True)
     assert r.o_lit.dtype == vocab.XSD + "string"
+    # a lang-tagged constant keeps its tag and carries no datatype
+    (r,) = out.filter("p = '" + EX + "note'").collect()
+    assert (r.s, r.o, r.is_lit) == (EX + "c1", "risky", True)
+    assert (r.o_lit.lang, r.o_lit.dtype) == ("en", None)
     # idempotent: re-application converges round 1 with no duplicates
     again = apply_rules(spark, out, shapes)
     assert again.count() == out.count()
