@@ -154,16 +154,14 @@ class CheckpointStore:
         stage: str,
         build,
         meta: dict[str, str] | None = None,
-        force: bool = False,
         fingerprint: str | None = None,
     ) -> DataFrame:
         """Resume-or-compute: return the checkpointed frame if complete (and,
         when a fingerprint is given, input-compatible), otherwise call
         ``build()`` and persist its result."""
-        if not force:
-            cached = self.load(stage, fingerprint)
-            if cached is not None:
-                return cached
+        cached = self.load(stage, fingerprint)
+        if cached is not None:
+            return cached
         return self.save(stage, build(), meta, fingerprint)
 
 

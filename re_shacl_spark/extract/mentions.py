@@ -3,8 +3,8 @@
 pandas UDF (Arrow batches) per BASELINE.json input_hint — the alias dictionary
 (FIXTURES.md §5: alias → [(entity_id, prior)]) is broadcast once per executor;
 the combined alternation regex is compiled lazily per interpreter and reused
-across batches.  Link scoring is deterministic: score = prior (embedding
-coherence re-ranking lives in extract/linking.py).
+across batches.  Link scoring is deterministic: each alias links to its
+best-first dictionary entry, with score = prior.
 
 Output column ``mentions``: array<struct<alias string, entity string,
 score double, pos int>> — exploded downstream by the triple emitter.
@@ -73,7 +73,7 @@ def _compile(alias_rows: list[tuple[str, str, float]]):
     return pat, table, meta
 
 
-def _scan_mentions(text: str, pat: re.Pattern, table, meta, all_candidates: bool):
+def _scan_mentions(text: str, pat: re.Pattern, table, meta):
     """Exact replacement for ``pat.finditer`` + per-hit dict lookup.
 
     Semantics parity with the longest-first alternation regex: collect every
@@ -90,8 +90,8 @@ def _scan_mentions(text: str, pat: re.Pattern, table, meta, all_candidates: bool
         for m in pat.finditer(text):
             cands = table.get(m.group(1).lower())
             if cands:
-                for ent, prior in cands if all_candidates else cands[:1]:
-                    out.append((m.group(1).lower(), ent, prior, m.start()))
+                ent, prior = cands[0]
+                out.append((m.group(1).lower(), ent, prior, m.start()))
         return out
     ascii_fast = text.isascii()
     n = len(text)
@@ -119,8 +119,8 @@ def _scan_mentions(text: str, pat: re.Pattern, table, meta, all_candidates: bool
     cur_end = -1
     for s, neg_len, alias, cands in cand:
         if s >= cur_end:
-            for ent, prior in cands if all_candidates else cands[:1]:
-                out.append((alias, ent, prior, s))
+            ent, prior = cands[0]
+            out.append((alias, ent, prior, s))
             cur_end = s - neg_len
     return out
 
@@ -130,14 +130,12 @@ def detect_mentions(
     alias_rows: list[tuple[str, str, float]],
     text_col: str = "text",
     skip_empty_lang: bool = True,
-    all_candidates: bool = False,
     drop: tuple[str, ...] = (),
 ) -> DataFrame:
     """pages + ``mentions`` column.  Rows with null text (or empty lang when
     skip_empty_lang) get an empty mention list — the reference-mandated skip
-    path.  ``all_candidates`` emits every dictionary candidate per hit (for
-    downstream disambiguation — extract/linking.py); the default keeps the
-    dictionary's first entry per alias.
+    path.  Each hit keeps the dictionary's first entry for its alias
+    (highest prior, then smallest entity id).
 
     ``drop`` removes input columns from the OUTPUT inside the UDF: a consumed
     column the caller would drop right after (the text itself, typically)
@@ -158,7 +156,7 @@ def detect_mentions(
                 return []
             if skip_empty_lang and not lang:
                 return []
-            return _scan_mentions(text, pat, table, meta, all_candidates)
+            return _scan_mentions(text, pat, table, meta)
 
         for b in batches:
             mentions = [

@@ -28,7 +28,7 @@ from re_shacl_spark.canonicalize.rewrite import apply_static_map
 from re_shacl_spark.extract.html import extract_text
 from re_shacl_spark.extract.mentions import detect_mentions, mention_pairs
 from re_shacl_spark.extract.emit import emit_triples
-from re_shacl_spark.model.triples import O_LIT_TYPE, iri_triple, local_frame, triples_df, vocab
+from re_shacl_spark.model.triples import O_LIT_TYPE, iri_triple, triples_df, vocab
 from re_shacl_spark.pipeline import fuse
 from re_shacl_spark.reasoning import checks as CK
 from re_shacl_spark.reasoning.rules import RuleEngine, Scope
@@ -430,71 +430,6 @@ SQL_CHK_PROPDISJOINT = """SELECT 'c:'||c_custkey::varchar AS s, 'kg:hates' AS p1
 'n:'||c_nationkey::varchar AS o FROM customer WHERE c_custkey % 3 = 0"""
 
 
-def q_p3_subject_objects(spark, sf_dir):
-    """P3: g.subject_objects(p) — predicate-selective scan (pushdown)."""
-    t = rel_triples(spark, sf_dir)
-    return t.filter(F.col("p") == "kg:inRegion").select("s", "o").distinct()
-
-
-SQL_P3 = f"""WITH {REL_TRIPLES_CTE.strip()}
-SELECT DISTINCT s, o FROM base WHERE p = 'kg:inRegion'"""
-
-
-def q_p5_membership(spark, sf_dir):
-    """P5: (s,p,o) ∈ G as a left-semi join — which candidate order edges exist."""
-    t = rel_triples(spark, sf_dir)
-    orders = _read(spark, sf_dir, "orders")
-    cand = orders.select(
-        _iri("o:", F.col("o_orderkey")).alias("s"),
-        F.lit("kg:placedBy").alias("p"),
-        _iri(
-            "c:",
-            F.when(F.col("o_orderkey") % 2 == 0, F.col("o_custkey")).otherwise(
-                (F.col("o_custkey") % 100) + 1
-            ),
-        ).alias("o"),
-    )
-    return cand.join(t.select("s", "p", "o"), ["s", "p", "o"], "left_semi")
-
-
-SQL_P5 = f"""WITH {REL_TRIPLES_CTE.strip()},
-cand AS (SELECT 'o:'||o_orderkey::varchar s, 'kg:placedBy' p,
- 'c:'||(CASE WHEN o_orderkey%2=0 THEN o_custkey ELSE (o_custkey%100)+1 END)::varchar o FROM orders)
-SELECT c.s, c.p, c.o FROM cand c WHERE EXISTS (SELECT 1 FROM base b WHERE b.s=c.s AND b.p=c.p AND b.o=c.o)"""
-
-
-def q_so1_union_distinct(spark, sf_dir):
-    """SO1: graph union with set semantics (dedup is load-bearing)."""
-    t = rel_triples(spark, sf_dir)
-    return _spo(t.unionByName(t.limit(0)).unionByName(t))
-
-
-SQL_SO1 = f"""WITH {REL_TRIPLES_CTE.strip()}
-SELECT DISTINCT s, p, o FROM base"""
-
-
-def q_so2_difference(spark, sf_dir):
-    """SO2: graph difference (oracle-diff semantics, src/graph_isomorph.py:19-27):
-    full graph minus the orders subgraph."""
-    t = _spo(rel_triples(spark, sf_dir))
-    sub = t.filter(F.col("p") == "kg:placedBy")
-    return t.exceptAll(sub)
-
-
-SQL_SO2 = f"""WITH {REL_TRIPLES_CTE.strip()}
-SELECT DISTINCT s, p, o FROM base WHERE p != 'kg:placedBy'"""
-
-
-def q_a1_graph_size(spark, sf_dir):
-    """A1: graph-size count (the fixpoint convergence metric)."""
-    t = _spo(rel_triples(spark, sf_dir))
-    return t.agg(F.count(F.lit(1)).alias("n_triples"))
-
-
-SQL_A1 = f"""WITH {REL_TRIPLES_CTE.strip()}
-SELECT count(*)::BIGINT AS n_triples FROM (SELECT DISTINCT s, p, o FROM base) d"""
-
-
 # ---------------------------------------------------------------------------
 # consistency checks (J14-J17)
 # ---------------------------------------------------------------------------
@@ -797,11 +732,6 @@ QUERIES = {
     "j11_class_equivalence": q_j11_class_equivalence,
     "j12_property_equivalence": q_j12_property_equivalence,
     "chk_disjoint_properties": q_chk_disjoint_properties,
-    "p3_subject_objects": q_p3_subject_objects,
-    "p5_membership": q_p5_membership,
-    "so1_union_distinct": q_so1_union_distinct,
-    "so2_difference": q_so2_difference,
-    "a1_graph_size": q_a1_graph_size,
     "chk_disjoint_classes": q_chk_disjoint_classes,
     "chk_asymmetric": q_chk_asymmetric,
     "chk_irreflexive": q_chk_irreflexive,
@@ -833,11 +763,6 @@ ORACLES = {
     "j11_class_equivalence": SQL_J11,
     "j12_property_equivalence": SQL_J12,
     "chk_disjoint_properties": SQL_CHK_PROPDISJOINT,
-    "p3_subject_objects": SQL_P3,
-    "p5_membership": SQL_P5,
-    "so1_union_distinct": SQL_SO1,
-    "so2_difference": SQL_SO2,
-    "a1_graph_size": SQL_A1,
     "chk_disjoint_classes": SQL_CHK_DISJOINT,
     "chk_asymmetric": SQL_CHK_ASYM,
     "chk_irreflexive": SQL_CHK_IRREFLEXIVE,
@@ -1267,29 +1192,6 @@ ORACLES["kg_fuse_full"] = SQL_KG_FUSE_FULL
 
 
 # ---------------------------------------------------------------------------
-# S4 sink parity: serialize the KG to N-Triples (distributed writer) and read
-# it back through the distributed regex source — identity on (s,p,o)
-# ---------------------------------------------------------------------------
-
-def q_kg_serialize_roundtrip(spark, sf_dir):
-    import tempfile
-
-    from re_shacl_spark.model.serialize import read_ntriples, write_ntriples
-
-    path = tempfile.mkdtemp(prefix="re_shacl_nt_") + "/graph.nt"
-    write_ntriples(rel_triples(spark, sf_dir), path)
-    return _spo(read_ntriples(spark, path))
-
-
-SQL_KG_SERIALIZE = f"""WITH {REL_TRIPLES_CTE.strip()}
-SELECT DISTINCT s, p, o FROM base"""
-
-
-QUERIES["kg_serialize_roundtrip"] = q_kg_serialize_roundtrip
-ORACLES["kg_serialize_roundtrip"] = SQL_KG_SERIALIZE
-
-
-# ---------------------------------------------------------------------------
 # SHACL string facets: sh:pattern / sh:minLength / sh:maxLength
 # (validate/engine.py::_value_conformance; standard constraints a user
 # migrating real shapes graphs expects even though the committed reference
@@ -1420,148 +1322,6 @@ FROM customer WHERE c_mktsegment = 'BUILDING' AND c_custkey % 5 != 0"""
 
 QUERIES["v_sparql_target"] = q_v_sparql_target
 ORACLES["v_sparql_target"] = SQL_V_SPARQL_TARGET
-
-
-def q_kg_shacl_rules(spark, sf_dir):
-    """SHACL-AF sh:rule/sh:construct inference (validate/sparql.apply_rules):
-    a SPARQLRule on kg:Customer derives each customer's region through its
-    nation (two-pattern join, template fan-out is column-select-only);
-    fixpoint loop converges round 2 (round 1 derives, round 2 proves empty).
-    Output: the derived kg:inRegion edges."""
-    from re_shacl_spark.model.ttl import parse_ttl
-    from re_shacl_spark.validate.shapes import compile_shapes
-    from re_shacl_spark.validate.sparql import apply_rules
-
-    cust = _read(spark, sf_dir, "customer")
-    nat = _read(spark, sf_dir, "nation")
-    k = F.col("c_custkey")
-    t = (
-        _cust_targets(spark, sf_dir)
-        .unionByName(_rows(cust, _iri("c:", k), "kg:inNation",
-                           _iri("n:", F.col("c_nationkey"))))
-        .unionByName(_rows(nat, _iri("n:", F.col("n_nationkey")), "kg:inRegion",
-                           _iri("r:", F.col("n_regionkey"))))
-    )
-    ttl = '''
-@prefix sh: <http://www.w3.org/ns/shacl#> .
-@prefix kg: <kg:> .
-kg:CustRegionShape a sh:NodeShape ;
-  sh:targetClass kg:Customer ;
-  sh:rule [ a sh:SPARQLRule ; sh:construct """
-    CONSTRUCT { $this kg:inRegion ?r }
-    WHERE { $this kg:inNation ?n . ?n kg:inRegion ?r }
-  """ ] .
-'''
-    out = apply_rules(spark, t, compile_shapes(parse_ttl(ttl)))
-    return out.filter(
-        (F.col("p") == "kg:inRegion") & F.col("s").startswith("c:")
-    ).select("s", "p", "o")
-
-
-SQL_KG_SHACL_RULES = """SELECT 'c:'||c_custkey::varchar AS s,
-'kg:inRegion' AS p, 'r:'||n_regionkey::varchar AS o
-FROM customer JOIN nation ON c_nationkey = n_nationkey"""
-
-
-QUERIES["kg_shacl_rules"] = q_kg_shacl_rules
-ORACLES["kg_shacl_rules"] = SQL_KG_SHACL_RULES
-
-
-def q_bgp_text_query(spark, sf_dir):
-    """Free-standing SPARQL TEXT entry point (validate/sparql.sparql_query):
-    a SELECT DISTINCT + ORDER BY + LIMIT query parsed from a string and run
-    as one distributed plan — DISTINCT before the slice, ORDER BY + LIMIT
-    collapsing to TakeOrderedAndProject (no global sort).  Lexicographic
-    string order is identical across engines (ASCII keys)."""
-    from re_shacl_spark.validate.sparql import sparql_query
-
-    cust = _read(spark, sf_dir, "customer")
-    nat = _read(spark, sf_dir, "nation")
-    t = _rows(cust, _iri("c:", F.col("c_custkey")), "kg:inNation",
-              _iri("n:", F.col("c_nationkey"))).unionByName(
-        _lit_rows(nat, _iri("n:", F.col("n_nationkey")), "kg:name",
-                  F.col("n_name"), F.lit(XSD_STRING))
-    )
-    return sparql_query(t, """
-        SELECT DISTINCT ?n ?name
-        WHERE { ?c kg:inNation ?n . ?n kg:name ?name }
-        ORDER BY ?n LIMIT 10
-    """)
-
-
-SQL_BGP_TEXT_QUERY = """SELECT DISTINCT 'n:'||n_nationkey::varchar AS n,
-n_name AS name
-FROM nation JOIN customer ON c_nationkey = n_nationkey
-ORDER BY n LIMIT 10"""
-
-
-QUERIES["bgp_text_query"] = q_bgp_text_query
-ORACLES["bgp_text_query"] = SQL_BGP_TEXT_QUERY
-
-
-def q_bgp_text_aggregate(spark, sf_dir):
-    """SPARQL text aggregates (§11) through sparql_query: GROUP BY +
-    COUNT(*)/SUM + HAVING parsed from the string, riding query.aggregate
-    (partial+final hash agg; SUM over try_cast double — integer-cent
-    lexicals stay exact below 2^53).  COUNT returns BIGINT on both engines;
-    the SUM is mirrored ::DOUBLE in DuckDB (its BIGINT sum promotes to
-    HUGEINT — the r4 dtype lesson)."""
-    from re_shacl_spark.validate.sparql import sparql_query
-
-    cust = _read(spark, sf_dir, "customer")
-    k = F.col("c_custkey")
-    cents = F.floor(F.col("c_acctbal") * 100).cast("long").cast("string")
-    t = _rows(cust, _iri("c:", k), "kg:inNation",
-              _iri("n:", F.col("c_nationkey"))).unionByName(
-        _lit_rows(cust, _iri("c:", k), "kg:bal", cents,
-                  F.lit(vocab.XSD + "integer"))
-    )
-    return sparql_query(t, """
-        SELECT ?n (COUNT(*) AS ?cnt) (SUM(?b) AS ?total)
-        WHERE { ?c kg:inNation ?n . ?c kg:bal ?b }
-        GROUP BY ?n HAVING (?cnt > 10)
-    """)
-
-
-SQL_BGP_TEXT_AGGREGATE = """SELECT 'n:'||c_nationkey::varchar AS n,
-count(*)::BIGINT AS cnt,
-sum(floor(c_acctbal * 100)::BIGINT)::DOUBLE AS total
-FROM customer GROUP BY 1 HAVING count(*) > 10"""
-
-
-QUERIES["bgp_text_aggregate"] = q_bgp_text_aggregate
-ORACLES["bgp_text_aggregate"] = SQL_BGP_TEXT_AGGREGATE
-
-
-def q_bgp_text_path(spark, sf_dir):
-    """SPARQL §9 property paths in the TEXT fragment: a sequence path
-    (customer → nation → region) plus an inverse step, parsed from the
-    query string into query.Path (validate/sparql._P.pred — recursive
-    descent mirroring query.parse_path's grammar) and evaluated by the
-    engine's virtual-predicate path machinery — hash equi-joins per step,
-    never per-row recursion."""
-    from re_shacl_spark.validate.sparql import sparql_query
-
-    cust = _read(spark, sf_dir, "customer")
-    nat = _read(spark, sf_dir, "nation")
-    t = (
-        _rows(cust, _iri("c:", F.col("c_custkey")), "kg:inNation",
-              _iri("n:", F.col("c_nationkey")))
-        .unionByName(_rows(nat, _iri("n:", F.col("n_nationkey")), "kg:inRegion",
-                           _iri("r:", F.col("n_regionkey"))))
-    )
-    return sparql_query(t, """
-        SELECT ?c ?r WHERE { ?c kg:inNation/kg:inRegion ?r . }
-    """)
-
-
-SQL_BGP_TEXT_PATH = """SELECT 'c:'||c_custkey::varchar AS c,
-'r:'||n_regionkey::varchar AS r
-FROM customer JOIN nation ON c_nationkey = n_nationkey"""
-
-
-QUERIES["bgp_text_path"] = q_bgp_text_path
-ORACLES["bgp_text_path"] = SQL_BGP_TEXT_PATH
 
 
 # ---------------------------------------------------------------------------
@@ -1986,36 +1746,6 @@ QUERIES["bgp_minus_filter"] = q_bgp_minus_filter
 ORACLES["bgp_minus_filter"] = SQL_BGP_MINUS_FILTER
 
 
-def q_bgp_union(spark, sf_dir):
-    """SPARQL UNION over branches with DIFFERENT variable domains: entities
-    with a resolved nation+region chain, unioned with bare supplier typings
-    (whose n/r stay unbound → null).  Each branch is an independent
-    predicate-pruned join tree; the union itself is a zero-shuffle
-    concatenation (query.py::union), the final DISTINCT is the only
-    exchange."""
-    from re_shacl_spark.query import union
-
-    t = rel_triples(spark, sf_dir)
-    return union(
-        t,
-        [
-            [("?e", "kg:inNation", "?n"), ("?n", "kg:inRegion", "?r")],
-            [("?e", TYPE, "kg:Supplier")],
-        ],
-        select=["e", "n", "r"],
-        distinct=True,
-    )
-
-
-SQL_BGP_UNION = f"""WITH {REL_TRIPLES_CTE.strip()}
-SELECT a.s AS e, a.o AS n, b.o AS r
-FROM base a JOIN base b ON b.s = a.o AND b.p = 'kg:inRegion'
-WHERE a.p = 'kg:inNation'
-UNION
-SELECT s AS e, NULL::varchar AS n, NULL::varchar AS r
-FROM base WHERE p = '{TYPE}' AND o = 'kg:Supplier'"""
-
-
 def q_bgp_values(spark, sf_dir):
     """SPARQL VALUES with UNDEF: customers with their nation, constrained by
     an inline binding table — two rows pin ?n (UNDEF ?c), one row pins ?c
@@ -2045,54 +1775,8 @@ UNION ALL
 SELECT c, n FROM sol WHERE c = 'c:5'"""
 
 
-def q_bgp_ask(spark, sf_dir):
-    """SPARQL ASK (both polarities): existence checks evaluate via isEmpty —
-    one partition's first row, never a materialized match (query.py::ask)."""
-    from re_shacl_spark.query import ask
-
-    t = rel_triples(spark, sf_dir)
-    yes = ask(t, [("?c", TYPE, "kg:Customer"), ("?c", "kg:inNation", "n:1")])
-    no = ask(t, [("?x", TYPE, "kg:Region")])  # no region typings in the KG
-    return local_frame(
-        spark,
-        [("has_customer_in_n1", yes), ("has_region_type", no)],
-        "q string, answer boolean",
-    )
-
-
-SQL_BGP_ASK = f"""WITH {REL_TRIPLES_CTE.strip()}
-SELECT 'has_customer_in_n1' AS q, EXISTS(
-  SELECT 1 FROM base a JOIN base b ON b.s = a.s
-  WHERE a.p = '{TYPE}' AND a.o = 'kg:Customer'
-    AND b.p = 'kg:inNation' AND b.o = 'n:1') AS answer
-UNION ALL
-SELECT 'has_region_type', EXISTS(
-  SELECT 1 FROM base WHERE p = '{TYPE}' AND o = 'kg:Region')"""
-
-
-def q_describe_node(spark, sf_dir):
-    """SPARQL DESCRIBE: the full triple neighborhood (subject or object side)
-    of n:1 and r:0 — two IN-filtered scans unioned, one distinct exchange
-    (query.py::describe)."""
-    from re_shacl_spark.query import describe
-
-    t = rel_triples(spark, sf_dir)
-    return describe(t, ["n:1", "r:0"]).select("s", "p", "o").distinct()
-
-
-SQL_DESCRIBE_NODE = f"""WITH {REL_TRIPLES_CTE.strip()}
-SELECT DISTINCT s, p, o FROM base
-WHERE s IN ('n:1', 'r:0') OR o IN ('n:1', 'r:0')"""
-
-
-QUERIES["bgp_union"] = q_bgp_union
 QUERIES["bgp_values"] = q_bgp_values
-QUERIES["bgp_ask"] = q_bgp_ask
-QUERIES["describe_node"] = q_describe_node
-ORACLES["bgp_union"] = SQL_BGP_UNION
 ORACLES["bgp_values"] = SQL_BGP_VALUES
-ORACLES["bgp_ask"] = SQL_BGP_ASK
-ORACLES["describe_node"] = SQL_DESCRIBE_NODE
 
 
 def q_bgp_aggregate(spark, sf_dir):
@@ -2212,54 +1896,6 @@ AND EXISTS (SELECT 1 FROM base b JOIN base c2 ON c2.s = b.s
 AND NOT EXISTS (SELECT 1 FROM base d WHERE d.p = 'kg:next' AND d.s = a.s)"""
 
 
-def q_bgp_subselect(spark, sf_dir):
-    """SPARQL 1.1 subquery (§12): the outer per-nation customer count joins a
-    subselect's per-region total on the shared ?r (query.py::join_solutions,
-    the §18.5 Join node), keeping nations whose customer count
-    is at least their region's per-nation mean — integer-only (5·n ≥ total)
-    so the row set is bit-stable at every sf.  Scale shape: both arms are
-    map-side-combined hash aggregates; the subselect is region-cardinality
-    rows, so AQE broadcasts it and the outer frame never re-shuffles."""
-    from re_shacl_spark.query import aggregate, bgp, join_solutions
-
-    t = rel_triples(spark, sf_dir)
-    outer = aggregate(
-        bgp(t, [
-            ("?c", TYPE, "kg:Customer"),
-            ("?c", "kg:inNation", "?n"),
-            ("?n", "kg:inRegion", "?r"),
-        ]),
-        ["n", "r"],
-        {"n_cust": ("count", "*")},
-    )
-    inner = aggregate(
-        bgp(t, [
-            ("?c2", TYPE, "kg:Customer"),
-            ("?c2", "kg:inNation", "?n2"),
-            ("?n2", "kg:inRegion", "?r"),
-        ]),
-        ["r"],
-        {"region_cust": ("count", "*")},
-    )
-    out = join_solutions(outer, inner)
-    return out.filter(F.col("n_cust") * 5 >= F.col("region_cust")).select(
-        "n", "r", "n_cust", "region_cust"
-    )
-
-
-SQL_BGP_SUBSELECT = """WITH per_n AS (
-  SELECT c_nationkey, count(*) AS n_cust FROM customer GROUP BY 1),
-per_r AS (
-  SELECT n.n_regionkey, count(*) AS region_cust
-  FROM customer c JOIN nation n ON n.n_nationkey = c.c_nationkey GROUP BY 1)
-SELECT 'n:'||n.n_nationkey::varchar AS n, 'r:'||n.n_regionkey::varchar AS r,
-pn.n_cust::BIGINT AS n_cust, pr.region_cust::BIGINT AS region_cust
-FROM nation n
-JOIN per_n pn ON pn.c_nationkey = n.n_nationkey
-JOIN per_r pr ON pr.n_regionkey = n.n_regionkey
-WHERE 5 * pn.n_cust >= pr.region_cust"""
-
-
 QUERIES["bgp_aggregate"] = q_bgp_aggregate
 QUERIES["bgp_group_concat"] = q_bgp_group_concat
 QUERIES["bgp_order_limit"] = q_bgp_order_limit
@@ -2268,36 +1904,6 @@ ORACLES["bgp_aggregate"] = SQL_BGP_AGGREGATE
 ORACLES["bgp_group_concat"] = SQL_BGP_GROUP_CONCAT
 ORACLES["bgp_order_limit"] = SQL_BGP_ORDER_LIMIT
 ORACLES["bgp_bind_exists"] = SQL_BGP_BIND_EXISTS
-QUERIES["bgp_subselect"] = q_bgp_subselect
-ORACLES["bgp_subselect"] = SQL_BGP_SUBSELECT
-
-
-def q_construct_region_member(spark, sf_dir):
-    """SPARQL CONSTRUCT: flatten the customer→nation→region chain into direct
-    kg:inRegion edges plus a kg:RegionMember typing — the match runs once, the
-    two template triples are column-projections of the same binding frame
-    (query.py::construct)."""
-    from re_shacl_spark.query import construct
-
-    t = rel_triples(spark, sf_dir)
-    return construct(
-        t,
-        [("?c", TYPE, "kg:Customer"), ("?c", "kg:inNation", "?n"),
-         ("?n", "kg:inRegion", "?r")],
-        [("?c", "kg:inRegion", "?r"), ("?c", TYPE, "kg:RegionMember")],
-    )
-
-
-SQL_CONSTRUCT_REGION = f"""WITH {REL_TRIPLES_CTE.strip()},
-m AS (SELECT a.s AS c, b.o AS r FROM base a
-      JOIN base b ON b.s = a.o AND b.p = 'kg:inRegion'
-      WHERE a.p = 'kg:inNation' AND a.s LIKE 'c:%')
-SELECT DISTINCT c AS s, 'kg:inRegion' AS p, r AS o FROM m
-UNION SELECT DISTINCT c, '{TYPE}', 'kg:RegionMember' FROM m"""
-
-
-QUERIES["construct_region_member"] = q_construct_region_member
-ORACLES["construct_region_member"] = SQL_CONSTRUCT_REGION
 
 
 def q_bgp_graph_comention(spark, sf_dir):
@@ -2334,37 +1940,6 @@ FROM m x JOIN m y ON x.url = y.url AND x.mi < y.mi"""
 
 QUERIES["bgp_graph_comention"] = q_bgp_graph_comention
 ORACLES["bgp_graph_comention"] = SQL_BGP_GRAPH_COMENTION
-
-
-def q_kg_serialize_nquads(spark, sf_dir):
-    """N-Quads round-trip (model/serialize.py::write_nquads/read_nquads):
-    the provenance-preserving sink — page-level mention triples go to disk
-    WITH their named graph (src_url) and come back identical, unlike the
-    N-Triples sink which drops lineage by construction (reference serialize
-    sites run_experiment.py:69,120 keep no provenance either).  Pure column
-    algebra both ways; one scan out, one regex parse back."""
-    import tempfile
-
-    from re_shacl_spark.model.serialize import read_nquads, write_nquads
-
-    pages = extract_text(_doc_pages(spark, sf_dir))
-    m = detect_mentions(pages, MENTION_ALIASES, skip_empty_lang=False)
-    t = emit_triples(m).filter(F.col("p") == _KG_NS + "mentions")
-    path = tempfile.mkdtemp(prefix="re_shacl_nq_") + "/graph.nq"
-    write_nquads(t, path)
-    back = read_nquads(spark, path)
-    return back.select("s", "p", "o", F.col("src_url").alias("g"))
-
-
-SQL_KG_SERIALIZE_NQ = f"""WITH m0 AS ({_sql_mentions_cte()}),
-m AS (SELECT url, alias FROM m0 WHERE n > 0)
-SELECT '{_PAGE_PREFIX}'||sha256(url) AS s, '{_KG_NS}mentions' AS p,
-'{_MENTION_PREFIX}'||alias AS o, url AS g
-FROM m"""
-
-
-QUERIES["kg_serialize_nquads"] = q_kg_serialize_nquads
-ORACLES["kg_serialize_nquads"] = SQL_KG_SERIALIZE_NQ
 
 
 def q_v_complex_path(spark, sf_dir):
@@ -2485,116 +2060,6 @@ QUERIES["v_delta_incremental"] = q_v_delta_incremental
 ORACLES["v_delta_incremental"] = SQL_V_DELTA_INCREMENTAL
 
 
-def q_stream_validate(spark, sf_dir):
-    """Continuously-maintained validation report: two streamed increments
-    (batch 1 = targets + ~6/7 of orders + 2/3 of segments; batch 2 = the
-    held-back edges) fold into the fused state per micro-batch, and the
-    violations report is maintained INCREMENTALLY alongside it (merge-free
-    batches re-validate only delta-affected foci — streaming/fusion.py
-    _maintained_report + validate/incremental.py).  Final report must equal
-    full validation over everything: the v_delta oracle."""
-    import tempfile
-
-    from re_shacl_spark.streaming.fusion import load_violations, run_streaming_fusion
-
-    base = tempfile.mkdtemp(prefix="re_shacl_sv_")
-    tdir, sdir, ckpt = f"{base}/t", f"{base}/state", f"{base}/ckpt"
-    cust = _read(spark, sf_dir, "customer")
-    orders = _read(spark, sf_dir, "orders")
-    ordered = _rows(orders, _iri("c:", F.col("o_custkey")), "kg:ordered", _iri("o:", F.col("o_orderkey")))
-    seg = _lit_rows(cust, _iri("c:", F.col("c_custkey")), "kg:segment", F.col("c_mktsegment"), F.lit(XSD_STRING))
-    b1, b2 = _delta_split(
-        _cust_targets(spark, sf_dir).unionByName(ordered).unionByName(seg),
-        ((F.col("p") == "kg:ordered") & (F.expr("try_cast(substring(o, 3) as long)") % 7 == 0))
-        | ((F.col("p") == "kg:segment") & (F.expr("try_cast(substring(s, 3) as long)") % 3 == 0)),
-    )
-    shapes = [NodeShape(
-        "sh:CustShape", target_classes=["kg:Customer"],
-        properties=[
-            PropertyConstraint(path="kg:ordered", min_count=2),
-            PropertyConstraint(path="kg:segment", in_values=list(_SEG_OK)),
-        ],
-    )]
-    b1.write.parquet(f"{tdir}/b1")
-    run_streaming_fusion(spark, tdir + "/*", sdir, ckpt, shapes=shapes)
-    b2.write.parquet(f"{tdir}/b2")
-    run_streaming_fusion(spark, tdir + "/*", sdir, ckpt, shapes=shapes)
-    return load_violations(spark, sdir)
-
-
-QUERIES["stream_validate"] = q_stream_validate
-ORACLES["stream_validate"] = SQL_V_DELTA_INCREMENTAL
-
-
-# ---------------------------------------------------------------------------
-# entity-link disambiguation by page-level embedding coherence
-# (extract/linking.py): ambiguous aliases resolve to the candidate whose
-# embedding best matches the page's candidate centroid, weighted by prior
-# ---------------------------------------------------------------------------
-
-AMBIG_ALIASES: list[tuple[str, str, float]] = [
-    ("spark", "e:1", 0.9), ("spark", "e:2", 0.7),
-    ("table", "e:3", 1.0), ("table", "e:4", 0.9),
-    ("customer", "e:5", 0.8),
-    ("window", "e:6", 0.6), ("window", "e:7", 0.9),
-    ("value", "e:8", 1.0),
-]
-
-
-def q_kg_link_disambiguate(spark, sf_dir):
-    """Ambiguous mention candidates over the documents corpus, resolved by
-    coherence against the page's embedding centroid (extract/linking.py) —
-    pure column algebra: posexplode, two keyed aggregations, one argmax
-    window.  Entity ids map to embeddings.vec_id rows."""
-    from re_shacl_spark.extract.linking import coherence_disambiguate
-
-    pages = extract_text(_doc_pages(spark, sf_dir))
-    m = detect_mentions(pages, AMBIG_ALIASES, skip_empty_lang=False, all_candidates=True)
-    cand = mention_pairs(m).select(
-        "url", "alias", "entity", F.col("score").alias("prior")
-    )
-    emb = _read(spark, sf_dir, "embeddings").select(
-        F.concat(F.lit("e:"), F.col("vec_id")).alias("entity"),
-        F.col("embedding").cast("array<double>").alias("emb"),
-    )
-    return coherence_disambiguate(cand, emb)
-
-
-def _sql_ambig_cte() -> str:
-    parts = [
-        f"""SELECT 'https://d/'||doc_id::varchar AS url, '{a}' AS alias, '{e}' AS entity,
-{p} AS prior,
-len(regexp_extract_all(lower(trim(regexp_replace(coalesce(text,''), '{SQL_PY_WSP}', ' ', 'g'))), '\\b{a}\\b'))::BIGINT AS n
-FROM documents"""
-        for a, e, p in AMBIG_ALIASES
-    ]
-    return " UNION ALL ".join(parts)
-
-
-SQL_KG_LINK_DISAMBIGUATE = f"""WITH m AS ({_sql_ambig_cte()}),
-cand AS (SELECT DISTINCT url, alias, entity, prior FROM m WHERE n > 0),
-ce AS (SELECT 'e:'||vec_id AS entity, embedding::DOUBLE[] AS v FROM embeddings),
-pe AS (SELECT DISTINCT url, entity FROM cand),
-un AS (SELECT url, entity, generate_subscripts(v, 1) AS idx, unnest(v) AS val
-       FROM pe JOIN ce USING(entity)),
-cent AS (SELECT url, idx, avg(val) AS c FROM un GROUP BY url, idx),
-d AS (SELECT un.url, un.entity, sum(val * c) AS dot,
-             sqrt(sum(val * val)) AS nv, sqrt(sum(c * c)) AS nc
-      FROM un JOIN cent ON cent.url = un.url AND cent.idx = un.idx
-      GROUP BY un.url, un.entity),
-s AS (SELECT cand.url, cand.alias, cand.entity,
-             round(prior * (1 + CASE WHEN nv > 0 AND nc > 0
-                                     THEN dot / (nv * nc) ELSE 0 END) / 2, 6) AS score
-      FROM cand JOIN d ON d.url = cand.url AND d.entity = cand.entity),
-w AS (SELECT *, row_number() OVER (PARTITION BY url, alias
-                                   ORDER BY score DESC, entity) AS rn FROM s)
-SELECT url, alias, entity, score FROM w WHERE rn = 1"""
-
-
-QUERIES["kg_link_disambiguate"] = q_kg_link_disambiguate
-ORACLES["kg_link_disambiguate"] = SQL_KG_LINK_DISAMBIGUATE
-
-
 # ---------------------------------------------------------------------------
 # incremental fusion (pipeline.fuse_delta): the crawl-increment entry point —
 # close a base KG, then extend it with held-back ABox rows; the final state
@@ -2616,36 +2081,6 @@ def q_kg_fuse_delta(spark, sf_dir):
 
 QUERIES["kg_fuse_delta"] = q_kg_fuse_delta
 ORACLES["kg_fuse_delta"] = SQL_KG_FUSE
-
-
-# ---------------------------------------------------------------------------
-# streaming KG maintenance (streaming/fusion.py): the fused graph kept current
-# per micro-batch via fuse_delta — final state must equal one batch fusion
-# over everything, so the oracle is SQL_KG_FUSE again
-# ---------------------------------------------------------------------------
-
-def q_stream_fuse(spark, sf_dir):
-    """Two-increment streaming fusion over the relational KG: batch 1 carries
-    the TBox + ~6/7 of the ABox, batch 2 the held-back placedBy edges and the
-    n:12 kg:next bridge.  foreachBatch folds each increment into the versioned
-    fused state (exactly-once via checkpoint log + pointer swap); the final
-    state equals full fusion (streaming/fusion.py, pipeline.fuse_delta)."""
-    import tempfile
-
-    from re_shacl_spark.streaming.fusion import run_streaming_fusion
-
-    base = tempfile.mkdtemp(prefix="re_shacl_sf_")
-    tdir, sdir, ckpt = f"{base}/t", f"{base}/state", f"{base}/ckpt"
-    b1, b2 = _delta_split(rel_triples(spark, sf_dir), _placed_by_delta_cond())
-    b1.write.parquet(f"{tdir}/b1")
-    run_streaming_fusion(spark, tdir + "/*", sdir, ckpt)
-    b2.write.parquet(f"{tdir}/b2")
-    res = run_streaming_fusion(spark, tdir + "/*", sdir, ckpt)
-    return _spo(res.triples)
-
-
-QUERIES["stream_fuse"] = q_stream_fuse
-ORACLES["stream_fuse"] = SQL_KG_FUSE
 
 
 # ---------------------------------------------------------------------------
@@ -2689,58 +2124,6 @@ FROM customer WHERE c_mktsegment NOT IN ('AUTOMOBILE','BUILDING','MACHINERY')"""
 
 QUERIES["v_severity"] = q_v_severity
 ORACLES["v_severity"] = SQL_V_SEVERITY
-
-
-# ---------------------------------------------------------------------------
-# SPARQL term-accessor builtins (query.py: term_lang / term_datatype /
-# term_is_iri / term_is_literal): LANG(), DATATYPE(), isIRI() usable inside
-# bgp(..., where=/bind=) while the hidden term-identity companions are in
-# scope — RDF 1.1 semantics (plain → xsd:string, lang-tagged →
-# rdf:langString, IRIs → unbound datatype).
-# ---------------------------------------------------------------------------
-
-def q_bgp_term_funcs(spark, sf_dir):
-    """Two accessor-driven selections unioned: (a) customers' language-tagged
-    labels kept by FILTER(LANG(?v) = 'en') with BIND(DATATYPE(?v)) —
-    rdf:langString; (b) mixed-kind kg:ref objects kept by FILTER(isIRI(?x)) —
-    datatype unbound (null).  The literal/IRI split rides the custkey parity
-    so the DuckDB mirror derives it relationally."""
-    from re_shacl_spark.query import bgp, term_datatype, term_is_iri, term_lang
-
-    cust = _read(spark, sf_dir, "customer")
-    k = F.col("c_custkey")
-    lang = F.when(k % 2 == 0, F.lit("en")).otherwise(F.lit("de"))
-    labels = _lang_rows(cust, _iri("c:", k), "kg:label", F.col("c_name"), lang)
-    ref_lit = _lit_rows(cust.filter(k % 2 == 0), _iri("c:", k), "kg:ref",
-                        F.col("c_mktsegment"), F.lit(XSD_STRING))
-    ref_iri = _rows(cust.filter(k % 2 == 1), _iri("c:", k), "kg:ref",
-                    _iri("n:", F.col("c_nationkey")))
-    t = labels.unionByName(ref_lit).unionByName(ref_iri)
-    en = bgp(
-        t, [("?c", "kg:label", "?v")],
-        bind={"lang": term_lang("v"), "dt": term_datatype("v")},
-        where=term_lang("v") == "en",
-        select=["c", "v", "lang", "dt"],
-    )
-    iris = bgp(
-        t, [("?c", "kg:ref", "?v")],
-        bind={"lang": term_lang("v"), "dt": term_datatype("v")},
-        where=term_is_iri("v"),
-        select=["c", "v", "lang", "dt"],
-    )
-    return en.unionByName(iris)
-
-
-SQL_BGP_TERM_FUNCS = f"""SELECT 'c:'||c_custkey::varchar AS c, c_name AS v,
-'en' AS lang, '{vocab.RDF}langString' AS dt
-FROM customer WHERE c_custkey % 2 = 0
-UNION ALL
-SELECT 'c:'||c_custkey::varchar, 'n:'||c_nationkey::varchar, '', NULL
-FROM customer WHERE c_custkey % 2 = 1"""
-
-
-QUERIES["bgp_term_funcs"] = q_bgp_term_funcs
-ORACLES["bgp_term_funcs"] = SQL_BGP_TERM_FUNCS
 
 
 def q_bgp_string_funcs(spark, sf_dir):

@@ -120,38 +120,6 @@ def term_is_literal(var: str) -> Column:
     return F.col(var + _TAG).startswith("L|")
 
 
-def _tag_part(var: str, idx: int) -> Column:
-    # "L|<dtype>|<lang>" → ["L", dtype, lang]; limit=3 keeps any '|' in the
-    # dtype IRI out of the lang slot (none of our vocab has one, but cheap)
-    return F.element_at(F.split(F.col(var + _TAG), r"\|", 3), idx)
-
-
-def term_lang(var: str) -> Column:
-    """SPARQL ``LANG(?var)``: the language tag of a literal binding, ``''``
-    for plain/typed literals AND for IRIs (SPARQL raises a type error on
-    non-literals, which a FILTER treats as false — returning ``''`` gives the
-    same FILTER behavior for equality/langMatches tests without a null
-    branch)."""
-    return F.when(term_is_literal(var), F.coalesce(_tag_part(var, 3), F.lit(""))).otherwise(
-        F.lit("")
-    )
-
-
-def term_datatype(var: str) -> Column:
-    """SPARQL ``DATATYPE(?var)`` under RDF 1.1: the literal's datatype IRI,
-    ``rdf:langString`` for language-tagged literals, ``xsd:string`` for plain
-    literals, null (unbound/error) for IRIs."""
-    from re_shacl_spark.model.triples import vocab
-
-    dtype, lang = _tag_part(var, 2), _tag_part(var, 3)
-    return F.when(
-        term_is_literal(var),
-        F.when(lang != "", F.lit(vocab.RDF + "langString")).otherwise(
-            F.when(dtype != "", dtype).otherwise(F.lit(vocab.XSD + "string"))
-        ),
-    )
-
-
 def _bind(df: DataFrame, term_cols: list[tuple[str, str, Column]]) -> DataFrame:
     """Bind pattern terms to the frame's columns: constants filter, variables
     project — plus a term-identity companion per variable (a repeated
@@ -397,101 +365,6 @@ def _apply_values(out: DataFrame, values: tuple[list[str], list[tuple]]) -> Data
     for p_ in parts[1:]:
         joined = joined.unionByName(p_)
     return joined
-
-
-def union(
-    triples: DataFrame,
-    branches: list[list[Pattern]],
-    select: list[str] | None = None,
-    distinct: bool = False,
-    allow_cross: bool = False,
-) -> DataFrame:
-    """SPARQL UNION: evaluate each branch BGP independently and take the
-    multiset union of their solutions.  Branches may bind different variable
-    sets — a variable absent from a branch is null in that branch's rows
-    (``unionByName(allowMissingColumns=True)``), exactly SPARQL's unbound.
-    ``distinct=True`` gives SELECT DISTINCT over the union.
-
-    Scale shape: each branch is an independent predicate-pruned join tree;
-    the union is a zero-shuffle concatenation (Spark Union is narrow), so the
-    whole query costs the sum of its branches plus one exchange only when
-    ``distinct`` forces the final dedup."""
-    if not branches:
-        raise ValueError("empty UNION")
-    outs = [bgp(triples, b, allow_cross=allow_cross) for b in branches]
-    out = outs[0]
-    for o_ in outs[1:]:
-        out = out.unionByName(o_, allowMissingColumns=True)
-    if select:
-        out = out.select(*select)
-    return out.distinct() if distinct else out
-
-
-def join_solutions(
-    left: DataFrame,
-    right: DataFrame,
-    allow_cross: bool = False,
-) -> DataFrame:
-    """SPARQL Join of two solution multisets (§18.5 ``Join(Ω1, Ω2)``) — the
-    composition step a SPARQL 1.1 subquery (§12) needs: the outer group
-    pattern's solutions join the subselect's projected solutions on their
-    shared variables (rdflib evaluates the reference's ``graph.query``
-    subselects through exactly this algebra node).
-
-    Shared variables join on full term identity when BOTH frames still carry
-    a variable's hidden ``__t`` companion (frames from ``bgp(...,
-    _keep_tags=True)``); a frame that has dropped or never had them — the
-    common case, a subselect projecting GROUP BY keys and aggregate values —
-    joins on the visible string form, the same relaxation VALUES tables use.
-    With no shared variable SPARQL's Join degenerates to a cartesian
-    product, so the caller must opt in via ``allow_cross`` exactly like
-    ``bgp`` does.
-
-    Scale shape: one hash equi-join on the shared variables; a subselect is
-    an aggregate and therefore usually orders of magnitude smaller than the
-    outer pattern, so AQE turns this into a broadcast join at runtime — the
-    outer solution never re-shuffles."""
-    shared = sorted(set(left.columns) & set(right.columns))
-    visible = [c for c in shared if not c.endswith(_TAG)]
-    if not visible:
-        if not allow_cross:
-            raise ValueError(
-                "join_solutions: no shared variable (cartesian product) — "
-                "pass allow_cross=True if intended"
-            )
-        return left.crossJoin(right)
-    # a tag column participates only when both sides still have it
-    return left.join(right, visible + [c for c in shared if c.endswith(_TAG)])
-
-
-def ask(triples: DataFrame, patterns: list[Pattern], **kwargs) -> bool:
-    """SPARQL ASK: does at least one solution exist?  Evaluates the BGP
-    (same kwargs as ``bgp``) lazily — Spark's ``isEmpty`` fetches a single
-    partition's first row when one exists, it does not materialize the
-    match (rdflib ``Graph.query('ASK …').askAnswer``)."""
-    return not bgp(triples, patterns, **kwargs).isEmpty()
-
-
-def describe(triples: DataFrame, nodes: list[str] | DataFrame) -> DataFrame:
-    """SPARQL DESCRIBE (concise-bounded subset): every triple whose subject
-    OR object is one of ``nodes`` — the standard resource-neighborhood dump
-    (rdflib serializes exactly this for ``DESCRIBE <iri>``).
-
-    ``nodes`` may be a literal list (becomes two IN filters evaluated in the
-    scan) or a single-column DataFrame of IRIs (two broadcast left-semi
-    joins — the DESCRIBE set is query-sized, never data-sized).  The s-side
-    and o-side scans are unioned then deduplicated: one exchange."""
-    if isinstance(nodes, DataFrame):
-        key = nodes.columns[0]
-        n = F.broadcast(nodes.select(F.col(key).alias("_n")).distinct())
-        s_side = triples.join(n, triples["s"] == n["_n"], "left_semi")
-        o_side = triples.join(n, triples["o"] == n["_n"], "left_semi")
-    else:
-        if not nodes:
-            raise ValueError("empty DESCRIBE node set")
-        s_side = triples.filter(F.col("s").isin(nodes))
-        o_side = triples.filter(F.col("o").isin(nodes))
-    return s_side.unionByName(o_side).distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -809,93 +682,6 @@ def eval_path(triples: DataFrame, expr, keep_meta: bool | str = False) -> DataFr
     return out.select("a", "b")
 
 
-def construct(
-    triples: DataFrame,
-    patterns: list[Pattern],
-    template: list[Pattern],
-    where: Column | None = None,
-    minus: list[Pattern] | None = None,
-    allow_cross: bool = False,
-) -> DataFrame:
-    """SPARQL CONSTRUCT: match the BGP, instantiate the template triples from
-    each binding — the query form that BUILDS graphs (rdflib
-    ``Graph.query('CONSTRUCT …')``; the reference materializes derived triples
-    through exactly this shape of rule, re_shacl.py's add() loops).
-
-    Each template pattern (s, p, o) may use matched variables or constants;
-    the result is one distinct (s, p, o) relation — the union of one
-    projection per template pattern over the binding frame, so the match runs
-    ONCE and fans out column-select-only (no extra joins or shuffles beyond
-    the final distinct)."""
-    bound = bgp(triples, patterns, where=where, minus=minus, allow_cross=allow_cross)
-    return _instantiate(bound, template, meta=False).distinct()
-
-
-def _instantiate(bound: DataFrame, template: list[Pattern], meta: bool) -> DataFrame:
-    """Instantiate triple templates from a binding frame — the fan-out step
-    of CONSTRUCT and of sh:rule inference (one column-select-only projection
-    per template pattern over the SAME match, unioned; no extra joins).
-
-    ``meta=False`` yields the CONSTRUCT relation (s, p, o string forms).
-    ``meta=True`` additionally reconstructs full term identity for the object
-    slot from the binding's hidden ``__t`` companion — ``o_lit`` struct,
-    ``is_lit`` flag and the ``_otag`` join key — so inferred triples can be
-    matched against the graph and literal-valued triples minted exactly
-    (requires a ``bgp(..., _keep_tags=True)`` frame; a plain-string template
-    constant is an IRI and a ``Lit(...)`` constant mints that exact literal,
-    same rule as pattern constants).  Templates are triples: a 4-slot (GRAPH)
-    template raises."""
-    if not template:
-        raise ValueError("empty template")
-    parts: list[DataFrame] = []
-    for pat in template:
-        if len(pat) != 3:
-            raise ValueError("templates are triples; GRAPH slots are not supported")
-        s, p, o = pat
-        if isinstance(p, Path):
-            raise ValueError("template predicates must be constants or variables")
-        cols = []
-        for term, name in ((s, "s"), (p, "p"), (o, "o")):
-            if _is_var(term):
-                v = term[1:]
-                if v not in bound.columns:
-                    raise ValueError(f"template variable ?{v} not bound by the pattern")
-                cols.append(F.col(v).alias(name))
-            elif isinstance(term, Lit):
-                if name != "o":
-                    raise ValueError(f"literal in template {name}-position")
-                cols.append(F.lit(term.lex).alias(name))
-            else:
-                cols.append(F.lit(term).alias(name))
-        if meta:
-            if _is_var(o) and (o[1:] + _TAG) in bound.columns:
-                tag = F.col(o[1:] + _TAG)
-            elif isinstance(o, Lit):
-                tag = F.lit(_const_form_tag(o)[1])
-            else:
-                tag = F.lit("I")
-            cols.append(tag.alias("_otag"))
-            cols.append(tag.startswith("L|").alias("is_lit"))
-        parts.append(bound.select(*cols))
-    out = parts[0]
-    for p_ in parts[1:]:
-        out = out.unionByName(p_)
-    if meta:
-        tag = F.col("_otag")
-        dtype = F.nullif(F.element_at(F.split(tag, r"\|", 3), 2), F.lit(""))
-        lang = F.nullif(F.element_at(F.split(tag, r"\|", 3), 3), F.lit(""))
-        out = out.withColumn(
-            "o_lit",
-            F.when(
-                tag.startswith("L|"),
-                F.struct(
-                    F.col("o").alias("lex"), dtype.alias("dtype"), lang.alias("lang")
-                ),
-            ),
-        )
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Aggregation and solution-sequence modifiers (SPARQL 1.1 §11 / §18.5).
 #
@@ -919,7 +705,8 @@ def aggregate(
     having: Column | None = None,
 ) -> DataFrame:
     """SPARQL GROUP BY + aggregates over a solution frame (the output of
-    ``bgp``/``union``).  ``aggs`` maps output aliases to specs:
+    ``bgp``, or the UNION of several in ``validate.sparql.evaluate``).
+    ``aggs`` maps output aliases to specs:
 
         ("count", "*")            COUNT(*)
         ("count", "v")            COUNT(?v)        — unbound (null) rows skipped

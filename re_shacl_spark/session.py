@@ -25,7 +25,7 @@ from pyspark.sql import SparkSession
 # entries, default 100.  One pass compiles more distinct classes than that:
 # with Spark's defaults on a 4-core VM (perfbench, seed 1), a crawl_increment
 # fold compiles 150-180 and a crawl_build run ~180, and every repeat of the
-# fold, e.g. each streaming micro-batch, recompiles about as many.  Under
+# fold, e.g. the next crawl increment, recompiles about as many.  Under
 # AQE a stage's codegen id follows the order in which other stages finish,
 # and the id is part of the class name, so the same stage code also compiled
 # again under each new id; spark.sql.codegen.useIdInClassName=false leaves

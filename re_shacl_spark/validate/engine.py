@@ -295,7 +295,6 @@ def validate(
     triples: DataFrame,
     shapes: list[NodeShape],
     tbox: TBoxIndex | None = None,
-    max_ref_depth: int | None = None,
     with_details: bool = False,
     _ref_sets: dict[str, DataFrame] | None = None,
     _extra_focus: dict[str, DataFrame] | None = None,
@@ -421,9 +420,9 @@ def validate(
         # the old max(3, len(shapes)) bound scheduled up to 30 refinement
         # sweeps on Shape_30 for nothing).  Cycles fall back to a fixpoint
         # bound — each sweep can only shrink the conforming sets.
-        depth = max_ref_depth if max_ref_depth is not None else _ref_dag_depth(shapes)
         g = _resolve_node_refs(
-            spark, triples, shapes, tbox, g, ref_shapes, depth, val_triples=val_triples
+            spark, triples, shapes, tbox, g, ref_shapes, _ref_dag_depth(shapes),
+            val_triples=val_triples,
         )
     else:
         g = g.withColumn("_ref_ok", F.lit(True))

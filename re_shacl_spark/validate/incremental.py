@@ -135,6 +135,24 @@ def _affected_foci(
     return affected
 
 
+def _reject_merged_base_nodes(base: DataFrame, delta: DataFrame) -> None:
+    """A fused delta's owl:sameAs rows are (rep, owl:sameAs, member).  If a
+    member already occurs in the base, the fused graph renamed it to its rep,
+    but the base still holds its pre-merge rows: ``base ∪ delta`` is then not
+    the fused graph, and a re-check would report the stale member.  A member
+    that occurs only in the delta leaves the base intact."""
+    members = delta.filter(F.col("p") == vocab.SAMEAS).select(F.col("o").alias("node"))
+    nodes = base.select(F.col("s").alias("node")).unionByName(
+        base.filter(~F.col("is_lit")).select(F.col("o").alias("node"))
+    )
+    if not nodes.join(F.broadcast(members.distinct()), "node", "left_semi").isEmpty():
+        raise ValueError(
+            "validate_delta: the delta merges nodes of the base through "
+            "owl:sameAs, so base ∪ delta still holds their pre-merge rows; "
+            "validate the fused graph in full"
+        )
+
+
 def validate_delta(
     spark: SparkSession,
     base: DataFrame,
@@ -155,14 +173,23 @@ def validate_delta(
     the whole graph (e.g. an anti-join of the fused graph against the base),
     so it is materialized once, at entry: every use below — the subClassOf
     count, the affected-foci seeds and every branch of the re-validation —
-    reads the checkpoint, and that one job also counts the subClassOf and
-    rdf:type rows.  With no rdf:type row in the delta, the sh:class hop of
-    the affected-foci derivation (a scan of every class-constrained path's
-    edges) is skipped: no value's types changed.
+    reads the checkpoint, and that one job also counts the subClassOf,
+    rdf:type and owl:sameAs rows.  With no rdf:type row in the delta, the
+    sh:class hop of the affected-foci derivation (a scan of every
+    class-constrained path's edges) is skipped: no value's types changed.
+
+    Raises ``ValueError`` when the delta's owl:sameAs rows merge a node the
+    base already holds: the base then keeps that node's pre-merge rows, so
+    only a full ``validate`` of the fused graph is correct.
     """
     delta, delta_counts = materialize(
-        delta, subclass=F.col("p") == vocab.SUBCLASS, typed=F.col("p") == vocab.TYPE
+        delta,
+        subclass=F.col("p") == vocab.SUBCLASS,
+        typed=F.col("p") == vocab.TYPE,
+        same_as=F.col("p") == vocab.SAMEAS,
     )
+    if delta_counts["same_as"] > 0:
+        _reject_merged_base_nodes(base, delta)
     full = base.unionByName(delta)
     # sh:sparql constraints and SHACL-AF sh:target queries join arbitrary
     # patterns — a delta edge can flip a solution (or pull in a focus) that

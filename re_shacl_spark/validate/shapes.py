@@ -119,10 +119,9 @@ class NodeShape:
     # sh:sparql SPARQL-based constraints (SHACL §5) — restricted SELECT
     # fragment, compiled and evaluated by validate/sparql.py
     sparql_constraints: list = field(default_factory=list)
-    # SHACL-AF: custom SPARQL targets (sh:target [sh:select "SELECT ?this…"])
-    # and inference rules (sh:rule [a sh:SPARQLRule; sh:construct "…"])
+    # SHACL-AF custom SPARQL targets (sh:target [sh:select "SELECT ?this…"]);
+    # sh:rule is not compiled: validation applies no inference
     sparql_targets: list = field(default_factory=list)
-    rules: list = field(default_factory=list)
 
 
 def _collect_list(pox: dict, head: str) -> list[str]:
@@ -356,14 +355,6 @@ def compile_shapes(shape_triples: list[tuple]) -> list[NodeShape]:
             if sel:
                 ns.sparql_targets.append(SparqlConstraint(
                     select=sel[0], prefixes=dict(declared_prefixes),
-                ))
-        # SHACL-AF rules: sh:rule [ a sh:SPARQLRule ; sh:construct """…""" ]
-        for rnode in po.get(SH + "rule", []):
-            rp = pox.get(rnode, {})
-            con = rp.get(SH + "construct")
-            if con and not (rp.get(SH + "deactivated", ["false"])[0] in ("true", "1")):
-                ns.rules.append(SparqlConstraint(
-                    select=con[0], prefixes=dict(declared_prefixes),
                 ))
         shapes.append(ns)
     # a sh:qualifiedValueShape naming a DECLARED NodeShape resolves membership

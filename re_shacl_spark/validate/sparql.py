@@ -66,7 +66,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from re_shacl_spark.model.triples import materialize, vocab
+from re_shacl_spark.model.triples import vocab
 
 
 @dataclass(frozen=True)
@@ -80,8 +80,8 @@ class SparqlConstraint:
 
 @dataclass
 class Group:
-    """One group pattern's contents — the shared body of a WHERE group, a
-    UNION branch, or a CONSTRUCT's WHERE."""
+    """One group pattern's contents — the body of a WHERE group or of one
+    UNION branch."""
 
     patterns: list = field(default_factory=list)       # required triple patterns
     filters: list = field(default_factory=list)        # FILTER expr ASTs
@@ -503,13 +503,10 @@ class _P:
         return [g]
 
 
-def parse_select(
-    text: str,
-    prefixes: dict[str, str] | None = None,
-    require_this: bool = True,
-) -> ParsedSelect:
-    """``require_this`` is the constraint-context contract ($this must be
-    pre-bindable); ``sparql_query`` relaxes it for free-standing queries."""
+def parse_select(text: str, prefixes: dict[str, str] | None = None) -> ParsedSelect:
+    """Parse one sh:select body.  Every WHERE group must mention $this and
+    the projection must include it (SHACL §5.3.1): the constraint context
+    pre-binds $this to the shape's focus nodes."""
     p = _P(_tokens(text), prefixes or {})
     _parse_prefix_decls(p)
     p.expect("word", "SELECT")
@@ -614,9 +611,9 @@ def parse_select(
     for g in groups:
         if not g.patterns:
             raise ValueError("sh:sparql: empty WHERE block")
-        if require_this and not any("?this" in pat for pat in g.patterns):
+        if not any("?this" in pat for pat in g.patterns):
             raise ValueError("sh:sparql: WHERE must mention $this")
-    if require_this and not star and "this" not in sel:
+    if not star and "this" not in sel:
         # SHACL §5.3.1: each solution's $this is the focus node it reports on
         raise ValueError("sh:sparql: SELECT must project $this")
     if aggs:
@@ -715,117 +712,6 @@ def compile_filter(node) -> Column:
     raise ValueError(f"sh:sparql: not a boolean expression: {node!r}")
 
 
-@dataclass
-class ParsedConstruct:
-    """CONSTRUCT { template } WHERE { … } in the same restricted fragment."""
-
-    template: list[tuple]
-    group: Group
-    prefixes: dict[str, str]
-
-    @property
-    def patterns(self):
-        return self.group.patterns
-
-    @property
-    def filters(self):
-        return self.group.filters
-
-    @property
-    def optionals(self):
-        return self.group.optionals
-
-
-def parse_construct(
-    text: str,
-    prefixes: dict[str, str] | None = None,
-    require_this: bool = True,
-) -> ParsedConstruct:
-    """Parse a SHACL-AF sh:construct rule body (SHACL-AF §8 SPARQLRule):
-    CONSTRUCT { t … } WHERE { t … FILTER(…) OPTIONAL{…} } over the same
-    restricted grammar as parse_select; $this in the template mints per-focus
-    triples.  PREFIX declarations and sh:declare'd prefixes both apply."""
-    p = _P(_tokens(text), prefixes or {})
-    _parse_prefix_decls(p)
-    p.expect("word", "CONSTRUCT")
-    p.expect("op", "{")
-    template = []
-    while p.peek() != ("op", "}"):
-        template.append((p.term(), p.term(), p.term()))
-        if p.peek() == ("op", "."):
-            p.next()
-    p.expect("op", "}")
-    if not template:
-        raise ValueError("sh:construct: empty template")
-    # the WHERE group shares the SELECT body grammar (incl. FILTER [NOT]
-    # EXISTS, MINUS, VALUES), minus UNION branches
-    p.expect("word", "WHERE")
-    p.expect("op", "{")
-    body = p.group_body()
-    p.expect("op", "}")
-    if p.peek()[0] != "eof":
-        raise ValueError(f"sh:construct: unexpected trailing token {p.peek()[1]!r}")
-    if not body.patterns:
-        raise ValueError("sh:construct: empty WHERE block")
-    if require_this and not any("?this" in pat for pat in body.patterns):
-        raise ValueError("sh:construct: WHERE must mention $this")
-    return ParsedConstruct(template, body, p.prefixes)
-
-
-def sparql_query(
-    triples: DataFrame, text: str, prefixes: dict[str, str] | None = None
-):
-    """Free-standing text entry point for the restricted fragment: dispatches
-    on the leading query-form keyword.  SELECT (with DISTINCT / aggregates /
-    ORDER BY / LIMIT / OFFSET) returns the solution frame; CONSTRUCT returns
-    a distinct (s, p, o) triple relation; ASK returns a Python bool (one
-    bounded `limit(1)` probe — never a full count); DESCRIBE <node>…
-    returns the nodes' triples via query.describe.  Unlike the constraint
-    context, $this is not required — any connected BGP runs.  One
-    distributed plan per form; ORDER BY + LIMIT collapses to
-    TakeOrderedAndProject (no global sort)."""
-    toks = _tokens(text)
-    kws = [v.upper() for k, v in toks if k == "word"]
-    form = next(
-        (w for w in kws if w in ("SELECT", "CONSTRUCT", "ASK", "DESCRIBE")),
-        None,
-    )
-    if form == "SELECT":
-        return evaluate(triples, parse_select(text, prefixes, require_this=False))
-    if form == "CONSTRUCT":
-        from re_shacl_spark.query import _instantiate
-
-        pc = parse_construct(text, prefixes, require_this=False)
-        bound = _eval_group(triples, pc.group)
-        return _instantiate(bound, pc.template, meta=False).distinct()
-    if form == "ASK":
-        p = _P(toks, prefixes or {})
-        _parse_prefix_decls(p)
-        p.expect("word", "ASK")
-        p.expect("op", "{")
-        g = p.group_body()
-        p.expect("op", "}")
-        if not g.patterns:
-            raise ValueError("sh:sparql: empty WHERE block")
-        return bool(_eval_group(triples, g).limit(1).count())
-    if form == "DESCRIBE":
-        from re_shacl_spark.query import describe
-
-        p = _P(toks, prefixes or {})
-        _parse_prefix_decls(p)
-        p.expect("word", "DESCRIBE")
-        nodes = []
-        while p.peek()[0] in ("iri", "pname"):
-            k, v = p.next()
-            nodes.append(v[1:-1] if k == "iri" else p._expand(v))
-        if not nodes or p.peek()[0] != "eof":
-            raise ValueError("sh:sparql: DESCRIBE needs constant node IRIs")
-        return describe(triples, nodes)
-    raise ValueError(
-        "sparql_query: expected a SELECT, CONSTRUCT, ASK or DESCRIBE query"
-    )
-
-
 def _parse_prefix_decls(p: _P) -> None:
     while p.peek()[0] == "word" and p.peek()[1].upper() == "PREFIX":
         p.next()
@@ -906,70 +792,3 @@ def evaluate(triples: DataFrame, parsed: ParsedSelect) -> DataFrame:
     return sol
 
 
-# sh:rule fixpoint round cap: a cyclic rule graph raises past it
-MAX_RULE_ROUNDS = 32
-
-
-def apply_rules(spark, triples: DataFrame, shapes, tbox=None) -> DataFrame:
-    """SHACL-AF §8 SPARQLRule inference: apply every shape's sh:construct
-    rule to its target focus nodes, add the minted triples to the graph, and
-    iterate to fixpoint (a rule may entail new targets or new matches for
-    another rule — rdfs-style chains converge in dependency depth).
-
-    Plan shape per round: targets re-derive (broadcast class-map joins), each
-    rule runs as ONE bgp plan joined against its shape's target set on
-    ``this`` ($this pre-binding, SHACL-AF §5), the template fan-out is
-    column-select-only (query._instantiate, meta — literal objects keep full
-    term identity), and novelty is a hash anti-join on (s, p, o, term-tag)
-    against the accumulated graph.  Per-round ``materialize`` keeps lineage
-    O(1), same as pipeline.fuse.  sh:order/sh:condition are not implemented
-    (documented restriction — rounds apply all rules simultaneously, which
-    subsumes ordering for monotone rule sets); ``MAX_RULE_ROUNDS`` bounds
-    cyclic rule graphs and raises on non-convergence rather than silently
-    stopping.
-    """
-    from re_shacl_spark.query import _instantiate, _term_tag
-    from re_shacl_spark.validate.engine import _targets
-
-    rules = [
-        (ns, parse_construct(r.select, r.prefixes))
-        for ns in shapes
-        for r in getattr(ns, "rules", [])
-    ]
-    if not rules:
-        return triples
-    cur = triples
-    for _ in range(MAX_RULE_ROUNDS):
-        targets = _targets(spark, cur, shapes, tbox)
-        parts = []
-        for ns, pc in rules:
-            bound = _eval_group(cur, pc.group)
-            foc = (
-                targets.filter(F.col("shape_id") == ns.shape_id)
-                .select(F.col("focus").alias("this")).distinct()
-            )
-            bound = bound.join(foc, "this")
-            inst = _instantiate(bound, pc.template, meta=True)
-            parts.append(inst.select("s", "p", "o", "_otag", "is_lit", "o_lit"))
-        new = parts[0]
-        for x in parts[1:]:
-            new = new.unionByName(x)
-        new = new.dropDuplicates(["s", "p", "o", "_otag"])
-        cur_keyed = cur.select(
-            "s", "p", "o",
-            _term_tag(F.col("is_lit"), F.col("o_lit")).alias("_otag"),
-        )
-        fresh, c = materialize(new.join(cur_keyed, ["s", "p", "o", "_otag"], "left_anti"))
-        if not c["rows"]:
-            return cur
-        cur = cur.unionByName(
-            fresh.select(
-                "s", "p", "o", "o_lit", "is_lit",
-                F.lit(None).cast("string").alias("src_url"),
-            )
-        )
-        # per-round lineage truncation (O(1) plans across rounds)
-        cur, _ = materialize(cur)
-    raise RuntimeError(
-        f"sh:rule fixpoint did not converge in {MAX_RULE_ROUNDS} rounds"
-    )

@@ -75,12 +75,6 @@ def test_incomplete_stage_recomputed(spark, store, tmp_path):
     assert len(calls) == 1 and out.count() == 7
 
 
-def test_force_recompute(spark, store):
-    store.save("s", spark.range(5))
-    out = store.run_stage("s", lambda: spark.range(9), force=True)
-    assert out.count() == 9
-
-
 def test_fingerprint_mismatch_invalidates_stage(spark, store):
     from re_shacl_spark.checkpoint import input_fingerprint
 

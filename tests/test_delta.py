@@ -11,6 +11,9 @@ from re_shacl_spark.model.triples import iri_triple, triples_df, vocab
 from re_shacl_spark.model.ttl import parse_ttl_file
 from re_shacl_spark.pipeline import fuse, fuse_delta
 from re_shacl_spark.reasoning.checks import FusionError
+from re_shacl_spark.validate.engine import validate
+from re_shacl_spark.validate.incremental import validate_delta
+from re_shacl_spark.validate.shapes import NodeShape, PropertyConstraint
 
 TEST_TTL = "/root/reference/source/Datasets/test.ttl"
 EX = "http://example.org/"
@@ -286,6 +289,56 @@ def test_delta_checks_gated_on_what_the_delta_adds(spark, monkeypatch):
     for p in (vocab.DIFFERENT, vocab.SAMEAS):
         fuse_delta(spark, base, triples_df(spark, [iri_triple(X + "b", p, X + "c")]))
     assert calls == [["same_different"], ["same_different"]]
+
+
+def _merge_case(spark):
+    """Base: a and b are C's; a knows one node, b two.  The shape caps knows
+    at one, so only b violates before any merge."""
+    knows = X + "knows"
+    base = fuse(spark, triples_df(spark, [
+        iri_triple(X + "a", vocab.TYPE, X + "C"),
+        iri_triple(X + "a", knows, X + "z"),
+        iri_triple(X + "b", vocab.TYPE, X + "C"),
+        iri_triple(X + "b", knows, X + "w1"),
+        iri_triple(X + "b", knows, X + "w2"),
+    ]))
+    shapes = [NodeShape("S", target_classes=[X + "C"], properties=[
+        PropertyConstraint(path=knows, max_count=1),
+    ])]
+    return base, shapes, validate(spark, base.triples, shapes)
+
+
+def _fold(spark, base, delta_rows):
+    """fuse_delta and its closed delta (the fused graph minus the base), the
+    pair a crawl increment hands to validate_delta."""
+    inc = fuse_delta(spark, base, triples_df(spark, delta_rows))
+    return inc, inc.triples.join(base.triples, ["s", "p", "o"], "left_anti")
+
+
+def test_validate_delta_raises_when_delta_merges_base_nodes(spark):
+    """b owl:sameAs a renames base node b to a in the fused graph, but the
+    base still holds b's rows: base ∪ closed delta is not the fused graph,
+    and re-checking it would report the stale b.  It must raise instead."""
+    base, shapes, base_report = _merge_case(spark)
+    inc, closed = _fold(spark, base, [iri_triple(X + "b", vocab.SAMEAS, X + "a")])
+    full = validate(spark, inc.triples, shapes).violations
+    assert {r.focus for r in full.collect()} == {X + "a"}
+    with pytest.raises(ValueError, match="validate the fused graph in full"):
+        validate_delta(spark, base.triples, closed, shapes, base_report)
+
+
+def test_validate_delta_sameas_to_new_member_matches_full(spark):
+    """A delta-only IRI linked to a base entity that stays the rep leaves the
+    base intact, so the incremental report equals full validation."""
+    base, shapes, base_report = _merge_case(spark)
+    inc, closed = _fold(spark, base, [
+        iri_triple(X + "m", vocab.SAMEAS, X + "a"),
+        iri_triple(X + "m", X + "knows", X + "q"),
+    ])
+    full = {tuple(r) for r in validate(spark, inc.triples, shapes).violations.collect()}
+    assert {v[0] for v in full} == {X + "a", X + "b"}
+    got = validate_delta(spark, base.triples, closed, shapes, base_report).violations
+    assert {tuple(r) for r in got.collect()} == full
 
 
 _FOLD_COMPILES = r"""

@@ -54,48 +54,9 @@ def test_extract_fills_only_missing_text(spark):
     assert all(r.text == r.url for r in got)
 
 
-def test_coherence_disambiguate(spark):
-    from re_shacl_spark.extract.linking import coherence_disambiguate
-
-    # page P mentions "ada" (candidates e1/e2) and "bit" (unambiguous e3).
-    # e1 points along e3 (coherent), e2 is orthogonal — e1 must win even
-    # though e2 has the higher prior.
-    cand = spark.createDataFrame(
-        [
-            ("P", "ada", "e1", 0.7),
-            ("P", "ada", "e2", 0.9),
-            ("P", "bit", "e3", 1.0),
-        ],
-        "url string, alias string, entity string, prior double",
-    )
-    emb = spark.createDataFrame(
-        [
-            ("e1", [1.0, 0.0, 0.0]),
-            ("e2", [0.0, 0.0, 1.0]),
-            ("e3", [1.0, 0.0, 0.0]),
-        ],
-        "entity string, emb array<double>",
-    )
-    got = {(r.alias, r.entity) for r in coherence_disambiguate(cand, emb).collect()}
-    assert got == {("ada", "e1"), ("bit", "e3")}
-    # hand-check e1's score: centroid=(2/3,0,1/3); cos(e1,cent)=2/sqrt(5);
-    # score = 0.7*(1+2/sqrt(5))/2
-    import math
-
-    s = {r.entity: r.score for r in coherence_disambiguate(cand, emb).collect()}
-    assert abs(s["e1"] - round(0.7 * (1 + 2 / math.sqrt(5)) / 2, 6)) < 1e-9
-    # determinism on exact ties: lowest entity id wins
-    cand2 = spark.createDataFrame(
-        [("P", "x", "a2", 0.5), ("P", "x", "a1", 0.5)],
-        "url string, alias string, entity string, prior double",
-    )
-    emb2 = spark.createDataFrame(
-        [("a1", [1.0, 0.0]), ("a2", [1.0, 0.0])], "entity string, emb array<double>"
-    )
-    assert [r.entity for r in coherence_disambiguate(cand2, emb2).collect()] == ["a1"]
-
-
 def test_detect_mentions_all_candidates(spark):
+    """An ambiguous alias yields one mention, linked to the dictionary's
+    best-first entry only."""
     from re_shacl_spark.extract.mentions import detect_mentions, mention_pairs
 
     pages = spark.createDataFrame(
@@ -103,9 +64,7 @@ def test_detect_mentions_all_candidates(spark):
     )
     aliases = [("spark", "e1", 0.9), ("spark", "e2", 0.7)]
     one = mention_pairs(detect_mentions(pages, aliases)).collect()
-    assert {r.entity for r in one} == {"e1"}  # default: first dictionary entry
-    both = mention_pairs(detect_mentions(pages, aliases, all_candidates=True)).collect()
-    assert {(r.entity, r.score) for r in both} == {("e1", 0.9), ("e2", 0.7)}
+    assert {(r.entity, r.score) for r in one} == {("e1", 0.9)}
 
 
 def test_compiled_aliases_follow_the_dictionary_not_its_address():
@@ -139,13 +98,13 @@ def test_mentions_scan_matches_regex():
     ]
     pat, table, meta = _compile(aliases)
 
-    def regex_ref(text, all_candidates=False):
+    def regex_ref(text):
         out = []
         for m in pat.finditer(text):
             cands = table.get(m.group(1).lower())
             if cands:
-                for ent, prior in cands if all_candidates else cands[:1]:
-                    out.append((m.group(1).lower(), ent, prior, m.start()))
+                ent, prior = cands[0]
+                out.append((m.group(1).lower(), ent, prior, m.start()))
         return out
 
     texts = [
@@ -159,8 +118,10 @@ def test_mentions_scan_matches_regex():
         "aéAcme Corpéb Acme Corp",  # non-ascii neighbors are word chars
     ]
     for t in texts:
-        for ac in (False, True):
-            assert _scan_mentions(t, pat, table, meta, ac) == regex_ref(t, ac), (t, ac)
+        assert _scan_mentions(t, pat, table, meta) == regex_ref(t), t
+    # an ambiguous alias links to its best-first dictionary entry only
+    ambiguous = [("spark", "e2", 0.7), ("spark", "e1", 0.9)]
+    assert _scan_mentions("the spark rose", *_compile(ambiguous)) == [("spark", "e1", 0.9, 4)]
 
 
 def test_mentions_scan_matches_regex_fuzz():
@@ -193,7 +154,7 @@ def test_mentions_scan_matches_regex_fuzz():
     @settings(max_examples=300, deadline=None)
     @given(st.text(alphabet=alphabet, max_size=40))
     def check(text):
-        assert _scan_mentions(text, pat, table, meta, False) == regex_ref(text)
+        assert _scan_mentions(text, pat, table, meta) == regex_ref(text)
 
     check()
 

@@ -6,7 +6,7 @@ scripts import most of their modules inside the function that needs them, so
 an import of a deleted module would otherwise fail only when that one row or
 branch runs.  The orphan checks catch the other half of a cut: a helper,
 constant or import that only the deleted code used, and a function or class
-that only tests still load."""
+that only tests and registry rows still load."""
 
 from __future__ import annotations
 
@@ -24,20 +24,20 @@ SOURCES = [
 
 
 def _package_imports(path: Path):
-    """(lineno, module, name-or-None) for every re_shacl_spark import in path;
+    """(lineno, module, name-or-None, bound name) for every import in path;
     relative imports are resolved against the file's own package."""
     package = ".".join(path.relative_to(ROOT).with_suffix("").parts[:-1])
     for node in ast.walk(ast.parse(path.read_text(), str(path))):
         if isinstance(node, ast.Import):
             for a in node.names:
-                yield node.lineno, a.name, None
+                yield node.lineno, a.name, None, a.asname or a.name.split(".")[0]
         elif isinstance(node, ast.ImportFrom):
             mod = node.module or ""
             if node.level:
                 base = package.split(".")[: len(package.split(".")) - node.level + 1]
                 mod = ".".join([*base, mod] if mod else base)
             for a in node.names:
-                yield node.lineno, mod, a.name
+                yield node.lineno, mod, a.name, a.asname or a.name
 
 
 def _resolves(mod: str, name: str | None) -> bool:
@@ -54,7 +54,7 @@ def _resolves(mod: str, name: str | None) -> bool:
 def test_every_package_import_resolves():
     seen, broken = 0, []
     for path in SOURCES:
-        for lineno, mod, name in _package_imports(path):
+        for lineno, mod, name, _ in _package_imports(path):
             if mod.split(".")[0] != "re_shacl_spark":
                 continue
             seen += 1
@@ -68,13 +68,6 @@ def test_every_package_import_resolves():
     assert seen > 100, seen  # the walk found the imports at all
     assert not broken, "unresolvable imports:\n" + "\n".join(broken)
 
-
-# top-level package names that nothing loads yet, each with the reason it stays
-UNUSED_ALLOWED = {
-    # the merge-then-reason entry point rewrites the shapes through the rep
-    # maps with it (ROADMAP direction 1, Known defects)
-    "rewrite_shapes",
-}
 
 PACKAGE_MODULES = sorted((ROOT / "re_shacl_spark").rglob("*.py"))
 
@@ -102,6 +95,31 @@ def _top_level_definitions(tree: ast.Module):
                         yield node.lineno, n.id
 
 
+# Top-level package functions and classes that no code outside tests/ and the
+# kgbench.py registry rows loads, each with the reason it stays and what loads
+# it: "rows", else "tests", else None for nothing yet.  The next cut starts
+# from this list.
+ROW_ONLY_ALLOWED = {
+    # the core kg_mentions row explodes detect_mentions' output with it
+    "mention_pairs": "rows",
+    # the reference's pyshacl-owl arm of the four-arm benchmark (ROADMAP
+    # direction 3)
+    "fuse_full": "rows",
+    # the reference's own benchmarks, LUBM and Shape_30, with their
+    # closed-form oracles (workloads/lubm.py and workloads/shape30.py)
+    "lubm_violations": "rows",
+    "shape30_violations": "rows",
+    "oracle_sql": "rows",
+    # the north star's per-shape early termination (BASELINE.json)
+    "validate_fail_fast": "tests",
+    # the reference isomorphism contract the tests compare graphs against
+    "graphs_equivalent": "tests",
+    # the merge-then-reason entry point rewrites the shapes through the rep
+    # maps with it (ROADMAP direction 1)
+    "rewrite_shapes": None,
+}
+
+
 def test_every_package_definition_is_loaded_somewhere():
     loaded = set()
     for path in SOURCES:
@@ -109,44 +127,84 @@ def test_every_package_definition_is_loaded_somewhere():
     orphans = []
     for path in PACKAGE_MODULES:
         for lineno, name in _top_level_definitions(ast.parse(path.read_text(), str(path))):
-            if name.startswith("__") or name in loaded or name in UNUSED_ALLOWED:
+            if name.startswith("__") or name in loaded:
+                continue
+            if name in ROW_ONLY_ALLOWED and ROW_ONLY_ALLOWED[name] is None:
                 continue
             orphans.append(f"{path.relative_to(ROOT)}:{lineno}: {name}")
     assert not orphans, "defined but never loaded:\n" + "\n".join(orphans)
 
 
-# top-level package functions and classes that only tests load, each with the
-# reason it stays; the next cut starts from this list
-TEST_ONLY_ALLOWED = {
-    # the north star's per-shape early termination (BASELINE.json)
-    "validate_fail_fast",
-    # the merge-then-reason entry point rewrites the shapes with it
-    # (ROADMAP direction 1)
-    "rewrite_shapes",
-    # the reference isomorphism contract the tests compare graphs against
-    "graphs_equivalent",
-}
+KGBENCH = ROOT / "re_shacl_spark" / "kgbench.py"
+TEST_SOURCES = [p for p in SOURCES if p.relative_to(ROOT).parts[0] == "tests"]
 
-NON_TEST_SOURCES = [p for p in SOURCES if p.relative_to(ROOT).parts[0] != "tests"]
+
+def _is_module(dotted: str) -> bool:
+    p = ROOT.joinpath(*dotted.split("."))
+    return p.with_suffix(".py").exists() or (p / "__init__.py").exists()
+
+
+def _module_aliases(path: Path) -> set[str]:
+    """Names that path binds to a re_shacl_spark module (``from
+    re_shacl_spark.reasoning import checks as CK`` binds ``CK``; ``import
+    re_shacl_spark.query`` binds ``re_shacl_spark``)."""
+    return {
+        bound
+        for _, mod, name, bound in _package_imports(path)
+        if mod.split(".")[0] == "re_shacl_spark" and (name is None or _is_module(f"{mod}.{name}"))
+    }
+
+
+def _root_name(node: ast.AST) -> str | None:
+    while isinstance(node, ast.Attribute):
+        node = node.value
+    return node.id if isinstance(node, ast.Name) else None
+
+
+def _package_loads(path: Path) -> set[str]:
+    """Names path loads as bare names, plus attributes it loads through a
+    package-module alias: ``query.union`` counts as ``union``, ``df.union``
+    does not."""
+    aliases = _module_aliases(path)
+    out = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute) and _root_name(node.value) in aliases:
+            out.add(node.attr)
+    return out
 
 
 def test_every_package_function_and_class_is_loaded_by_non_test_code():
+    """Every top-level package function or class is loaded by code other
+    than tests/ and the kgbench.py registry rows."""
     loaded = set()
-    for path in NON_TEST_SOURCES:
-        loaded |= _loaded_names(ast.parse(path.read_text(), str(path)))
-    test_only, defined = [], set()
+    for path in SOURCES:
+        if path != KGBENCH and path not in TEST_SOURCES:
+            loaded |= _package_loads(path)
+    unreached, defined = [], set()
     for path in PACKAGE_MODULES:
+        if path == KGBENCH:
+            continue  # the registry's rows are loaded through QUERIES
         for node in ast.parse(path.read_text(), str(path)).body:
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 continue
             defined.add(node.name)
             if node.name.startswith("__") or node.name in loaded:
                 continue
-            if node.name not in TEST_ONLY_ALLOWED:
-                test_only.append(f"{path.relative_to(ROOT)}:{node.lineno}: {node.name}")
-    assert not test_only, "loaded only by tests (or not at all):\n" + "\n".join(test_only)
-    stale = sorted(n for n in TEST_ONLY_ALLOWED if n not in defined or n in loaded)
-    assert not stale, f"TEST_ONLY_ALLOWED entries now gone or loaded by non-test code: {stale}"
+            if node.name not in ROW_ONLY_ALLOWED:
+                unreached.append(f"{path.relative_to(ROOT)}:{node.lineno}: {node.name}")
+    assert not unreached, (
+        "loaded only by kgbench.py rows and tests (or not at all):\n" + "\n".join(unreached)
+    )
+    row_loads = _package_loads(KGBENCH)
+    test_loads = set().union(*map(_package_loads, TEST_SOURCES))
+    stale = sorted(
+        n for n, by in ROW_ONLY_ALLOWED.items()
+        if n not in defined or n in loaded
+        or by != ("rows" if n in row_loads else "tests" if n in test_loads else None)
+    )
+    assert not stale, f"ROW_ONLY_ALLOWED entries gone, loaded by other code, or mislabelled: {stale}"
 
 
 def test_every_module_import_is_used():

@@ -230,27 +230,6 @@ def test_bgp_filter_and_minus(spark):
     assert got3 == 2
 
 
-def test_construct(spark):
-    from re_shacl_spark.query import construct
-
-    g = _g(spark)
-    out = {tuple(r) for r in construct(
-        g,
-        [("?x", EX + "knows", "?y")],
-        [("?y", EX + "knownBy", "?x"), ("?x", vocab.TYPE, EX + "Knower")],
-    ).collect()}
-    assert (EX + "b", EX + "knownBy", EX + "a") in out
-    assert (EX + "a", vocab.TYPE, EX + "Knower") in out
-    assert (EX + "c", vocab.TYPE, EX + "Knower") in out
-    assert len(out) == 6  # 3 knownBy + 3 Knower types, distinct
-    # unbound template variable raises
-    with pytest.raises(ValueError, match="not bound"):
-        construct(g, [("?x", EX + "knows", "?y")], [("?z", EX + "p", "?x")])
-    # templates are triples: a GRAPH (quad) template raises
-    with pytest.raises(ValueError, match="GRAPH"):
-        construct(g, [("?x", EX + "knows", "?y")], [("?x", EX + "p", "?y", "http://g1")])
-
-
 def test_path_negated_property_set(spark):
     from re_shacl_spark.query import eval_path, parse_path
 
@@ -271,22 +250,26 @@ def test_path_negated_property_set(spark):
 
 
 def test_union_domains_and_nulls(spark):
-    from re_shacl_spark.query import union
+    """UNION as validate reaches it (validate.sparql.evaluate, one Group per
+    branch): a variable a branch does not bind is null in that branch's rows."""
+    from re_shacl_spark.validate.sparql import Group, ParsedSelect, evaluate, parse_select
 
     g = _g(spark)
-    got = {tuple(r) for r in union(
-        g,
+    parsed = ParsedSelect(
+        ["x", "y"],
+        False,
         [
-            [("?x", EX + "knows", "?y")],
-            [("?x", vocab.TYPE, EX + "Person")],  # binds ?x only → ?y null
+            Group(patterns=[("?x", EX + "knows", "?y")]),
+            Group(patterns=[("?x", vocab.TYPE, EX + "Person")]),  # binds ?x only → ?y null
         ],
-        select=["x", "y"],
+        {},
         distinct=True,
-    ).collect()}
+    )
+    got = {tuple(r) for r in evaluate(g, parsed).collect()}
     assert (EX + "a", EX + "b") in got and (EX + "c", EX + "a") in got
     assert (EX + "a", None) in got and (EX + "b", None) in got
     with pytest.raises(ValueError):
-        union(g, [])
+        parse_select("SELECT $this WHERE { }")
 
 
 def test_values_inline_bindings(spark):
@@ -316,31 +299,6 @@ def test_values_inline_bindings(spark):
         bgp(g, [("?x", EX + "knows", "?y")], values=(["z"], [("v",)]))
     with pytest.raises(ValueError):
         bgp(g, [("?x", EX + "knows", "?y")], values=(["x"], [("a", "b")]))
-
-
-def test_ask_and_describe(spark):
-    from re_shacl_spark.query import ask, describe
-
-    g = _g(spark)
-    assert ask(g, [("?x", EX + "knows", "?y")]) is True
-    assert ask(g, [("?x", EX + "hates", "?y")]) is False
-    # with bgp kwargs: FILTER narrows to false
-    from pyspark.sql import functions as F
-    assert ask(g, [("?x", EX + "knows", "?y")],
-               where=F.col("x") == EX + "zzz") is False
-    # DESCRIBE: subject- and object-side triples of a
-    got = {(r.s, r.p, r.o) for r in describe(g, [EX + "a"]).collect()}
-    assert (EX + "a", EX + "knows", EX + "b") in got      # subject side
-    assert (EX + "b", EX + "knows", EX + "a") in got      # object side
-    assert (EX + "c", EX + "knows", EX + "a") in got
-    assert (EX + "a", EX + "name", "Alice") in got
-    assert all(EX + "a" in (s, o) for s, _, o in got)
-    # DataFrame node set (broadcast semi-join path) gives the same result
-    nodes = spark.createDataFrame([(EX + "a",)], ["node"])
-    got_df = {(r.s, r.p, r.o) for r in describe(g, nodes).collect()}
-    assert got_df == got
-    with pytest.raises(ValueError):
-        describe(g, [])
 
 
 # ---------------------------------------------------------------------------
@@ -397,60 +355,6 @@ def test_aggregate_global_group_and_having(spark):
     assert glob.collect()[0]["n"] == 3
     kept = aggregate(sol, ["t"], {"n": ("count", "*")}, having=F.col("n") >= 2)
     assert [r["t"] for r in kept.collect()] == [EX + "Person"]
-
-
-def test_join_solutions_subselect(spark):
-    """SPARQL 1.1 subquery: the outer pattern joins a subselect's aggregate
-    on the shared variable; a per-type count computed in the inner SELECT
-    rides every outer row of that type."""
-    from pyspark.sql import functions as F
-
-    from re_shacl_spark.query import aggregate, bgp, join_solutions
-
-    outer = bgp(_agg_g(spark), [("?x", vocab.TYPE, "?t")])
-    inner = aggregate(
-        bgp(_agg_g(spark), [("?y", vocab.TYPE, "?t")]), ["t"],
-        {"n_of_type": ("count", "*")},
-    )
-    got = {(r["x"], r["n_of_type"]) for r in join_solutions(outer, inner).collect()}
-    assert got == {(EX + "a", 2), (EX + "b", 2), (EX + "c", 1)}
-    # a filter over the subselect variable keeps only the populous type
-    kept = join_solutions(outer, inner).filter(F.col("n_of_type") >= 2)
-    assert {r["x"] for r in kept.collect()} == {EX + "a", EX + "b"}
-
-
-def test_join_solutions_term_identity_and_cross_guard(spark):
-    """Shared variables joined with tags intact compose on term identity —
-    the literal "30" never joins an IRI <30>; no shared variable raises
-    unless the caller opts into the cartesian product."""
-    import pytest as _pytest
-
-    from re_shacl_spark.query import aggregate, bgp, join_solutions
-
-    rows = [
-        lit_triple(EX + "a", EX + "age", "30", dtype=vocab.XSD + "integer"),
-        iri_triple(EX + "b", EX + "likes", "30"),  # IRI <30> puns the lexical form
-    ]
-    g = triples_df(spark, rows)
-    left = bgp(g, [("?s", EX + "age", "?v")], _keep_tags=True)
-    right = bgp(g, [("?w", EX + "likes", "?v")], _keep_tags=True)
-    assert join_solutions(left, right).count() == 0  # tag mismatch: no pun join
-    # tags dropped (aggregate output): joins on the visible string form
-    agg = aggregate(bgp(g, [("?w", EX + "likes", "?v")]), ["v"], {"n": ("count", "*")})
-    assert join_solutions(bgp(g, [("?s", EX + "age", "?v")]), agg).count() == 1
-    with _pytest.raises(ValueError, match="allow_cross"):
-        join_solutions(
-            bgp(g, [("?s", EX + "age", "?v")]).select("s"),
-            agg.select("n"),
-        )
-    assert (
-        join_solutions(
-            bgp(g, [("?s", EX + "age", "?v")]).select("s"),
-            agg.select("n"),
-            allow_cross=True,
-        ).count()
-        == 1
-    )
 
 
 def test_constant_terms_are_term_strict(spark):
@@ -608,13 +512,11 @@ def test_subquery_composition(spark):
 
 
 # ---------------------------------------------------------------------------
-# SPARQL term accessors: LANG / DATATYPE / isIRI / isLiteral
+# SPARQL term accessors: isIRI / isLiteral
 # ---------------------------------------------------------------------------
 
 def test_term_accessors_lang_datatype_kind(spark):
-    from re_shacl_spark.query import (
-        term_datatype, term_is_iri, term_is_literal, term_lang,
-    )
+    from re_shacl_spark.query import term_is_iri, term_is_literal
 
     rows = [
         iri_triple(EX + "a", EX + "v", EX + "iri"),
@@ -625,24 +527,19 @@ def test_term_accessors_lang_datatype_kind(spark):
     sol = bgp(
         triples_df(spark, rows),
         [("?s", EX + "v", "?o")],
-        bind={
-            "lang": term_lang("o"),
-            "dt": term_datatype("o"),
-            "iri": term_is_iri("o"),
-            "lit": term_is_literal("o"),
-        },
+        bind={"iri": term_is_iri("o"), "lit": term_is_literal("o")},
     )
-    got = {r.s.rsplit("/", 1)[1]: (r.lang, r.dt, r.iri, r.lit) for r in sol.collect()}
+    got = {r.s.rsplit("/", 1)[1]: (r.iri, r.lit) for r in sol.collect()}
     assert got == {
-        "a": ("", None, True, False),
-        "b": ("", vocab.XSD + "string", False, True),
-        "c": ("", vocab.XSD + "int", False, True),
-        "d": ("en", vocab.RDF + "langString", False, True),
+        "a": (True, False),
+        "b": (False, True),
+        "c": (False, True),
+        "d": (False, True),
     }
 
 
 def test_term_accessors_in_filter(spark):
-    from re_shacl_spark.query import term_is_iri, term_lang
+    from re_shacl_spark.query import term_is_iri, term_is_literal
 
     rows = [
         iri_triple(EX + "a", EX + "v", EX + "iri"),
@@ -650,7 +547,7 @@ def test_term_accessors_in_filter(spark):
         lit_triple(EX + "c", EX + "v", "hi", lang="en"),
     ]
     t = triples_df(spark, rows)
-    only_en = bgp(t, [("?s", EX + "v", "?o")], where=term_lang("o") == "en")
-    assert [r.s for r in only_en.collect()] == [EX + "c"]
+    only_lit = bgp(t, [("?s", EX + "v", "?o")], where=term_is_literal("o"))
+    assert sorted(r.s for r in only_lit.collect()) == [EX + "b", EX + "c"]
     only_iri = bgp(t, [("?s", EX + "v", "?o")], where=term_is_iri("o"))
     assert [r.s for r in only_iri.collect()] == [EX + "a"]

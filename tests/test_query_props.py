@@ -12,7 +12,6 @@ from __future__ import annotations
 
 from collections import Counter
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -293,13 +292,15 @@ def union_case_st(draw):
 @given(union_case_st())
 @SETTINGS
 def test_union_matches_naive(spark, case):
-    """UNION is the multiset union of branch solutions; variables absent from
-    a branch are unbound (null) in its rows."""
-    from re_shacl_spark.query import union
+    """UNION (validate.sparql.evaluate over one Group per branch) is the
+    multiset union of branch solutions; variables absent from a branch are
+    unbound (null) in its rows."""
+    from re_shacl_spark.validate.sparql import Group, ParsedSelect, evaluate
 
     graph, branches = case
     df = triples_df(spark, _rows(graph))
-    out = union(df, branches)
+    parsed = ParsedSelect([], True, [Group(patterns=list(b)) for b in branches], {})
+    out = evaluate(df, parsed)
     names = sorted(out.columns)
     got = Counter(tuple(r[v] for v in names) for r in out.collect())
 
@@ -312,37 +313,6 @@ def test_union_matches_naive(spark, case):
                 )
             ] += 1
     assert got == want, f"branches={branches}"
-
-
-@given(case_st(), case_st())
-@SETTINGS
-def test_join_solutions_matches_naive(spark, case_l, case_r):
-    """§18.5 Join of two solution multisets: string-form equi-join on shared
-    variables once the hidden tags are gone (both frames are plain bgp
-    outputs), cartesian guarded."""
-    from re_shacl_spark.query import join_solutions
-
-    graph, pats_l = case_l
-    _, pats_r = case_r
-    df = triples_df(spark, _rows(graph))
-    left, right = bgp(df, pats_l), bgp(df, pats_r)
-    shared = sorted(set(left.columns) & set(right.columns))
-    if not shared:
-        with pytest.raises(ValueError, match="cartesian"):
-            join_solutions(left, right)
-        return
-    out = join_solutions(left, right)
-    names = sorted(out.columns)
-    envs_l = _naive_match(graph, pats_l)
-    envs_r = _naive_match(graph, pats_r)
-    want = Counter()
-    for el in envs_l:
-        for er in envs_r:
-            if all(el["?" + v][1] == er["?" + v][1] for v in shared):
-                merged = {**{k: v[1] for k, v in er.items()}, **{k: v[1] for k, v in el.items()}}
-                want[tuple(merged["?" + v] for v in names)] += 1
-    got = Counter(tuple(r[v] for v in names) for r in out.collect())
-    assert got == want, f"l={pats_l} r={pats_r}"
 
 
 @st.composite

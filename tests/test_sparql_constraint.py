@@ -80,10 +80,19 @@ def test_parse_select_aggregate_and_order_keys_must_be_vars(text):
 def test_parse_select_constraint_must_project_this():
     with pytest.raises(ValueError, match=r"project \$this"):
         parse_select("SELECT ?value WHERE { $this kg:p ?value }")
-    # free-standing queries have no focus node to project
-    assert parse_select(
-        "SELECT ?value WHERE { ?s kg:p ?value }", require_this=False
-    ).select_vars == ["value"]
+
+
+def test_sparql_query_rejects_other_forms():
+    """sh:select bodies are SELECT queries only: update and the other query
+    forms are parse errors."""
+    for text in (
+        "INSERT DATA { <a> <b> <c> }",
+        "CONSTRUCT { $this <p> ?o } WHERE { $this <p> ?o }",
+        "ASK { $this <p> ?o }",
+        "DESCRIBE $this WHERE { $this <p> ?o }",
+    ):
+        with pytest.raises(ValueError, match="expected SELECT"):
+            parse_select(text)
 
 
 def test_parse_select_rejects_missing_this_and_empty():
@@ -345,100 +354,9 @@ def test_sparql_custom_target(spark):
     assert got == {(EX + "c3", "minCount")}  # c2 not targeted; c1 conforms
 
 
-def test_apply_rules_single_round(spark):
-    """sh:rule/sh:construct: derived triples minted from each focus binding."""
-    from re_shacl_spark.validate.sparql import apply_rules, parse_construct
-
-    rows = [
-        iri_triple(EX + "c1", vocab.TYPE, EX + "Customer"),
-        iri_triple(EX + "c1", EX + "inNation", EX + "n1"),
-        iri_triple(EX + "n1", EX + "inRegion", EX + "r1"),
-    ]
-    g = triples_df(spark, rows)
-    rule = SparqlConstraint(
-        select="PREFIX ex: <http://x.org/> CONSTRUCT { $this ex:inRegion ?r } "
-               "WHERE { $this ex:inNation ?n . ?n ex:inRegion ?r }",
-    )
-    pc = parse_construct(rule.select)
-    assert pc.template == [("?this", EX + "inRegion", "?r")]
-    shapes = [NodeShape("S", target_classes=[EX + "Customer"], rules=[rule])]
-    out = apply_rules(spark, g, shapes)
-    derived = {(r.s, r.p, r.o) for r in out.collect()} - {
-        (r[0], r[1], r[2]) for r in rows
-    }
-    assert derived == {(EX + "c1", EX + "inRegion", EX + "r1")}
-
-
-def test_apply_rules_fixpoint_chain(spark, monkeypatch):
-    """A rule whose output feeds its own next match (ancestor-style chain)
-    converges in depth rounds, not one; with fewer rounds than the chain
-    needs, apply_rules raises instead of returning a partial closure."""
-    import re_shacl_spark.validate.sparql as S
-    from re_shacl_spark.validate.sparql import apply_rules
-
-    rows = [
-        iri_triple(EX + "a", vocab.TYPE, EX + "Node"),
-        iri_triple(EX + "b", vocab.TYPE, EX + "Node"),
-        iri_triple(EX + "c", vocab.TYPE, EX + "Node"),
-        iri_triple(EX + "a", EX + "next", EX + "b"),
-        iri_triple(EX + "b", EX + "next", EX + "c"),
-        iri_triple(EX + "c", EX + "next", EX + "d"),
-    ]
-    g = triples_df(spark, rows)
-    rule = SparqlConstraint(
-        select="PREFIX ex: <http://x.org/> CONSTRUCT { $this ex:reach ?z } "
-               "WHERE { $this ex:next ?z }",
-    )
-    rule2 = SparqlConstraint(
-        select="PREFIX ex: <http://x.org/> CONSTRUCT { $this ex:reach ?z } "
-               "WHERE { $this ex:reach ?y . ?y ex:reach ?z }",
-    )
-    shapes = [NodeShape("S", target_classes=[EX + "Node"], rules=[rule, rule2])]
-    out = apply_rules(spark, g, shapes)
-    reach = {(r.s, r.o) for r in out.filter("p = '" + EX + "reach'").collect()}
-    assert reach == {
-        (EX + "a", EX + "b"), (EX + "a", EX + "c"), (EX + "a", EX + "d"),
-        (EX + "b", EX + "c"), (EX + "b", EX + "d"),
-        (EX + "c", EX + "d"),
-    }
-
-    monkeypatch.setattr(S, "MAX_RULE_ROUNDS", 1)
-    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
-        apply_rules(spark, g, shapes)
-
-
-def test_apply_rules_literal_template(spark):
-    """Lit template constants mint exact literals with full term identity."""
-    from re_shacl_spark.validate.sparql import apply_rules
-
-    rows = [
-        iri_triple(EX + "c1", vocab.TYPE, EX + "Customer"),
-        lit_triple(EX + "c1", EX + "bal", "-4", XSD_INT),
-    ]
-    g = triples_df(spark, rows)
-    rule = SparqlConstraint(
-        select='PREFIX ex: <http://x.org/> '
-               'CONSTRUCT { $this ex:risk "high" . $this ex:note "risky"@en } '
-               'WHERE { $this ex:bal ?v . FILTER (?v < 0) }',
-    )
-    shapes = [NodeShape("S", target_classes=[EX + "Customer"], rules=[rule])]
-    out = apply_rules(spark, g, shapes)
-    new = out.filter("p = '" + EX + "risk'").collect()
-    assert len(new) == 1
-    r = new[0]
-    assert (r.s, r.o, r.is_lit) == (EX + "c1", "high", True)
-    assert r.o_lit.dtype == vocab.XSD + "string"
-    # a lang-tagged constant keeps its tag and carries no datatype
-    (r,) = out.filter("p = '" + EX + "note'").collect()
-    assert (r.s, r.o, r.is_lit) == (EX + "c1", "risky", True)
-    assert (r.o_lit.lang, r.o_lit.dtype) == ("en", None)
-    # idempotent: re-application converges round 1 with no duplicates
-    again = apply_rules(spark, out, shapes)
-    assert again.count() == out.count()
-
-
 def test_compile_shapes_af_from_ttl(spark):
-    """sh:target + sh:rule parsed from turtle."""
+    """sh:target parsed from turtle, with the sh:declare'd prefixes; sh:rule
+    is ignored like any unknown predicate (validation applies no inference)."""
     ttl = '''
 @prefix sh: <http://www.w3.org/ns/shacl#> .
 @prefix ex: <http://x.org/> .
@@ -452,70 +370,26 @@ ex: sh:declare [ sh:prefix "ex" ; sh:namespace "http://x.org/" ] .
 '''
     shapes = compile_shapes(parse_ttl(ttl))
     assert len(shapes[0].sparql_targets) == 1
-    assert len(shapes[0].rules) == 1
-    assert shapes[0].rules[0].prefixes == {"ex": "http://x.org/"}
+    assert shapes[0].sparql_targets[0].prefixes == {"ex": "http://x.org/"}
 
 
 # ---------------------------------------------------------------------------
-# free-standing text query API
+# the sh:select fragment: modifiers, aggregates, UNION/VALUES/MINUS/EXISTS
+# and property paths, evaluated with $this projected
 # ---------------------------------------------------------------------------
 
 def test_sparql_query_select_modifiers(spark):
-    from re_shacl_spark.validate.sparql import sparql_query
-
     g = _graph(spark)
-    out = sparql_query(g, """
+    out = evaluate(g, parse_select("""
         PREFIX ex: <http://x.org/>
-        SELECT DISTINCT ?c WHERE { ?c a ex:Customer . ?c ex:bal ?v . }
-        ORDER BY DESC(?c) LIMIT 2 OFFSET 1
-    """)
+        SELECT DISTINCT $this WHERE { $this a ex:Customer . $this ex:bal ?v . }
+        ORDER BY DESC($this) LIMIT 2 OFFSET 1
+    """))
     # desc order c3,c2,c1 → offset 1, limit 2 → c2, c1
-    assert [r.c for r in out.collect()] == [EX + "c2", EX + "c1"]
+    assert [r.this for r in out.collect()] == [EX + "c2", EX + "c1"]
 
 
-def test_sparql_query_construct_no_this(spark):
-    from re_shacl_spark.validate.sparql import sparql_query
-
-    g = _graph(spark)
-    out = sparql_query(g, """
-        PREFIX ex: <http://x.org/>
-        CONSTRUCT { ?c ex:hasSeg ?s }
-        WHERE { ?c ex:seg ?s . FILTER (ISLITERAL(?s)) }
-    """)
-    got = {(r.s, r.p, r.o) for r in out.collect()}
-    assert got == {
-        (EX + "c1", EX + "hasSeg", "MACHINERY"),
-        (EX + "c2", EX + "hasSeg", "BUILDING"),
-    }
-
-
-def test_sparql_query_ask_and_describe(spark):
-    from re_shacl_spark.validate.sparql import sparql_query
-
-    g = _graph(spark)
-    assert sparql_query(
-        g, 'PREFIX ex: <http://x.org/> ASK { ?c ex:seg "BUILDING" . }'
-    ) is True
-    assert sparql_query(
-        g, 'PREFIX ex: <http://x.org/> ASK { ?c ex:seg "NOPE" . }'
-    ) is False
-    d = sparql_query(g, "PREFIX ex: <http://x.org/> DESCRIBE ex:c1")
-    assert {(r.s, r.p) for r in d.collect()} == {
-        (EX + "c1", vocab.TYPE), (EX + "c1", EX + "bal"), (EX + "c1", EX + "seg"),
-    }
-
-
-def test_sparql_query_rejects_other_forms(spark):
-    from re_shacl_spark.validate.sparql import sparql_query
-
-    g = _graph(spark)
-    with pytest.raises(ValueError, match="expected a SELECT"):
-        sparql_query(g, "INSERT DATA { <a> <b> <c> }")
-
-
-def test_sparql_query_aggregates(spark):
-    from re_shacl_spark.validate.sparql import sparql_query
-
+def _nation_graph(spark):
     rows = [
         iri_triple(EX + "c1", EX + "inNation", EX + "n1"),
         iri_triple(EX + "c2", EX + "inNation", EX + "n1"),
@@ -524,41 +398,43 @@ def test_sparql_query_aggregates(spark):
         lit_triple(EX + "c2", EX + "bal", "5", XSD_INT),
         lit_triple(EX + "c3", EX + "bal", "7", XSD_INT),
     ]
-    g = triples_df(spark, rows)
-    out = sparql_query(g, """
+    return triples_df(spark, rows)
+
+
+def test_sparql_query_aggregates(spark):
+    out = evaluate(_nation_graph(spark), parse_select("""
         PREFIX ex: <http://x.org/>
-        SELECT ?n (COUNT(*) AS ?cnt) (SUM(?b) AS ?total)
-        WHERE { ?c ex:inNation ?n . ?c ex:bal ?b }
-        GROUP BY ?n HAVING (?cnt > 1) ORDER BY ?n
-    """)
+        SELECT $this (COUNT(*) AS ?cnt) (SUM(?b) AS ?total)
+        WHERE { ?c ex:inNation $this . ?c ex:bal ?b }
+        GROUP BY $this HAVING (?cnt > 1) ORDER BY $this
+    """))
     r = out.collect()
-    assert [(x.n, x.cnt, x.total) for x in r] == [(EX + "n1", 2, 15.0)]
+    assert [(x.this, x.cnt, x.total) for x in r] == [(EX + "n1", 2, 15.0)]
 
 
 def test_sparql_query_count_distinct_and_global_group(spark):
-    from re_shacl_spark.validate.sparql import sparql_query
-
-    g = _graph(spark)
-    out = sparql_query(g, """
+    # n1's two customers pair up four ways; COUNT(DISTINCT ?c) counts two.
+    # A global group cannot project $this; query.aggregate's global group is
+    # checked in test_query::test_aggregate_global_group_and_having
+    out = evaluate(_nation_graph(spark), parse_select("""
         PREFIX ex: <http://x.org/>
-        SELECT (COUNT(DISTINCT ?c) AS ?n) WHERE { ?c ex:bal ?v . }
-    """)
-    assert out.collect()[0].n == 3
+        SELECT $this (COUNT(DISTINCT ?c) AS ?n) (COUNT(*) AS ?all)
+        WHERE { ?c ex:inNation $this . ?d ex:inNation $this . }
+        GROUP BY $this
+    """))
+    assert {(r.this, r.n, r.all) for r in out.collect()} == {
+        (EX + "n1", 2, 4), (EX + "n2", 1, 1),
+    }
 
 
 def test_parse_select_rejects_unaggregated_projection():
-    from re_shacl_spark.validate.sparql import parse_select
-
     with pytest.raises(ValueError, match="neither aggregated"):
         parse_select(
-            "SELECT ?x (COUNT(*) AS ?n) WHERE { ?x <p:p> ?y . } GROUP BY ?y",
-            require_this=False,
+            "SELECT $this (COUNT(*) AS ?n) WHERE { $this <p:p> ?y . } GROUP BY ?y"
         )
 
 
 def test_sparql_query_union_values_minus_exists(spark):
-    from re_shacl_spark.validate.sparql import sparql_query
-
     rows = [
         lit_triple(EX + "c1", EX + "seg", "BUILDING", XSD_STR),
         lit_triple(EX + "c2", EX + "seg", "MACHINERY", XSD_STR),
@@ -568,47 +444,45 @@ def test_sparql_query_union_values_minus_exists(spark):
     ]
     g = triples_df(spark, rows)
     # UNION branches with branch-scoped filters
-    out = sparql_query(g, """
+    out = evaluate(g, parse_select("""
         PREFIX ex: <http://x.org/>
-        SELECT ?c WHERE {
-          { ?c ex:seg "BUILDING" . } UNION { ?c ex:flag ex:Risk . }
-        } ORDER BY ?c
-    """)
-    assert [r.c for r in out.collect()] == [EX + "c1", EX + "c3"]
+        SELECT $this WHERE {
+          { $this ex:seg "BUILDING" . } UNION { $this ex:flag ex:Risk . }
+        } ORDER BY $this
+    """))
+    assert [r.this for r in out.collect()] == [EX + "c1", EX + "c3"]
     # VALUES restricts; FILTER NOT EXISTS removes vip holders
-    out2 = sparql_query(g, """
+    out2 = evaluate(g, parse_select("""
         PREFIX ex: <http://x.org/>
-        SELECT ?c WHERE {
-          ?c ex:seg ?s .
+        SELECT $this WHERE {
+          $this ex:seg ?s .
           VALUES ?s { "BUILDING" "MACHINERY" }
-          FILTER NOT EXISTS { ?c ex:vip ?f . }
+          FILTER NOT EXISTS { $this ex:vip ?f . }
         }
-    """)
-    assert {r.c for r in out2.collect()} == {EX + "c2"}
+    """))
+    assert {r.this for r in out2.collect()} == {EX + "c2"}
     # MINUS removes bindings compatible on shared vars
-    out3 = sparql_query(g, """
+    out3 = evaluate(g, parse_select("""
         PREFIX ex: <http://x.org/>
-        SELECT ?c WHERE { ?c ex:seg ?s . MINUS { ?c ex:flag ex:Risk . } }
-    """)
-    assert {r.c for r in out3.collect()} == {EX + "c1", EX + "c2"}
+        SELECT $this WHERE { $this ex:seg ?s . MINUS { $this ex:flag ex:Risk . } }
+    """))
+    assert {r.this for r in out3.collect()} == {EX + "c1", EX + "c2"}
 
 
 def test_sparql_query_union_null_padding(spark):
     """A variable bound in only one branch is null (unbound) in the other."""
-    from re_shacl_spark.validate.sparql import sparql_query
-
     rows = [
         lit_triple(EX + "c1", EX + "seg", "BUILDING", XSD_STR),
         iri_triple(EX + "c2", EX + "vip", EX + "Gold"),
     ]
     g = triples_df(spark, rows)
-    out = sparql_query(g, """
+    out = evaluate(g, parse_select("""
         PREFIX ex: <http://x.org/>
-        SELECT ?c ?s ?f WHERE {
-          { ?c ex:seg ?s . } UNION { ?c ex:vip ?f . }
+        SELECT $this ?s ?f WHERE {
+          { $this ex:seg ?s . } UNION { $this ex:vip ?f . }
         }
-    """)
-    got = {(r.c, r.s, r.f) for r in out.collect()}
+    """))
+    got = {(r.this, r.s, r.f) for r in out.collect()}
     assert got == {(EX + "c1", "BUILDING", None), (EX + "c2", None, EX + "Gold")}
 
 
@@ -648,10 +522,9 @@ ex: sh:declare [ sh:prefix "ex" ; sh:namespace "http://x.org/" ] .
 
 
 def test_sparql_query_property_paths(spark):
-    """SPARQL §9 property paths in the text fragment: sequence, one-or-more
-    closure, inverse, and a negated property set — compiled to query.Path in
-    the predicate slot."""
-    from re_shacl_spark.validate.sparql import sparql_query
+    """SPARQL §9 property paths in the sh:select fragment: sequence,
+    one-or-more closure, inverse, and a negated property set — compiled to
+    query.Path in the predicate slot."""
 
     rows = [
         iri_triple(EX + "c1", EX + "inNation", EX + "n1"),
@@ -661,31 +534,31 @@ def test_sparql_query_property_paths(spark):
         iri_triple(EX + "a", EX + "other", EX + "z"),
     ]
     g = triples_df(spark, rows)
-    seq = sparql_query(g, """
+    seq = evaluate(g, parse_select("""
         PREFIX ex: <http://x.org/>
-        SELECT ?c ?r WHERE { ?c ex:inNation/ex:inRegion ?r . }
-    """)
-    assert {(r.c, r.r) for r in seq.collect()} == {(EX + "c1", EX + "r1")}
+        SELECT $this ?r WHERE { $this ex:inNation/ex:inRegion ?r . }
+    """))
+    assert {(r.this, r.r) for r in seq.collect()} == {(EX + "c1", EX + "r1")}
 
-    plus = sparql_query(g, """
+    plus = evaluate(g, parse_select("""
         PREFIX ex: <http://x.org/>
-        SELECT ?x ?y WHERE { ?x ex:next+ ?y . }
-    """)
-    assert {(r.x, r.y) for r in plus.collect()} == {
+        SELECT $this ?y WHERE { $this ex:next+ ?y . }
+    """))
+    assert {(r.this, r.y) for r in plus.collect()} == {
         (EX + "a", EX + "b"), (EX + "b", EX + "c"), (EX + "a", EX + "c"),
     }
 
-    inv = sparql_query(g, """
+    inv = evaluate(g, parse_select("""
         PREFIX ex: <http://x.org/>
-        SELECT ?n WHERE { ?n ^ex:inNation ?c . }
-    """)
-    assert {r.n for r in inv.collect()} == {EX + "n1"}
+        SELECT $this WHERE { $this ^ex:inNation ?c . }
+    """))
+    assert {r.this for r in inv.collect()} == {EX + "n1"}
 
-    nps = sparql_query(g, """
+    nps = evaluate(g, parse_select("""
         PREFIX ex: <http://x.org/>
-        SELECT ?x ?y WHERE { ?x !(ex:next|ex:inNation|ex:inRegion) ?y . }
-    """)
-    assert {(r.x, r.y) for r in nps.collect()} == {(EX + "a", EX + "z")}
+        SELECT $this ?y WHERE { $this !(ex:next|ex:inNation|ex:inRegion) ?y . }
+    """))
+    assert {(r.this, r.y) for r in nps.collect()} == {(EX + "a", EX + "z")}
 
 
 def test_sh_sparql_constraint_with_path(spark):

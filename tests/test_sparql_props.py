@@ -315,97 +315,6 @@ def test_evaluate_matches_naive_kleene(spark, q_and_text):
 
 
 # ---------------------------------------------------------------------------
-# SHACL-AF rules: apply_rules vs naive forward chaining
-# ---------------------------------------------------------------------------
-
-@st.composite
-def rules_case_st(draw):
-    """Random small graph + targets + 1-2 CONSTRUCT rules.  Rule bodies are
-    1-2 connected patterns over ?this/?v/?w; templates mint one triple from
-    $this and a bound var or constant; derived predicates may FEED rule
-    bodies (p:p/p:q — the fixpoint case) or be fresh (p:out)."""
-    graph = draw(graph_st)
-    targets = draw(
-        st.lists(st.sampled_from(NODES), min_size=1, max_size=3, unique=True)
-    )
-    rules = []
-    for _ in range(draw(st.integers(1, 2))):
-        o1 = draw(st.sampled_from(["?v", "n:a", "n:b"]))
-        pats = [("?this", draw(st.sampled_from(PREDS)), o1)]
-        if o1 == "?v" and draw(st.booleans()):
-            pats.append(("?v", draw(st.sampled_from(PREDS)), "?w"))
-        objs = ["n:c"] + (["?v"] if o1 == "?v" else []) + (
-            ["?w"] if len(pats) == 2 else []
-        )
-        tmpl = ("?this", draw(st.sampled_from(PREDS + ["p:out"])),
-                draw(st.sampled_from(objs)))
-        rules.append((pats, tmpl))
-    return graph, targets, rules
-
-
-def _naive_apply_rules(graph, rules, max_rounds=32):
-    """Forward chaining on (s, p, o_term) tuples; targets re-derive each
-    round from rdf:type ex:T edges (mirroring engine._targets)."""
-    g = set(graph)
-    for _ in range(max_rounds):
-        tset = {s for s, p, o in g if p == vocab.TYPE and o == ("I", "ex:T")}
-        new = set()
-        for pats, (_ts, tp, to) in rules:
-            for env in _naive_match(list(g), pats):
-                this = env["?this"]
-                if this[0] != "I" or this[1] not in tset:
-                    continue
-                obj = env[to] if to.startswith("?") else ("I", to)
-                new.add((this[1], tp, obj))
-        fresh = new - g
-        if not fresh:
-            return g
-        g |= fresh
-    raise AssertionError("naive fixpoint did not converge")
-
-
-@given(rules_case_st())
-@SETTINGS
-def test_apply_rules_matches_naive_forward_chaining(spark, case):
-    from re_shacl_spark.validate.shapes import NodeShape
-    from re_shacl_spark.validate.sparql import SparqlConstraint, apply_rules
-
-    graph, targets, rules = case
-    full = list(graph) + [(t, vocab.TYPE, ("I", "ex:T")) for t in targets]
-    rows = [
-        iri_triple(s, p, o[1]) if o[0] == "I" else lit_triple(s, p, o[1], dtype=o[2])
-        for s, p, o in full
-    ]
-    df = triples_df(spark, rows)
-
-    def ser(pats, tmpl):
-        body = " ".join(f"{s} {p} {o} ." for s, p, o in pats)
-        body = body.replace("?this", "$this")
-        ts, tp, to = tmpl
-        return f"CONSTRUCT {{ $this {tp} {to} }} WHERE {{ {body} }}"
-
-    shapes = [NodeShape("S", target_classes=["ex:T"],
-                        rules=[SparqlConstraint(select=ser(p_, t_))
-                               for p_, t_ in rules])]
-    out = apply_rules(spark, df, shapes)
-    got = {
-        (
-            r.s, r.p, r.o, bool(r.is_lit),
-            r.o_lit.dtype if r.is_lit else None,
-            r.o_lit.lang if r.is_lit else None,
-        )
-        for r in out.collect()
-    }
-    want = {
-        (s, p, o[1], o[0] == "L",
-         o[2] if o[0] == "L" else None,
-         o[3] if o[0] == "L" else None)
-        for s, p, o in _naive_apply_rules(full, rules)
-    }
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
 # parser robustness: hostile input never escapes ValueError
 # ---------------------------------------------------------------------------
 
@@ -416,13 +325,12 @@ def test_parser_hostile_input_raises_valueerror_only(text):
     IndexError/KeyError/AttributeError escape from the tokenizer or the
     recursive descent (int() of a num token cannot fail: the token grammar
     only admits digit strings)."""
-    from re_shacl_spark.validate.sparql import parse_construct, parse_select
+    from re_shacl_spark.validate.sparql import parse_select
 
-    for fn in (parse_select, parse_construct):
-        try:
-            fn(text, require_this=False)
-        except ValueError:
-            pass
+    try:
+        parse_select(text)
+    except ValueError:
+        pass
 
 
 @given(st.text(alphabet="SELECT WHERE{}?$ths.<>ovalues()*&|!=\"' \n0123456789/^+",
@@ -434,7 +342,7 @@ def test_parser_keyword_soup_raises_valueerror_only(text):
     from re_shacl_spark.validate.sparql import parse_select
 
     try:
-        parse_select(text, require_this=False)
+        parse_select(text)
     except ValueError:
         pass
 
