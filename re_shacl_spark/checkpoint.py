@@ -73,7 +73,9 @@ class CheckpointStore:
         frame so downstream plans hang off the files, not the upstream DAG."""
         out = self._stage_dir(stage)
         df.write.mode("overwrite").parquet(out)
-        persisted = self.spark.read.parquet(out)
+        # the writer's schema, so the re-read infers nothing: inferring it
+        # from the footers is a Spark job of its own
+        persisted = self.spark.read.schema(df.schema).parquet(out)
 
         meta = {k: str(v) for k, v in (meta or {}).items()}
         # per-partition lineage from the parquet FOOTERS (file == writer

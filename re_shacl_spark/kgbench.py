@@ -917,8 +917,9 @@ FROM customer WHERE c_nationkey % 5 = 0"""
 
 
 def q_v_or(spark, sf_dir):
-    """sh:or branches evaluated in the same single-pass grid (validate/
-    engine.py:208-237): value conforms iff ≥1 branch conforms.  Branch 1:
+    """sh:or branches evaluated per value row inside the one validate
+    aggregation (validate/engine.py, ``exists`` over the constraint's
+    branch array): value conforms iff ≥1 branch conforms.  Branch 1:
     xsd:decimal literal; branch 2: IRI node."""
     cust = _read(spark, sf_dir, "customer")
     dec_lit = _lit_rows(cust.filter(F.col("c_custkey") % 3 == 0),
@@ -1329,7 +1330,7 @@ ORACLES["v_sparql_target"] = SQL_V_SPARQL_TARGET
 # qualified value-shape counts, numeric range facets, language facets,
 # property-pair constraints, and closed shapes — the remaining SHACL Core
 # constraint components a user migrating real shapes graphs needs
-# (validate/engine.py: _branch_groups / _pair_violations / _closed_violations)
+# (validate/engine.py: validate / _pair_violations / _closed_violations)
 # ---------------------------------------------------------------------------
 
 
@@ -1349,7 +1350,7 @@ def _lang_rows(df: DataFrame, s, p, lex, lang) -> DataFrame:
 
 def q_v_logic(spark, sf_dir):
     """sh:and (all branches) + sh:xone (exactly one) in one shape, both
-    collapsed per-value inside the single-pass grid (engine.py::_branch_groups).
+    evaluated per value row inside the one validate aggregation (engine.py).
     kg:contact must be a Literal AND xsd:string (the v_or value mix: decimal
     lits and IRIs fail); kg:code must match exactly one of ^A / B$."""
     cust = _read(spark, sf_dir, "customer")
@@ -1384,8 +1385,8 @@ FROM customer WHERE c_custkey % 4 IN (2, 3)"""
 def q_v_qualified(spark, sf_dir):
     """sh:qualifiedValueShape + qualifiedMin/MaxCount: each customer needs
     2..20 kg:ordered values typed kg:PriorityOrder (orderkey % 3 = 0); the
-    qualified rows ride the value grid, counted per focus
-    (engine.py: comb='qual' → q_cnt)."""
+    qualified facet struct is evaluated per value row, counted per focus
+    (engine.py: q_conf → q_cnt)."""
     cust = _read(spark, sf_dir, "customer")
     orders = _read(spark, sf_dir, "orders")
     vals = _rows(orders, _iri("c:", F.col("o_custkey")), "kg:ordered", _iri("o:", F.col("o_orderkey")))

@@ -2,20 +2,28 @@
 
 The reference delegates validation to pyshacl on the fused in-memory graph
 (/root/reference/run_experiment.py:99-102, inference='none' after merging).
-Here the same reduced-validation contract is a *flat dataflow*:
+Here the same reduced-validation contract is a *flat dataflow*, one plan and
+one aggregation for every shape at once:
 
-  1. broadcast the compiled constraint table (shapes are KBs; triples are TBs),
-  2. one scan of TYPES for target selection (targetClass + subclass closure
-     down, pre-materialized by fusion),
-  3. one shuffle join values-to-focus,
-  4. one groupBy(shape, property-constraint, focus) computing EVERY aggregate
-     constraint (minCount/maxCount/hasValue + the non-conforming values) in a
-     single pass — the per-shape early-termination strategy: a focus node's
-     value conformance is a short-circuiting boolean expression and all
-     aggregates share one shuffle,
+  1. the compiled constraint table and the class/path → constraint maps enter
+     the plan as constants (``from_json`` over a JSON string literal, folded
+     at optimization): no driver-side relation, so no broadcast job,
+  2. target rows ``(pc_id, focus, _t=true)`` come from one predicate-filtered
+     scan per target kind (targetClass + subclass closure down, implicit
+     class targets, targetNode, targetSubjectsOf/ObjectsOf),
+  3. value rows ``(pc_id, focus, o, _t=false)`` come from one scan of the
+     constrained paths (forward, inverse, and complex paths as virtual
+     predicates); the two are unioned, and each value row evaluates its
+     conformance there — facets, sh:or/and/xone and the qualified value
+     shape as higher-order functions over the constraint's literal branch
+     array, sh:class and sh:node membership from one left join each,
+  4. ONE groupBy(pc_id, focus) keeps the groups that hold a target row and
+     collects the set of distinct RDF terms with their verdicts; every
+     count/exists constraint (minCount/maxCount/hasValue/qualified counts/
+     uniqueLang) reads that set,
   5. violation rows = ONE projection over the aggregate frame: every kind's
-     condition builds an array of (constraint, value) structs, the per-value
-     rows ride along as an array, and one explode emits them all.
+     condition builds an array of (constraint, value) structs, the
+     non-conforming values ride along, and one explode emits them all.
 
 #shuffles is O(1) in the number of shapes (Shape_30 has 641 shapes — per-shape
 jobs would be 641 scans; this is 1).
@@ -27,12 +35,14 @@ depth-bounded by the shape-reference DAG.
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from re_shacl_spark.canonicalize.rewrite import BROADCAST_REP_MAP_MAX_ROWS
 from re_shacl_spark.model.triples import local_frame, materialize, vocab
 from re_shacl_spark.query import Path as PathExpr
 from re_shacl_spark.query import eval_path
@@ -41,28 +51,23 @@ from re_shacl_spark.validate.shapes import NodeShape, PropertyConstraint
 
 
 def _path_str(path) -> str | None:
-    """Grid/report form of an sh:path: complex paths (sequence, alternative,
+    """Report form of an sh:path: complex paths (sequence, alternative,
     closure — compiled to query.Path expressions by shapes._path_expr) are
     keyed by their expression string, which doubles as the virtual predicate
-    under which their value pairs are injected for the values join."""
+    under which their value pairs are injected for the value scan."""
     return path.expr if isinstance(path, PathExpr) else path
 
 SH = vocab.SH
 
-_PC_SCHEMA = T.StructType(
+# the per-value facets one constraint (or one of its logical branches) checks;
+# field names are the PropertyConstraint attributes they come from
+_FACET_SCHEMA = T.StructType(
     [
-        T.StructField("pc_id", T.LongType()),
-        T.StructField("shape_id", T.StringType()),
-        T.StructField("path", T.StringType()),
-        T.StructField("inverse", T.BooleanType()),  # sh:inversePath traversal
-        T.StructField("min_count", T.IntegerType()),
-        T.StructField("max_count", T.IntegerType()),
         T.StructField("clazz", T.StringType()),
         T.StructField("datatype", T.StringType()),
         T.StructField("node_kind", T.StringType()),
         T.StructField("node_ref", T.StringType()),
         T.StructField("in_values", T.ArrayType(T.StringType())),
-        T.StructField("has_value", T.StringType()),
         T.StructField("pattern", T.StringType()),
         T.StructField("min_length", T.IntegerType()),
         T.StructField("max_length", T.IntegerType()),
@@ -71,21 +76,46 @@ _PC_SCHEMA = T.StructType(
         T.StructField("min_exclusive", T.StringType()),   # as doubles at eval time
         T.StructField("max_exclusive", T.StringType()),
         T.StructField("language_in", T.ArrayType(T.StringType())),
+        T.StructField("negated", T.BooleanType()),
+    ]
+)
+
+# one constraint row: what the aggregate kinds and the report read, plus the
+# base facets
+_PC_SCHEMA = T.StructType(
+    [
+        T.StructField("shape_id", T.StringType()),
+        T.StructField("path", T.StringType()),
+        T.StructField("min_count", T.IntegerType()),
+        T.StructField("max_count", T.IntegerType()),
+        T.StructField("has_value", T.StringType()),
         T.StructField("unique_lang", T.BooleanType()),
         T.StructField("q_min", T.IntegerType()),  # sh:qualifiedMinCount
         T.StructField("q_max", T.IntegerType()),  # sh:qualifiedMaxCount
-        T.StructField("negated", T.BooleanType()),
-        T.StructField("branch_idx", T.IntegerType()),  # null = base row; >=0 = branch
-        # branch combinator: null = base row; 'or' | 'and' | 'xone' = logical
-        # branch rows collapsed per-value (any / all / exactly-one); 'qual' =
-        # the sh:qualifiedValueShape row (counted per focus, never a per-value
-        # violation)
-        T.StructField("comb", T.StringType()),
         T.StructField("is_not", T.BooleanType()),  # node-level sh:not property shape
         T.StructField("severity", T.StringType()),  # effective sh:severity IRI
         T.StructField("message", T.StringType()),   # effective sh:message
+        *_FACET_SCHEMA.fields,
     ]
 )
+
+# logical branches: a value conforms to sh:or if any branch does, to sh:and
+# if all do, to sh:xone if exactly one does
+_BRANCHES = ("or_branches", "and_branches", "xone_branches")
+
+# the constraint table, indexed by pc_id: each row carries its branches and
+# its sh:qualifiedValueShape (counted per focus, never a per-value violation)
+_TABLE_TYPE = T.ArrayType(
+    T.StructType(
+        [
+            *_PC_SCHEMA.fields,
+            *(T.StructField(b, T.ArrayType(_FACET_SCHEMA)) for b in _BRANCHES),
+            T.StructField("qualified", _FACET_SCHEMA),
+        ]
+    )
+)
+_IDS_BY_KEY = T.MapType(T.StringType(), T.ArrayType(T.IntegerType()))
+_NAMES_BY_KEY = T.MapType(T.StringType(), T.ArrayType(T.StringType()))
 
 
 @dataclass
@@ -95,61 +125,132 @@ class ValidationReport:
     shapes_evaluated: int
 
 
-def _branch_groups(pc: PropertyConstraint) -> list[tuple[str, list[PropertyConstraint]]]:
-    """(combinator, branches) pairs riding a constraint's grid rows: sh:or
-    (any conforms), sh:and (all conform), sh:xone (exactly one conforms),
-    'qual' (the sh:qualifiedValueShape, counted per focus)."""
-    groups = []
-    if pc.or_branches:
-        groups.append(("or", pc.or_branches))
-    if pc.and_branches:
-        groups.append(("and", pc.and_branches))
-    if pc.xone_branches:
-        groups.append(("xone", pc.xone_branches))
-    if pc.qualified is not None:
-        groups.append(("qual", [pc.qualified]))
-    return groups
+def _json_lit(value, dtype: T.DataType) -> Column:
+    """``value`` as one constant of type ``dtype``.  ``from_json`` over a
+    string literal folds to a literal at optimization: the table is neither a
+    relation (a LocalTableScan is broadcast by a Spark job of its own) nor
+    SQL text to parse."""
+    return F.from_json(F.lit(json.dumps(value)), dtype)
 
 
-def _pc_rows(shapes: list[NodeShape]) -> list[tuple]:
-    rows: list[tuple] = []
-    pc_id = 0
+def _constraints(shapes: list[NodeShape]) -> list[tuple[NodeShape, PropertyConstraint, bool]]:
+    """(shape, constraint, is_not) per constraint row; the list index is the
+    row's pc_id.  Node-level sh:not property shapes are flagged rows: the
+    focus violates iff the inner shape CONFORMS (counts + all values)."""
+    out = []
     for ns in shapes:
         pcs = [(pc, False) for pc in ns.properties]
         if ns.self_constraint:
             pcs.append((ns.self_constraint, False))
-        # node-level sh:not property shapes ride the same grid, flagged: the
-        # focus violates iff the inner shape CONFORMS (counts + all values)
         pcs += [(pc, True) for pc in ns.not_properties]
-        for pc, is_not in pcs:
-            sev = pc.severity or ns.severity
-            msg = pc.message or ns.message
-            rows.append(
-                (
-                    pc_id, ns.shape_id, _path_str(pc.path), pc.inverse, pc.min_count, pc.max_count,
-                    pc.clazz, pc.datatype, pc.node_kind, pc.node_ref,
-                    pc.in_values, pc.has_value, pc.pattern, pc.min_length,
-                    pc.max_length, pc.min_inclusive, pc.max_inclusive,
-                    pc.min_exclusive, pc.max_exclusive, pc.language_in,
-                    pc.unique_lang, pc.q_min_count, pc.q_max_count,
-                    pc.negated, None, None, is_not, sev, msg,
+        out += [(ns, pc, is_not) for pc, is_not in pcs]
+    return out
+
+
+def _facets(pc: PropertyConstraint | None, refs: set[str]) -> dict | None:
+    """``pc``'s facet struct.  An sh:node reference outside ``refs`` (the
+    shapes with a conforming set) is dropped: a shape no NodeShape declares
+    constrains nothing (schema2/3's `sh:node ub:Course`, pyshacl parity), and
+    the recursion's optimistic first sweep has no sets yet."""
+    if pc is None:
+        return None
+    out = {f.name: getattr(pc, f.name) for f in _FACET_SCHEMA.fields}
+    out["node_ref"] = pc.node_ref if pc.node_ref in refs else None
+    return out
+
+
+def _table_row(ns: NodeShape, pc: PropertyConstraint, is_not: bool, refs: set[str]) -> dict:
+    return {
+        "shape_id": ns.shape_id, "path": _path_str(pc.path),
+        "min_count": pc.min_count, "max_count": pc.max_count, "has_value": pc.has_value,
+        "unique_lang": pc.unique_lang, "q_min": pc.q_min_count, "q_max": pc.q_max_count,
+        "is_not": is_not, "severity": pc.severity or ns.severity,
+        "message": pc.message or ns.message,
+        **_facets(pc, refs),
+        **{b: [_facets(x, refs) for x in getattr(pc, b)] for b in _BRANCHES},
+        "qualified": _facets(pc.qualified, refs),
+    }
+
+
+def _used(table: list[dict]) -> set[str]:
+    """Names of the table fields some constraint sets, in its base row, a
+    branch or its qualified shape: only those enter the plan.  An empty
+    sh:in or sh:languageIn list is set; an empty branch list is not."""
+    used = set()
+    for row in table:
+        used |= {b for b in _BRANCHES if row[b]}
+        for sub in [row, row["qualified"], *(x for b in _BRANCHES for x in row[b])]:
+            used |= {
+                k for k, v in (sub or {}).items()
+                if k not in _BRANCHES and v is not None and v is not False
+            }
+    return used
+
+
+def _target_rows(
+    spark: SparkSession,
+    triples: DataFrame,
+    shapes: list[NodeShape],
+    tbox: TBoxIndex | None,
+) -> DataFrame:
+    """(shape_id, focus) rows, duplicates kept — targetClass (expanded down
+    the subclass closure; the fused graph already materializes supertypes, so
+    the closure expansion is a correctness belt for pre-fusion inputs),
+    implicit class targets, targetNode, targetSubjectsOf/ObjectsOf and
+    SHACL-AF sh:target selects.  Each kind is one predicate-filtered scan
+    mapped to its shapes through a constant map."""
+    by_class: dict[str, list[str]] = {}
+    by_subj: dict[str, list[str]] = {}
+    by_obj: dict[str, list[str]] = {}
+    nodes: list[dict] = []
+    for ns in shapes:
+        classes = set(ns.target_classes)
+        if ns.implicit_class_target:
+            classes.add(ns.shape_id)
+        expanded: set[str] = set()
+        for c in classes:
+            expanded |= tbox.subclasses_of(c) if tbox else {c}
+        for c in sorted(expanded):
+            by_class.setdefault(c, []).append(ns.shape_id)
+        nodes += [{"shape_id": ns.shape_id, "focus": n} for n in ns.target_nodes]
+        for p in ns.target_subjects_of:
+            by_subj.setdefault(p, []).append(ns.shape_id)
+        for p in ns.target_objects_of:
+            by_obj.setdefault(p, []).append(ns.shape_id)
+
+    parts: list[DataFrame] = []
+    for key_of, by, focus, pred in (
+        ("o", by_class, "s", F.col("p") == vocab.TYPE),
+        ("p", by_subj, "s", None),
+        ("p", by_obj, "o", None),
+    ):
+        if by:
+            cond = F.col(key_of).isin(sorted(by))
+            parts.append(
+                triples.filter(cond if pred is None else pred & cond).select(
+                    F.explode(_json_lit(by, _NAMES_BY_KEY)[F.col(key_of)]).alias("shape_id"),
+                    F.col(focus).alias("focus"),
                 )
             )
-            for comb, branches in _branch_groups(pc):
-                for bi, b in enumerate(branches):
-                    rows.append(
-                        (
-                            pc_id, ns.shape_id, _path_str(pc.path), pc.inverse, None, None,
-                            b.clazz, b.datatype, b.node_kind, b.node_ref,
-                            b.in_values, b.has_value, b.pattern, b.min_length,
-                            b.max_length, b.min_inclusive, b.max_inclusive,
-                            b.min_exclusive, b.max_exclusive, b.language_in,
-                            False, None, None,
-                            b.negated, bi, comb, is_not, sev, msg,
-                        )
-                    )
-            pc_id += 1
-    return rows
+    if nodes:
+        lit = _json_lit(nodes, T.ArrayType(T.StructType.fromDDL("shape_id string, focus string")))
+        parts.append(spark.range(0, 1, 1, 1).select(F.inline(lit)))
+    # SHACL-AF custom targets: each sh:target/sh:select runs as one
+    # distributed bgp plan; its ?this solutions ARE the focus set
+    for ns in shapes:
+        for tgt in getattr(ns, "sparql_targets", []):
+            from re_shacl_spark.validate.sparql import evaluate, parse_select
+
+            sol = evaluate(triples, parse_select(tgt.select, tgt.prefixes))
+            parts.append(
+                sol.select(F.lit(ns.shape_id).alias("shape_id"), F.col("this").alias("focus"))
+            )
+    if not parts:
+        return local_frame(spark, [], ["shape_id", "focus"])
+    out = parts[0]
+    for x in parts[1:]:
+        out = out.unionByName(x)
+    return out
 
 
 def _targets(
@@ -158,136 +259,72 @@ def _targets(
     shapes: list[NodeShape],
     tbox: TBoxIndex | None,
 ) -> DataFrame:
-    """(shape_id, focus) — targetClass (expanded down the subclass closure; the
-    fused graph already materializes supertypes, so the closure expansion is a
-    correctness belt for pre-fusion inputs), implicit class targets, targetNode."""
-    cls_rows: list[tuple[str, str]] = []
-    node_rows: list[tuple[str, str]] = []
-    subj_rows: list[tuple[str, str]] = []
-    obj_rows: list[tuple[str, str]] = []
-    for ns in shapes:
-        classes = set(ns.target_classes)
-        if ns.implicit_class_target:
-            classes.add(ns.shape_id)
-        expanded: set[str] = set()
-        for c in classes:
-            expanded |= tbox.subclasses_of(c) if tbox else {c}
-        cls_rows += [(c, ns.shape_id) for c in sorted(expanded)]
-        node_rows += [(ns.shape_id, n) for n in ns.target_nodes]
-        subj_rows += [(p, ns.shape_id) for p in ns.target_subjects_of]
-        obj_rows += [(p, ns.shape_id) for p in ns.target_objects_of]
-
-    types = triples.filter(F.col("p") == vocab.TYPE).select(
-        F.col("s").alias("focus"), F.col("o").alias("cls")
-    )
-    cls_map = F.broadcast(
-        local_frame(spark, cls_rows, ["cls", "shape_id"])
-    )
-    by_class = types.join(cls_map, "cls").select("shape_id", "focus")
-    by_node = local_frame(spark, node_rows, ["shape_id", "focus"])
-    out = by_class.unionByName(by_node)
-    # sh:targetSubjectsOf / targetObjectsOf: one broadcast predicate-map join
-    # each — the predicate filter pushes into the scan
-    for rows2, col in ((subj_rows, "s"), (obj_rows, "o")):
-        if rows2:
-            pm = F.broadcast(local_frame(spark, rows2, ["p", "shape_id"]))
-            out = out.unionByName(
-                triples.join(pm, "p").select("shape_id", F.col(col).alias("focus"))
-            )
-    # SHACL-AF custom targets: each sh:target/sh:select runs as one
-    # distributed bgp plan; its ?this solutions ARE the focus set
-    for ns in shapes:
-        for tgt in getattr(ns, "sparql_targets", []):
-            from re_shacl_spark.validate.sparql import evaluate, parse_select
-
-            sol = evaluate(triples, parse_select(tgt.select, tgt.prefixes))
-            out = out.unionByName(
-                sol.select(
-                    F.lit(ns.shape_id).alias("shape_id"),
-                    F.col("this").alias("focus"),
-                )
-            )
-    return out.distinct()
+    """Distinct (shape_id, focus) target pairs (see ``_target_rows``)."""
+    return _target_rows(spark, triples, shapes, tbox).distinct()
 
 
-def _value_conformance(col_prefix: str = "") -> F.Column:
-    """Short-circuiting per-value conformance for one constraint row: nodeKind →
-    datatype → in → class/node-ref flags (flags are join-produced booleans).
-    Null o (focus without values) is vacuously conforming.
+def _value_conformance(f: Column, used: set[str]) -> Column:
+    """Per-value conformance to the facet struct ``f`` (a constraint row, or
+    one of its branches): nodeKind → datatype → in → pattern/length → range
+    → languageIn → class/node-ref membership, each vacuous where ``f`` leaves
+    it unset.  Facets no constraint uses (``used``) stay out of the plan.
+    Reads the value row's ``o``/``o_lit``/``is_lit`` and, when joined, its
+    ``_classes`` and ``_refs`` arrays.
 
     Known pragmatic: sh:in / sh:hasValue compare by the value's STRING FORM
     (the shapes API carries their entries as plain strings; every committed
     shape graph lists IRIs or typed numbers with no IRI/literal pun), unlike
-    the count/value collapse below, which keys on full term identity."""
+    the counts and value rows, which key on full term identity."""
     o = F.col("o")
     is_lit = F.col("is_lit")
-    eff_dtype = F.coalesce(
-        F.col("o_lit.dtype"),
-        F.when(F.col("o_lit.lang").isNotNull(), F.lit(vocab.RDF + "langString")).otherwise(
-            F.lit(vocab.XSD + "string")
-        ),
-    )
-    node_kind_ok = (
-        F.when(F.col("node_kind").isNull(), F.lit(True))
-        .when(F.col("node_kind") == SH + "IRI", ~is_lit & ~o.startswith("_:"))
-        .when(F.col("node_kind") == SH + "Literal", is_lit)
-        .when(F.col("node_kind") == SH + "BlankNode", ~is_lit & o.startswith("_:"))
-        .otherwise(F.lit(True))
-    )
-    dtype_ok = F.when(F.col("datatype").isNull(), F.lit(True)).otherwise(
-        is_lit & (eff_dtype == F.col("datatype"))
-    )
-    in_ok = F.when(F.col("in_values").isNull(), F.lit(True)).otherwise(
-        F.array_contains(F.col("in_values"), o)
-    )
-    # sh:pattern / sh:minLength / sh:maxLength apply to the value's string
-    # form (lex for literals, the IRI otherwise; bnodes fail per spec)
     not_bnode = ~o.startswith("_:") | is_lit
-    pattern_ok = F.when(F.col("pattern").isNull(), F.lit(True)).otherwise(
-        not_bnode & F.regexp_like(o, F.col("pattern"))
-    )
-    len_ok = (
-        F.when(F.col("min_length").isNull(), F.lit(True)).otherwise(
-            not_bnode & (F.length(o) >= F.col("min_length"))
-        )
-        & F.when(F.col("max_length").isNull(), F.lit(True)).otherwise(
-            not_bnode & (F.length(o) <= F.col("max_length"))
-        )
-    )
-    class_ok = F.when(F.col("clazz").isNull(), F.lit(True)).otherwise(
-        F.col("_class_hit").isNotNull()
-    )
-    ref_ok = F.when(F.col("node_ref").isNull(), F.lit(True)).otherwise(
-        F.col("_ref_ok")
-    )
-    # numeric range facets: constraint lexical forms and the value both compare
-    # as doubles; a non-numeric value violates any range facet (SHACL: value
-    # nodes that cannot be compared are violations)
     num = o.try_cast("double")
-    range_ok = (
-        F.when(F.col("min_inclusive").isNull(), F.lit(True)).otherwise(
-            is_lit & num.isNotNull() & (num >= F.col("min_inclusive").try_cast("double"))
-        )
-        & F.when(F.col("max_inclusive").isNull(), F.lit(True)).otherwise(
-            is_lit & num.isNotNull() & (num <= F.col("max_inclusive").try_cast("double"))
-        )
-        & F.when(F.col("min_exclusive").isNull(), F.lit(True)).otherwise(
-            is_lit & num.isNotNull() & (num > F.col("min_exclusive").try_cast("double"))
-        )
-        & F.when(F.col("max_exclusive").isNull(), F.lit(True)).otherwise(
-            is_lit & num.isNotNull() & (num < F.col("max_exclusive").try_cast("double"))
-        )
-    )
-    # sh:languageIn: only language-tagged literals with a listed tag conform
-    lang_ok = F.when(F.col("language_in").isNull(), F.lit(True)).otherwise(
-        is_lit & F.array_contains(F.col("language_in"), F.coalesce(F.col("o_lit.lang"), F.lit("")))
-    )
-    conf = (
-        node_kind_ok & dtype_ok & in_ok & pattern_ok & len_ok & range_ok
-        & lang_ok & class_ok & ref_ok
-    )
-    conf = F.when(F.col("negated"), ~conf).otherwise(conf)
-    return F.when(o.isNull(), F.lit(True)).otherwise(conf)
+
+    def num_ok(name, cmp):
+        # numeric range facets: constraint lexical forms and the value both
+        # compare as doubles; a non-numeric value violates any range facet
+        # (SHACL: value nodes that cannot be compared are violations)
+        return is_lit & num.isNotNull() & cmp(num, f[name].try_cast("double"))
+
+    checks = {
+        "node_kind": lambda: (
+            F.when(f["node_kind"] == SH + "IRI", ~is_lit & ~o.startswith("_:"))
+            .when(f["node_kind"] == SH + "Literal", is_lit)
+            .when(f["node_kind"] == SH + "BlankNode", ~is_lit & o.startswith("_:"))
+            .otherwise(F.lit(True))
+        ),
+        "datatype": lambda: is_lit & (
+            F.coalesce(
+                F.col("o_lit.dtype"),
+                F.when(F.col("o_lit.lang").isNotNull(), F.lit(vocab.RDF + "langString"))
+                .otherwise(F.lit(vocab.XSD + "string")),
+            ) == f["datatype"]
+        ),
+        "in_values": lambda: F.array_contains(f["in_values"], o),
+        # sh:pattern / sh:minLength / sh:maxLength apply to the value's string
+        # form (lex for literals, the IRI otherwise; bnodes fail per spec)
+        "pattern": lambda: not_bnode & F.regexp_like(o, f["pattern"]),
+        "min_length": lambda: not_bnode & (F.length(o) >= f["min_length"]),
+        "max_length": lambda: not_bnode & (F.length(o) <= f["max_length"]),
+        "min_inclusive": lambda: num_ok("min_inclusive", lambda a, b: a >= b),
+        "max_inclusive": lambda: num_ok("max_inclusive", lambda a, b: a <= b),
+        "min_exclusive": lambda: num_ok("min_exclusive", lambda a, b: a > b),
+        "max_exclusive": lambda: num_ok("max_exclusive", lambda a, b: a < b),
+        # sh:languageIn: only language-tagged literals with a listed tag conform
+        "language_in": lambda: is_lit & F.array_contains(
+            f["language_in"], F.coalesce(F.col("o_lit.lang"), F.lit(""))
+        ),
+        # the fused graph materializes supertypes, so (o type clazz) is a direct hit
+        "clazz": lambda: F.coalesce(~is_lit & F.array_contains("_classes", f["clazz"]), F.lit(False)),
+        "node_ref": lambda: F.coalesce(F.array_contains("_refs", f["node_ref"]), F.lit(False)),
+    }
+    conf = F.lit(True)
+    for name, ok in checks.items():
+        if name in used:
+            conf = conf & F.when(f[name].isNull(), F.lit(True)).otherwise(ok())
+    if "negated" in used:
+        conf = F.when(f["negated"], ~conf).otherwise(conf)
+    return conf
 
 
 def validate(
@@ -299,243 +336,260 @@ def validate(
     _ref_sets: dict[str, DataFrame] | None = None,
     _extra_focus: dict[str, DataFrame] | None = None,
     _focus_subset: DataFrame | None = None,
+    _focus_count: int | None = None,
 ) -> ValidationReport:
+    """SHACL report of ``triples`` against ``shapes``: one row per
+    (focus, shape, path, constraint, value), plus severity and message
+    ``with_details``; the violations frame is materialized.
+
+    ``_focus_subset`` restricts the check to the foci it names, as
+    ``validate.incremental.validate_delta`` does: a frame with a distinct
+    ``node`` column, and ``_focus_count`` its row count as observed when it
+    was materialized.  Up to ``BROADCAST_REP_MAP_MAX_ROWS`` rows the
+    restriction is a broadcast semi-join; larger (or uncounted) subsets are
+    left to the planner, which shuffles.  sh:node conforming sets stay
+    global, so a restricted verdict equals the unrestricted one.
+
+    ``_ref_sets`` and ``_extra_focus`` are the sh:node recursion's
+    (``_resolve_node_refs``): the conforming sets to check references
+    against, and extra foci per referenced shape."""
     shapes = [s for s in shapes if not s.deactivated]  # sh:deactivated true
-    pc_rows = _pc_rows(shapes)
-    if not pc_rows:
+    cons = _constraints(shapes)
+    if not cons:
         schema = "focus string, shape string, path string, constraint string, value string"
         if with_details:
             schema += ", severity string, message string"
         empty = local_frame(spark, [], schema)
         if not _has_sparql(shapes):
             return ValidationReport(empty, True, 0)
-        # shapes carrying ONLY sh:sparql constraints: no grid to build —
+        # shapes carrying ONLY sh:sparql constraints: no constraint rows —
         # evaluate the SPARQL blocks against the targets directly
         targets = _targets(spark, triples, shapes, tbox)
         sv = _sparql_violations(spark, triples, targets, shapes, with_details)
         violations = empty.unionByName(sv) if sv is not None else empty
         violations, c = materialize(violations)
         return ValidationReport(violations, not c["rows"], len(shapes))
-    pcs = F.broadcast(local_frame(spark, pc_rows, _PC_SCHEMA))
-    base_pcs = pcs.filter(F.col("branch_idx").isNull())
-
-    targets = _targets(spark, triples, shapes, tbox)
-    if _extra_focus:
-        # sh:node conformance evaluation (from _resolve_node_refs): referenced
-        # shapes are checked over targets ∪ values-at-referencing-paths, so a
-        # value that satisfies the shape's constraints conforms even when it
-        # is not typed with the shape's target class (SHACL/pyshacl parity —
-        # ADVICE r2).  Reporting calls never pass this: violations stay
-        # target-scoped per spec.
-        extra_parts = [
-            df.select(F.lit(sid).alias("shape_id"), F.col("node").alias("focus"))
-            for sid, df in sorted(_extra_focus.items())
-        ]
-        for x in extra_parts:
-            targets = targets.unionByName(x)
-        targets = targets.distinct()
-    if _focus_subset is not None:
-        # incremental validation (validate/incremental.py): re-check only the
-        # foci a delta touched — the grid, values join and aggregations all
-        # shrink to the affected slice.  sh:node conforming sets stay GLOBAL
-        # (resolved by the unrestricted recursion below), so restriction never
-        # changes a re-checked focus's verdict.
-        targets = targets.join(
-            _focus_subset.select(F.col("node").alias("focus")).distinct(),
-            "focus",
-            "left_semi",
-        )
-    # focus × constraint grid for this shape's targets
-    tp = targets.join(base_pcs.select("pc_id", "shape_id"), "shape_id")
-
-    # complex sh:path constraints: materialize each distinct path expression
-    # ONCE as (focus, value) pairs under a virtual predicate named by the
-    # expression — the ordinary broadcast values join below then serves plain
-    # and complex paths identically.  Only the values join sees these rows:
-    # targets / class flags / closed checks keep the real graph.
+    pcs_of: dict[str, list[int]] = {}
+    fwd: dict[str, list[int]] = {}
+    inv: dict[str, list[int]] = {}
+    for i, (ns, pc, _) in enumerate(cons):
+        pcs_of.setdefault(ns.shape_id, []).append(i)
+        if pc.path is not None:
+            (inv if pc.inverse else fwd).setdefault(_path_str(pc.path), []).append(i)
+    # complex sh:path constraints read virtual-predicate rows named by their
+    # expression, so plain and complex paths are served identically; targets,
+    # class membership and closed checks keep the real graph
     val_triples = _path_value_triples(triples, shapes)
 
-    # values at each constrained path: broadcast join puts path filter into the scan
-    paths = base_pcs.select(
-        F.col("pc_id").alias("v_pc_id"), F.col("path").alias("p"), "inverse"
-    ).filter(F.col("p").isNotNull())
-    vals = (
-        val_triples.join(paths.filter(~F.col("inverse")).drop("inverse"), "p")
-        .select(
-            F.col("v_pc_id").alias("pc_id"),
-            F.col("s").alias("focus"),
-            "o",
-            "o_lit",
-            "is_lit",
-        )
-    )
-    if any(pc.inverse for ns in shapes for pc in _all_pcs(ns)):
-        # sh:inversePath: the focus is the OBJECT of the edge; values are the
-        # subjects (always resource nodes — s can't be a literal)
-        inv_vals = (
-            val_triples.join(paths.filter(F.col("inverse")).drop("inverse"), "p")
-            .select(
-                F.col("v_pc_id").alias("pc_id"),
-                F.col("o").alias("focus"),
-                F.col("s").alias("o"),
-                F.lit(None).cast(triples.schema["o_lit"].dataType).alias("o_lit"),
-                F.lit(False).alias("is_lit"),
-            )
-        )
-        vals = vals.unionByName(inv_vals)
-    grid = tp.join(vals, ["pc_id", "focus"], "left")
-
-    # class-conformance flags for any constraint row (base or or-branch):
-    # the fused graph materializes supertypes, so (o type clazz) is a direct hit
-    types = triples.filter(F.col("p") == vocab.TYPE).select(
-        F.col("s").alias("_inst"), F.col("o").alias("_cls")
-    ).distinct()
-
-    all_pc_cols = pcs.select(
-        "pc_id", "branch_idx", "comb", "clazz", "datatype", "node_kind", "node_ref",
-        "in_values", "has_value", "pattern", "min_length", "max_length",
-        "min_inclusive", "max_inclusive", "min_exclusive", "max_exclusive",
-        "language_in", "negated",
-    )
-
-    # explode grid × (base + branches) so or-branches evaluate in the same pass
-    g = grid.join(all_pc_cols, "pc_id")
-    g = g.join(
-        types,
-        (g["o"] == types["_inst"]) & (g["clazz"] == types["_cls"]) & (~g["is_lit"].eqNullSafe(F.lit(True)) | ~g["is_lit"]),
-        "left",
-    ).withColumnRenamed("_inst", "_class_hit").drop("_cls")
-
-    # sh:node conforming sets: iterate to fixpoint (optimistic start)
-    # node_ref is the 10th element of the _PC_SCHEMA row layout
-    _REF_IDX = [f.name for f in _PC_SCHEMA.fields].index("node_ref")
-    ref_shapes = sorted({r[_REF_IDX] for r in pc_rows if r[_REF_IDX]})
+    # sh:node conforming sets, resolved on the driver before the plan is built
+    ref_shapes = sorted({x.node_ref for _, pc, _ in cons for x in _sub_pcs(pc) if x.node_ref})
+    conforming: dict[str, DataFrame] = {}
     if ref_shapes and _ref_sets is not None:
         # inner call from _resolve_node_refs: refs resolve against the
         # PREVIOUS sweep's conforming sets (no fresh recursion — this is what
         # makes refinement actually deepen past two reference hops)
-        g = _join_ref_sets(g, _ref_sets)
+        conforming = _ref_sets
     elif ref_shapes:
-        # depth = the REAL shape-reference DAG depth (LUBM chains are ≤4 deep;
-        # the old max(3, len(shapes)) bound scheduled up to 30 refinement
-        # sweeps on Shape_30 for nothing).  Cycles fall back to a fixpoint
-        # bound — each sweep can only shrink the conforming sets.
-        g = _resolve_node_refs(
-            spark, triples, shapes, tbox, g, ref_shapes, _ref_dag_depth(shapes),
+        # depth = the REAL shape-reference DAG depth (LUBM chains are ≤4 deep).
+        # Cycles fall back to a fixpoint bound — each sweep can only shrink
+        # the conforming sets.
+        conforming = _resolve_node_refs(
+            spark, triples, shapes, tbox, ref_shapes, _ref_dag_depth(shapes),
             val_triples=val_triples,
         )
-    else:
-        g = g.withColumn("_ref_ok", F.lit(True))
+    table_rows = [_table_row(ns, pc, is_not, set(conforming)) for ns, pc, is_not in cons]
+    used = _used(table_rows)
+    table = _json_lit(table_rows, _TABLE_TYPE)
 
-    conf = _value_conformance()
-    per_value = g.withColumn("_conf", conf).withColumn(
-        "_lang", F.col("o_lit.lang")
-    ).withColumn("_dtype", F.col("o_lit.dtype"))
+    targets = _target_rows(spark, triples, shapes, tbox)
+    # sh:node conformance evaluation (from _resolve_node_refs): referenced
+    # shapes are checked over targets ∪ values-at-referencing-paths, so a
+    # value that satisfies the shape's constraints conforms even when it is
+    # not typed with the shape's target class (SHACL/pyshacl parity — ADVICE
+    # r2).  Reporting calls never pass this: violations stay target-scoped
+    # per spec.
+    for sid, df in sorted((_extra_focus or {}).items()):
+        targets = targets.unionByName(
+            df.select(F.lit(sid).alias("shape_id"), F.col("node").alias("focus"))
+        )
+    o_lit_type = triples.schema["o_lit"].dataType
+    rows = targets.select(
+        F.explode(_json_lit(pcs_of, _IDS_BY_KEY)[F.col("shape_id")]).alias("pc_id"),
+        "focus",
+        F.lit(None).cast("string").alias("o"),
+        F.lit(None).cast(o_lit_type).alias("o_lit"),
+        F.lit(None).cast("boolean").alias("is_lit"),
+        F.lit(True).alias("_t"),
+    )
+    # values at each constrained path: one predicate-filtered scan per direction
+    for by_path, focus, value, o_lit, is_lit in (
+        (fwd, "s", "o", F.col("o_lit"), F.col("is_lit")),
+        # sh:inversePath: the focus is the OBJECT of the edge; values are the
+        # subjects (always resource nodes — s can't be a literal)
+        (inv, "o", "s", F.lit(None).cast(o_lit_type), F.lit(False)),
+    ):
+        if by_path:
+            rows = rows.unionByName(
+                val_triples.filter(F.col("p").isin(sorted(by_path))).select(
+                    F.explode(_json_lit(by_path, _IDS_BY_KEY)[F.col("p")]).alias("pc_id"),
+                    F.col(focus).alias("focus"),
+                    F.col(value).alias("o"),
+                    o_lit.alias("o_lit"),
+                    is_lit.alias("is_lit"),
+                    F.lit(False).alias("_t"),
+                )
+            )
+    if _focus_subset is not None:
+        # incremental validation: re-check only the foci a delta touched
+        subset = _focus_subset.select(F.col("node").alias("focus"))
+        if _focus_count is not None and _focus_count <= BROADCAST_REP_MAP_MAX_ROWS:
+            subset = F.broadcast(subset)
+        rows = rows.join(subset, "focus", "left_semi")
+        targets = targets.join(subset, "focus", "left_semi")
 
-    # collapse branch rows per VALUE (RDF term identity: lex + dtype + lang —
-    # "1"^^xsd:int and "1"^^xsd:string are distinct values): base row must
-    # conform AND, per combinator group, or→any / and→all / xone→exactly one
-    vkey = ["pc_id", "shape_id", "focus", "o", "is_lit", "_lang", "_dtype"]
-    collapsed = per_value.groupBy(*vkey).agg(
-        F.max(F.when(F.col("comb").isNull(), F.col("_conf"))).alias("_base_conf"),
-        F.max(F.when(F.col("comb") == "or", F.col("_conf"))).alias("_or_conf"),
-        F.min(F.when(F.col("comb") == "and", F.col("_conf"))).alias("_and_conf"),
-        F.sum(F.when(F.col("comb") == "xone", F.col("_conf").cast("int"))).alias("_xone_n"),
-        F.max(F.when(F.col("comb") == "qual", F.col("_conf"))).alias("_q_conf"),
-        F.first("has_value", ignorenulls=True).alias("has_value"),
-    )
-    collapsed = collapsed.withColumn(
-        "_vconf",
-        F.col("_base_conf")
-        & F.coalesce(F.col("_or_conf"), F.lit(True))
-        & F.coalesce(F.col("_and_conf"), F.lit(True))
-        & F.when(
-            F.col("_xone_n").isNull() | F.col("o").isNull(), F.lit(True)
-        ).otherwise(F.col("_xone_n") == 1),
-    )
+    # sh:class membership: one left join bringing each value node's classes,
+    # limited to the classes the shapes name
+    classes = sorted({x.clazz for _, pc, _ in cons for x in _sub_pcs(pc) if x.clazz})
+    if classes:
+        typed = (
+            triples.filter((F.col("p") == vocab.TYPE) & F.col("o").isin(classes))
+            .groupBy(F.col("s").alias("node"))
+            .agg(F.collect_set("o").alias("_classes"))
+        )
+        rows = rows.join(typed.withColumnRenamed("node", "o"), "o", "left")
+    # sh:node membership: one left join bringing the referenced shapes whose
+    # conforming set holds the value node
+    if "node_ref" in used:
+        parts = [
+            df.select(F.col("node").alias("o"), F.lit(sid).alias("_ref"))
+            for sid, df in sorted(conforming.items())
+        ]
+        members = parts[0]
+        for x in parts[1:]:
+            members = members.unionByName(x)
+        rows = rows.join(
+            members.groupBy("o").agg(F.collect_set("_ref").alias("_refs")), "o", "left"
+        )
 
-    # single-pass per-focus aggregation: every count/exists constraint at
-    # once, plus the non-conforming values themselves (one list entry per
-    # collapsed value row, so two bad values sharing a lexical form stay two)
-    agg = collapsed.groupBy("pc_id", "shape_id", "focus").agg(
-        F.count("o").alias("cnt"),
-        F.collect_list(F.when(~F.col("_vconf"), F.col("o"))).alias("bad"),
-        F.max(
-            F.when(F.col("has_value").isNotNull() & (F.col("o") == F.col("has_value")), True)
-        ).alias("has_v"),
-        F.sum(
-            F.when(F.col("_q_conf") & F.col("o").isNotNull(), 1).otherwise(0)
-        ).alias("q_cnt"),
-        # sh:uniqueLang: collapsed rows are distinct per (value, lang), so a
-        # tag count exceeding the distinct-tag count means two values share one
-        F.count(F.col("_lang")).alias("n_lang"),
-        F.count_distinct(F.col("_lang")).alias("n_lang_distinct"),
-    )
-    agg = agg.join(
-        base_pcs.select(
-            "pc_id", "path", "min_count", "max_count", "has_value",
-            "q_min", "q_max", "unique_lang", "is_not", "severity", "message",
-        ),
-        "pc_id",
-    )
-    pos = ~F.coalesce(F.col("is_not"), F.lit(False))
+    # each value row's verdict: its base facets and, per logical branch
+    # group, or → any, and → all, xone → exactly one.  The constraint row is
+    # looked up once per row, so the table literal folds once.
+    rows = rows.withColumn("_pc", table[F.col("pc_id")])
+    pc = F.col("_pc")
+    conform = lambda f: _value_conformance(f, used)  # noqa: E731
+    conf = conform(pc)
+    if "or_branches" in used:
+        conf = conf & ((F.size(pc["or_branches"]) == 0) | F.exists(pc["or_branches"], conform))
+    if "and_branches" in used:
+        conf = conf & F.forall(pc["and_branches"], conform)
+    if "xone_branches" in used:
+        xone = pc["xone_branches"]
+        conf = conf & ((F.size(xone) == 0) | (F.size(F.filter(xone, conform)) == 1))
+    term = [
+        "o", "is_lit", F.col("o_lit.lang").alias("lang"), F.col("o_lit.dtype").alias("dtype"),
+        conf.alias("conf"),
+    ]
+    if "qualified" in used:
+        q = pc["qualified"]
+        term.append(F.coalesce(F.when(q.isNotNull(), conform(q)), F.lit(False)).alias("q_conf"))
 
+    # ONE aggregation: the groups holding a target row, each with the SET of
+    # its distinct RDF terms (lex + dtype + lang: "1"^^xsd:int and
+    # "1"^^xsd:string are two values, a triple stated twice is one)
+    vals = F.col("vals")
+    agg = (
+        rows.groupBy("pc_id", "focus")
+        .agg(
+            F.bool_or("_t").alias("_t"),
+            F.collect_set(F.when(~F.col("_t"), F.struct(*term))).alias("vals"),
+        )
+        .filter("_t")
+        .select("focus", table[F.col("pc_id")].alias("pc"), "vals")
+        .select(
+            "focus",
+            "pc",
+            F.size(vals).alias("cnt"),
+            F.transform(F.filter(vals, lambda v: ~v["conf"]), lambda v: v["o"]).alias("bad"),
+            *(
+                [F.exists(vals, lambda v: v["o"] == F.col("pc.has_value")).alias("has_v")]
+                if "has_value" in used else []
+            ),
+            *(
+                [F.size(F.filter(vals, lambda v: v["q_conf"])).alias("q_cnt")]
+                if "qualified" in used else []
+            ),
+            *(
+                [F.transform(
+                    F.filter(vals, lambda v: v["lang"].isNotNull()), lambda v: v["lang"]
+                ).alias("langs")]
+                if "unique_lang" in used else []
+            ),
+        )
+    )
+    field = lambda name: F.col("pc." + name)  # noqa: E731
+    cnt = F.col("cnt")
+    has_v = F.col("has_v") if "has_value" in used else F.lit(False)
+    q_cnt = F.col("q_cnt") if "qualified" in used else F.lit(0)
+    pos = ~field("is_not")
+
+    # every violation kind from ONE projection over the aggregate frame: a
+    # kind whose condition holds contributes a (constraint, value) struct,
+    # the non-conforming values ride along, one explode emits all.  A kind
+    # enters the plan only when some constraint sets its field.
+    def kind(name, cond, constraint, value):
+        if name not in used:
+            return []
+        return [F.when(
+            cond,
+            F.struct(F.lit(constraint).alias("constraint"), value.cast("string").alias("value")),
+        )]
+
+    dup_langs = F.size("langs") - F.size(F.array_distinct("langs"))
+    # node-level sh:not: violation iff the inner property shape CONFORMS —
+    # count bounds satisfied, every value conforms, hasValue present
+    inner_ok = (
+        (field("min_count").isNull() | (cnt >= field("min_count")))
+        & (field("max_count").isNull() | (cnt <= field("max_count")))
+        & (F.size("bad") == 0)
+        & (field("has_value").isNull() | has_v)
+    )
+    kinds = [
+        *kind("min_count", pos & (cnt < field("min_count")), "minCount", cnt),
+        *kind("max_count", pos & (cnt > field("max_count")), "maxCount", cnt),
+        *kind("has_value", pos & field("has_value").isNotNull() & ~has_v, "hasValue",
+              field("has_value")),
+        # sh:qualifiedMinCount/MaxCount: bounds on the count of values
+        # conforming to the qualified value shape
+        *kind("q_min", pos & (q_cnt < field("q_min")), "qualifiedMinCount", q_cnt),
+        *kind("q_max", pos & (q_cnt > field("q_max")), "qualifiedMaxCount", q_cnt),
+        # sh:uniqueLang: the terms are distinct, so more tags than distinct
+        # tags means two values share one
+        *kind("unique_lang", pos & field("unique_lang") & (dup_langs > 0), "uniqueLang", dup_langs),
+        *kind("is_not", ~pos & inner_ok, "not", cnt),
+    ]
+    out = F.transform(
+        F.when(pos, F.col("bad")).otherwise(F.array().cast("array<string>")),
+        lambda v: F.struct(F.lit("value").alias("constraint"), v.alias("value")),
+    )
+    if kinds:
+        out = F.concat(F.array_compact(F.array(*kinds)), out)
     detail_cols = (
         [
-            F.coalesce(F.col("severity"), F.lit(SH + "Violation")).alias("severity"),
-            F.col("message"),
+            F.coalesce(field("severity"), F.lit(SH + "Violation")).alias("severity"),
+            field("message").alias("message"),
         ]
         if with_details
         else []
     )
-    # every violation kind from ONE projection over the aggregate frame (not
-    # one filter + union branch per kind, each re-reading the grid): a kind
-    # whose condition holds contributes a (constraint, value) struct, the
-    # per-value rows ride along from the aggregation, one explode emits all
-    def kind(cond, constraint, value):
-        return F.when(
-            cond,
-            F.struct(F.lit(constraint).alias("constraint"), value.cast("string").alias("value")),
-        )
-
-    # node-level sh:not: violation iff the inner property shape CONFORMS —
-    # count bounds satisfied, every value conforms, hasValue present
-    inner_ok = (
-        (F.col("min_count").isNull() | (F.col("cnt") >= F.col("min_count")))
-        & (F.col("max_count").isNull() | (F.col("cnt") <= F.col("max_count")))
-        & (F.size("bad") == 0)
-        & (F.col("has_value").isNull() | F.coalesce(F.col("has_v"), F.lit(False)))
-    )
-    kinds = F.array_compact(F.array(
-        kind(pos & F.col("min_count").isNotNull() & (F.col("cnt") < F.col("min_count")), "minCount", F.col("cnt")),
-        kind(pos & F.col("max_count").isNotNull() & (F.col("cnt") > F.col("max_count")), "maxCount", F.col("cnt")),
-        kind(pos & F.col("has_value").isNotNull() & (~F.coalesce(F.col("has_v"), F.lit(False))), "hasValue", F.col("has_value")),
-        # sh:qualifiedMinCount/MaxCount: bounds on the count of values
-        # conforming to the qualified value shape (q_cnt from the 'qual' rows)
-        kind(pos & F.col("q_min").isNotNull() & (F.col("q_cnt") < F.col("q_min")), "qualifiedMinCount", F.col("q_cnt")),
-        kind(pos & F.col("q_max").isNotNull() & (F.col("q_cnt") > F.col("q_max")), "qualifiedMaxCount", F.col("q_cnt")),
-        kind(
-            pos & F.coalesce(F.col("unique_lang"), F.lit(False))
-            & (F.col("n_lang") > F.col("n_lang_distinct")),
-            "uniqueLang", F.col("n_lang") - F.col("n_lang_distinct"),
-        ),
-        kind(~pos & inner_ok, "not", F.col("cnt")),
-    ))
-    values = F.transform(
-        F.when(pos, F.col("bad")).otherwise(F.array().cast("array<string>")),
-        lambda v: F.struct(F.lit("value").alias("constraint"), v.alias("value")),
-    )
     violations = agg.select(
-        "focus",
-        F.col("shape_id").alias("shape"),
-        "path",
-        F.inline(F.concat(kinds, values)),
-        *detail_cols,
+        "focus", field("shape_id").alias("shape"), field("path").alias("path"),
+        F.inline(out), *detail_cols,
     )
+    foci = targets.distinct()
     for extra in (
-        _pair_violations(spark, val_triples, targets, shapes, with_details),
-        _closed_violations(spark, triples, targets, shapes, with_details),
-        _sparql_violations(spark, triples, targets, shapes, with_details),
+        _pair_violations(spark, val_triples, foci, shapes, with_details),
+        _closed_violations(spark, triples, foci, shapes, with_details),
+        _sparql_violations(spark, triples, foci, shapes, with_details),
     ):
         if extra is not None:
             violations = violations.unionByName(extra)
@@ -935,12 +989,12 @@ def _resolve_node_refs(
     triples: DataFrame,
     shapes: list[NodeShape],
     tbox: TBoxIndex | None,
-    g: DataFrame,
     ref_shapes: list[str],
     depth: int,
     val_triples: DataFrame | None = None,
-) -> DataFrame:
-    """Compute conforming-node sets for referenced shapes by iterated
+) -> dict[str, DataFrame]:
+    """Conforming-node sets (a ``node`` column) of the referenced shapes that
+    a NodeShape declares, computed by iterated
     refinement: sweep k validates each referenced shape with ITS refs resolved
     against sweep k-1's conforming sets (sweep 1: refs vacuous — the
     optimistic start).  Each sweep can only shrink the sets, so cyclic shape
@@ -1027,36 +1081,7 @@ def _resolve_node_refs(
         for _ in range(max(1, depth)):
             conforming = conforming_sets(resolvable, conforming)
 
-    return _join_ref_sets(g, conforming)
-
-
-def _join_ref_sets(g: DataFrame, conforming: dict[str, DataFrame]) -> DataFrame:
-    """Left-join the labeled conforming sets onto the grid → _ref_ok.  Refs to
-    shapes with no NodeShape declaration (schema2/3's `sh:node ub:Course` /
-    `ub:GraduateCourse`) are vacuously conforming — an empty shape constrains
-    nothing (pyshacl parity)."""
-    known = sorted(conforming)
-    parts = [
-        df.select(F.lit(sid).alias("_ref_shape"), F.col("node").alias("_ref_node"))
-        for sid, df in conforming.items()
-    ]
-    if not parts:
-        return g.withColumn("_ref_ok", F.lit(True))
-    conf_union = parts[0]
-    for x in parts[1:]:
-        conf_union = conf_union.unionByName(x)
-    g = g.join(
-        conf_union,
-        (g["node_ref"] == conf_union["_ref_shape"]) & (g["o"] == conf_union["_ref_node"]),
-        "left",
-    )
-    g = g.withColumn(
-        "_ref_ok",
-        F.when(
-            F.col("node_ref").isNull() | ~F.col("node_ref").isin(known), F.lit(True)
-        ).otherwise(F.col("_ref_node").isNotNull()),
-    ).drop("_ref_shape", "_ref_node")
-    return g
+    return conforming
 
 
 def validate_fail_fast(

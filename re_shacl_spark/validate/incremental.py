@@ -7,9 +7,13 @@ validation strategy, one static graph).  Here the same reduction is applied
 along the TIME axis: after ``pipeline.fuse_delta`` folds a crawl increment
 into a closed base KG, only the focus nodes the delta can influence are
 re-validated, and their fresh verdicts replace the stale rows of the previous
-report.  Everything the delta cannot reach keeps its old verdict unchanged —
-for a web-scale KG where a daily crawl touches a fraction of a percent of the
-graph, re-validation cost tracks |delta|, not |graph|.
+report.  Everything the delta cannot reach keeps its old verdict unchanged.
+What tracks |delta| is the work past the scans: the rows that are shuffled,
+aggregated and checked, and the report rows that are rewritten.  Each
+re-validation still reads the graph: one predicate-filtered scan per
+target kind and per constrained path, the reverse hops of the affected-foci
+derivation, and, with sh:class constraints, one aggregation of the named
+classes' rdf:type rows.
 
 Affected-focus derivation (delta is ADDITIVE — the fuse pipeline only grows
 the graph):
@@ -27,9 +31,11 @@ Complex ``sh:path`` expressions (sequence/closure) can propagate an edge
 insertion to foci arbitrarily far away, so their presence falls back to full
 re-validation — honestly gated, not silently wrong.
 
-Scale shape: the affected set is |delta|-proportional; the restricted
-``validate(_focus_subset=...)`` call shrinks the target grid, the values join
-and every aggregation to that slice, while sh:node conforming sets stay
+Scale shape: the affected set is |delta|-proportional.  The restricted
+``validate(_focus_subset=..., _focus_count=...)`` call semi-joins its target
+and value rows with that set (a broadcast up to
+``BROADCAST_REP_MAP_MAX_ROWS`` foci) before its one aggregation, so the
+shuffle carries only the affected slice, while sh:node conforming sets stay
 global (computed by the engine's unrestricted recursion) so restricted
 verdicts equal full-run verdicts row for row.
 """
@@ -39,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from re_shacl_spark.canonicalize.rewrite import BROADCAST_REP_MAP_MAX_ROWS
 from re_shacl_spark.model.triples import materialize, vocab
 from re_shacl_spark.query import Path as PathExpr
 from re_shacl_spark.reasoning.tbox import TBoxIndex
@@ -49,7 +56,18 @@ from re_shacl_spark.validate.shapes import NodeShape
 def _affected_foci(
     full: DataFrame, delta: DataFrame, shapes: list[NodeShape], typed: bool = True
 ) -> DataFrame:
-    """Nodes whose validation verdict the additive delta can change.
+    """Nodes whose validation verdict the additive delta can change, as a
+    materialized frame with a distinct ``node`` column; the benchmark's
+    tracer (perfbench/trace.py) reads the affected set through this name."""
+    return _counted_affected_foci(full, delta, shapes, typed)[0]
+
+
+def _counted_affected_foci(
+    full: DataFrame, delta: DataFrame, shapes: list[NodeShape], typed: bool = True
+) -> tuple[DataFrame, int]:
+    """Nodes whose validation verdict the additive delta can change, as a
+    materialized frame with a distinct ``node`` column, and its row count as
+    that materialization observed it.
 
     ``typed`` says whether the delta holds rdf:type rows; without them the
     sh:class hop below finds nothing, so it is left out."""
@@ -131,8 +149,8 @@ def _affected_foci(
         if not c["rows"]:
             break
         affected = affected.unionByName(new).distinct()
-    affected, _ = materialize(affected)
-    return affected
+    affected, c = materialize(affected)
+    return affected, c["rows"]
 
 
 def _reject_merged_base_nodes(base: DataFrame, delta: DataFrame) -> None:
@@ -209,12 +227,16 @@ def validate_delta(
     tbox_delta = delta_counts["subclass"] > 0
     if complex_paths or tbox_delta:
         return validate(spark, full, shapes, tbox, with_details=with_details)
-    affected = _affected_foci(full, delta, shapes, typed=delta_counts["typed"] > 0)
+    affected, n_affected = _counted_affected_foci(
+        full, delta, shapes, typed=delta_counts["typed"] > 0
+    )
     fresh = validate(
-        spark, full, shapes, tbox, with_details=with_details, _focus_subset=affected
+        spark, full, shapes, tbox, with_details=with_details,
+        _focus_subset=affected, _focus_count=n_affected,
     )
-    kept = base_report.violations.join(
-        affected.withColumnRenamed("node", "focus"), "focus", "left_anti"
-    )
+    stale = affected.withColumnRenamed("node", "focus")
+    if n_affected <= BROADCAST_REP_MAP_MAX_ROWS:
+        stale = F.broadcast(stale)
+    kept = base_report.violations.join(stale, "focus", "left_anti")
     merged, c = materialize(kept.unionByName(fresh.violations))
     return ValidationReport(merged, not c["rows"], len(shapes))

@@ -97,3 +97,37 @@ def test_fingerprint_mismatch_invalidates_stage(spark, store):
     # legacy callers without a fingerprint still resume
     store.run_stage("fp_stage", build)
     assert len(calls) == 2
+
+
+def test_save_rereads_without_a_schema_job(spark, store, tmp_path):
+    """save re-reads its output under the writer's schema: the same schema,
+    nullability included, as inferring it from the files, and no Spark job
+    beyond the write's own."""
+    import time
+
+    df = spark.range(0, 100, numPartitions=2).select(
+        F.col("id"), F.when(F.col("id") % 3 == 0, F.lit("x")).alias("s"),
+        F.struct(F.col("id").alias("a")).alias("st"),
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(group + "-sentinel", "sentinel")
+            spark.range(1).collect()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        deadline = time.time() + 30
+        while not tracker.getJobIdsForGroup(group + "-sentinel"):
+            assert time.time() < deadline, "sentinel job never reached the status tracker"
+            time.sleep(0.05)
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    _, write_jobs = jobs("ckpt-write", lambda: df.write.parquet(str(tmp_path / "plain")))
+    back, save_jobs = jobs("ckpt-save", lambda: store.save("s1", df))
+    assert save_jobs == write_jobs
+    assert back.schema == spark.read.parquet(store._stage_dir("s1")).schema
+    assert sorted(back.collect()) == sorted(df.collect())

@@ -707,3 +707,110 @@ def test_validate_delta_evaluates_lazy_delta_once(spark):
     assert ticks.value == len(rows)
     full = validate(spark, base.unionByName(triples_df(spark, rows)), shapes)
     assert got == sorted(tuple(r) for r in full.violations.collect())
+
+
+def test_duplicate_rows_count_once_and_alike_terms_stay_two(spark):
+    """A triple stated twice (two src_url) is one value: it counts once for
+    minCount and maxCount and gives one value row.  Distinct terms that print
+    alike ("7"^^xsd:integer, "7"^^xsd:string, "7"^^xsd:decimal) stay three
+    values and two value rows."""
+    from collections import Counter
+
+    a = EX + "age"
+    rows = [
+        iri_triple(EX + "p1", vocab.TYPE, EX + "Person", src_url="u1"),
+        iri_triple(EX + "p2", vocab.TYPE, EX + "Person", src_url="u1"),
+        iri_triple(EX + "p2", vocab.TYPE, EX + "Person", src_url="u2"),
+        lit_triple(EX + "p1", a, "7", XSD_INT, src_url="u1"),
+        lit_triple(EX + "p1", a, "7", XSD_INT, src_url="u2"),
+        lit_triple(EX + "p1", a, "7", XSD_STR, src_url="u1"),
+        lit_triple(EX + "p1", a, "7", XSD_STR, src_url="u2"),
+        lit_triple(EX + "p1", a, "7", vocab.XSD + "decimal", src_url="u1"),
+        lit_triple(EX + "p2", a, "7", XSD_INT, src_url="u1"),
+        lit_triple(EX + "p2", a, "7", XSD_INT, src_url="u2"),
+    ]
+    shapes = [NodeShape("S", target_classes=[EX + "Person"], properties=[
+        PropertyConstraint(path=a, min_count=2, max_count=2, datatype=XSD_INT),
+    ])]
+    rep = validate(spark, triples_df(spark, rows), shapes)
+    assert Counter(tuple(r) for r in rep.violations.collect()) == Counter([
+        (EX + "p1", "S", a, "maxCount", "3"),
+        (EX + "p1", "S", a, "value", "7"),
+        (EX + "p1", "S", a, "value", "7"),
+        (EX + "p2", "S", a, "minCount", "1"),
+    ])
+
+
+def _final_plans(spark, description: str) -> list[str]:
+    """The final adaptive physical plan tree of every SQL execution that ran
+    under job description ``description``, as text."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    execs = store.executionsList(max(0, n - 50), 50)
+    plans = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if e.description() == description:
+            text = e.physicalPlanDescription()
+            if "== Final Plan ==" in text:
+                text = text.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+            plans.append(text.split("\n\n")[0])
+    return plans
+
+
+def test_validate_plan_has_one_shuffle_and_no_table_broadcast(spark):
+    """With no sh:class and no sh:node, validate is one aggregation: its
+    final adaptive plan has exactly one shuffle Exchange and no
+    BroadcastExchange over a LocalTableScan (a driver-side table broadcast
+    is a Spark job of its own), and repeated calls run equal job counts."""
+    import re
+    import time
+
+    g = _graph(spark)
+    shapes = [NodeShape("S", target_classes=[EX + "Person"], target_nodes=[EX + "p9"], properties=[
+        PropertyConstraint(path=EX + "knows", min_count=1, max_count=1),
+        PropertyConstraint(path=EX + "knows", inverse=True, max_count=1),
+        PropertyConstraint(path=EX + "age", or_branches=[
+            PropertyConstraint(datatype=XSD_INT), PropertyConstraint(node_kind=vocab.SH + "IRI"),
+        ]),
+        PropertyConstraint(path=EX + "status", has_value="active"),
+    ])]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs, plans = [], []
+    for i in range(3):
+        group = f"validate-plan-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            rep = validate(spark, g, shapes)
+        finally:
+            sc.setJobGroup(group + "-sentinel", "sentinel")
+            spark.range(1).collect()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        deadline = time.time() + 30
+        while not tracker.getJobIdsForGroup(group + "-sentinel"):
+            assert time.time() < deadline, "sentinel job never reached the status tracker"
+            time.sleep(0.05)
+        jobs.append(len(tracker.getJobIdsForGroup(group)))
+        plans += _final_plans(spark, group)
+    assert {(r.focus, r.constraint) for r in rep.violations.collect()} == {
+        (EX + "p1", "maxCount"), (EX + "p2", "minCount"), (EX + "p3", "minCount"),
+        (EX + "p9", "minCount"), (EX + "p2", "hasValue"), (EX + "p3", "hasValue"),
+        (EX + "p9", "hasValue"), (EX + "p2", "value"),
+    }
+    assert len(set(jobs)) == 1, jobs
+    assert len(plans) == 3
+    for plan in plans:
+        assert len(re.findall(r"(?<![A-Za-z])Exchange \(", plan)) == 1, plan
+        lines = plan.splitlines()
+        for i, line in enumerate(lines):
+            if "BroadcastExchange" in line:
+                depth = line.index("BroadcastExchange")
+                subtree = []
+                for below in lines[i + 1:]:
+                    name = below.lstrip(" :+-|")
+                    if len(below) - len(name) <= depth:
+                        break
+                    subtree.append(name)
+                assert not any(n.startswith("LocalTableScan") for n in subtree), plan
