@@ -5,8 +5,12 @@
     → s2_mentions  gazetteer mention detection + link scoring (pandas UDF,
                    broadcast alias dict)
     → s3_triples   (s,p,o) emission into the hash-partitioned triple store
-    → s4_fused     scoped OWL rules + owl:sameAs CC canonicalization (fixpoint)
-    → s5_violations / s5_conformant   SHACL-style validation aggregations;
+    → s4_fused     OWL rules scoped to what the shapes read (shape_scope) +
+                   owl:sameAs CC canonicalization (fixpoint); the stage meta
+                   keeps the TBox's class/property rep pairs
+    → s5_violations / s5_conformant   the shapes, rewritten onto the fused
+                   reps (rewrite_shapes), checked against the fused graph with
+                   no tbox (it already holds every in-scope supertype);
                    conformant = triples whose subject has no violation
 
 Every stage checkpoints through CheckpointStore (per-partition lineage rows +
@@ -16,6 +20,7 @@ protocol (/root/reference/run_experiment.py:138-170).
 
 from __future__ import annotations
 
+import json
 import time
 from dataclasses import dataclass, field
 
@@ -30,7 +35,13 @@ from re_shacl_spark.extract.mentions import detect_mentions
 from re_shacl_spark.model.triples import iri_triple, triples_df, vocab
 from re_shacl_spark.pipeline import fuse
 from re_shacl_spark.validate.engine import validate
-from re_shacl_spark.validate.shapes import NodeShape, PropertyConstraint
+from re_shacl_spark.validate.shapes import (
+    NodeShape,
+    PropertyConstraint,
+    rewrite_shapes,
+    shape_nodes,
+    shape_scope,
+)
 
 CLS = "http://kg.example.org/class/"
 
@@ -150,22 +161,34 @@ def construct_kg(
     s3 = run("s3_triples", build_triples)
 
     t_fuse = time.time()
-    if store is not None and store.has("s4_fused", fp) and store.has("s4_repmap", fp):
+    s4_meta = store.stage_meta("s4_fused") if store is not None else None
+    if s4_meta and "reps" in s4_meta and store.has("s4_fused", fp) and store.has("s4_repmap", fp):
         fused_triples = store.load("s4_fused")
         rep_map = store.load("s4_repmap")
-        rounds = int((store.stage_meta("s4_fused") or {}).get("rounds", "0"))
+        rounds = int(s4_meta["rounds"])
+        reps = json.loads(s4_meta["reps"])
     else:
-        res = fuse(spark, s3, assume_distinct=True)
+        res = fuse(spark, s3, scope=shape_scope(shapes), assume_distinct=True)
         rounds = res.rounds
+        # the TBox's equivalence reps: the shapes are rewritten through them
+        reps = [res.tbox.class_rep_pairs(), res.tbox.prop_rep_pairs()]
         if store is not None:
-            fused_triples = store.save("s4_fused", res.triples, {"rounds": rounds}, fingerprint=fp)
+            meta = {"rounds": rounds, "reps": json.dumps(reps)}
+            fused_triples = store.save("s4_fused", res.triples, meta, fingerprint=fp)
             rep_map = store.save("s4_repmap", res.rep_map, {"rounds": rounds}, fingerprint=fp)
         else:
             fused_triples, rep_map = res.triples, res.rep_map
     stage_sec["s4_fuse"] = round(time.time() - t_fuse, 2)
 
     def build_violations():
-        return validate(spark, fused_triples, shapes).violations
+        named = shape_nodes(shapes)
+        node_rep = {}
+        if named:  # only the node IRIs the shapes name: no job without them
+            hits = rep_map.filter(F.col("member").isin(named)).collect()
+            node_rep = {r.member: r.rep for r in hits}
+        class_rep, prop_rep = (dict(pairs) for pairs in reps)
+        checked = rewrite_shapes(shapes, node_rep, class_rep, prop_rep)
+        return validate(spark, fused_triples, checked).violations
 
     violations = run("s5_violations", build_violations)
 

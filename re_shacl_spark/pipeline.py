@@ -35,7 +35,7 @@ one empty delta.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,6 +75,7 @@ class FusionResult:
     tbox: TBoxIndex
     rounds: int
     check_counts: dict[str, int]
+    scope: Scope = field(default_factory=Scope)  # the closed scope fused under
 
 
 def _compose_rep_maps(old: DataFrame, new: DataFrame) -> DataFrame:
@@ -118,9 +119,13 @@ def fuse(
     rows — except after a merge renames a TBox term, which rebuilds the rule
     maps and re-closes the whole graph once.
 
+    ``scope`` (see :class:`Scope`) is closed under the input's TBox, and again
+    whenever a merge rebuilds the TBox; the result records the closed scope.
+
     With ``base`` set (use :func:`fuse_delta`), ``triples`` is a DELTA
     extending an already-closed, consistent fusion result, whose TBox is
-    ``base.tbox`` (never re-extracted from ``base.triples``): incoming ids
+    ``base.tbox`` (never re-extracted from ``base.triples``) and whose scope
+    is ``base.scope`` (passing another raises ``ValueError``): incoming ids
     are routed through the base's class/property equivalence reps and its
     rep map, the delta is linearly closed in one derive (the closed base
     stays closed), and the transitive/sameAs stages and each consistency
@@ -131,11 +136,14 @@ def fuse(
     entails falls back to full re-fusion: a new axiom entails over the
     entire base, which no delta-fed pass can deliver.
     """
+    if base is not None and scope is not None:
+        raise ValueError("a delta folds under its base's scope: pass no scope with base")
     ensure_fixpoint_confs(spark)
     rdfs = profile == "rdfs"
     first_full = base is None
     tbox = build_tbox_index(extract_tbox(triples), rdfs_mode=rdfs) if first_full else base.tbox
-    engine = RuleEngine(spark, tbox, scope or Scope.unrestricted(), profile=profile)
+    scope = (scope or Scope.unrestricted()).close(tbox) if first_full else base.scope
+    engine = RuleEngine(spark, tbox, scope, profile=profile)
 
     # TBox-level equivalence collapse first (class + property reps) — the
     # reference's merge_target_classes / merge_same_property stages.  The
@@ -216,7 +224,7 @@ def fuse(
             # triples; the index still holds them
             eq_rows = triples_df(spark, [iri_triple(*r) for r in tbox.equivalence_rows()])
             return fuse(
-                spark, base.triples.unionByName(eq_rows).unionByName(d), scope=scope,
+                spark, base.triples.unionByName(eq_rows).unionByName(d), scope=base.scope,
                 emit_sameas_provenance=emit_sameas_provenance,
                 assume_distinct=assume_distinct, profile=profile,
             )
@@ -236,7 +244,7 @@ def fuse(
                 rep_map=base.rep_map
                 if base.rep_map is not None
                 else local_frame(spark, [], ["member", "rep"]),
-                tbox=tbox, rounds=0, check_counts=dict.fromkeys(CHECKS, 0),
+                tbox=tbox, rounds=0, check_counts=dict.fromkeys(CHECKS, 0), scope=scope,
             )
         n_eq_added = delta_counts["sameas"] + delta_counts["different"]
     merged_last = False
@@ -346,7 +354,8 @@ def fuse(
                     tbox = build_tbox_index(
                         extract_tbox(cur) + tbox.equivalence_rows(), rdfs_mode=rdfs
                     )
-                    engine = RuleEngine(spark, tbox, scope or Scope.unrestricted(), profile=profile)
+                    scope = scope.close(tbox)
+                    engine = RuleEngine(spark, tbox, scope, profile=profile)
                     trans_props = sorted(tbox.transitive)
                     tbox_terms = sorted({t for row in tbox.rows for t in row})
                     # merges may have created fresh class/property
@@ -384,7 +393,9 @@ def fuse(
     # violation: only the checks that such a row can complete run
     live = live_checks(tbox, same_different=first_full or n_eq_added > 0 or merged_any)
     counts = run_all_checks(cur, tbox, checks=live) if live else dict.fromkeys(CHECKS, 0)
-    return FusionResult(triples=cur, rep_map=rep_map, tbox=tbox, rounds=rounds, check_counts=counts)
+    return FusionResult(
+        triples=cur, rep_map=rep_map, tbox=tbox, rounds=rounds, check_counts=counts, scope=scope
+    )
 
 
 def fuse_delta(
@@ -397,15 +408,16 @@ def fuse_delta(
     triples — the crawl-increment entry point (daily WARC deltas at 10^12-page
     scale must not re-close the whole KG).
 
-    The base's TBox is ``base.tbox``, the index its fusion returned; the
-    base's triples are not scanned for it.  ABox-only deltas run the
+    The base's TBox is ``base.tbox``, the index its fusion returned, and the
+    delta folds under ``base.scope``; the base's triples are not scanned for
+    the TBox.  ABox-only deltas run the
     delta-fed fixpoint (see :func:`fuse` with ``base``): linear rules join
     only the delta against broadcast TBox maps; the transitive closure,
     sameAs machinery and consistency checks run only when the delta can
     trigger them.  A delta whose TBox rows change what ``base.tbox`` entails
     falls back to full re-fusion — a new axiom entails over the entire base,
     which no delta-fed pass can deliver.  Equivalence
-    ``fuse_delta(fuse(A), B) == fuse(A ∪ B)`` is pytest-asserted and
+    ``fuse_delta(fuse(A, scope=s), B) == fuse(A ∪ B, scope=s)`` is pytest-asserted and
     oracle-gated (``kg_fuse_delta``)."""
     return fuse(spark, delta, base=base, **kwargs)
 

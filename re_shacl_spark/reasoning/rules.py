@@ -39,19 +39,45 @@ from re_shacl_spark.reasoning.tbox import TBoxIndex
 
 @dataclass
 class Scope:
-    """The 'Re-' in Re-SHACL: only shape-reachable classes/properties/nodes enter
-    the rule engine (reference target extraction: re_shacl.py:637-690).
+    """The 'Re-' in Re-SHACL: only shape-reachable classes and properties
+    enter the rule engine (reference target extraction: re_shacl.py:637-690;
+    ``validate.shapes.shape_scope`` builds one from shapes).  Target nodes
+    need no scope: ``rewrite_shapes`` moves them onto their reps.
 
-    None-valued fields mean unrestricted (full-closure mode, used by oracle
-    parity tests)."""
+    ``fuse`` closes its scope (``close``) each time it builds a RuleEngine;
+    ``RuleEngine`` applies a scope as given, as an output filter on each
+    rule.  None-valued fields mean unrestricted (full-closure mode)."""
 
-    classes: set[str] | None = None       # C: target classes + subclass closure
-    properties: set[str] | None = None    # F: sh:path properties + subprop closure
-    focus_nodes: set[str] | None = None   # P: explicit target nodes
+    classes: set[str] | None = None       # C: classes whose rdf:type facts are kept
+    properties: set[str] | None = None    # F: properties whose facts are kept
 
     @staticmethod
     def unrestricted() -> "Scope":
         return Scope()
+
+    def close(self, tbox: TBoxIndex) -> "Scope":
+        """This scope in ``tbox``'s ids (equivalence reps), grown to every
+        class and property whose facts a rule chain carries into it: the
+        subclasses of a class (J4), the subproperties and inverses of a
+        property (J3, J5), the properties whose domain or range is an
+        in-scope class (J1, J2), and every functional or inverse-functional
+        property, whose merges (J9, J10) rename terms of any scope."""
+        cls = None if self.classes is None else {tbox.c(c) for c in self.classes}
+        props = None if self.properties is None else (
+            {tbox.p(p) for p in self.properties} | tbox.functional | tbox.inverse_functional
+        )
+        subs = tbox.subclass_closure_pairs()
+        feeds = tbox.subprop_closure_pairs() + tbox.inverse_pairs()
+        typing = tbox.domain_pairs() + tbox.range_pairs()
+        while True:
+            size = len(cls or ()), len(props or ())
+            if cls is not None:
+                cls |= {c for c, d in subs if d in cls}
+            if props is not None:
+                props |= {p for p, q in feeds if q in props}
+                props |= {p for p, c in typing if cls is None or c in cls}
+            if (len(cls or ()), len(props or ())) == size:
+                return Scope(cls, props)
 
 
 @dataclass

@@ -47,7 +47,13 @@ from re_shacl_spark.model.triples import local_frame, materialize, vocab
 from re_shacl_spark.query import Path as PathExpr
 from re_shacl_spark.query import eval_path
 from re_shacl_spark.reasoning.tbox import TBoxIndex
-from re_shacl_spark.validate.shapes import NodeShape, PropertyConstraint
+from re_shacl_spark.validate.shapes import (
+    _BRANCHES,
+    NodeShape,
+    PropertyConstraint,
+    _all_pcs,
+    _sub_pcs,
+)
 
 
 def _path_str(path) -> str | None:
@@ -98,10 +104,6 @@ _PC_SCHEMA = T.StructType(
         *_FACET_SCHEMA.fields,
     ]
 )
-
-# logical branches: a value conforms to sh:or if any branch does, to sh:and
-# if all do, to sh:xone if exactly one does
-_BRANCHES = ("or_branches", "and_branches", "xone_branches")
 
 # the constraint table, indexed by pc_id: each row carries its branches and
 # its sh:qualifiedValueShape (counted per focus, never a per-value violation)
@@ -194,9 +196,10 @@ def _target_rows(
     tbox: TBoxIndex | None,
 ) -> DataFrame:
     """(shape_id, focus) rows, duplicates kept — targetClass (expanded down
-    the subclass closure; the fused graph already materializes supertypes, so
-    the closure expansion is a correctness belt for pre-fusion inputs),
-    implicit class targets, targetNode, targetSubjectsOf/ObjectsOf and
+    ``tbox``'s subclass closure, for callers that validate an unfused graph
+    with a tbox; a fused graph already holds every in-scope supertype, so
+    ``job.construct_kg`` passes none), implicit class targets, targetNode,
+    targetSubjectsOf/ObjectsOf and
     SHACL-AF sh:target selects.  Each kind is one predicate-filtered scan
     mapped to its shapes through a constant map."""
     by_class: dict[str, list[str]] = {}
@@ -886,22 +889,6 @@ def _path_value_triples(triples: DataFrame, shapes: list[NodeShape]) -> DataFram
     for p_ in parts[1:]:
         virt = virt.unionByName(p_)
     return triples.unionByName(virt.select(*triples.columns))
-
-
-def _all_pcs(ns: NodeShape) -> list[PropertyConstraint]:
-    out = list(ns.properties) + list(ns.not_properties)
-    if ns.self_constraint:
-        out.append(ns.self_constraint)
-    return out
-
-
-def _sub_pcs(pc: PropertyConstraint) -> list[PropertyConstraint]:
-    """A constraint plus every branch row it explodes into (or / and / xone /
-    qualifiedValueShape) — all of which may carry sh:node references."""
-    subs = [pc] + pc.or_branches + pc.and_branches + pc.xone_branches
-    if pc.qualified is not None:
-        subs.append(pc.qualified)
-    return subs
 
 
 def _ref_dag_depth(shapes: list[NodeShape]) -> int:

@@ -49,8 +49,8 @@ from re_shacl_spark.canonicalize.rewrite import BROADCAST_REP_MAP_MAX_ROWS
 from re_shacl_spark.model.triples import materialize, vocab
 from re_shacl_spark.query import Path as PathExpr
 from re_shacl_spark.reasoning.tbox import TBoxIndex
-from re_shacl_spark.validate.engine import ValidationReport, _all_pcs, _sub_pcs, validate
-from re_shacl_spark.validate.shapes import NodeShape
+from re_shacl_spark.validate.engine import ValidationReport, validate
+from re_shacl_spark.validate.shapes import NodeShape, _all_pcs, _sub_pcs
 
 
 def _affected_foci(

@@ -16,12 +16,20 @@ in SURVEY §2.9.
 
 from __future__ import annotations
 
+import re
 from collections import defaultdict
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from re_shacl_spark.model.triples import vocab
+from re_shacl_spark.query import Path as PathExpr
+from re_shacl_spark.reasoning.rules import Scope
 
 SH = vocab.SH
+# one IRI atom of a query.Path expression: <iri>, or a bare token
+_PATH_ATOM = re.compile(r"<([^>]*)>|([^\s^|/+*?()!<]+)")
+# a PropertyConstraint's logical branches: a value conforms to sh:or if any
+# branch does, to sh:and if all do, to sh:xone if exactly one does
+_BRANCHES = ("or_branches", "and_branches", "xone_branches")
 
 
 @dataclass
@@ -30,9 +38,7 @@ class PropertyConstraint:
 
     # plain predicate IRI, or a query.Path for complex sh:path (sequence /
     # alternative / closure — compiled by _path_expr, evaluated by the engine
-    # as virtual-predicate triples).  Complex paths are NOT rep-rewritten by
-    # rewrite_shapes (canonicalize your path predicates before compiling, or
-    # keep them in the TBox namespace the merge never touches).
+    # as virtual-predicate triples)
     path: "str | object | None" = None
     # sh:path [ sh:inversePath <p> ] — values are the SUBJECTS of p-edges
     # pointing AT the focus node (path holds p; traversal direction flips)
@@ -188,8 +194,6 @@ def _compile_property(node: str, pox: dict) -> PropertyConstraint:
         else:
             expr = _path_expr(raw_path, pox)
             if expr is not None:  # complex path → query.Path expression
-                from re_shacl_spark.query import Path as PathExpr
-
                 raw_path = PathExpr(expr)
     pc = PropertyConstraint(
         path=raw_path,
@@ -370,69 +374,126 @@ def compile_shapes(shape_triples: list[tuple]) -> list[NodeShape]:
     return shapes
 
 
-def rewrite_shapes(shapes: list[NodeShape], node_rep: dict[str, str], class_rep: dict[str, str], prop_rep: dict[str, str]) -> list[NodeShape]:
-    """Canonicalize shape references through the merge maps — the reference
-    rewrites sh:path (re_shacl.py:545-552) and sh:targetNode (:598-602) so
-    validation runs against the fused graph's canonical ids."""
-    c = lambda x: class_rep.get(x, node_rep.get(x, x)) if x else x  # noqa: E731
-    p = lambda x: prop_rep.get(x, node_rep.get(x, x)) if x else x  # noqa: E731
-    n = lambda x: node_rep.get(x, x) if x else x  # noqa: E731
-
-    def rw_pc(pc: PropertyConstraint) -> PropertyConstraint:
-        return PropertyConstraint(
-            path=p(pc.path),
-            inverse=pc.inverse,
-            min_count=pc.min_count,
-            max_count=pc.max_count,
-            clazz=c(pc.clazz),
-            datatype=pc.datatype,
-            node_kind=pc.node_kind,
-            node_ref=pc.node_ref,
-            in_values=[n(v) for v in pc.in_values] if pc.in_values else None,
-            has_value=n(pc.has_value),
-            pattern=pc.pattern,
-            min_length=pc.min_length,
-            max_length=pc.max_length,
-            min_inclusive=pc.min_inclusive,
-            max_inclusive=pc.max_inclusive,
-            min_exclusive=pc.min_exclusive,
-            max_exclusive=pc.max_exclusive,
-            language_in=pc.language_in,
-            unique_lang=pc.unique_lang,
-            equals=p(pc.equals),
-            disjoint=p(pc.disjoint),
-            less_than=p(pc.less_than),
-            less_than_or_equals=p(pc.less_than_or_equals),
-            qualified=rw_pc(pc.qualified) if pc.qualified else None,
-            qualified_ref=pc.qualified_ref,
-            q_min_count=pc.q_min_count,
-            q_max_count=pc.q_max_count,
-            negated=pc.negated,
-            severity=pc.severity,
-            message=pc.message,
-            or_branches=[rw_pc(b) for b in pc.or_branches],
-            and_branches=[rw_pc(b) for b in pc.and_branches],
-            xone_branches=[rw_pc(b) for b in pc.xone_branches],
-        )
-
-    out = []
-    for ns in shapes:
-        out.append(
-            NodeShape(
-                shape_id=ns.shape_id,
-                target_classes=sorted({c(tc) for tc in ns.target_classes}),
-                target_nodes=sorted({n(tn) for tn in ns.target_nodes}),
-                target_subjects_of=sorted({p(x) for x in ns.target_subjects_of}),
-                target_objects_of=sorted({p(x) for x in ns.target_objects_of}),
-                deactivated=ns.deactivated,
-                implicit_class_target=ns.implicit_class_target,
-                properties=[rw_pc(pc) for pc in ns.properties],
-                self_constraint=rw_pc(ns.self_constraint) if ns.self_constraint else None,
-                not_properties=[rw_pc(pc) for pc in ns.not_properties],
-                closed=ns.closed,
-                ignored_properties=[p(x) for x in ns.ignored_properties],
-                severity=ns.severity,
-                message=ns.message,
-            )
-        )
+def _all_pcs(ns: NodeShape) -> list[PropertyConstraint]:
+    out = list(ns.properties) + list(ns.not_properties)
+    if ns.self_constraint:
+        out.append(ns.self_constraint)
     return out
+
+
+def _sub_pcs(pc: PropertyConstraint) -> list[PropertyConstraint]:
+    """A constraint plus every branch row it explodes into (or / and / xone /
+    qualifiedValueShape) — all of which may carry sh:node references."""
+    subs = [pc] + pc.or_branches + pc.and_branches + pc.xone_branches
+    if pc.qualified is not None:
+        subs.append(pc.qualified)
+    return subs
+
+
+def shape_scope(shapes: list[NodeShape]) -> Scope:
+    """The classes and properties the active shapes read — the reference's
+    target extraction (re_shacl.py:637-690): target classes (explicit and
+    implicit), every sh:class (branches included), and every property that a
+    path (complex ones by their atoms), a property pair or a
+    targetSubjectsOf/ObjectsOf names.  A shape that reads any predicate
+    (sh:closed, sh:sparql, a SHACL-AF target, a negated property set) leaves
+    the scope unrestricted; a path over rdf:type reads any class, so it
+    leaves the classes unrestricted."""
+    classes: set[str] = set()
+    props: set[str] = set()
+    for ns in shapes:
+        if ns.deactivated:
+            continue
+        if ns.closed or ns.sparql_constraints or ns.sparql_targets:
+            return Scope()
+        classes.update(ns.target_classes)
+        if ns.implicit_class_target:
+            classes.add(ns.shape_id)
+        props.update(ns.target_subjects_of, ns.target_objects_of)
+        for x in (x for pc in _all_pcs(ns) for x in _sub_pcs(pc)):
+            if x.sparql_constraints:
+                return Scope()
+            if x.clazz:
+                classes.add(x.clazz)
+            props.update(
+                q for q in (x.equals, x.disjoint, x.less_than, x.less_than_or_equals) if q
+            )
+            if isinstance(x.path, PathExpr):
+                if "!" in _PATH_ATOM.sub("", x.path.expr):
+                    return Scope()
+                props.update(a or b for a, b in _PATH_ATOM.findall(x.path.expr))
+            elif x.path:
+                props.add(x.path)
+    return Scope(None if vocab.TYPE in props else classes, props)
+
+
+def shape_nodes(shapes: list[NodeShape]) -> list[str]:
+    """The node IRIs the shapes name — sh:targetNode, sh:hasValue and sh:in
+    entries — whose owl:sameAs reps ``rewrite_shapes`` needs."""
+    return sorted(
+        {n for ns in shapes for n in ns.target_nodes}
+        | {
+            v
+            for ns in shapes
+            for pc in _all_pcs(ns)
+            for x in _sub_pcs(pc)
+            for v in [x.has_value, *(x.in_values or [])]
+            if v
+        }
+    )
+
+
+def rewrite_shapes(
+    shapes: list[NodeShape], node_rep: dict[str, str], class_rep: dict[str, str],
+    prop_rep: dict[str, str],
+) -> list[NodeShape]:
+    """The shapes in the fused graph's ids, as the reference rewrites sh:path
+    (re_shacl.py:545-552) and sh:targetNode (:598-602).  Every graph term a
+    shape names, complex-path atoms included, goes through the class/property
+    equivalence reps and then the owl:sameAs ``node_rep``, in the order
+    ``fuse`` renamed the graph; an implicit class target becomes explicit.
+    Shape ids, sh:node refs and sh:sparql texts stay as written.
+
+    Report convention: violations name reps; the fused ``rep_map``
+    translates them back to the members."""
+
+    def term(x):
+        x = class_rep.get(x, prop_rep.get(x, x))
+        return node_rep.get(x, x)
+
+    def atom(m: re.Match) -> str:
+        iri = m[1] or m[2]
+        return m[0] if term(iri) == iri else f"<{term(iri)}>"
+
+    def path(x):
+        return replace(x, expr=_PATH_ATOM.sub(atom, x.expr)) if isinstance(x, PathExpr) else term(x)
+
+    def rw_pc(pc: PropertyConstraint | None) -> PropertyConstraint | None:
+        if pc is None:
+            return None
+        terms = ("clazz", "has_value", "equals", "disjoint", "less_than", "less_than_or_equals")
+        return replace(
+            pc,
+            path=path(pc.path),
+            in_values=pc.in_values and [term(v) for v in pc.in_values],
+            qualified=rw_pc(pc.qualified),
+            **{f: term(getattr(pc, f)) for f in terms},
+            **{b: [rw_pc(x) for x in getattr(pc, b)] for b in _BRANCHES},
+        )
+
+    targets = ("target_nodes", "target_subjects_of", "target_objects_of")
+    return [
+        replace(
+            ns,
+            target_classes=sorted(
+                {term(c) for c in ns.target_classes + [ns.shape_id] * ns.implicit_class_target}
+            ),
+            implicit_class_target=False,
+            **{f: sorted({term(x) for x in getattr(ns, f)}) for f in targets},
+            properties=[rw_pc(pc) for pc in ns.properties],
+            not_properties=[rw_pc(pc) for pc in ns.not_properties],
+            self_constraint=rw_pc(ns.self_constraint),
+            ignored_properties=[term(p) for p in ns.ignored_properties],
+        )
+        for ns in shapes
+    ]

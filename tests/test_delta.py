@@ -11,6 +11,7 @@ from re_shacl_spark.model.triples import iri_triple, triples_df, vocab
 from re_shacl_spark.model.ttl import parse_ttl_file
 from re_shacl_spark.pipeline import fuse, fuse_delta
 from re_shacl_spark.reasoning.checks import FusionError
+from re_shacl_spark.reasoning.rules import Scope
 from re_shacl_spark.validate.engine import validate
 from re_shacl_spark.validate.incremental import validate_delta
 from re_shacl_spark.validate.shapes import NodeShape, PropertyConstraint
@@ -83,6 +84,34 @@ def test_delta_with_new_tbox_axiom_falls_back(spark):
     _, inc = _assert_incremental_matches_full(spark, base_rows, delta_rows)
     types = {(r.s, r.o) for r in inc.triples.filter(f"p = '{vocab.TYPE}'").collect()}
     assert {(X + "a", X + "Thing"), (X + "c", X + "Thing")} <= types
+
+
+@pytest.mark.parametrize(
+    "delta_rows",
+    [
+        [iri_triple(X + "c", X + "works", X + "d")],
+        # a new axiom: the fold falls back to re-fusing the union
+        [iri_triple(X + "c", X + "works", X + "d"),
+         iri_triple(X + "works", vocab.RANGE, X + "Site")],
+    ],
+    ids=["abox", "new_axiom"],
+)
+def test_delta_folds_under_the_base_scope(spark, delta_rows):
+    """A scoped base never folds an unscoped delta: the delta derives none of
+    the out-of-scope types (Employee, Site) that fusing the union under the
+    same scope leaves out."""
+    base_rows = [
+        iri_triple(X + "works", vocab.DOMAIN, X + "Employee"),
+        iri_triple(X + "knows", vocab.DOMAIN, X + "Person"),
+        iri_triple(X + "a", X + "knows", X + "b"),
+    ]
+    scope = Scope(classes={X + "Person"}, properties={X + "knows"})
+    base = fuse(spark, triples_df(spark, base_rows), scope=scope)
+    inc = fuse_delta(spark, base, triples_df(spark, delta_rows))
+    full = fuse(spark, triples_df(spark, base_rows + delta_rows), scope=scope)
+    assert _tset(inc.triples) == _tset(full.triples)
+    assert inc.scope == full.scope == base.scope
+    assert (X + "c", vocab.TYPE, X + "Employee", False) not in _tset(inc.triples)
 
 
 def test_delta_duplicate_only_short_circuits(spark):

@@ -114,9 +114,6 @@ ROW_ONLY_ALLOWED = {
     "validate_fail_fast": "tests",
     # the reference isomorphism contract the tests compare graphs against
     "graphs_equivalent": "tests",
-    # the merge-then-reason entry point rewrites the shapes through the rep
-    # maps with it (ROADMAP direction 1)
-    "rewrite_shapes": None,
 }
 
 

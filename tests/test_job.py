@@ -2,13 +2,17 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from re_shacl_spark import corpus
 from re_shacl_spark.checkpoint import CheckpointStore
 from re_shacl_spark.extract.emit import SURFACE_P
 from re_shacl_spark.job import CLS, construct_kg
-from re_shacl_spark.model.triples import vocab
+from re_shacl_spark.model.triples import iri_triple, triples_df, vocab
+from re_shacl_spark.pipeline import fuse_full
+from re_shacl_spark.validate.engine import validate
+from re_shacl_spark.validate.shapes import NodeShape, PropertyConstraint
 
 N_PAGES = 800
 
@@ -106,3 +110,130 @@ def test_input_token_resume_and_invalidation(spark, tmp_path):
     r4 = construct_kg(spark, pages_b, corpus.alias_rows())
     assert r3.metrics["fused_triples"] == r4.metrics["fused_triples"]
     assert r1.metrics["fused_triples"] != r3.metrics["fused_triples"]
+
+
+EX = "http://example.org/"
+# b owl:sameAs a, and the class a shape targets is equivalent to another: the
+# merged graph holds neither b nor Client, so shapes that name them must be
+# merged too
+MERGE_ROWS = [
+    (EX + "b", vocab.SAMEAS, EX + "a"),
+    (EX + "a", EX + "knows", EX + "z"),
+    (EX + "b", EX + "knows", EX + "w"),
+    (EX + "Client", vocab.EQCLASS, EX + "Buyer"),
+    (EX + "x", vocab.TYPE, EX + "Client"),
+]
+MERGE_SHAPES = [
+    NodeShape(EX + "B", target_nodes=[EX + "b"],
+              properties=[PropertyConstraint(path=EX + "knows", max_count=1)]),
+    NodeShape(EX + "C", target_classes=[EX + "Client"],
+              properties=[PropertyConstraint(path=EX + "name", min_count=1)]),
+]
+# sh:closed reads every predicate, so its shapes fuse unscoped: r ⊑ s derives
+# the (y s v) row the closed shape rejects
+CLOSED_ROWS = [
+    (EX + "r", vocab.SUBPROP, EX + "s"),
+    (EX + "y", vocab.TYPE, EX + "Person"),
+    (EX + "y", EX + "r", EX + "v"),
+]
+CLOSED_SHAPES = [
+    NodeShape(EX + "D", target_classes=[EX + "Person"], closed=True,
+              properties=[PropertyConstraint(path=EX + "r")]),
+]
+# knownBy is read; it is derived through its inverse knows, which r ⊑ knows
+# feeds, so the scope must reach r: the pair conforms
+INVERSE_ROWS = [
+    (EX + "r", vocab.SUBPROP, EX + "knows"),
+    (EX + "knows", vocab.INVERSEOF, EX + "knownBy"),
+    (EX + "a", EX + "r", EX + "y"),
+    (EX + "y", vocab.TYPE, EX + "Person"),
+]
+INVERSE_SHAPES = [
+    NodeShape(EX + "K", target_classes=[EX + "Person"],
+              properties=[PropertyConstraint(path=EX + "knownBy", min_count=1)]),
+]
+# Member is read; memberOf (domain Member) is derived through its inverse,
+# so the scope must reach memberOf and hasMember
+DOMAIN_ROWS = [
+    (EX + "hasMember", vocab.INVERSEOF, EX + "memberOf"),
+    (EX + "memberOf", vocab.DOMAIN, EX + "Member"),
+    (EX + "club", EX + "hasMember", EX + "m"),
+]
+DOMAIN_SHAPES = [
+    NodeShape(EX + "M", target_classes=[EX + "Member"],
+              properties=[PropertyConstraint(path=EX + "name", min_count=1)]),
+]
+# the functional f merges b2 into b1, whatever the shapes read
+FUNCTIONAL_ROWS = [
+    (EX + "f", vocab.TYPE, vocab.FUNCTIONAL),
+    (EX + "a", EX + "f", EX + "b1"),
+    (EX + "a", EX + "f", EX + "b2"),
+    (EX + "b1", EX + "knows", EX + "x"),
+    (EX + "b2", EX + "knows", EX + "y"),
+]
+FUNCTIONAL_SHAPES = [
+    NodeShape(EX + "F", target_nodes=[EX + "b1"],
+              properties=[PropertyConstraint(path=EX + "knows", max_count=1)]),
+]
+# a path over rdf:type reads every class: y's Person type must be derived
+TYPE_ROWS = [
+    (EX + "Student", vocab.SUBCLASS, EX + "Person"),
+    (EX + "y", vocab.TYPE, EX + "Student"),
+]
+TYPE_SHAPES = [
+    NodeShape(EX + "T", target_nodes=[EX + "y"],
+              properties=[PropertyConstraint(path=vocab.TYPE, has_value=EX + "Person")]),
+]
+
+
+def _kg(spark, rows, shapes, store=None):
+    """construct_kg over no pages: the graph is ``rows`` alone."""
+    pages = corpus.generate_pages(spark, 1, seed=11).limit(0)
+    return construct_kg(spark, pages, corpus.alias_rows(), tbox_rows=rows, shapes=shapes,
+                        store=store)
+
+
+def _report(df):
+    return {(r.focus, r.shape, r.path, r.constraint, r.value) for r in df.collect()}
+
+
+def test_construct_kg_validates_merged_shapes(spark, tmp_path):
+    """The merged graph is checked against merged shapes: sh:B's target b
+    lives on as its rep a, and sh:C's Client as its equivalence rep Buyer's
+    instances — run straight, then resumed from every stage's checkpoint."""
+    want = {
+        (EX + "a", EX + "B", EX + "knows", "maxCount", "2"),
+        (EX + "x", EX + "C", EX + "name", "minCount", "0"),
+    }
+    assert _report(_kg(spark, MERGE_ROWS, MERGE_SHAPES).violations) == want
+    store = CheckpointStore(spark, str(tmp_path / "ck"))
+    _kg(spark, MERGE_ROWS, MERGE_SHAPES, store)
+    # drop the s5 checkpoints: the resumed s4 (its stored reps) feeds s5 again
+    for stage in ("s5_violations", "s5_conformant"):
+        (tmp_path / "ck" / "stages" / f"{stage}.manifest.json").unlink()
+    assert _report(_kg(spark, MERGE_ROWS, MERGE_SHAPES, store).violations) == want
+
+
+@pytest.mark.parametrize(
+    "rows, shapes",
+    [
+        (MERGE_ROWS, MERGE_SHAPES),
+        (CLOSED_ROWS, CLOSED_SHAPES),
+        (INVERSE_ROWS, INVERSE_SHAPES),
+        (DOMAIN_ROWS, DOMAIN_SHAPES),
+        (FUNCTIONAL_ROWS, FUNCTIONAL_SHAPES),
+        (TYPE_ROWS, TYPE_SHAPES),
+    ],
+    ids=["merge", "closed", "inverse", "domain", "functional", "type_path"],
+)
+def test_construct_kg_matches_full_materialization(spark, rows, shapes):
+    """Scoped merge-then-reason reports the violations of full unscoped
+    materialization + validation, up to the rep map."""
+    res = _kg(spark, rows, shapes)
+    full = fuse_full(spark, triples_df(spark, [iri_triple(*r) for r in rows]))
+    rep = {r.member: r.rep for r in res.rep_map.collect()}
+    want = {
+        (rep.get(f, f), s, p, c, rep.get(v, v))
+        for f, s, p, c, v in _report(validate(spark, full.triples, shapes).violations)
+    }
+    assert _report(res.violations) == want

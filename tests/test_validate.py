@@ -4,8 +4,10 @@ the reference's committed shape graphs, SURVEY §2.9)."""
 from __future__ import annotations
 
 from re_shacl_spark.model.triples import iri_triple, lit_triple, triples_df, vocab
+from re_shacl_spark.query import Path
 from re_shacl_spark.validate.engine import validate
-from re_shacl_spark.validate.shapes import NodeShape, PropertyConstraint
+from re_shacl_spark.validate.shapes import NodeShape, PropertyConstraint, rewrite_shapes
+from re_shacl_spark.validate.sparql import SparqlConstraint
 
 EX = "http://x.org/"
 XSD_INT = vocab.XSD + "integer"
@@ -814,3 +816,23 @@ def test_validate_plan_has_one_shuffle_and_no_table_broadcast(spark):
                         break
                     subtree.append(name)
                 assert not any(n.startswith("LocalTableScan") for n in subtree), plan
+
+
+def test_rewrite_shapes_keeps_every_field():
+    """rewrite_shapes moves every term onto the fused reps and drops no field:
+    node- and property-level sh:sparql and SHACL-AF targets survive, and a
+    complex path's atoms go through the property reps like a plain path."""
+    sel = SparqlConstraint(select=f"SELECT $this WHERE {{ $this <{EX}p> ?o }}")
+    complex_pc = PropertyConstraint(path=Path(f"<{EX}old>/<{EX}q>+"), min_count=1)
+    plain_pc = PropertyConstraint(path=EX + "old", max_count=1, sparql_constraints=[sel])
+    shape = NodeShape(
+        "sh:S", target_nodes=[EX + "b"], properties=[complex_pc, plain_pc],
+        sparql_constraints=[sel], sparql_targets=[sel],
+    )
+    (out,) = rewrite_shapes([shape], {EX + "b": EX + "a"}, {}, {EX + "old": EX + "new"})
+    assert out.sparql_constraints == [sel] and out.sparql_targets == [sel]
+    assert out.properties[1].sparql_constraints == [sel]
+    assert out.properties[0].path == Path(f"<{EX}new>/<{EX}q>+")
+    assert out.properties[1].path == EX + "new"
+    assert out.target_nodes == [EX + "a"]
+    assert (out.properties[0].min_count, out.properties[1].max_count) == (1, 1)
